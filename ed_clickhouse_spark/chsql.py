@@ -206,6 +206,7 @@ from bisect import bisect_left as _bisect_left
 from bisect import bisect_right as _bisect_right
 from dataclasses import dataclass
 from functools import lru_cache as _lru_cache
+from functools import partial as _partial
 
 _CLAUSE_STOP = (
     r"WHERE|PREWHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|FORMAT|UNION|"
@@ -217,27 +218,6 @@ _CLAUSE_STOP = (
 class Translated:
     sql: str
     format: str | None = None
-
-
-def _scan_level(s: str):
-    """Yield (i, ch, depth, in_string) for top-level token scanning."""
-    depth = 0
-    quote = None
-    for i, ch in enumerate(s):
-        if quote:
-            if ch == quote and (i == 0 or s[i - 1] != "\\"):
-                quote = None
-            yield i, ch, depth, True
-            continue
-        if ch in "'\"`":
-            quote = ch
-            yield i, ch, depth, True
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        yield i, ch, depth, False
 
 
 # memoized re.escape: the alias-substitution passes escape every alias
@@ -259,14 +239,18 @@ def _rxc(pattern: str, flags: int = 0) -> re.Pattern:
 def _scan_index(s: str):
     """Position index for O(log n) probes instead of per-char dicts:
     (string-literal span starts, span ends, paren positions, depth
-    after that paren). Depth/in-string semantics match _scan_level
-    exactly: a '(' carries the incremented depth, a ')' the
-    decremented one, and both quote chars of a literal count as
-    in-string."""
+    after that paren, open-paren position -> matching close). ``'``,
+    ``"`` and backtick all quote: a '(' carries the incremented depth,
+    a ')' the decremented one, and both quote chars of a literal count
+    as in-string. This is the one quoting rule every scanner here
+    shares (_call_end, _split_top_commas, _find_top, the rewrite
+    primitive)."""
     starts: list[int] = []
     ends: list[int] = []
     dpos: list[int] = [-1]
     dval: list[int] = [0]
+    close_of: dict[int, int] = {}
+    opens: list[int] = []
     depth = 0
     quote = None
     sstart = 0
@@ -285,14 +269,17 @@ def _scan_index(s: str):
             depth += 1
             dpos.append(i)
             dval.append(depth)
+            opens.append(i)
         elif ch == ")":
             depth -= 1
             dpos.append(i)
             dval.append(depth)
+            if opens:
+                close_of[opens.pop()] = i
     if quote is not None:
         starts.append(sstart)
         ends.append(len(s))
-    return tuple(starts), tuple(ends), tuple(dpos), tuple(dval)
+    return tuple(starts), tuple(ends), tuple(dpos), tuple(dval), close_of
 
 
 def _idx_in_string(idx, p: int) -> bool:
@@ -301,27 +288,14 @@ def _idx_in_string(idx, p: int) -> bool:
     return j >= 0 and p < ends[j]
 
 
-class _InstrProbe:
-    """Drop-in replacement for the per-char ``{i: q for i, _, _, q in
-    _scan_level(s)}`` dicts (r12): same ``[p]`` / ``.get(p, default)``
-    reads, but O(log n) bisect probes over the LRU-cached _scan_index
-    literal spans instead of an O(n) dict build per rewrite pass —
-    dozens of rewrite passes each built one of these dicts per call."""
-
-    __slots__ = ("_idx",)
-
-    def __init__(self, s: str):
-        self._idx = _scan_index(s)
-
-    def __getitem__(self, p: int) -> bool:
-        return _idx_in_string(self._idx, p)
-
-    def get(self, p: int, default: bool = False) -> bool:
-        return _idx_in_string(self._idx, p)
-
-
-def _instr_map(s: str) -> _InstrProbe:
-    return _InstrProbe(s)
+def _call_end(s: str, open_idx: int) -> int:
+    """Index of the ``)`` matching the ``(`` at ``open_idx``, read off
+    _scan_index (parens inside string literals don't count, so e.g.
+    ``extract(s, 'a\\(bc')`` finds its real closer)."""
+    close = _scan_index(s)[4].get(open_idx)
+    if close is None:
+        raise ValueError(f"unbalanced parens after position {open_idx}")
+    return close
 
 
 def _idx_depth(idx, p: int) -> int:
@@ -341,8 +315,8 @@ def _find_top(s: str, pattern: str) -> re.Match | None:
 
 
 def _split_top_commas(s: str) -> list[str]:
-    # str.find + _scan_index bisect probes instead of the per-char
-    # _scan_level generator: this helper runs on every clause recursion
+    # str.find + _scan_index bisect probes instead of a per-char
+    # scan: this helper runs on every clause recursion
     # and dominated the ~5 ms translate() residue (r11 "not yet
     # optimized" #5). Identical semantics: a comma splits iff it sits at
     # paren depth 0 outside string literals.
@@ -498,15 +472,7 @@ def _inline_ch_macros(expr: str) -> str:
                 break
             name = lower_map.get(m.group(1).lower())
             sig, body = _SQL_SCALAR_ALIASES[name]
-            # find the matching close paren
-            depth, j = 0, m.end() - 1
-            for j in range(m.end() - 1, len(expr)):
-                if expr[j] == "(":
-                    depth += 1
-                elif expr[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
+            j = _call_end(expr, m.end() - 1)
             args = _split_top_commas(expr[m.end(): j])
             params = [
                 p.strip().split()[0]
@@ -528,10 +494,11 @@ def _inline_ch_macros(expr: str) -> str:
     return expr
 
 
-def _sub_outside_strings(sql: str, rx: re.Pattern, repl: str) -> str:
-    """re.sub that never touches matches inside string literals. The
-    scan advances past each replacement, so a replacement containing
-    text the pattern would match cannot loop."""
+def _sub_outside_strings(sql: str, rx: re.Pattern, repl) -> str:
+    """re.sub that never touches matches inside string literals.
+    ``repl`` is the replacement text (taken verbatim) or a function of
+    the match. The scan advances past each replacement, so a
+    replacement containing text the pattern would match cannot loop."""
     pos = 0
     while True:
         idx = _scan_index(sql)
@@ -542,15 +509,16 @@ def _sub_outside_strings(sql: str, rx: re.Pattern, repl: str) -> str:
                 break
         if not hit:
             return sql
-        sql = sql[: hit.start()] + repl + sql[hit.end():]
-        pos = hit.start() + len(repl)
+        text = repl if isinstance(repl, str) else repl(hit)
+        sql = sql[: hit.start()] + text + sql[hit.end():]
+        pos = hit.start() + len(text)
 
 
 def _collapse_ws_outside_strings(sql: str) -> str:
     """Collapse whitespace runs to one space — but never inside string
     literals, whose spacing is user data. Segment-wise regex over the
-    cached _scan_index literal spans (r12) instead of the per-char
-    _scan_level generator — this ran once per translate() over the full
+    cached _scan_index literal spans (r12) instead of a per-char
+    scan — this ran once per translate() over the full
     SQL and was the last per-char scan on the hot path."""
     idx = _scan_index(sql)
     starts, ends = idx[0], idx[1]
@@ -567,16 +535,140 @@ def _collapse_ws_outside_strings(sql: str) -> str:
 
 
 def _find_top_anywhere(
-    s: str, pattern: str, pos: int = 0
+    s: str, pattern: str, pos: int = 0, flags: int = re.I
 ) -> re.Match | None:
     """Like _find_top but matches at any paren depth (still not inside
-    string literals)."""
-    rx = _rxc(pattern, re.I)
+    string literals), at or after ``pos``. Case-insensitive by default;
+    ``flags=0`` for the case-exact ClickHouse function names."""
+    rx = _rxc(pattern, flags)
     idx = _scan_index(s)
     for m in rx.finditer(s, pos):
         if not _idx_in_string(idx, m.start()):
             return m
     return None
+
+
+# -- the call-site rewrite primitive ---------------------------------------
+#
+# Every function-spelling rewrite is one rule in an ordered table run by
+# _rewrite_calls. A rule is ``(name, action[, flags])``: ``name`` is a
+# regex for the function name, matched as ``\bname\s*\(`` (case-exact
+# unless ``flags`` has re.I), and ``action`` is one of
+#
+#   * an identifier (or ""): a RENAME of the name, arguments untouched;
+#   * any other str: a template over the raw argument text ``{x}``;
+#   * a dict arity -> template over the split arguments ``{0}``, ``{1}``,
+#     ...; under the key None, the refusal text for any other arity, or
+#     _PASS to leave such calls alone (default: a generic refusal);
+#   * a handler ``fn(sql, m, close, args)`` -> the replacement of
+#     ``sql[m.start(): close + 1]``, a ``(replacement, end)`` pair to
+#     replace ``sql[m.start(): end]`` (a trailing ``(...)`` or
+#     ``OVER (...)`` consumed via _trailing_paren / _trailing_over), or
+#     None to leave the call alone.
+#
+# Table order is pass order: each rule rewrites every hit before the next
+# rule runs. After a splice the scan resumes at the START of the
+# replacement (so a rewrite that emits another spelling of the same rule
+# is seen again, and nested calls in its arguments are reached); a call
+# left alone resumes just past its name.
+
+_PASS = object()  # arity-table refusal slot: unlisted arities pass through
+
+
+def _needle(name: str) -> str:
+    """Literal text every hit of a name pattern contains: its leading
+    word (minus an optional last letter), or "" for an alternation."""
+    m = re.match(r"\(?([A-Za-z_]\w*)(.?)", name)
+    if not m or m.group(2) == "|":
+        return ""
+    return m.group(1)[:-1] if m.group(2) and m.group(2) in "?*{" else m.group(1)
+
+
+def _rules(*entries) -> tuple:
+    """Compile ``(name, action[, flags])`` entries for _rewrite_calls."""
+    out = []
+    for name, action, *flags in entries:
+        flags = flags[0] if flags else 0
+        if isinstance(action, str):
+            kind = 0 if re.fullmatch(r"\w*", action) else 1
+        else:
+            kind = 2 if isinstance(action, dict) else 3
+        needle = _needle(name)
+        ci = bool(flags & re.I)
+        out.append((needle.lower() if ci else needle, ci,
+                    re.compile(rf"\b{name}\s*\(", flags), name, kind, action))
+    return tuple(out)
+
+
+def _rewrite_calls(sql: str, rules: tuple) -> str:
+    """Run compiled rules (see the table contract above) over ``sql``.
+    Hits inside string literals are skipped; a rule whose needle is not
+    in the text costs one substring test."""
+    for needle, ci, rx, name, kind, action in rules:
+        if needle not in (sql.lower() if ci else sql):
+            continue
+        pos = 0
+        while True:
+            m = rx.search(sql, pos)
+            if m is None:
+                break
+            start = m.start()
+            if _idx_in_string(_scan_index(sql), start):
+                pos = m.end()
+                continue
+            if kind == 0:
+                sql = sql[:start] + action + "(" + sql[m.end():]
+                pos = start
+                continue
+            close = _call_end(sql, m.end() - 1)
+            end = close + 1
+            if kind == 1:
+                repl = action.format(x=sql[m.end():close])
+            else:
+                args = _split_top_commas(sql[m.end():close])
+                if kind == 2:
+                    repl = action.get(len(args))
+                    if repl is None:
+                        msg = action.get(None)
+                        if msg is _PASS:
+                            pos = m.end()
+                            continue
+                        raise ValueError(msg or (
+                            f"{name} expects {sorted(k for k in action if k is not None)}"
+                            f" argument(s), got {len(args)}"))
+                    repl = repl.format(*args)
+                else:
+                    repl = action(sql, m, close, args)
+                    if repl is None:
+                        pos = m.end()
+                        continue
+                    if repl.__class__ is tuple:
+                        repl, end = repl
+            sql = sql[:start] + repl + sql[end:]
+            pos = start
+    return sql
+
+
+def _trailing_paren(sql: str, close: int) -> tuple[int, int] | None:
+    """(open, close) of a ``(...)`` right after ``close`` (whitespace
+    allowed): the argument list of a parametric ``f(p)(x)`` call."""
+    rest = sql[close + 1:]
+    j = close + 1 + len(rest) - len(rest.lstrip())
+    if sql.startswith("(", j):
+        return j, _call_end(sql, j)
+    return None
+
+
+_OVER_RX = re.compile(r"(?is)\s*OVER\s*\(")
+
+
+def _trailing_over(sql: str, close: int) -> tuple[int, int] | None:
+    """(open, close) of the window spec of an ``OVER (...)`` right after
+    ``close``."""
+    om = _OVER_RX.match(sql, close + 1)
+    if om is None:
+        return None
+    return om.end() - 1, _call_end(sql, om.end() - 1)
 
 
 def _rewrite_array_join_fn(sql: str) -> str:
@@ -822,10 +914,10 @@ def _expand_apply_columns(sql: str, specs: dict | None) -> str:
     # subqueries first (each level resolves its own FROM)
     pos = 0
     while True:
-        instr_at = _instr_map(sql)
+        sidx = _scan_index(sql)
         idx = None
         for i in range(pos, len(sql)):
-            if sql[i] == "(" and not instr_at.get(i, False):
+            if sql[i] == "(" and not _idx_in_string(sidx, i):
                 after = sql[i + 1:].lstrip()
                 if re.match(r"(?i)(SELECT|WITH)\b", after):
                     idx = i
@@ -1324,7 +1416,7 @@ def _rewrite_inline_table_functions(sql: str) -> str:
             break
         # offsets are slice-relative: scan_from always sits just past
         # a complete top-level TVF call (never inside a literal), so
-        # _scan_level on the suffix stays correct
+        # _scan_index on the suffix stays correct
         mstart = scan_from + m.start()
         mstart1 = scan_from + m.start(1)
         fname = m.group(1).lower()
@@ -1650,23 +1742,62 @@ def substitute_params(sql: str, params: dict) -> str:
     # clickhouse-client lexes string literals before parameter
     # substitution, so {name:Type}-shaped text INSIDE a literal is user
     # data — substitute only outside strings, like every other rewrite
-    rx = re.compile(r"\{(\w+)\s*:\s*([\w()', ]+)\}")
-    pos = 0
-    while True:
-        instr_at = _instr_map(sql)
-        hit = None
-        for m in rx.finditer(sql, pos):
-            if not instr_at.get(m.start(), False):
-                hit = m
-                break
-        if not hit:
-            return sql
-        rendered = repl(hit)
-        sql = sql[: hit.start()] + rendered + sql[hit.end():]
-        pos = hit.start() + len(rendered)
+    return _sub_outside_strings(
+        sql, re.compile(r"\{(\w+)\s*:\s*([\w()', ]+)\}"), repl
+    )
 
 
 _INTERVAL_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
+
+
+def _to_start_of_interval(sql, m, close, args):
+    if len(args) not in (2, 3):
+        raise ValueError(
+            "toStartOfInterval expects (expr, INTERVAL n unit"
+            "[, origin])"
+        )
+    im = re.match(r"^INTERVAL\s+(\d+)\s+(\w+?)s?$", args[1].strip(), re.I)
+    if not im:
+        raise ValueError(
+            f"toStartOfInterval: cannot parse interval {args[1]!r}"
+        )
+    n, unit = int(im.group(1)), im.group(2).lower()
+    # the 3rd argument is POLYMORPHIC in CH: a timezone string
+    # buckets in that zone's wall clock (pinned-UTC session ->
+    # convert_timezone, the now(tz)/toWeek(tz) convention); any
+    # other expression is the origin timestamp
+    x = args[0]
+    if len(args) == 3 and re.match(r"^'[^']*'$", args[2].strip()):
+        x = f"convert_timezone('UTC', {args[2].strip()}, {x})"
+        args = args[:2]
+    if unit in _INTERVAL_SECONDS:
+        s = n * _INTERVAL_SECONDS[unit]
+        if len(args) == 3:
+            # origin-anchored buckets: floor the offset FROM the
+            # origin, then shift back
+            o = f"unix_timestamp({args[2]})"
+            return (
+                f"to_timestamp(floor((unix_timestamp({x})"
+                f" - {o}) / {s}) * {s} + {o})"
+            )
+        return f"to_timestamp(floor(unix_timestamp({x}) / {s}) * {s})"
+    if unit in ("month", "quarter", "year") and n == 1:
+        if len(args) == 3:
+            raise ValueError(
+                "toStartOfInterval: origin is only supported for"
+                " fixed-length units (a month is not a constant"
+                " number of seconds)"
+            )
+        return f"date_trunc('{unit.upper()}', {x})"
+    raise ValueError(
+        f"toStartOfInterval: unsupported unit {n} {unit} (variable-"
+        f"length units only bucket with n=1)"
+    )
+
+
+_TO_START_OF_INTERVAL = _rules(
+    ("toStartOfInterval", _to_start_of_interval, re.I),
+)
 
 
 def _rewrite_to_start_of_interval(sql: str) -> str:
@@ -1675,65 +1806,78 @@ def _rewrite_to_start_of_interval(sql: str) -> str:
     parameter, so this is a clause rewrite. Fixed-length units only
     (second/minute/hour/day — a month is not a constant number of
     seconds); month/year bucketing with n=1 maps to date_trunc."""
-    while True:
-        m = _find_top_anywhere(sql, r"\btoStartOfInterval\s*\(")
-        if not m:
-            return sql
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) not in (2, 3):
-            raise ValueError(
-                "toStartOfInterval expects (expr, INTERVAL n unit"
-                "[, origin])"
-            )
-        im = re.match(r"^INTERVAL\s+(\d+)\s+(\w+?)s?$", args[1].strip(), re.I)
-        if not im:
-            raise ValueError(
-                f"toStartOfInterval: cannot parse interval {args[1]!r}"
-            )
-        n, unit = int(im.group(1)), im.group(2).lower()
-        # the 3rd argument is POLYMORPHIC in CH: a timezone string
-        # buckets in that zone's wall clock (pinned-UTC session ->
-        # convert_timezone, the now(tz)/toWeek(tz) convention); any
-        # other expression is the origin timestamp
-        x = args[0]
-        tz_arg = (
-            len(args) == 3
-            and re.match(r"^'[^']*'$", args[2].strip()) is not None
+    return _rewrite_calls(sql, _TO_START_OF_INTERVAL)
+
+
+def _tumble(sql, m, close, args):
+    name = m.group(1)
+    if len(args) != 2:
+        raise ValueError(f"{name} expects (expr, INTERVAL n unit)")
+    im = re.match(r"^INTERVAL\s+(\d+)\s+(\w+?)s?$", args[1].strip(), re.I)
+    if not im:
+        raise ValueError(f"{name}: cannot parse interval {args[1]!r}")
+    n, unit = int(im.group(1)), im.group(2).lower()
+    if unit not in _INTERVAL_SECONDS:
+        raise ValueError(
+            f"{name}: fixed-length units only (got {unit};"
+            " month/year windows have no constant width)"
         )
-        if tz_arg:
-            x = f"convert_timezone('UTC', {args[2].strip()}, {x})"
-            args = args[:2]
-        if unit in _INTERVAL_SECONDS:
-            s = n * _INTERVAL_SECONDS[unit]
-            if len(args) == 3:
-                # origin-anchored buckets: floor the offset FROM the
-                # origin, then shift back
-                o = f"unix_timestamp({args[2]})"
-                repl = (
-                    f"to_timestamp(floor((unix_timestamp({x})"
-                    f" - {o}) / {s}) * {s} + {o})"
-                )
-            else:
-                repl = (
-                    f"to_timestamp(floor(unix_timestamp({x})"
-                    f" / {s}) * {s})"
-                )
-        elif unit in ("month", "quarter", "year") and n == 1:
-            if len(args) == 3:
-                raise ValueError(
-                    "toStartOfInterval: origin is only supported for"
-                    " fixed-length units (a month is not a constant"
-                    " number of seconds)"
-                )
-            repl = f"date_trunc('{unit.upper()}', {x})"
-        else:
-            raise ValueError(
-                f"toStartOfInterval: unsupported unit {n} {unit} (variable-"
-                f"length units only bucket with n=1)"
-            )
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
+    s = n * _INTERVAL_SECONDS[unit]
+    base = f"floor(unix_timestamp({args[0]}) / {s}) * {s}"
+    start = f"to_timestamp({base})"
+    end = f"to_timestamp({base} + {s})"
+    return {
+        "tumbleStart": start,
+        "tumbleEnd": end,
+        "tumble": f"struct({start}, {end})",
+    }[name]
+
+
+def _hop(sql, m, close, args):
+    # hopping windows (r8): ClickHouse hop(t, hop_interval,
+    # window_interval) IS Spark's sliding window(t, size, slide) —
+    # in a batch GROUP BY Spark multi-assigns each record to every
+    # window containing it, exactly the WINDOW VIEW hop semantics the
+    # old loud refusal claimed had no SQL spelling. hopStart/hopEnd
+    # project .start/.end; their 1-arg forms take the window struct
+    # (the GROUP BY alias spelling CH uses inside window views).
+    name = m.group(1)
+    if len(args) == 1 and name != "hop":
+        field = "start" if name == "hopStart" else "end"
+        return f"({args[0].strip()}).{field}"
+    if len(args) != 3:
+        raise ValueError(
+            f"{name} expects (expr, INTERVAL hop, INTERVAL"
+            " window) — or the window struct for"
+            " hopStart/hopEnd"
+        )
+    secs = []
+    for a in args[1:]:
+        im = re.match(r"^INTERVAL\s+(\d+)\s+(\w+?)s?$", a.strip(), re.I)
+        if not im:
+            raise ValueError(f"{name}: cannot parse interval {a!r}")
+        n, unit = int(im.group(1)), im.group(2).lower()
+        if unit not in _INTERVAL_SECONDS:
+            raise ValueError(f"{name}: fixed-length units only (got {unit})")
+        secs.append(n * _INTERVAL_SECONDS[unit])
+    slide, size = secs
+    if slide > size:
+        raise ValueError(
+            f"{name}: the hop interval must not exceed the"
+            " window interval"
+        )
+    win = f"window({args[0].strip()}, '{size} seconds', '{slide} seconds')"
+    return {
+        "hopStart": f"{win}.start",
+        "hopEnd": f"{win}.end",
+        "hop": win,
+    }[name]
+
+
+_TUMBLE_RULES = _rules(
+    *((f"({name})", _tumble) for name in ("tumbleStart", "tumbleEnd", "tumble")),
+    *((f"({name})", _hop) for name in ("hopStart", "hopEnd", "hop")),
+)
 
 
 def _rewrite_tumble(sql: str) -> str:
@@ -1746,96 +1890,7 @@ def _rewrite_tumble(sql: str) -> str:
     windows, so the scalar spelling has no single value outside a
     WINDOW VIEW — streaming/pipeline.py sliding windows are the
     supported path."""
-    for name in ("tumbleStart", "tumbleEnd", "tumble"):
-        while True:
-            m = _find_case_exact(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 2:
-                raise ValueError(f"{name} expects (expr, INTERVAL n unit)")
-            im = re.match(
-                r"^INTERVAL\s+(\d+)\s+(\w+?)s?$", args[1].strip(), re.I
-            )
-            if not im:
-                raise ValueError(f"{name}: cannot parse interval {args[1]!r}")
-            n, unit = int(im.group(1)), im.group(2).lower()
-            if unit not in _INTERVAL_SECONDS:
-                raise ValueError(
-                    f"{name}: fixed-length units only (got {unit};"
-                    " month/year windows have no constant width)"
-                )
-            s = n * _INTERVAL_SECONDS[unit]
-            base = f"floor(unix_timestamp({args[0]}) / {s}) * {s}"
-            start = f"to_timestamp({base})"
-            end = f"to_timestamp({base} + {s})"
-            repl = {
-                "tumbleStart": start,
-                "tumbleEnd": end,
-                "tumble": f"struct({start}, {end})",
-            }[name]
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
-    # hopping windows (r8): ClickHouse hop(t, hop_interval,
-    # window_interval) IS Spark's sliding window(t, size, slide) —
-    # in a batch GROUP BY Spark multi-assigns each record to every
-    # window containing it, exactly the WINDOW VIEW hop semantics the
-    # old loud refusal claimed had no SQL spelling. hopStart/hopEnd
-    # project .start/.end; their 1-arg forms take the window struct
-    # (the GROUP BY alias spelling CH uses inside window views).
-    for name in ("hopStart", "hopEnd", "hop"):
-        while True:
-            m = _find_case_exact(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) == 1 and name != "hop":
-                field = "start" if name == "hopStart" else "end"
-                sql = (
-                    sql[: m.start()]
-                    + f"({args[0].strip()}).{field}"
-                    + sql[close1 + 1:]
-                )
-                continue
-            if len(args) != 3:
-                raise ValueError(
-                    f"{name} expects (expr, INTERVAL hop, INTERVAL"
-                    " window) — or the window struct for"
-                    " hopStart/hopEnd"
-                )
-            secs = []
-            for a in args[1:]:
-                im = re.match(
-                    r"^INTERVAL\s+(\d+)\s+(\w+?)s?$", a.strip(), re.I
-                )
-                if not im:
-                    raise ValueError(f"{name}: cannot parse interval {a!r}")
-                n, unit = int(im.group(1)), im.group(2).lower()
-                if unit not in _INTERVAL_SECONDS:
-                    raise ValueError(
-                        f"{name}: fixed-length units only (got {unit})"
-                    )
-                secs.append(n * _INTERVAL_SECONDS[unit])
-            slide, size = secs
-            if slide > size:
-                raise ValueError(
-                    f"{name}: the hop interval must not exceed the"
-                    " window interval"
-                )
-            win = (
-                f"window({args[0].strip()}, '{size} seconds',"
-                f" '{slide} seconds')"
-            )
-            repl = {
-                "hopStart": f"{win}.start",
-                "hopEnd": f"{win}.end",
-                "hop": win,
-            }[name]
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
-    return sql
+    return _rewrite_calls(sql, _TUMBLE_RULES)
 
 
 # polymorphic ClickHouse scalar spellings with a same-shape Spark
@@ -3131,6 +3186,1058 @@ def _strip_window_frame(over_body: str) -> str:
     return over_body[: m.start()].rstrip() if m else over_body
 
 
+def _unescape_sql_literal(body: str) -> str:
+    """The text of a SQL string literal's body: ``\\x`` -> x and
+    ``''`` -> ``'`` (Spark's own literal unescaping)."""
+    chars, i = [], 0
+    while i < len(body):
+        if body[i] == "\\" and i + 1 < len(body):
+            chars.append(body[i + 1])
+            i += 2
+            continue
+        if body[i: i + 2] == "''":
+            chars.append("'")
+            i += 2
+            continue
+        chars.append(body[i])
+        i += 1
+    return "".join(chars)
+
+
+_SQL_STR_LIT = re.compile(r"'(?:[^'\\]|\\.|'')*'")
+
+
+def _lag_lead_in_frame(sql, m, close, args):
+    # lagInFrame/leadInFrame with an explicit frame (the ClickHouse
+    # requirement): rename to lag/lead AND strip the frame from their
+    # OVER spec (the plain renames handle the frameless form)
+    over = _trailing_over(sql, close)
+    if over is None:
+        return None
+    target = "lag" if m.group(1) == "lagInFrame" else "lead"
+    body = _strip_window_frame(sql[over[0] + 1: over[1]])
+    return (target + sql[m.end() - 1: close + 1] + f" OVER ({body})",
+            over[1] + 1)
+
+
+def _multi_match(sql, m, close, args):
+    # multiMatchAny / multiMatchAnyIndex over a LITERAL pattern array:
+    # an OR-chain / first-match CASE of RLIKEs (CH runs hyperscan; the
+    # index CH returns for multiple hits is unspecified — first-match
+    # is this translation's pinned choice). Non-literal pattern sets
+    # refuse: the chain must be built at translate time.
+    pats = None
+    if len(args) == 2:
+        am = re.fullmatch(r"\s*array\s*\((.*)\)\s*", args[1], re.S)
+        if am:
+            items = _split_top_commas(am.group(1))
+            if all(re.fullmatch(r"\s*'(?:[^']|'')*'\s*", it) for it in items):
+                pats = [it.strip() for it in items]
+    if pats is None:
+        raise ValueError(
+            f"{m.group(1)} translates only for a literal pattern"
+            " array — build the RLIKE chain yourself for"
+            " computed pattern sets"
+        )
+    hay = args[0]
+    if m.group(1) == "multiMatchAny":
+        body = " OR ".join(f"({hay}) RLIKE {p}" for p in pats)
+        return f"CAST(({body}) AS INT)"
+    whens = " ".join(
+        f"WHEN ({hay}) RLIKE {p} THEN {i + 1}" for i, p in enumerate(pats)
+    )
+    return f"(CASE {whens} ELSE 0 END)"
+
+
+def _format_row(sql, m, close, args):
+    # formatRow('Format', exprs...): literal CSV / TSV / JSONEachRow
+    # render through to_csv / concat_ws / to_json (formatRow appends
+    # the row terminator, the NoNewline spelling does not)
+    fm = re.fullmatch(r"\s*'(\w+)'\s*", args[0]) if args else None
+    if not fm or len(args) < 2:
+        raise ValueError(
+            "formatRow expects a literal format name first:"
+            " formatRow('CSV'|'TSV'|'JSONEachRow', exprs...)"
+        )
+    fmt = fm.group(1)
+    cols = ", ".join(a.strip() for a in args[1:])
+    if fmt == "CSV":
+        body = f"to_csv(struct({cols}))"
+    elif fmt in ("TSV", "TabSeparated"):
+        # NULLs render as \N like CH (bare concat_ws would SKIP
+        # the NULL and silently shift every later column left)
+        casts = ", ".join(
+            f"coalesce(CAST(({a.strip()}) AS STRING), '\\\\N')"
+            for a in args[1:]
+        )
+        body = f"concat_ws('\\t', {casts})"
+    elif fmt == "JSONEachRow":
+        body = f"to_json(struct({cols}))"
+    else:
+        raise ValueError(
+            f"formatRow: format {fmt!r} has no SQL spelling —"
+            " CSV, TSV and JSONEachRow translate"
+        )
+    return body if m.group(1) else f"concat({body}, '\\n')"
+
+
+def _bit_slice(sql, m, close, args):
+    # bitSlice(s, offset[, length]) -> the registered ch_bit_slice
+    # pandas UDF (functions/strdist.py, returns BINARY); the UDF takes
+    # exactly 3 args, so the 2-arg spelling pads a NULL length
+    if len(args) == 2:
+        args.append("CAST(NULL AS BIGINT)")
+    if len(args) != 3:
+        raise ValueError("bitSlice takes (s, offset[, length])")
+    return f"ch_bit_slice({', '.join(a.strip() for a in args)})"
+
+
+def _non_negative_derivative(sql, m, close, args):
+    # nonNegativeDerivative(metric, ts[, INTERVAL n unit]) OVER (spec):
+    # lag-based rate with resets clamped to 0 and the first row NULL —
+    # the operators/windows.py:non_negative_derivative semantics.
+    # CAST(... AS DOUBLE) reads timestamps as epoch seconds and leaves
+    # numerics alone, so both shapes work.
+    over = _trailing_over(sql, close)
+    if over is None:
+        raise ValueError(
+            "nonNegativeDerivative translates as a window function —"
+            " add an OVER clause, or use"
+            " operators/windows.py:non_negative_derivative"
+        )
+    if len(args) not in (2, 3):
+        raise ValueError(
+            "nonNegativeDerivative expects (metric, timestamp"
+            "[, INTERVAL n unit])"
+        )
+    scale = ""
+    if len(args) == 3:
+        im = re.fullmatch(
+            r"(?is)\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY)S?\s*",
+            args[2],
+        )
+        if not im:
+            raise ValueError(
+                "nonNegativeDerivative's third argument must be a"
+                " literal INTERVAL n SECOND/MINUTE/HOUR/DAY"
+            )
+        secs = int(im.group(1)) * _INTERVAL_SECONDS[im.group(2).lower()]
+        scale = f" * {secs}.0"
+    w = f"({_strip_window_frame(sql[over[0] + 1: over[1]])})"
+    mcol, tcol = args[0], args[1]
+    lag_t = f"lag(CAST({tcol} AS DOUBLE)) OVER {w}"
+    lag_m = f"lag(CAST({mcol} AS DOUBLE)) OVER {w}"
+    return (
+        f"(CASE WHEN {lag_t} IS NULL THEN NULL"
+        f" ELSE greatest((CAST({mcol} AS DOUBLE) - {lag_m})"
+        f" / nullif(CAST({tcol} AS DOUBLE) - {lag_t}, 0.0), 0.0)"
+        f"{scale} END)"
+    ), over[1] + 1
+
+
+def _array_cols(specs: dict | None) -> frozenset:
+    """Columns declared Array(...) in the table specs (the Engine.ch_sql
+    path): the reference's own tables carry Array(String) columns
+    (migrations/009:24-27), so length(genres) must mean array length
+    there. A name is trusted only when it is array-typed in at least
+    one spec and non-array in none (ambiguity keeps the string path)."""
+    arr_cols: set[str] = set()
+    non_arr: set[str] = set()
+    for sp in (specs or {}).values():
+        for col, cht in getattr(sp, "ch_types", {}).items():
+            if cht.strip().startswith("Array("):
+                arr_cols.add(col)
+            else:
+                non_arr.add(col)
+    return frozenset(arr_cols - non_arr)
+
+
+_ARRAYISH_CALL = re.compile(
+    r"^(?:array|splitBy\w*|groupArray\w*|groupUniqArray|"
+    r"collect_list|collect_set|sequence|range|arrayMap|"
+    r"arrayFilter|arraySort|arrayReverseSort|arraySlice|"
+    r"arrayConcat|arrayDistinct|array_distinct|arrayCompact|"
+    r"arrayIntersect|arrayPushBack|arrayPushFront|"
+    r"arrayPopBack|arrayPopFront|extractAll|flatten|"
+    r"arrayFlatten|map_keys|mapKeys|map_values|mapValues|"
+    r"split|slice|transform|filter|topK|emptyArray\w*|"
+    r"arrayReverse|arrayZip|arrays_zip|arrayCumSum|"
+    r"arrayDifference|arrayEnumerate\w*|arrayWithConstant|"
+    r"array_repeat|arrayResize|arrayRotate\w*|arrayShift\w*|"
+    r"arrayInsert|arraySymmetricDifference|arrayFill|"
+    r"arrayReverseFill|arrayPartialSort|"
+    r"arrayReversePartialSort)\s*\("
+)
+
+
+def _arrayish(arg: str, arr_cols: frozenset) -> bool:
+    """Is the argument syntactically evident as an array?"""
+    a = arg.strip()
+    # strip one layer of grouping parens (identity-fn unwraps leave
+    # `(expr)` shells) when they wrap the whole expression
+    while (
+        a.startswith("(")
+        and a.endswith(")")
+        and _call_end(a, 0) == len(a) - 1
+        and len(_split_top_commas(a[1:-1])) == 1
+    ):
+        a = a[1:-1].strip()
+    if a.startswith("["):
+        return True
+    if a.upper().startswith("CAST(") and "ARRAY" in a.upper():
+        return True
+    im = re.fullmatch(r"(?:`?\w+`?\.)?`?(\w+)`?", a)
+    if im and im.group(1) in arr_cols:
+        return True
+    # reverse is string-polymorphic in BOTH engines (ClickHouse
+    # reverses strings too), so reverse(x) is array-ish only when
+    # its own argument is — routing every reverse() to size() would
+    # break length(reverse(s)) on strings. slice/transform/filter
+    # only appear here as our own rewrites of arraySlice/arrayMap/
+    # arrayFilter (none is a ClickHouse string function), so they
+    # stay prefix-matched.
+    m = re.match(r"^reverse\s*\((.*)\)\s*$", a, re.S)
+    if m:
+        return _arrayish(m.group(1), arr_cols)
+    return bool(_ARRAYISH_CALL.match(a))
+
+
+@_lru_cache(maxsize=64)
+def _array_size_rules(arr_cols: frozenset) -> tuple:
+    # ClickHouse length/empty/notEmpty are polymorphic over strings AND
+    # arrays; Spark's length is strings-only and the typed empty alias
+    # would stringify an array. A textual rewrite cannot know the type,
+    # but array-ness is usually syntactically evident — route those
+    # calls to size(); everything else keeps the string path. This pass
+    # runs BEFORE _SCALAR_RENAMES so array-certain CH spellings
+    # (arrayReverse, arrayConcat, arrayFlatten — renamed to the
+    # string-polymorphic reverse/concat/flatten afterwards) are still
+    # distinguishable (fuzz_compose finding, r11).
+    return _rules(
+        ("length", _partial(_array_size, "size({x})", arr_cols), re.I),
+        ("notEmpty", _partial(_array_size, "(size({x}) > 0)", arr_cols)),
+        ("empty", _partial(_array_size, "(size({x}) <= 0)", arr_cols)),
+    )
+
+
+def _array_size(tmpl, arr_cols, sql, m, close, args):
+    if len(args) != 1 or not _arrayish(args[0], arr_cols):
+        return None
+    return tmpl.format(x=args[0])
+
+
+def _to_start_of_week(sql, m, close, args):
+    # toStartOfWeek(x, mode): even modes start Sunday, odd modes Monday
+    # (the 1-arg default-mode form is the Sunday-anchored SQL alias)
+    if len(args) != 2:
+        return None
+    mm = re.fullmatch(r"\s*(\d+)\s*", args[1])
+    if not mm:
+        raise ValueError("toStartOfWeek mode must be a literal integer")
+    x = args[0]
+    if int(mm.group(1)) % 2 == 1:
+        return f"CAST(date_trunc('WEEK', {x}) AS DATE)"
+    return f"date_sub(CAST(({x}) AS DATE), dayofweek({x}) - 1)"
+
+
+def _now_tz(sql, m, close, args):
+    # now('tz') renders the instant in a named zone — convert_timezone
+    # from the pinned-UTC session
+    return f"convert_timezone('UTC', {args[0]}, now())"
+
+
+def _format_date_time(sql, m, close, args):
+    # formatDateTime with a LITERAL format converts the %-specifiers to
+    # the Java pattern date_format understands (passing % through would
+    # error or, worse, format the wrong fields); computed formats fall
+    # through to the raw alias.
+    fm = args[1].strip() if len(args) >= 2 else ""
+    if len(args) not in (2, 3) or not _SQL_STR_LIT.fullmatch(fm):
+        return None
+    if len(args) == 3:
+        raise ValueError(
+            "formatDateTime with a timezone argument is not"
+            " translatable — convert with toTimeZone first"
+        )
+    # undo the SQL string-literal escaping ('' and \x) before
+    # converting, then re-escape for the emitted SQL literal
+    java = _convert_ch_datetime_format(_unescape_sql_literal(fm[1:-1]))
+    java = java.replace("'", "\\'")
+    return f"date_format(CAST({args[0]} AS TIMESTAMP), '{java}')"
+
+
+def _parse_date_time(sql, m, close, args):
+    # parseDateTime[OrNull](s, '%-format'): the MySQL-style parser —
+    # convert the literal format with the same table formatDateTime
+    # uses and emit [try_]to_timestamp
+    if len(args) == 1:
+        return None  # 1-arg form is the BestEffort-style alias
+    fm = args[1].strip()
+    if len(args) != 2 or not _SQL_STR_LIT.fullmatch(fm):
+        raise ValueError(
+            "parseDateTime translates with (expr, 'literal %-format')"
+            " only — use parseDateTimeBestEffort for free-form input"
+        )
+    java = _convert_ch_datetime_format(fm[1:-1]).replace("'", "\\'")
+    fn = "try_to_timestamp" if m.group(1) else "to_timestamp"
+    repl = f"{fn}({args[0]}, '{java}')"
+    if m.group(1) == "OrZero":
+        repl = f"coalesce({repl}, TIMESTAMP'1970-01-01 00:00:00')"
+    return repl
+
+
+def _variadic_char(sql, m, close, args):
+    # ClickHouse's variadic char(n1, n2, ...) builds a string from code
+    # points (mod 256, which Spark's chr also applies). Multi-arg only:
+    # the 1-arg form IS Spark's builtin, and `cast(x as char(10))` is a
+    # TYPE — the AS-guard plus the >=2-args condition keeps both intact.
+    if len(args) < 2 or re.search(r"(?i)\bas\s*$", sql[: m.start()]):
+        return None
+    return "concat(" + ", ".join(f"chr({a.strip()})" for a in args) + ")"
+
+
+def _map_apply(sql, m, close, args):
+    # mapApply((k, v) -> (k', v'), m): Spark has no entry-to-entry map
+    # HOF, so rebuild through entries — the user's lambda params are
+    # substituted with the entry's key/value fields
+    lam = args[0].strip() if args else ""
+    lm = re.fullmatch(r"\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*\((.*)\)", lam, re.S)
+    if len(args) != 2 or not lm:
+        raise ValueError(
+            "mapApply translates with ((k, v) -> (keyExpr, valExpr),"
+            " map) only"
+        )
+    kvar, vvar, body = lm.group(1), lm.group(2), lm.group(3)
+    parts = _split_top_commas(body)
+    if len(parts) != 2:
+        raise ValueError("mapApply lambda must return a (key, value) pair")
+
+    def subst(expr: str) -> str:
+        expr = re.sub(rf"\b{kvar}\b", "__ch_e.key", expr)
+        return re.sub(rf"\b{vvar}\b", "__ch_e.value", expr)
+
+    return (
+        f"map_from_entries(transform(map_entries({args[1].strip()}),"
+        f" __ch_e -> struct({subst(parts[0])} AS key,"
+        f" {subst(parts[1])} AS value)))"
+    )
+
+
+def _format_pattern(sql, m, close, args):
+    # format('{} and {n}', ...) with a LITERAL pattern → format_string:
+    # {} consumes arguments in order, {n} is 0-based positional; literal
+    # % is escaped so it can't be misread as a conversion
+    pat = args[0].strip() if args else ""
+    if len(args) < 2 or not _SQL_STR_LIT.fullmatch(pat):
+        return None  # not the CH pattern form — leave untouched
+    body, out, i = pat[1:-1], [], 0
+    while i < len(body):
+        c = body[i]
+        if c == "%":
+            out.append("%%")
+            i += 1
+            continue
+        if c == "{":
+            j = body.index("}", i)
+            ref = body[i + 1: j].strip()
+            out.append("%s" if ref == "" else f"%{int(ref) + 1}$s")
+            i = j + 1
+            continue
+        out.append(c)
+        i += 1
+    new_pat = "'" + "".join(out) + "'"
+    return f"format_string({new_pat}, {', '.join(a.strip() for a in args[1:])})"
+
+
+def _value_transform(sql, m, close, args):
+    # ClickHouse's VALUE-MAPPING transform(x, from, to[, default]) vs
+    # Spark's 2-arg higher-order transform(arr, lambda): the 3/4-arg
+    # form becomes a map lookup (3-arg keeps unmatched values, like CH)
+    if len(args) not in (3, 4):
+        return None  # Spark HOF form — leave
+    x, frm, to = args[0], args[1], args[2]
+    dflt = args[3] if len(args) == 4 else x
+    return f"coalesce(element_at(map_from_arrays({frm}, {to}), {x}), {dflt})"
+
+
+_JSON_T = {
+    "Int8": "TINYINT", "Int16": "SMALLINT", "Int32": "INT",
+    "Int64": "BIGINT", "UInt8": "INT", "UInt16": "INT",
+    "UInt32": "BIGINT", "UInt64": "BIGINT", "Float32": "FLOAT",
+    "Float64": "DOUBLE", "String": "STRING", "Bool": "BOOLEAN",
+}
+
+
+def _json_keys_and_values(sql, m, close, args):
+    # JSONExtractKeysAndValues(j, 'T') -> array of (key, value) structs
+    # via a typed MAP parse; the trailing argument is CH's type literal
+    tm = re.fullmatch(r"\s*'(\w+)'\s*", args[-1]) if args else None
+    if len(args) != 2 or not tm or tm.group(1) not in _JSON_T:
+        raise ValueError(
+            "JSONExtractKeysAndValues expects (json, 'Type') with a"
+            f" literal type of {sorted(_JSON_T)}"
+        )
+    return (
+        f"transform(map_entries(from_json({args[0]},"
+        f" 'MAP<STRING, {_JSON_T[tm.group(1)]}>')),"
+        " __ch_e -> named_struct('col1', __ch_e.key,"
+        " 'col2', __ch_e.value))"
+    )
+
+
+def _json_path(sql, m, close, args):
+    # JSON path folding BEFORE the splice table (these names keep their
+    # 1/2-arg SQL-alias forms, so an arity miss must pass through, not
+    # raise like the splice table does):
+    # * multi-key JSONExtract*(j, 'a', 'b', ...) folds the trailing keys
+    #   into one dotted path for the 2-arg alias;
+    # * 2-arg JSONType(j, key) extracts the element as RAW JSON text
+    #   (the VARIANT round-trip keeps string quoting, which
+    #   get_json_object strips) and classifies it with the 1-arg alias.
+    # Every rewrite leaves a form this handler passes through.
+    jname = m.group(1)
+    if jname == "JSONType" and len(args) == 2:
+        return (
+            f"JSONType(to_json(variant_get(try_parse_json({args[0]}),"
+            f" concat('$.', {args[1]}), 'variant')))"
+        )
+    if jname == "JSONLength" and len(args) >= 2:
+        # length of the element at the dotted key path (probe batch
+        # 58): the raw fragment is valid JSON, so the 1-arg alias
+        # classifies it
+        path = ", '.', ".join(args[1:])
+        return f"JSONLength(get_json_object({args[0]}, concat('$.', {path})))"
+    if jname == "JSONExtract" and len(args) >= 2:
+        # typed extraction: the LAST argument is the CH type (probe
+        # batch 58). Scalars TRY_CAST; Array(T)/typed containers parse
+        # via from_json.
+        tname = args[-1].strip().strip("'\"")
+        spark_t = _spark_type_name(tname)
+        am = re.match(r"(?i)^Array\((\w+)\)$", tname)
+        if am:
+            inner = _spark_type_name(am.group(1)) or am.group(1)
+            spark_t = f"ARRAY<{inner}>"
+        if spark_t is None:
+            raise ValueError(
+                f"JSONExtract type {tname!r} is not supported —"
+                " scalar ClickHouse types and Array(scalar)"
+                " translate; use JSONExtractKeysAndValues or"
+                " from_json for richer shapes"
+            )
+        src = args[0]
+        if len(args) >= 3:
+            path = ", '.', ".join(args[1:-1])
+            src = f"get_json_object({args[0]}, concat('$.', {path}))"
+        if am:
+            return f"from_json({src}, '{spark_t}')"
+        return f"TRY_CAST({src} AS {spark_t})"
+    if jname not in ("JSONType", "JSONLength", "JSONExtract") and len(args) >= 3:
+        path = ", '.', ".join(args[1:])
+        return f"{jname}({args[0]}, concat({path}))"
+    return None  # alias-arity form — leave for CREATE FUNCTION
+
+
+def _pip_pair(a: str) -> list[str]:
+    a = a.strip()
+    if re.match(r"^tuple\s*\(", a):
+        inner = a[a.index("(") + 1: -1]
+    elif a.startswith("(") and a.endswith(")"):
+        inner = a[1:-1]
+    else:
+        raise ValueError(
+            "pointInPolygon expects (x, y) tuples for the point"
+            " and a literal vertex list"
+        )
+    items = _split_top_commas(inner)
+    if len(items) != 2:
+        raise ValueError("pointInPolygon points must be 2-D")
+    return items
+
+
+def _point_in_polygon(sql, m, close, args):
+    # pointInPolygon((x, y), [(x1, y1), ...]) — even-odd ray casting
+    # unrolled over the LITERAL vertex list (the CH calling convention);
+    # the point coordinates may be arbitrary expressions
+    if len(args) != 2:
+        raise ValueError("pointInPolygon expects (point, polygon)")
+    px, py = _pip_pair(args[0])
+    poly = args[1].strip()
+    if poly.startswith("[") and poly.endswith("]"):
+        pinner = poly[1:-1]
+    elif re.match(r"^array\s*\(", poly):
+        pinner = poly[poly.index("(") + 1: -1]
+    else:
+        raise ValueError(
+            "pointInPolygon needs a literal [(x, y), ...] vertex list"
+        )
+    verts = [_pip_pair(v) for v in _split_top_commas(pinner)]
+    crossings = []
+    for i in range(len(verts)):
+        x1, y1 = verts[i]
+        x2, y2 = verts[i - 1]
+        crossings.append(
+            f"CAST(((({y1}) > ({py})) != (({y2}) > ({py}))"
+            f" AND ({px}) < ((({x2}) - ({x1})) * (({py}) - ({y1}))"
+            f" / (({y2}) - ({y1})) + ({x1}))) AS INT)"
+        )
+    return f"((({' + '.join(crossings)}) % 2) = 1)"
+
+
+def _splice_template(fname: str, args: list[str]) -> str | None:
+    forms = _ARRAY_SPLICE[fname]
+    tmpl = forms.get(len(args))
+    if tmpl is not None:
+        return tmpl.format(*args)
+    if fname in _SPLICE_PASSTHROUGH:
+        # this name also has an SQL-alias arity — leave the unmatched
+        # call for CREATE FUNCTION resolution
+        return None
+    raise ValueError(
+        f"{fname} expects {sorted(forms)} argument(s), got {len(args)}"
+    )
+
+
+def _splice_windowed(sql, m, close, args):
+    # moment corrections over a window: the OVER spec (or named window)
+    # repeats after every aggregate of the expanded template
+    fname = m.group(0).split("(")[0].strip()
+    om = re.match(r"\s*OVER\b\s*", sql[close + 1:], re.I)
+    if not om:
+        return _splice_template(fname, args)
+    wstart = close + 1 + om.end()
+    if wstart < len(sql) and sql[wstart] == "(":
+        wend = _call_end(sql, wstart)
+        wtxt = " OVER " + sql[wstart: wend + 1]
+    else:
+        wm = re.match(r"`?\w+`?", sql[wstart:])
+        if not wm:
+            raise ValueError(f"{fname} OVER: malformed window")
+        wtxt = " OVER " + sql[wstart: wstart + wm.end()]
+        wend = wstart + wm.end() - 1
+    wtpl = _WINDOWED_MOMENTS[fname].get(len(args))
+    if wtpl is None:
+        raise ValueError(f"{fname} with {len(args)} args has no windowed form")
+    return wtpl.format(*args, w=wtxt), wend + 1
+
+
+def _group_array_insert_at(sql, m, close, args):
+    # parametric spelling groupArrayInsertAt(default, size)(x, pos):
+    # exactly `size` slots, holes -> `default` (the arity-2 template is
+    # the bare spelling, which sizes to max(pos) and leaves holes NULL)
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        return _splice_template("groupArrayInsertAt", args)
+    a2 = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if len(args) != 2 or len(a2) != 2:
+        raise ValueError("groupArrayInsertAt(default, size)(x, pos)")
+    return (
+        f"transform(sequence(0, CAST(({args[1]}) AS INT)"
+        " - 1), __ch_i -> coalesce(try_element_at(filter("
+        f"collect_list(named_struct('p',"
+        f" CAST(({a2[1]}) AS INT), 'v', ({a2[0]}))),"
+        " __ch_e -> __ch_e.p = __ch_i), 1).v,"
+        f" ({args[0]})))"
+    ), tail[1] + 1
+
+
+def _splice_e0(sql, m, close, args):
+    # plus/minus/multiply and 2-arg arraySum: CH parses bare float
+    # literals as Float64; Spark parses them as DECIMAL, whose
+    # precision growth the type-preserving folds cannot accumulate
+    # (DECIMAL(p)+DECIMAL(p) is DECIMAL(p+1) ≠ the zero's type), and
+    # multiply(1.5, 2) would come out DECIMAL(4,1). Decimal COLUMNS
+    # remain a documented loud-error deviation: wrap the lambda body
+    # in toFloat64. Fragments carrying string literals are left alone;
+    # column args keep their types, which is the point of the splice.
+    fname = m.group(0).split("(")[0].strip()
+    if fname != "arraySum" or len(args) == 2:
+        args = [
+            a if ("'" in a or '"' in a) else re.sub(
+                r"(?<![\w.])(\d+\.\d+)(?![\w.])", r"\1E0", a
+            )
+            for a in args
+        ]
+    return _splice_template(fname, args)
+
+
+def _splice_rule(fname: str, forms: dict):
+    if fname in _WINDOWED_MOMENTS:
+        return fname, _splice_windowed
+    if fname == "groupArrayInsertAt":
+        return fname, _group_array_insert_at
+    if fname in ("plus", "minus", "multiply", "arraySum"):
+        return fname, _splice_e0
+    if fname in _SPLICE_PASSTHROUGH:
+        return fname, {**forms, None: _PASS}
+    return fname, forms
+
+
+def _array_sort(sql, m, close, args):
+    # arraySort / arrayReverseSort: type-preserving (vs the stringifying
+    # alias) and supporting ClickHouse's lambda-FIRST key form
+    # arraySort(x -> key, a) — sort by key via the struct trick, user's
+    # own lambda var kept (its body is user text)
+    fname = m.group(0).split("(")[0].strip()
+    if len(args) == 1:
+        inner = f"array_sort({args[0]})"
+    elif len(args) == 2:
+        lm = re.match(r"^\s*(\w+)\s*->\s*(.+)$", args[0], re.S)
+        if not lm:
+            raise ValueError(f"{fname} expects (lambda, array) or (array)")
+        var, body = lm.group(1), lm.group(2).strip()
+        inner = (
+            f"transform(array_sort(transform({args[1]},"
+            f" {var} -> struct(({body}) AS k, {var} AS v))),"
+            f" __ch_s -> __ch_s.v)"
+        )
+    else:
+        raise ValueError(f"{fname} expects (lambda, array) or (array)")
+    return f"reverse({inner})" if fname == "arrayReverseSort" else inner
+
+
+def _array_reduce(sql, m, close, args):
+    # arrayReduce('agg', a): the literal-name meta-aggregate over one
+    # array, mapped to the JVM array builtins (sum/avg fold in DOUBLE —
+    # documented deviation from CH's integer sums)
+    name_m = re.fullmatch(r"\s*'(\w+)'\s*", args[0]) if args else None
+    if len(args) != 2 or not name_m:
+        raise ValueError("arrayReduce translates with ('aggName', array) only")
+    agg, a = name_m.group(1), args[1]
+    forms = {
+        "max": f"array_max({a})",
+        "min": f"array_min({a})",
+        "sum": (
+            f"aggregate({a}, CAST(0.0 AS DOUBLE),"
+            f" (__ch_s, __ch_t) -> __ch_s + __ch_t)"
+        ),
+        "avg": (
+            f"(aggregate({a}, CAST(0.0 AS DOUBLE),"
+            f" (__ch_s, __ch_t) -> __ch_s + __ch_t) / size({a}))"
+        ),
+        "count": f"size({a})",
+        "any": f"try_element_at({a}, 1)",
+        "anyLast": f"try_element_at({a}, -1)",
+        "uniq": f"size(array_distinct({a}))",
+        "uniqExact": f"size(array_distinct({a}))",
+    }
+    if agg not in forms:
+        raise ValueError(f"arrayReduce: aggregate {agg!r} not supported")
+    return forms[agg]
+
+
+def _position(sql, m, close, args):
+    # ClickHouse position(haystack, needle[, start]) has the OPPOSITE
+    # argument order of Spark's position/locate(needle, haystack) —
+    # passing it through silently searches the needle for the haystack
+    # and returns 0. Flip the comma form to locate(); the SQL-standard
+    # position(x IN y) has no top-level comma and is left alone.
+    if len(args) not in (2, 3):
+        return None
+    tail = f", {args[2]}" if len(args) == 3 else ""
+    return f"locate({args[1]}, {args[0]}{tail})"
+
+
+def _multi_if(sql, m, close, args):
+    if len(args) < 3 or len(args) % 2 == 0:
+        raise ValueError("multiIf expects (c1, v1, ..., else)")
+    whens = " ".join(
+        f"WHEN {args[i]} THEN {args[i + 1]}" for i in range(0, len(args) - 1, 2)
+    )
+    return f"(CASE {whens} ELSE {args[-1]} END)"
+
+
+def _extract_regex(sql, m, close, args):
+    # comma-form extract(s, re): ClickHouse's first-regex-match. The
+    # EXTRACT(unit FROM ts) builtin form has no top-level comma.
+    if len(args) != 2:
+        return None
+    # group 1 when the pattern literal carries a CAPTURING group:
+    # count '(' that are neither backslash-escaped nor followed by
+    # '?' (non-capturing / lookaround). Only a literal string
+    # pattern can be sniffed — for computed patterns the group
+    # index is not inferable at translate time, so refuse loudly
+    # rather than silently return the wrong group.
+    pat = args[1].strip()
+    if not _SQL_STR_LIT.fullmatch(pat):
+        raise ValueError(
+            "extract(s, re) translates only with a literal string"
+            " pattern (the capture-group index must be inferred);"
+            " use regexp_extract(s, re, group) directly"
+        )
+    # two escaping layers: first undo the SQL string-literal escapes
+    # (Spark maps \x -> x and '' -> '), THEN count regex-level
+    # capturing groups on the resulting pattern
+    rx, ncap, i = _unescape_sql_literal(pat[1:-1]), 0, 0
+    while i < len(rx):
+        if rx[i] == "\\":
+            i += 2
+            continue
+        if rx[i] == "(" and rx[i + 1: i + 2] != "?":
+            ncap += 1
+        i += 1
+    return f"regexp_extract({args[0]}, {args[1]}, {1 if ncap else 0})"
+
+
+def _range(sql, m, close, args):
+    # table position (FROM range(...), JOIN range(...)) is Spark's
+    # range TVF — numbers() expands to it; leave it alone
+    if re.search(r"(?i)\b(FROM|JOIN)$", sql[: m.start()].rstrip()):
+        return None
+    # [start, end) with the end EXCLUSIVE; the filter keeps the
+    # empty range empty (sequence(0, -1) would count DOWN)
+    if len(args) == 1:
+        a, b, st = "0", args[0], None
+    elif len(args) == 2:
+        a, b, st = args[0], args[1], None
+    elif len(args) == 3:
+        a, b, st = args
+    else:
+        raise ValueError("range expects 1-3 arguments")
+    step = f", ({st})" if st else ""
+    # collision-improbable lambda var: ({b}) is user text and may
+    # reference a column literally named x
+    return (
+        f"filter(sequence(({a}), greatest(({b}) - 1, ({a})){step}),"
+        f" __ch_x -> __ch_x < ({b}))"
+    )
+
+
+def _tuple_element(sql, m, close, args):
+    if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
+        raise ValueError(
+            "tupleElement translates only with a literal index:"
+            " tupleElement(t, N) -> (t).colN"
+        )
+    # a literal tuple argument resolves at translate time —
+    # tuple(i, s) names its struct fields after the expressions,
+    # so the .colN access would miss (batch-81)
+    items = _tuple_items(args[0])
+    if items is None:
+        return f"({args[0]}).col{args[1]}"
+    idx = int(args[1].strip())
+    if not 1 <= idx <= len(items):
+        raise ValueError(
+            f"tupleElement index {idx} out of range for a"
+            f" {len(items)}-element tuple"
+        )
+    return f"({items[idx - 1]})"
+
+
+def _to_decimal_string(sql, m, close, args):
+    if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
+        raise ValueError(
+            "toDecimalString translates only with a literal scale:"
+            " toDecimalString(x, N)"
+        )
+    n = min(int(args[1].strip()), 30)  # double precision ceiling
+    return f"format_string('%.{n}f', CAST({args[0]} AS DOUBLE))"
+
+
+def _extract_groups(sql, m, close, args):
+    # extractGroups(s, 'pat'): the capture groups of the FIRST match as
+    # an array; [] when the pattern does not match (CH semantics).
+    # Literal pattern only (group count drives the expansion, via the
+    # same class-aware counter as extract).
+    ncap = _count_capture_groups(args[1].strip()) if len(args) == 2 else None
+    if not ncap:
+        raise ValueError(
+            "extractGroups translates only with a literal pattern"
+            " containing capture groups"
+        )
+    s_arg, p_arg = args[0], args[1]
+    groups = ", ".join(
+        f"regexp_extract({s_arg}, {p_arg}, {k})" for k in range(1, ncap + 1)
+    )
+    return (
+        f"CASE WHEN {s_arg} RLIKE {p_arg} THEN array({groups})"
+        f" ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+
+
+_AES_FNS = {
+    "tryDecrypt": ("try_aes_decrypt", True),
+    "decrypt": ("aes_decrypt", True),
+    "encrypt": ("aes_encrypt", False),
+    "aes_decrypt_mysql": ("aes_decrypt", True),
+    "aes_encrypt_mysql": ("aes_encrypt", False),
+}
+
+
+def _aes(sql, m, close, args):
+    # encrypt/decrypt family: only aes-{128,192,256}-ecb translates.
+    # ECB is deterministic, so Spark's aes_encrypt output is byte-exact
+    # vs ClickHouse/OpenSSL (PKCS7 padding both sides — NIST-vector
+    # pinned in tests). CBC/GCM refuse loudly: Spark prepends its IV to
+    # the ciphertext, ClickHouse does not, so the wire bytes can never
+    # agree. aes_*_mysql with a standard-length key is identical to
+    # encrypt; MySQL's XOR-fold of over-length keys has no Spark
+    # spelling (Spark raises on key length instead of folding).
+    name = m.group(0).split("(")[0].strip()
+    fn, dec = _AES_FNS[name]
+    if len(args) != 3:
+        raise ValueError(
+            f"{name} translates only as {name}(mode,"
+            " input, key) with an aes-*-ecb mode — ECB takes"
+            " no IV/AAD, and non-ECB modes do not translate"
+            " (Spark prepends the IV to the ciphertext,"
+            " ClickHouse does not)"
+        )
+    mmode = re.fullmatch(r"'aes-(?:128|192|256)-([a-zA-Z0-9]+)'", args[0].strip())
+    if not mmode or mmode.group(1).lower() != "ecb":
+        raise ValueError(
+            f"{name}: only a literal 'aes-<128|192|256>-ecb'"
+            " mode translates — CBC/GCM/CTR ciphertext layouts"
+            " differ (Spark prepends the IV, ClickHouse does"
+            " not), so only ECB is byte-exact"
+        )
+    repl = f"{fn}({args[1]}, {args[2]}, 'ECB', 'PKCS')"
+    return f"CAST({repl} AS STRING)" if dec else repl
+
+
+def _default_value_of_type_name(sql, m, close, args):
+    # defaultValueOfTypeName('T') -> the type's zero value, mapped at
+    # translate time from the literal type name
+    tname = sql[m.end(): close].strip().strip("'\"")
+    base = tname
+    nullable = False
+    nm = re.fullmatch(r"Nullable\((.*)\)", base)
+    if nm:
+        nullable, base = True, nm.group(1).strip()
+    if re.fullmatch(r"U?Int\d+", base):
+        return "CAST(NULL AS BIGINT)" if nullable else "CAST(0 AS BIGINT)"
+    if re.fullmatch(r"Float\d+", base):
+        return "CAST(NULL AS DOUBLE)" if nullable else "CAST(0.0 AS DOUBLE)"
+    if base in ("String", "FixedString"):
+        return "CAST(NULL AS STRING)" if nullable else "''"
+    if base in ("Date", "Date32"):
+        return "CAST(NULL AS DATE)" if nullable else "DATE'1970-01-01'"
+    if base.startswith("DateTime"):
+        return (
+            "CAST(NULL AS TIMESTAMP)" if nullable
+            else "TIMESTAMP'1970-01-01 00:00:00'"
+        )
+    if base == "Bool":
+        return "CAST(NULL AS BOOLEAN)" if nullable else "false"
+    if base == "UUID":
+        return "'00000000-0000-0000-0000-000000000000'"
+    if base.startswith("Array("):
+        return "array()"
+    raise ValueError(
+        f"defaultValueOfTypeName: unmapped type {tname!r} — use"
+        " an explicit literal"
+    )
+
+
+def _extract_all_groups(sql, m, close, args):
+    # extractAllGroups is documented by CH as the vertical form
+    fname = m.group(0).split("(")[0].strip()
+    ncap = _count_capture_groups(args[1].strip()) if len(args) == 2 else None
+    if not ncap:
+        raise ValueError(
+            f"{fname} translates only with a literal pattern"
+            " containing capture groups"
+        )
+    s_arg, p_arg = args[0], args[1]
+    per_group = [
+        f"regexp_extract_all({s_arg}, {p_arg}, {k})" for k in range(1, ncap + 1)
+    ]
+    if fname == "extractAllGroupsHorizontal":
+        return f"array({', '.join(per_group)})"
+    # one row per match, one element per group: walk group 1's matches
+    # by index and pick the same position from each group's extraction
+    # (exact — no re-matching of substrings)
+    others = ", ".join(f"element_at({g}, __ch_i + 1)" for g in per_group[1:])
+    tail = f", {others}" if others else ""
+    return f"transform({per_group[0]}, (__ch_x, __ch_i) -> array(__ch_x{tail}))"
+
+
+def _replace_regexp_one(sql, m, close, args):
+    if len(args) != 3:
+        raise ValueError("replaceRegexpOne expects (s, pattern, replacement)")
+    s_arg, p_arg, r_arg = (a.strip() for a in args)
+    # first-match surgery: extract the leftmost match, splice the
+    # replacement over its first occurrence. Exact for position-
+    # independent patterns (an earlier occurrence of the matched
+    # text would itself have been the leftmost match); context-
+    # dependent constructs and backreference replacements refuse.
+    if _count_capture_groups(p_arg) is None:
+        raise ValueError(
+            "replaceRegexpOne translates only with a literal pattern"
+        )
+    if re.search(r"\\b|\(\?<|\(\?=|\(\?!|\^|\$", p_arg):
+        raise ValueError(
+            "replaceRegexpOne: context-dependent patterns (anchors,"
+            " lookaround, word boundaries) do not survive the"
+            " first-match splice — use regexp_replace semantics or"
+            " restate the pattern"
+        )
+    if "\\" in r_arg:
+        raise ValueError(
+            "replaceRegexpOne: backreference replacements are not"
+            " supported — use replaceRegexpAll/regexp_replace"
+        )
+    mvar = f"regexp_extract({s_arg}, {p_arg}, 0)"
+    return (
+        f"(CASE WHEN {mvar} != '' AND locate({mvar}, {s_arg}) > 0 THEN"
+        f" concat(substr({s_arg}, 1, locate({mvar}, {s_arg}) - 1), {r_arg},"
+        f" substr({s_arg}, locate({mvar}, {s_arg}) + length({mvar})))"
+        f" ELSE {s_arg} END)"
+    )
+
+
+def _timestamp_diff(sql, m, close, args):
+    # timestampDiff = dateDiff with the unit possibly UNQUOTED (the
+    # MySQL-compatible spelling ClickHouse also accepts)
+    if len(args) != 3:
+        raise ValueError("timestampDiff expects (unit, start, end)")
+    unit = args[0].strip()
+    if re.fullmatch(r"\w+", unit):
+        unit = f"'{unit}'"
+    return f"chDateDiff({unit}, {args[1]}, {args[2]})"
+
+
+def _morton_decode(sql, m, close, args):
+    if len(args) != 2 or args[0].strip() != "2":
+        raise ValueError(
+            "mortonDecode translates only for 2 dimensions:"
+            " mortonDecode(2, code)"
+        )
+    # BIGINT cast matters: an INT code would wrap its shift count
+    # mod 32 at bit positions >= 16 (2*i >= 32)
+    z = f"CAST({args[1]} AS BIGINT)"
+    return (
+        "named_struct("
+        f"'col1', aggregate(sequence(0, 31), CAST(0 AS BIGINT),"
+        f" (__ch_ac, __ch_i) -> __ch_ac"
+        f" + shiftleft((({z}) >> (2 * __ch_i)) & 1, __ch_i)),"
+        f"'col2', aggregate(sequence(0, 31), CAST(0 AS BIGINT),"
+        f" (__ch_ac, __ch_i) -> __ch_ac"
+        f" + shiftleft((({z}) >> (2 * __ch_i + 1)) & 1, __ch_i)))"
+    )
+
+
+def _literal_fold(tmpl, sql, m, close, args):
+    return tmpl.format(args[0][1:-1])
+
+
+# ClickHouse rand()/rand32() are UInt32, rand64() UInt64 — NOT [0,1):
+# `rand() % 100` is the canonical CH idiom and would always be 0 under
+# Spark's rand(). Rewrite to the ClickHouse range (rand64 via
+# shiftleft/OR so the 64-bit form cannot overflow-throw; the sign bit
+# reinterprets like halfMD5 — documented). (replacements spell RAND()
+# uppercase so the case-exact scan for the shorter names cannot
+# re-match inside an earlier replacement)
+_RAND32 = "CAST(floor(RAND() * 4294967296) AS BIGINT)"
+_NO_ARGS = r"(?=\s*\(\s*\))"
+
+# the scalar-spelling passes of _rewrite_scalar_misc, in pass order (the
+# nan/inf literal pass and the specs-aware array-size rules run between
+# these tables)
+_SCALAR_LITERAL_FOLDS = _rules(
+    # Constant-fold literal toDate/toDateTime calls to native DATE/
+    # TIMESTAMP literals. Spark inlines SQL UDFs as projections, and a
+    # UDF call inside a GROUPING expression breaks aggregate extraction
+    # (MISSING_ATTRIBUTES on the UDF parameter — the documented
+    # grid-params pitfall; re-found by fuzz_compose on
+    # `(d < toDate('...')) AS k ... GROUP BY 1`). Literal args are the
+    # overwhelmingly common spelling; non-literal args keep the UDF.
+    (r"toDate(?:32)?(?=\s*\(\s*'\d{4}-\d{2}-\d{2}'\s*\))",
+     _partial(_literal_fold, "DATE '{0}'")),
+    (r"toDateTime(?=\s*\(\s*'\d{4}-\d{2}-\d{2}"
+     r"(?:[ T]\d{2}:\d{2}:\d{2})?'\s*\))",
+     _partial(_literal_fold, "TIMESTAMP '{0}'")),
+)
+_SCALAR_RULES_HEAD = _rules(
+    (r"(lagInFrame|leadInFrame)", _lag_lead_in_frame),
+    (r"(multiMatchAnyIndex)", _multi_match),
+    (r"(multiMatchAny)", _multi_match),
+    (r"formatRow(NoNewline)?", _format_row),
+    # now64(precision[, tz]) -> now64(): Spark timestamps are fixed µs
+    # precision, so the precision digit only picks a display scale
+    # CH-side; sub-µs (7-9) requests resolve to the same µs clock
+    (r"now64(?=\s*\(\s*\d\s*\))", "now64()"),
+    ("bitSlice", _bit_slice),
+    ("nonNegativeDerivative", _non_negative_derivative),
+    # wrappers that are the identity under Spark's nullability model
+    *((name, "") for name in _IDENTITY_FNS),
+)
+_SCALAR_RULES_TAIL = _rules(
+    *_SCALAR_RENAMES.items(),
+    # 1-arg arrayStringConcat joins with the empty separator
+    ("arrayStringConcat", {1: "array_join({0}, '')", None: _PASS}),
+    ("toStartOfWeek", _to_start_of_week),
+    # 2-arg fromUnixTimestamp(x, '%F') formats with CH %-codes — spell
+    # it as formatDateTime over the converted timestamp HERE so the
+    # %-conversion rule below picks it up (the 1-arg form is the plain
+    # SQL-alias conversion)
+    ("fromUnixTimestamp",
+     {2: "formatDateTime(timestamp_seconds({0}), {1})", None: _PASS}),
+    (r"now(?=\s*\(\s*'[^']+'\s*\))", _now_tz, re.I),
+    ("formatDateTime", _format_date_time),
+    (r"parseDateTime(OrNull|OrZero)?", _parse_date_time),
+    ("char", _variadic_char),
+    ("mapApply", _map_apply),
+    ("format", _format_pattern),
+    ("transform", _value_transform),
+    ("JSONExtractKeysAndValues", _json_keys_and_values),
+    *((f"({j})", _json_path) for j in (
+        "JSONExtractInt", "JSONExtractFloat", "JSONExtractBool",
+        "JSONExtractString", "JSONExtractRaw", "JSONExtractArrayRaw",
+        "JSONHas", "JSONType", "JSONLength", "JSONExtract",
+    )),
+    ("pointInPolygon", _point_in_polygon, re.I),
+    *(_splice_rule(f, forms) for f, forms in _ARRAY_SPLICE.items()),
+    ("arrayReverseSort", _array_sort),
+    ("arraySort", _array_sort),
+    # arrayReduceInRanges('agg', ranges, a) (probe batch 62): one
+    # reduce per (index, length) tuple — rewritten into arrayReduce
+    # over slice() so the literal-name rule below finishes the job
+    ("arrayReduceInRanges", {
+        3: "transform({1}, __ch_rg -> arrayReduce({0},"
+           " slice({2}, CAST(__ch_rg.col1 AS INT),"
+           " CAST(__ch_rg.col2 AS INT))))",
+        None: "arrayReduceInRanges takes ('aggName', ranges, array)",
+    }),
+    ("arrayReduce", _array_reduce),
+    # arrayCompact(a): element-type-preserving consecutive dedup (the
+    # SQL-UDF alias would stringify elements); empty-array safe
+    ("arrayCompact",
+     "(CASE WHEN size(({x})) = 0 THEN ({x}) ELSE"
+     " transform(filter(sequence(0, size(({x})) - 1),"
+     " __ch_i -> __ch_i = 0 OR NOT(({x})[__ch_i]"
+     " <=> ({x})[__ch_i - 1])), __ch_i -> ({x})[__ch_i]) END)"),
+    ("position", _position, re.I),
+    ("rand64" + _NO_ARGS,
+     f"(shiftleft({_RAND32}, 32) | {_RAND32})"),
+    ("rand32" + _NO_ARGS, _RAND32),
+    ("rand" + _NO_ARGS, _RAND32),
+    ("multiIf", _multi_if),
+    ("extract", _extract_regex, re.I),
+    ("range", _range),
+    ("tupleElement", _tuple_element),
+    # r6 execution-probe tail: spellings that previously translated
+    # untouched and died at run time with UNRESOLVED_ROUTINE
+    ("addInterval", {
+        2: "({0} + {1})",
+        None: "addInterval expects (datetime, INTERVAL expr)",
+    }),
+    ("subtractInterval", {  # the subtraction twin (batch-82)
+        2: "({0} - {1})",
+        None: "subtractInterval expects (datetime, INTERVAL expr)",
+    }),
+    ("toDecimalString", _to_decimal_string),
+    ("extractGroups", _extract_groups),
+    *((name, _aes) for name in _AES_FNS),
+    ("defaultValueOfTypeName", _default_value_of_type_name),
+    ("extractAllGroupsVertical", _extract_all_groups),
+    ("extractAllGroupsHorizontal", _extract_all_groups),
+    ("extractAllGroups", _extract_all_groups),
+    ("replaceRegexpOne", _replace_regexp_one),
+    ("timestampDiff", _timestamp_diff),
+    ("mortonDecode", _morton_decode),
+)
+
+
 def _rewrite_scalar_misc(sql: str, specs: dict | None = None) -> str:
     """Polymorphic scalar spellings that need a translate-time rewrite
     rather than a typed SQL-UDF alias: renames (arrayZip → arrays_zip,
@@ -3139,33 +4246,7 @@ def _rewrite_scalar_misc(sql: str, specs: dict | None = None) -> str:
     (group 1 when the pattern literal has a capture group; EXTRACT(unit
     FROM ts) is left alone), ``range`` → a filtered sequence (empty-
     range safe), literal ``tupleElement(t, N)`` → ``(t).colN``."""
-    # Constant-fold literal toDate/toDateTime calls to native DATE/
-    # TIMESTAMP literals. Spark inlines SQL UDFs as projections, and a
-    # UDF call inside a GROUPING expression breaks aggregate extraction
-    # (MISSING_ATTRIBUTES on the UDF parameter — the documented
-    # grid-params pitfall; re-found by fuzz_compose on
-    # `(d < toDate('...')) AS k ... GROUP BY 1`). Literal args are the
-    # overwhelmingly common spelling; non-literal args keep the UDF.
-    for _rx, _fmt in (
-        (re.compile(r"\btoDate(?:32)?\s*\(\s*'(\d{4}-\d{2}-\d{2})'\s*\)"),
-         "DATE '{0}'"),
-        (re.compile(r"\btoDateTime\s*\(\s*'(\d{4}-\d{2}-\d{2}"
-                    r"(?:[ T]\d{2}:\d{2}:\d{2})?)'\s*\)"),
-         "TIMESTAMP '{0}'"),
-    ):
-        _pos = 0
-        while True:
-            instr_at = _instr_map(sql)
-            hit = None
-            for m in _rx.finditer(sql, _pos):
-                if not instr_at.get(m.start(), False):
-                    hit = m
-                    break
-            if not hit:
-                break
-            repl = _fmt.format(hit.group(1))
-            sql = sql[: hit.start()] + repl + sql[hit.end():]
-            _pos = hit.start() + len(repl)
+    sql = _rewrite_calls(sql, _SCALAR_LITERAL_FOLDS)
     # ClickHouse's bare nan/inf float literals (batch-73): Spark only
     # spells them as typed casts. Case-exact lowercase (the CH
     # spelling); -inf rides the unary minus unchanged. ALIAS positions
@@ -3183,15 +4264,10 @@ def _rewrite_scalar_misc(sql: str, specs: dict | None = None) -> str:
         if _find_top_anywhere(sql, rf"(?i)\bAS\s+`?{_lit}`?\b"):
             continue
         _pos = 0
-        _rx = re.compile(rf"\b{_lit}\b")
         while True:
-            m = _rx.search(sql, _pos)
+            m = _find_top_anywhere(sql, rf"\b{_lit}\b", _pos, flags=0)
             if not m:
                 break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                _pos = m.end()
-                continue
             if re.search(r"(?i)\bAS\s+$", sql[: m.start()]) or (
                 m.start() > 0 and sql[m.start() - 1] in ".`"
             ):
@@ -3199,1558 +4275,17 @@ def _rewrite_scalar_misc(sql: str, specs: dict | None = None) -> str:
                 continue
             sql = sql[: m.start()] + _repl + sql[m.end():]
             _pos = m.start() + len(_repl)
-    # lagInFrame/leadInFrame with an explicit frame (the ClickHouse
-    # requirement): rename to lag/lead AND strip the frame from their
-    # OVER spec (the plain renames below handle the frameless form)
-    pos = 0
-    lif_rx = re.compile(r"\b(lagInFrame|leadInFrame)\s*\(")
-    while True:
-        m = lif_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:]
-        om = re.match(r"(?is)\s*OVER\s*\(", rest)
-        if not om:
-            pos = m.end()  # no OVER here: plain rename path
-            continue
-        open2 = close1 + 1 + om.end() - 1
-        close2 = _call_end(sql, open2)
-        target = "lag" if m.group(1) == "lagInFrame" else "lead"
-        body = _strip_window_frame(sql[open2 + 1: close2])
-        sql = (
-            sql[: m.start()] + target + sql[open1: close1 + 1]
-            + f" OVER ({body})" + sql[close2 + 1:]
-        )
-        pos = m.start()
-    # multiMatchAny / multiMatchAnyIndex over a LITERAL pattern array:
-    # an OR-chain / first-match CASE of RLIKEs (CH runs hyperscan; the
-    # index CH returns for multiple hits is unspecified — first-match
-    # is this translation's pinned choice). Non-literal pattern sets
-    # refuse: the chain must be built at translate time.
-    for mm_name, mm_kind in (
-        ("multiMatchAnyIndex", "index"),
-        ("multiMatchAny", "any"),
-    ):
-        pos = 0
-        mm_rx = re.compile(rf"\b{mm_name}\s*\(")
-        while True:
-            m = mm_rx.search(sql, pos)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            pats = None
-            if len(args) == 2:
-                am = re.fullmatch(r"\s*array\s*\((.*)\)\s*", args[1], re.S)
-                if am:
-                    items = _split_top_commas(am.group(1))
-                    if all(
-                        re.fullmatch(r"\s*'(?:[^']|'')*'\s*", it)
-                        for it in items
-                    ):
-                        pats = [it.strip() for it in items]
-            if pats is None:
-                raise ValueError(
-                    f"{mm_name} translates only for a literal pattern"
-                    " array — build the RLIKE chain yourself for"
-                    " computed pattern sets"
-                )
-            hay = args[0]
-            if mm_kind == "any":
-                body = " OR ".join(f"({hay}) RLIKE {p}" for p in pats)
-                expr = f"CAST(({body}) AS INT)"
-            else:
-                whens = " ".join(
-                    f"WHEN ({hay}) RLIKE {p} THEN {i + 1}"
-                    for i, p in enumerate(pats)
-                )
-                expr = f"(CASE {whens} ELSE 0 END)"
-            sql = sql[: m.start()] + expr + sql[close1 + 1:]
-            pos = m.start()
-    # formatRow('Format', exprs...): literal CSV / TSV / JSONEachRow
-    # render through to_csv / concat_ws / to_json (formatRow appends
-    # the row terminator, the NoNewline spelling does not)
-    pos = 0
-    fr_rx = re.compile(r"\bformatRow(NoNewline)?\s*\(")
-    while True:
-        m = fr_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        no_nl = bool(m.group(1))
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        fm = re.fullmatch(r"\s*'(\w+)'\s*", args[0]) if args else None
-        if not fm or len(args) < 2:
-            raise ValueError(
-                "formatRow expects a literal format name first:"
-                " formatRow('CSV'|'TSV'|'JSONEachRow', exprs...)"
-            )
-        fmt = fm.group(1)
-        cols = ", ".join(a.strip() for a in args[1:])
-        if fmt == "CSV":
-            body = f"to_csv(struct({cols}))"
-        elif fmt in ("TSV", "TabSeparated"):
-            # NULLs render as \N like CH (bare concat_ws would SKIP
-            # the NULL and silently shift every later column left)
-            casts = ", ".join(
-                f"coalesce(CAST(({a.strip()}) AS STRING), '\\\\N')"
-                for a in args[1:]
-            )
-            body = f"concat_ws('\\t', {casts})"
-        elif fmt == "JSONEachRow":
-            body = f"to_json(struct({cols}))"
-        else:
-            raise ValueError(
-                f"formatRow: format {fmt!r} has no SQL spelling —"
-                " CSV, TSV and JSONEachRow translate"
-            )
-        if not no_nl:
-            body = f"concat({body}, '\\n')"
-        sql = sql[: m.start()] + body + sql[close1 + 1:]
-        pos = m.start()
-    # now64(precision[, tz]) -> now64(): Spark timestamps are fixed
-    # µs precision, so the precision digit only picks a display scale
-    # CH-side; sub-µs (7-9) requests resolve to the same µs clock
-    sql = _sub_outside_strings(
-        sql, re.compile(r"\bnow64\s*\(\s*\d\s*\)"), "now64()"
-    )
-    # bitSlice(s, offset[, length]) -> the registered ch_bit_slice
-    # pandas UDF (functions/strdist.py, returns BINARY); the UDF takes
-    # exactly 3 args, so the 2-arg spelling pads a NULL length
-    pos = 0
-    bs_rx = re.compile(r"\bbitSlice\s*\(")
-    while True:
-        m = bs_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) == 2:
-            args.append("CAST(NULL AS BIGINT)")
-        if len(args) != 3:
-            raise ValueError("bitSlice takes (s, offset[, length])")
-        sql = (
-            sql[: m.start()]
-            + f"ch_bit_slice({', '.join(a.strip() for a in args)})"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    # nonNegativeDerivative(metric, ts[, INTERVAL n unit]) OVER (spec):
-    # lag-based rate with resets clamped to 0 and the first row NULL —
-    # the operators/windows.py:non_negative_derivative semantics.
-    # CAST(... AS DOUBLE) reads timestamps as epoch seconds and leaves
-    # numerics alone, so both shapes work.
-    pos = 0
-    nnd_rx = re.compile(r"\bnonNegativeDerivative\s*\(")
-    while True:
-        m = nnd_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:]
-        om = re.match(r"(?is)\s*OVER\s*\(", rest)
-        if not om:
-            raise ValueError(
-                "nonNegativeDerivative translates as a window function —"
-                " add an OVER clause, or use"
-                " operators/windows.py:non_negative_derivative"
-            )
-        open2 = close1 + 1 + om.end() - 1
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) not in (2, 3):
-            raise ValueError(
-                "nonNegativeDerivative expects (metric, timestamp"
-                "[, INTERVAL n unit])"
-            )
-        scale = ""
-        if len(args) == 3:
-            im = re.fullmatch(
-                r"(?is)\s*INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY)S?\s*",
-                args[2],
-            )
-            if not im:
-                raise ValueError(
-                    "nonNegativeDerivative's third argument must be a"
-                    " literal INTERVAL n SECOND/MINUTE/HOUR/DAY"
-                )
-            secs = int(im.group(1)) * _INTERVAL_SECONDS[im.group(2).lower()]
-            scale = f" * {secs}.0"
-        w = f"({_strip_window_frame(sql[open2 + 1: close2])})"
-        mcol, tcol = args[0], args[1]
-        lag_t = f"lag(CAST({tcol} AS DOUBLE)) OVER {w}"
-        lag_m = f"lag(CAST({mcol} AS DOUBLE)) OVER {w}"
-        expr = (
-            f"(CASE WHEN {lag_t} IS NULL THEN NULL"
-            f" ELSE greatest((CAST({mcol} AS DOUBLE) - {lag_m})"
-            f" / nullif(CAST({tcol} AS DOUBLE) - {lag_t}, 0.0), 0.0)"
-            f"{scale} END)"
-        )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-        pos = m.start()
-    for name in _IDENTITY_FNS:
-        while True:
-            m = _find_case_exact(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            sql = sql[: m.start()] + "(" + sql[sql.index("(", m.end() - 1) + 1:]
-    # ClickHouse length/empty/notEmpty are polymorphic over strings AND
-    # arrays; Spark's length is strings-only and the typed empty alias
-    # would stringify an array. A textual rewrite cannot know the type,
-    # but array-ness is usually syntactically evident — route those
-    # calls to size(); everything else keeps the string path. This pass
-    # runs BEFORE _SCALAR_RENAMES so array-certain CH spellings
-    # (arrayReverse, arrayConcat, arrayFlatten — renamed to the
-    # string-polymorphic reverse/concat/flatten afterwards) are still
-    # distinguishable (fuzz_compose finding, r11). When table specs are
-    # available (the Engine.ch_sql path), BARE COLUMNS declared
-    # Array(...) in the DDL resolve too — the reference's own tables
-    # carry Array(String) columns (migrations/009:24-27), so
-    # length(genres) must mean array length there. A name is trusted
-    # only when it is array-typed in at least one spec and non-array in
-    # none (ambiguity keeps the string path).
-    arr_cols: set[str] = set()
-    if specs:
-        non_arr: set[str] = set()
-        for sp in specs.values():
-            for col, cht in getattr(sp, "ch_types", {}).items():
-                base = cht.strip()
-                if base.startswith("Array("):
-                    arr_cols.add(col)
-                else:
-                    non_arr.add(col)
-        arr_cols -= non_arr
-
-    def _arrayish(arg: str) -> bool:
-        a = arg.strip()
-        # strip one layer of grouping parens (identity-fn unwraps above
-        # leave `(expr)` shells) when they wrap the whole expression
-        while (
-            a.startswith("(")
-            and a.endswith(")")
-            and _call_end(a, 0) == len(a) - 1
-            and len(_split_top_commas(a[1:-1])) == 1
-        ):
-            a = a[1:-1].strip()
-        if a.startswith("["):
-            return True
-        if a.upper().startswith("CAST(") and "ARRAY" in a.upper():
-            return True
-        im = re.fullmatch(r"(?:`?\w+`?\.)?`?(\w+)`?", a)
-        if im and im.group(1) in arr_cols:
-            return True
-        # reverse is string-polymorphic in BOTH engines (ClickHouse
-        # reverses strings too), so reverse(x) is array-ish only when
-        # its own argument is — routing every reverse() to size() would
-        # break length(reverse(s)) on strings. slice/transform/filter
-        # only appear here as our own rewrites of arraySlice/arrayMap/
-        # arrayFilter (none is a ClickHouse string function), so they
-        # stay prefix-matched.
-        m = re.match(r"^reverse\s*\((.*)\)\s*$", a, re.S)
-        if m:
-            return _arrayish(m.group(1))
-        return bool(
-            re.match(
-                r"^(?:array|splitBy\w*|groupArray\w*|groupUniqArray|"
-                r"collect_list|collect_set|sequence|range|arrayMap|"
-                r"arrayFilter|arraySort|arrayReverseSort|arraySlice|"
-                r"arrayConcat|arrayDistinct|array_distinct|arrayCompact|"
-                r"arrayIntersect|arrayPushBack|arrayPushFront|"
-                r"arrayPopBack|arrayPopFront|extractAll|flatten|"
-                r"arrayFlatten|map_keys|mapKeys|map_values|mapValues|"
-                r"split|slice|transform|filter|topK|emptyArray\w*|"
-                r"arrayReverse|arrayZip|arrays_zip|arrayCumSum|"
-                r"arrayDifference|arrayEnumerate\w*|arrayWithConstant|"
-                r"array_repeat|arrayResize|arrayRotate\w*|arrayShift\w*|"
-                r"arrayInsert|arraySymmetricDifference|arrayFill|"
-                r"arrayReverseFill|arrayPartialSort|"
-                r"arrayReversePartialSort)\s*\(",
-                a,
-            )
-        )
-
-    for fname, tmpl in (
-        ("length", "size({x})"),
-        ("notEmpty", "(size({x}) > 0)"),
-        ("empty", "(size({x}) <= 0)"),
-    ):
-        pos = 0
-        rx = re.compile(rf"\b{fname}\s*\(", re.I if fname == "length" else 0)
-        while True:
-            m = rx.search(sql, pos)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 1 or not _arrayish(args[0]):
-                pos = m.end()
-                continue
-            sql = sql[: m.start()] + tmpl.format(x=args[0]) + sql[close1 + 1:]
-            pos = m.start()
-    for name, target in _SCALAR_RENAMES.items():
-        if name not in sql:  # cheap substring pre-filter (case-exact)
-            continue
-        pos = 0
-        rx = _rxc(rf"\b{name}\s*\(")
-        while True:
-            m = rx.search(sql, pos)
-            if not m:
-                break
-            if _idx_in_string(_scan_index(sql), m.start()):
-                pos = m.end()
-                continue
-            sql = sql[: m.start()] + target + "(" + sql[m.end():]
-            pos = m.start() + len(target)
-    # 1-arg arrayStringConcat joins with the empty separator
-    pos = 0
-    asc_rx = re.compile(r"\barrayStringConcat\s*\(")
-    while True:
-        m = asc_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 1:
-            pos = m.end()
-            continue
-        sql = (
-            sql[: m.start()]
-            + f"array_join({args[0]}, '')"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    # toStartOfWeek(x, mode): even modes start Sunday, odd modes Monday
-    # (the 1-arg default-mode form is the Sunday-anchored SQL alias)
-    pos = 0
-    sw_rx = re.compile(r"\btoStartOfWeek\s*\(")
-    while True:
-        m = sw_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2:
-            pos = m.end()  # 1-arg form: the SQL alias handles it
-            continue
-        mm = re.fullmatch(r"\s*(\d+)\s*", args[1])
-        if not mm:
-            raise ValueError("toStartOfWeek mode must be a literal integer")
-        x = args[0]
-        if int(mm.group(1)) % 2 == 1:
-            expr = f"CAST(date_trunc('WEEK', {x}) AS DATE)"
-        else:
-            expr = f"date_sub(CAST(({x}) AS DATE), dayofweek({x}) - 1)"
-        sql = sql[: m.start()] + expr + sql[close1 + 1:]
-        pos = m.start()
-    # 2-arg fromUnixTimestamp(x, '%F') formats with CH %-codes — spell
-    # it as formatDateTime over the converted timestamp HERE so the
-    # %-conversion pass just below picks it up (the 1-arg form is the
-    # plain SQL-alias conversion). now('tz') renders the instant in a
-    # named zone — convert_timezone from the pinned-UTC session.
-    pos = 0
-    fut_rx = re.compile(r"\bfromUnixTimestamp\s*\(")
-    while True:
-        m = fut_rx.search(sql, pos)
-        if not m:
-            break
-        # in-string-literal guard, like the neighboring rewrite loops:
-        # the token inside a quoted literal must not be spliced
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2:
-            pos = m.end()
-            continue
-        sql = (
-            sql[: m.start()]
-            + f"formatDateTime(timestamp_seconds({args[0]}), {args[1]})"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    while True:
-        m = _find_top_anywhere(sql, r"\bnow\s*\(\s*('[^']+')\s*\)")
-        if not m:
-            break
-        sql = (
-            sql[: m.start()]
-            + f"convert_timezone('UTC', {m.group(1)}, now())"
-            + sql[m.end():]
-        )
-    # formatDateTime with a LITERAL format converts the %-specifiers to
-    # the Java pattern date_format understands (passing % through would
-    # error or, worse, format the wrong fields); computed formats fall
-    # through to the raw alias.
-    pos = 0
-    fdt_rx = re.compile(r"\bformatDateTime\s*\(")
-    while True:
-        m = fdt_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        fm = args[1].strip() if len(args) >= 2 else ""
-        if len(args) not in (2, 3) or not re.fullmatch(
-            r"'(?:[^'\\]|\\.|'')*'", fm
-        ):
-            pos = m.end()
-            continue
-        if len(args) == 3:
-            raise ValueError(
-                "formatDateTime with a timezone argument is not"
-                " translatable — convert with toTimeZone first"
-            )
-        # undo the SQL string-literal escaping ('' and \x) before
-        # converting, then re-escape for the emitted SQL literal
-        body, chars, i = fm[1:-1], [], 0
-        while i < len(body):
-            if body[i] == "\\" and i + 1 < len(body):
-                chars.append(body[i + 1])
-                i += 2
-                continue
-            if body[i: i + 2] == "''":
-                chars.append("'")
-                i += 2
-                continue
-            chars.append(body[i])
-            i += 1
-        java = _convert_ch_datetime_format("".join(chars)).replace("'", "\\'")
-        sql = (
-            sql[: m.start()]
-            + f"date_format(CAST({args[0]} AS TIMESTAMP), '{java}')"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    # parseDateTime[OrNull](s, '%-format'): the MySQL-style parser —
-    # convert the literal format with the same table formatDateTime
-    # uses and emit [try_]to_timestamp
-    pos = 0
-    pdt_rx = re.compile(r"\bparseDateTime(OrNull|OrZero)?\s*\(")
-    while True:
-        m = pdt_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) == 1:
-            pos = m.end()  # 1-arg form is the BestEffort-style alias
-            continue
-        fm = args[1].strip()
-        if len(args) != 2 or not re.fullmatch(r"'(?:[^'\\]|\\.|'')*'", fm):
-            raise ValueError(
-                "parseDateTime translates with (expr, 'literal %-format')"
-                " only — use parseDateTimeBestEffort for free-form input"
-            )
-        java = _convert_ch_datetime_format(fm[1:-1]).replace("'", "\\'")
-        fn = "try_to_timestamp" if m.group(1) else "to_timestamp"
-        repl = f"{fn}({args[0]}, '{java}')"
-        if m.group(1) == "OrZero":
-            repl = (
-                f"coalesce({repl}, TIMESTAMP'1970-01-01 00:00:00')"
-            )
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
-        pos = m.start()
-    # ClickHouse's variadic char(n1, n2, ...) builds a string from code
-    # points (mod 256, which Spark's chr also applies). Multi-arg only:
-    # the 1-arg form IS Spark's builtin, and `cast(x as char(10))` is a
-    # TYPE — the AS-guard plus the >=2-args condition keeps both intact.
-    pos = 0
-    ch_rx = re.compile(r"\bchar\s*\(")
-    while True:
-        m = ch_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False) or re.search(
-            r"(?i)\bas\s*$", sql[: m.start()]
-        ):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) < 2:
-            pos = m.end()
-            continue
-        repl = "concat(" + ", ".join(f"chr({a.strip()})" for a in args) + ")"
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
-        pos = m.start()
-    # mapApply((k, v) -> (k', v'), m): Spark has no entry-to-entry map
-    # HOF, so rebuild through entries — the user's lambda params are
-    # substituted with the entry's key/value fields
-    pos = 0
-    ma_rx = re.compile(r"\bmapApply\s*\(")
-    while True:
-        m = ma_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        lam = args[0].strip() if args else ""
-        lm = re.fullmatch(
-            r"\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*\((.*)\)", lam, re.S
-        )
-        if len(args) != 2 or not lm:
-            raise ValueError(
-                "mapApply translates with ((k, v) -> (keyExpr, valExpr),"
-                " map) only"
-            )
-        kvar, vvar, body = lm.group(1), lm.group(2), lm.group(3)
-        parts = _split_top_commas(body)
-        if len(parts) != 2:
-            raise ValueError("mapApply lambda must return a (key, value) pair")
-        def _subst(expr: str) -> str:
-            expr = re.sub(rf"\b{kvar}\b", "__ch_e.key", expr)
-            return re.sub(rf"\b{vvar}\b", "__ch_e.value", expr)
-        repl = (
-            f"map_from_entries(transform(map_entries({args[1].strip()}),"
-            f" __ch_e -> struct({_subst(parts[0])} AS key,"
-            f" {_subst(parts[1])} AS value)))"
-        )
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
-        pos = m.start()
-    # format('{} and {n}', ...) with a LITERAL pattern → format_string:
-    # {} consumes arguments in order, {n} is 0-based positional; literal
-    # % is escaped so it can't be misread as a conversion
-    pos = 0
-    fmt_rx = re.compile(r"\bformat\s*\(")
-    while True:
-        m = fmt_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        pat = args[0].strip() if args else ""
-        if len(args) < 2 or not re.fullmatch(r"'(?:[^'\\]|\\.|'')*'", pat):
-            pos = m.end()  # not the CH pattern form — leave untouched
-            continue
-        body, out, i, seq = pat[1:-1], [], 0, 0
-        while i < len(body):
-            c = body[i]
-            if c == "%":
-                out.append("%%")
-                i += 1
-                continue
-            if c == "{":
-                j = body.index("}", i)
-                ref = body[i + 1: j].strip()
-                if ref == "":
-                    seq += 1
-                    out.append("%s")
-                else:
-                    out.append(f"%{int(ref) + 1}$s")
-                i = j + 1
-                continue
-            out.append(c)
-            i += 1
-        new_pat = "'" + "".join(out) + "'"
-        sql = (
-            sql[: m.start()]
-            + f"format_string({new_pat}, {', '.join(a.strip() for a in args[1:])})"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    # ClickHouse's VALUE-MAPPING transform(x, from, to[, default]) vs
-    # Spark's 2-arg higher-order transform(arr, lambda): the 3/4-arg
-    # form becomes a map lookup (3-arg keeps unmatched values, like CH)
-    pos = 0
-    tr_rx = re.compile(r"\btransform\s*\(")
-    while True:
-        m = tr_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) not in (3, 4):
-            pos = m.end()  # Spark HOF form — leave
-            continue
-        x, frm, to = args[0], args[1], args[2]
-        dflt = args[3] if len(args) == 4 else x
-        sql = (
-            sql[: m.start()]
-            + f"coalesce(element_at(map_from_arrays({frm}, {to}),"
-            f" {x}), {dflt})"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    # JSONExtractKeysAndValues(j, 'T') -> array of (key, value) structs
-    # via a typed MAP parse; the trailing argument is CH's type literal
-    pos = 0
-    kv_rx = re.compile(r"\bJSONExtractKeysAndValues\s*\(")
-    _JSON_T = {
-        "Int8": "TINYINT", "Int16": "SMALLINT", "Int32": "INT",
-        "Int64": "BIGINT", "UInt8": "INT", "UInt16": "INT",
-        "UInt32": "BIGINT", "UInt64": "BIGINT", "Float32": "FLOAT",
-        "Float64": "DOUBLE", "String": "STRING", "Bool": "BOOLEAN",
-    }
-    while True:
-        m = kv_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        tm = re.fullmatch(r"\s*'(\w+)'\s*", args[-1]) if args else None
-        if len(args) != 2 or not tm or tm.group(1) not in _JSON_T:
-            raise ValueError(
-                "JSONExtractKeysAndValues expects (json, 'Type') with a"
-                f" literal type of {sorted(_JSON_T)}"
-            )
-        spark_t = _JSON_T[tm.group(1)]
-        repl = (
-            f"transform(map_entries(from_json({args[0]},"
-            f" 'MAP<STRING, {spark_t}>')),"
-            " __ch_e -> named_struct('col1', __ch_e.key,"
-            " 'col2', __ch_e.value))"
-        )
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
-        pos = m.start()
-    # JSON path folding BEFORE the splice table (these names keep their
-    # 1/2-arg SQL-alias forms, so an arity miss must pass through, not
-    # raise like the splice processor does):
-    # * multi-key JSONExtract*(j, 'a', 'b', ...) folds the trailing keys
-    #   into one dotted path for the 2-arg alias;
-    # * 2-arg JSONType(j, key) extracts the element as RAW JSON text
-    #   (the VARIANT round-trip keeps string quoting, which
-    #   get_json_object strips) and classifies it with the 1-arg alias.
-    for jname in (
-        "JSONExtractInt", "JSONExtractFloat", "JSONExtractBool",
-        "JSONExtractString", "JSONExtractRaw", "JSONExtractArrayRaw",
-        "JSONHas", "JSONType", "JSONLength", "JSONExtract",
-    ):
-        pos = 0
-        jrx = re.compile(rf"\b{jname}\s*\(")
-        while True:
-            m = jrx.search(sql, pos)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if jname == "JSONType" and len(args) == 2:
-                repl = (
-                    f"JSONType(to_json(variant_get(try_parse_json({args[0]}),"
-                    f" concat('$.', {args[1]}), 'variant')))"
-                )
-            elif jname == "JSONLength" and len(args) >= 2:
-                # length of the element at the dotted key path (probe
-                # batch 58): the raw fragment is valid JSON, so the
-                # 1-arg alias classifies it
-                path = ", '.', ".join(args[1:])
-                repl = (
-                    f"JSONLength(get_json_object({args[0]},"
-                    f" concat('$.', {path})))"
-                )
-            elif jname == "JSONExtract" and len(args) >= 2:
-                # typed extraction: the LAST argument is the CH type
-                # (probe batch 58). Scalars TRY_CAST; Array(T)/typed
-                # containers parse via from_json.
-                tname = args[-1].strip().strip("'\"")
-                spark_t = _spark_type_name(tname)
-                am = re.match(r"(?i)^Array\((\w+)\)$", tname)
-                if am:
-                    inner = _spark_type_name(am.group(1)) or am.group(1)
-                    spark_t = f"ARRAY<{inner}>"
-                if spark_t is None:
-                    raise ValueError(
-                        f"JSONExtract type {tname!r} is not supported —"
-                        " scalar ClickHouse types and Array(scalar)"
-                        " translate; use JSONExtractKeysAndValues or"
-                        " from_json for richer shapes"
-                    )
-                src = args[0]
-                if len(args) >= 3:
-                    path = ", '.', ".join(args[1:-1])
-                    src = (
-                        f"get_json_object({args[0]},"
-                        f" concat('$.', {path}))"
-                    )
-                if am:
-                    repl = f"from_json({src}, '{spark_t}')"
-                else:
-                    repl = f"TRY_CAST({src} AS {spark_t})"
-            elif jname not in ("JSONType", "JSONLength", "JSONExtract") \
-                    and len(args) >= 3:
-                path = ", '.', ".join(args[1:])
-                repl = f"{jname}({args[0]}, concat({path}))"
-            else:
-                pos = close1  # alias-arity form — leave for CREATE FUNCTION
-                continue
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
-            # the rewritten call starts at m.start() and is final —
-            # advance past its name so it is never re-entered
-            pos = m.start() + 1
-    # pointInPolygon((x, y), [(x1, y1), ...]) — even-odd ray casting
-    # unrolled over the LITERAL vertex list (the CH calling convention);
-    # the point coordinates may be arbitrary expressions
-    while True:
-        m = _find_top_anywhere(sql, r"\bpointInPolygon\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-
-        def _pip_pair(a: str) -> list[str]:
-            a = a.strip()
-            tm2 = re.match(r"^tuple\s*\(", a)
-            if tm2:
-                inner = a[a.index("(") + 1: -1]
-            elif a.startswith("(") and a.endswith(")"):
-                inner = a[1:-1]
-            else:
-                raise ValueError(
-                    "pointInPolygon expects (x, y) tuples for the point"
-                    " and a literal vertex list"
-                )
-            items = _split_top_commas(inner)
-            if len(items) != 2:
-                raise ValueError("pointInPolygon points must be 2-D")
-            return items
-
-        if len(args) != 2:
-            raise ValueError("pointInPolygon expects (point, polygon)")
-        px, py = _pip_pair(args[0])
-        poly = args[1].strip()
-        if poly.startswith("[") and poly.endswith("]"):
-            pinner = poly[1:-1]
-        elif re.match(r"^array\s*\(", poly):
-            pinner = poly[poly.index("(") + 1: -1]
-        else:
-            raise ValueError(
-                "pointInPolygon needs a literal [(x, y), ...] vertex list"
-            )
-        verts = [_pip_pair(v) for v in _split_top_commas(pinner)]
-        crossings = []
-        for i in range(len(verts)):
-            x1, y1 = verts[i]
-            x2, y2 = verts[i - 1]
-            crossings.append(
-                f"CAST(((({y1}) > ({py})) != (({y2}) > ({py}))"
-                f" AND ({px}) < ((({x2}) - ({x1})) * (({py}) - ({y1}))"
-                f" / (({y2}) - ({y1})) + ({x1}))) AS INT)"
-            )
-        expr = f"((({' + '.join(crossings)}) % 2) = 1)"
-        sql = sql[: m.start()] + expr + sql[close1 + 1:]
-    for fname, forms in _ARRAY_SPLICE.items():
-        if fname not in sql:  # cheap substring pre-filter (case-exact)
-            continue
-        pos = 0
-        rx = _rxc(rf"\b{fname}\s*\(")
-        while True:
-            m = rx.search(sql, pos)
-            if not m:
-                break
-            if _idx_in_string(_scan_index(sql), m.start()):
-                pos = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if fname in _WINDOWED_MOMENTS:
-                om = re.match(r"\s*OVER\b\s*", sql[close1 + 1:], re.I)
-                if om:
-                    wstart = close1 + 1 + om.end()
-                    if wstart < len(sql) and sql[wstart] == "(":
-                        wclose = _call_end(sql, wstart)
-                        wtxt = " OVER " + sql[wstart: wclose + 1]
-                        wend = wclose
-                    else:
-                        wm = re.match(r"`?\w+`?", sql[wstart:])
-                        if not wm:
-                            raise ValueError(
-                                f"{fname} OVER: malformed window"
-                            )
-                        wtxt = " OVER " + sql[wstart: wstart + wm.end()]
-                        wend = wstart + wm.end() - 1
-                    wtpl = _WINDOWED_MOMENTS[fname].get(len(args))
-                    if wtpl is None:
-                        raise ValueError(
-                            f"{fname} with {len(args)} args has no"
-                            " windowed form"
-                        )
-                    sql = (
-                        sql[: m.start()]
-                        + wtpl.format(*args, w=wtxt)
-                        + sql[wend + 1:]
-                    )
-                    pos = m.start()
-                    continue
-            if fname == "groupArrayInsertAt":
-                # parametric spelling groupArrayInsertAt(default, size)
-                # (x, pos): exactly `size` slots, holes -> `default`
-                # (the arity-2 template below is the bare spelling,
-                # which sizes to max(pos) and leaves holes NULL)
-                pm = re.match(r"\s*\(", sql[close1 + 1:])
-                if pm:
-                    if len(args) != 2:
-                        raise ValueError(
-                            "groupArrayInsertAt(default, size)(x, pos)"
-                        )
-                    open2 = close1 + 1 + pm.end() - 1
-                    close2 = _call_end(sql, open2)
-                    a2 = _split_top_commas(sql[open2 + 1: close2])
-                    if len(a2) != 2:
-                        raise ValueError(
-                            "groupArrayInsertAt(default, size)(x, pos)"
-                        )
-                    expr = (
-                        f"transform(sequence(0, CAST(({args[1]}) AS INT)"
-                        " - 1), __ch_i -> coalesce(try_element_at(filter("
-                        f"collect_list(named_struct('p',"
-                        f" CAST(({a2[1]}) AS INT), 'v', ({a2[0]}))),"
-                        " __ch_e -> __ch_e.p = __ch_i), 1).v,"
-                        f" ({args[0]})))"
-                    )
-                    sql = sql[: m.start()] + expr + sql[close2 + 1:]
-                    pos = m.start()
-                    continue
-            if fname in ("plus", "minus", "multiply"):
-                # CH parses bare float literals as Float64; Spark as
-                # DECIMAL — multiply(1.5, 2) would come out
-                # DECIMAL(4,1). Same E0 normalization as arraySum
-                # below (string-literal-carrying fragments left alone;
-                # column args keep their types, which is the point of
-                # the operator splice).
-                args = [
-                    a if ("'" in a or '"' in a) else re.sub(
-                        r"(?<![\w.])(\d+\.\d+)(?![\w.])", r"\1E0", a
-                    )
-                    for a in args
-                ]
-            if fname == "arraySum" and len(args) == 2:
-                # CH parses bare float literals as Float64; Spark
-                # parses them as DECIMAL, whose precision growth the
-                # type-preserving fold below cannot accumulate
-                # (DECIMAL(p)+DECIMAL(p) is DECIMAL(p+1) ≠ the zero's
-                # type). Normalize them to double literals —
-                # CH-faithful — in both the lambda and the array
-                # argument; fragments carrying string literals are
-                # left alone (nothing to corrupt in the common case,
-                # and decimal COLUMNS remain a documented loud-error
-                # deviation: wrap the lambda body in toFloat64)
-                args = [
-                    a if ("'" in a or '"' in a) else re.sub(
-                        r"(?<![\w.])(\d+\.\d+)(?![\w.])", r"\1E0", a
-                    )
-                    for a in args
-                ]
-            tmpl = forms.get(len(args))
-            if tmpl is None:
-                if fname in _SPLICE_PASSTHROUGH:
-                    # this name also has an SQL-alias arity — leave the
-                    # unmatched call for CREATE FUNCTION resolution
-                    pos = close1
-                    continue
-                raise ValueError(
-                    f"{fname} expects {sorted(forms)} argument(s),"
-                    f" got {len(args)}"
-                )
-            sql = sql[: m.start()] + tmpl.format(*args) + sql[close1 + 1:]
-            pos = m.start()
-    # arraySort / arrayReverseSort: type-preserving (vs the stringifying
-    # alias) and supporting ClickHouse's lambda-FIRST key form
-    # arraySort(x -> key, a) — sort by key via the struct trick, user's
-    # own lambda var kept (its body is user text)
-    for fname, desc in (("arrayReverseSort", True), ("arraySort", False)):
-        pos = 0
-        rx = re.compile(rf"\b{fname}\s*\(")
-        while True:
-            m = rx.search(sql, pos)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) == 1:
-                inner = f"array_sort({args[0]})"
-            elif len(args) == 2:
-                lm = re.match(r"^\s*(\w+)\s*->\s*(.+)$", args[0], re.S)
-                if not lm:
-                    raise ValueError(
-                        f"{fname} expects (lambda, array) or (array)"
-                    )
-                var, body = lm.group(1), lm.group(2).strip()
-                inner = (
-                    f"transform(array_sort(transform({args[1]},"
-                    f" {var} -> struct(({body}) AS k, {var} AS v))),"
-                    f" __ch_s -> __ch_s.v)"
-                )
-            else:
-                raise ValueError(f"{fname} expects (lambda, array) or (array)")
-            if desc:
-                inner = f"reverse({inner})"
-            sql = sql[: m.start()] + inner + sql[close1 + 1:]
-            pos = m.start()
-    # arrayReduceInRanges('agg', ranges, a) (probe batch 62): one
-    # reduce per (index, length) tuple — rewritten into arrayReduce
-    # over slice() so the literal-name pass below finishes the job
-    pos = 0
-    arr_rx = re.compile(r"\barrayReduceInRanges\s*\(")
-    while True:
-        m = arr_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 3:
-            raise ValueError(
-                "arrayReduceInRanges takes ('aggName', ranges, array)"
-            )
-        repl = (
-            f"transform({args[1]}, __ch_rg -> arrayReduce({args[0]},"
-            f" slice({args[2]}, CAST(__ch_rg.col1 AS INT),"
-            f" CAST(__ch_rg.col2 AS INT))))"
-        )
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
-        pos = m.start()
-    # arrayReduce('agg', a): the literal-name meta-aggregate over one
-    # array, mapped to the JVM array builtins (sum/avg fold in DOUBLE —
-    # documented deviation from CH's integer sums)
-    pos = 0
-    ar_rx = re.compile(r"\barrayReduce\s*\(")
-    while True:
-        m = ar_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        name_m = re.fullmatch(r"\s*'(\w+)'\s*", args[0]) if args else None
-        if len(args) != 2 or not name_m:
-            raise ValueError(
-                "arrayReduce translates with ('aggName', array) only"
-            )
-        agg, a = name_m.group(1), args[1]
-        forms = {
-            "max": f"array_max({a})",
-            "min": f"array_min({a})",
-            "sum": (
-                f"aggregate({a}, CAST(0.0 AS DOUBLE),"
-                f" (__ch_s, __ch_t) -> __ch_s + __ch_t)"
-            ),
-            "avg": (
-                f"(aggregate({a}, CAST(0.0 AS DOUBLE),"
-                f" (__ch_s, __ch_t) -> __ch_s + __ch_t) / size({a}))"
-            ),
-            "count": f"size({a})",
-            "any": f"try_element_at({a}, 1)",
-            "anyLast": f"try_element_at({a}, -1)",
-            "uniq": f"size(array_distinct({a}))",
-            "uniqExact": f"size(array_distinct({a}))",
-        }
-        if agg not in forms:
-            raise ValueError(f"arrayReduce: aggregate {agg!r} not supported")
-        sql = sql[: m.start()] + forms[agg] + sql[close1 + 1:]
-        pos = m.start()
-    # arrayCompact(a): element-type-preserving consecutive dedup (the
-    # SQL-UDF alias would stringify elements); empty-array safe
-    pos = 0
-    ac_rx = re.compile(r"\barrayCompact\s*\(")
-    while True:
-        m = ac_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        a = sql[open1 + 1: close1]
-        expr = (
-            f"transform(filter(sequence(0, size(({a})) - 1),"
-            f" __ch_i -> __ch_i = 0 OR NOT(({a})[__ch_i]"
-            f" <=> ({a})[__ch_i - 1])),"
-            f" __ch_i -> ({a})[__ch_i])"
-        )
-        sql = (
-            sql[: m.start()]
-            + f"(CASE WHEN size(({a})) = 0 THEN ({a}) ELSE {expr} END)"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    # ClickHouse position(haystack, needle[, start]) has the OPPOSITE
-    # argument order of Spark's position/locate(needle, haystack) —
-    # passing it through silently searches the needle for the haystack
-    # and returns 0. Flip the comma form to locate(); the SQL-standard
-    # position(x IN y) has no top-level comma and is left alone.
-    pos = 0
-    pos_rx = re.compile(r"\bposition\s*\(", re.I)
-    while True:
-        m = pos_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) not in (2, 3):
-            pos = m.end()
-            continue
-        tail = f", {args[2]}" if len(args) == 3 else ""
-        sql = (
-            sql[: m.start()]
-            + f"locate({args[1]}, {args[0]}{tail})"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    # ClickHouse rand()/rand32() are UInt32, rand64() UInt64 — NOT
-    # [0,1): `rand() % 100` is the canonical CH idiom and would always
-    # be 0 under Spark's rand(). Rewrite to the ClickHouse range
-    # (rand64 via shiftleft/OR so the 64-bit form cannot overflow-throw;
-    # the sign bit reinterprets like halfMD5 — documented).
-    # (replacements spell RAND() uppercase so the case-exact scan for
-    # the shorter names cannot re-match inside an earlier replacement)
-    for name, repl in (
-        ("rand64",
-         "(shiftleft(CAST(floor(RAND() * 4294967296) AS BIGINT), 32)"
-         " | CAST(floor(RAND() * 4294967296) AS BIGINT))"),
-        ("rand32", "CAST(floor(RAND() * 4294967296) AS BIGINT)"),
-        ("rand", "CAST(floor(RAND() * 4294967296) AS BIGINT)"),
-    ):
-        pos = 0
-        rx = re.compile(rf"\b{name}\s*\(\s*\)")
-        while True:
-            m = rx.search(sql, pos)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos = m.end()
-                continue
-            sql = sql[: m.start()] + repl + sql[m.end():]
-            pos = m.start() + len(repl)
-    while True:
-        m = _find_case_exact(sql, r"\bmultiIf\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) < 3 or len(args) % 2 == 0:
-            raise ValueError("multiIf expects (c1, v1, ..., else)")
-        whens = " ".join(
-            f"WHEN {args[i]} THEN {args[i + 1]}" for i in range(0, len(args) - 1, 2)
-        )
-        sql = (
-            sql[: m.start()]
-            + f"(CASE {whens} ELSE {args[-1]} END)"
-            + sql[close1 + 1:]
-        )
-    # comma-form extract(s, re): ClickHouse's first-regex-match. The
-    # EXTRACT(unit FROM ts) builtin form has no top-level comma.
-    pos = 0
-    ext_rx = re.compile(r"\bextract\s*\(", re.I)
-    while True:
-        m = ext_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2:
-            pos = m.end()
-            continue
-        # group 1 when the pattern literal carries a CAPTURING group:
-        # count '(' that are neither backslash-escaped nor followed by
-        # '?' (non-capturing / lookaround). Only a literal string
-        # pattern can be sniffed — for computed patterns the group
-        # index is not inferable at translate time, so refuse loudly
-        # rather than silently return the wrong group.
-        pat = args[1].strip()
-        if not re.fullmatch(r"'(?:[^'\\]|\\.|'')*'", pat):
-            raise ValueError(
-                "extract(s, re) translates only with a literal string"
-                " pattern (the capture-group index must be inferred);"
-                " use regexp_extract(s, re, group) directly"
-            )
-        # two escaping layers: first undo the SQL string-literal escapes
-        # (Spark maps \x -> x and '' -> '), THEN count regex-level
-        # capturing groups on the resulting pattern
-        body, chars, i = pat[1:-1], [], 0
-        while i < len(body):
-            if body[i] == "\\" and i + 1 < len(body):
-                chars.append(body[i + 1])
-                i += 2
-                continue
-            if body[i: i + 2] == "''":
-                chars.append("'")
-                i += 2
-                continue
-            chars.append(body[i])
-            i += 1
-        rx, ncap, i = "".join(chars), 0, 0
-        while i < len(rx):
-            if rx[i] == "\\":
-                i += 2
-                continue
-            if rx[i] == "(" and rx[i + 1: i + 2] != "?":
-                ncap += 1
-            i += 1
-        grp = 1 if ncap else 0
-        sql = (
-            sql[: m.start()]
-            + f"regexp_extract({args[0]}, {args[1]}, {grp})"
-            + sql[close1 + 1:]
-        )
-        pos = m.start()
-    pos = 0
-    range_rx = re.compile(r"\brange\s*\(")
-    while True:
-        m = range_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        # table position (FROM range(...), JOIN range(...)) is Spark's
-        # range TVF — numbers() expands to it; leave it alone
-        before = sql[: m.start()].rstrip()
-        if re.search(r"(?i)\b(FROM|JOIN)$", before):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        # [start, end) with the end EXCLUSIVE; the filter keeps the
-        # empty range empty (sequence(0, -1) would count DOWN)
-        if len(args) == 1:
-            a, b, st = "0", args[0], None
-        elif len(args) == 2:
-            a, b, st = args[0], args[1], None
-        elif len(args) == 3:
-            a, b, st = args
-        else:
-            raise ValueError("range expects 1-3 arguments")
-        step = f", ({st})" if st else ""
-        sql = (
-            sql[: m.start()]
-            + f"filter(sequence(({a}), greatest(({b}) - 1, ({a})){step}),"
-            # collision-improbable lambda var: ({b}) is user text and may
-            # reference a column literally named x
-            f" __ch_x -> __ch_x < ({b}))"
-            + sql[close1 + 1:]
-        )
-    while True:
-        m = _find_case_exact(sql, r"\btupleElement\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
-            raise ValueError(
-                "tupleElement translates only with a literal index:"
-                " tupleElement(t, N) -> (t).colN"
-            )
-        # a literal tuple argument resolves at translate time —
-        # tuple(i, s) names its struct fields after the expressions,
-        # so the .colN access below would miss (batch-81)
-        items = _tuple_items(args[0])
-        if items is not None:
-            idx = int(args[1].strip())
-            if not 1 <= idx <= len(items):
-                raise ValueError(
-                    f"tupleElement index {idx} out of range for a"
-                    f" {len(items)}-element tuple"
-                )
-            sql = sql[: m.start()] + f"({items[idx - 1]})" + sql[close1 + 1:]
-            continue
-        sql = sql[: m.start()] + f"({args[0]}).col{args[1]}" + sql[close1 + 1:]
-    # r6 execution-probe tail: spellings that previously translated
-    # untouched and died at run time with UNRESOLVED_ROUTINE
-    while True:
-        m = _find_case_exact(sql, r"\baddInterval\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2:
-            raise ValueError("addInterval expects (datetime, INTERVAL expr)")
-        sql = sql[: m.start()] + f"({args[0]} + {args[1]})" + sql[close1 + 1:]
-    while True:  # the subtraction twin (batch-82)
-        m = _find_case_exact(sql, r"\bsubtractInterval\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2:
-            raise ValueError(
-                "subtractInterval expects (datetime, INTERVAL expr)"
-            )
-        sql = sql[: m.start()] + f"({args[0]} - {args[1]})" + sql[close1 + 1:]
-    while True:
-        m = _find_case_exact(sql, r"\btoDecimalString\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2 or not re.fullmatch(r"\d+", args[1].strip()):
-            raise ValueError(
-                "toDecimalString translates only with a literal scale:"
-                " toDecimalString(x, N)"
-            )
-        n = min(int(args[1].strip()), 30)  # double precision ceiling
-        sql = (
-            sql[: m.start()]
-            + f"format_string('%.{n}f', CAST({args[0]} AS DOUBLE))"
-            + sql[close1 + 1:]
-        )
-    while True:
-        # extractGroups(s, 'pat'): the capture groups of the FIRST
-        # match as an array; [] when the pattern does not match (CH
-        # semantics). Literal pattern only (group count drives the
-        # expansion, via the same class-aware counter as extract).
-        m = _find_case_exact(sql, r"\bextractGroups\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        ncap = _count_capture_groups(args[1].strip()) if len(args) == 2 else None
-        if not ncap:
-            raise ValueError(
-                "extractGroups translates only with a literal pattern"
-                " containing capture groups"
-            )
-        s_arg, p_arg = args[0], args[1]
-        groups = ", ".join(
-            f"regexp_extract({s_arg}, {p_arg}, {k})"
-            for k in range(1, ncap + 1)
-        )
-        expr = (
-            f"CASE WHEN {s_arg} RLIKE {p_arg} THEN array({groups})"
-            f" ELSE CAST(array() AS ARRAY<STRING>) END"
-        )
-        sql = sql[: m.start()] + expr + sql[close1 + 1:]
-    # encrypt/decrypt family: only aes-{128,192,256}-ecb translates.
-    # ECB is deterministic, so Spark's aes_encrypt output is byte-exact
-    # vs ClickHouse/OpenSSL (PKCS7 padding both sides — NIST-vector
-    # pinned in tests). CBC/GCM refuse loudly: Spark prepends its IV to
-    # the ciphertext, ClickHouse does not, so the wire bytes can never
-    # agree. aes_*_mysql with a standard-length key is identical to
-    # encrypt; MySQL's XOR-fold of over-length keys has no Spark
-    # spelling (Spark raises on key length instead of folding).
-    for _ename, _efn, _edec in (
-        ("tryDecrypt", "try_aes_decrypt", True),
-        ("decrypt", "aes_decrypt", True),
-        ("encrypt", "aes_encrypt", False),
-        ("aes_decrypt_mysql", "aes_decrypt", True),
-        ("aes_encrypt_mysql", "aes_encrypt", False),
-    ):
-        while True:
-            m = _find_case_exact(sql, rf"\b{_ename}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 3:
-                raise ValueError(
-                    f"{_ename} translates only as {_ename}(mode,"
-                    " input, key) with an aes-*-ecb mode — ECB takes"
-                    " no IV/AAD, and non-ECB modes do not translate"
-                    " (Spark prepends the IV to the ciphertext,"
-                    " ClickHouse does not)"
-                )
-            mmode = re.fullmatch(
-                r"'aes-(?:128|192|256)-([a-zA-Z0-9]+)'", args[0].strip()
-            )
-            if not mmode or mmode.group(1).lower() != "ecb":
-                raise ValueError(
-                    f"{_ename}: only a literal 'aes-<128|192|256>-ecb'"
-                    " mode translates — CBC/GCM/CTR ciphertext layouts"
-                    " differ (Spark prepends the IV, ClickHouse does"
-                    " not), so only ECB is byte-exact"
-                )
-            repl = f"{_efn}({args[1]}, {args[2]}, 'ECB', 'PKCS')"
-            if _edec:
-                repl = f"CAST({repl} AS STRING)"
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
-    while True:
-        # defaultValueOfTypeName('T') -> the type's zero value, mapped
-        # at translate time from the literal type name
-        m = _find_case_exact(sql, r"\bdefaultValueOfTypeName\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        tname = sql[open1 + 1: close1].strip().strip("'\"")
-        base = tname
-        nullable = False
-        nm = re.fullmatch(r"Nullable\((.*)\)", base)
-        if nm:
-            nullable, base = True, nm.group(1).strip()
-        if re.fullmatch(r"U?Int\d+", base):
-            lit = "CAST(NULL AS BIGINT)" if nullable else "CAST(0 AS BIGINT)"
-        elif re.fullmatch(r"Float\d+", base):
-            lit = "CAST(NULL AS DOUBLE)" if nullable else "CAST(0.0 AS DOUBLE)"
-        elif base in ("String", "FixedString"):
-            lit = "CAST(NULL AS STRING)" if nullable else "''"
-        elif base in ("Date", "Date32"):
-            lit = "CAST(NULL AS DATE)" if nullable else "DATE'1970-01-01'"
-        elif base.startswith("DateTime"):
-            lit = (
-                "CAST(NULL AS TIMESTAMP)" if nullable
-                else "TIMESTAMP'1970-01-01 00:00:00'"
-            )
-        elif base == "Bool":
-            lit = "CAST(NULL AS BOOLEAN)" if nullable else "false"
-        elif base == "UUID":
-            lit = "'00000000-0000-0000-0000-000000000000'"
-        elif base.startswith("Array("):
-            lit = "array()"
-        else:
-            raise ValueError(
-                f"defaultValueOfTypeName: unmapped type {tname!r} — use"
-                " an explicit literal"
-            )
-        sql = sql[: m.start()] + lit + sql[close1 + 1:]
-    for fname, vertical in (
-        ("extractAllGroupsVertical", True),
-        ("extractAllGroupsHorizontal", False),
-        ("extractAllGroups", True),  # CH documents it as the vertical form
-    ):
-        while True:
-            m = _find_case_exact(sql, rf"\b{fname}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            ncap = _count_capture_groups(args[1].strip()) if len(args) == 2 else None
-            if not ncap:
-                raise ValueError(
-                    f"{fname} translates only with a literal pattern"
-                    " containing capture groups"
-                )
-            s_arg, p_arg = args[0], args[1]
-            per_group = [
-                f"regexp_extract_all({s_arg}, {p_arg}, {k})"
-                for k in range(1, ncap + 1)
-            ]
-            if vertical:
-                # one row per match, one element per group: walk group 1's
-                # matches by index and pick the same position from each
-                # group's extraction (exact — no re-matching of substrings)
-                others = ", ".join(
-                    f"element_at({g}, __ch_i + 1)" for g in per_group[1:]
-                )
-                tail = f", {others}" if others else ""
-                repl = (
-                    f"transform({per_group[0]},"
-                    f" (__ch_x, __ch_i) -> array(__ch_x{tail}))"
-                )
-            else:
-                repl = f"array({', '.join(per_group)})"
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
-    while True:
-        m = _find_case_exact(sql, r"\breplaceRegexpOne\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 3:
-            raise ValueError("replaceRegexpOne expects (s, pattern, replacement)")
-        s_arg, p_arg, r_arg = (a.strip() for a in args)
-        # first-match surgery: extract the leftmost match, splice the
-        # replacement over its first occurrence. Exact for position-
-        # independent patterns (an earlier occurrence of the matched
-        # text would itself have been the leftmost match); context-
-        # dependent constructs and backreference replacements refuse.
-        ncap = _count_capture_groups(p_arg)
-        if ncap is None:
-            raise ValueError(
-                "replaceRegexpOne translates only with a literal pattern"
-            )
-        if re.search(r"\\b|\(\?<|\(\?=|\(\?!|\^|\$", p_arg):
-            raise ValueError(
-                "replaceRegexpOne: context-dependent patterns (anchors,"
-                " lookaround, word boundaries) do not survive the"
-                " first-match splice — use regexp_replace semantics or"
-                " restate the pattern"
-            )
-        if "\\" in r_arg:
-            raise ValueError(
-                "replaceRegexpOne: backreference replacements are not"
-                " supported — use replaceRegexpAll/regexp_replace"
-            )
-        mvar = f"regexp_extract({s_arg}, {p_arg}, 0)"
-        repl = (
-            f"(CASE WHEN {mvar} != '' AND locate({mvar}, {s_arg}) > 0 THEN"
-            f" concat(substr({s_arg}, 1, locate({mvar}, {s_arg}) - 1), {r_arg},"
-            f" substr({s_arg}, locate({mvar}, {s_arg}) + length({mvar})))"
-            f" ELSE {s_arg} END)"
-        )
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
-    while True:
-        # timestampDiff = dateDiff with the unit possibly UNQUOTED
-        # (the MySQL-compatible spelling ClickHouse also accepts)
-        m = _find_case_exact(sql, r"\btimestampDiff\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 3:
-            raise ValueError("timestampDiff expects (unit, start, end)")
-        unit = args[0].strip()
-        if re.fullmatch(r"\w+", unit):
-            unit = f"'{unit}'"
-        sql = (
-            sql[: m.start()]
-            + f"chDateDiff({unit}, {args[1]}, {args[2]})"
-            + sql[close1 + 1:]
-        )
-    while True:
-        m = _find_case_exact(sql, r"\bmortonDecode\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) != 2 or args[0].strip() != "2":
-            raise ValueError(
-                "mortonDecode translates only for 2 dimensions:"
-                " mortonDecode(2, code)"
-            )
-        # BIGINT cast matters: an INT code would wrap its shift count
-        # mod 32 at bit positions >= 16 (2*i >= 32)
-        z = f"CAST({args[1]} AS BIGINT)"
-        de = (
-            "named_struct("
-            f"'col1', aggregate(sequence(0, 31), CAST(0 AS BIGINT),"
-            f" (__ch_ac, __ch_i) -> __ch_ac"
-            f" + shiftleft((({z}) >> (2 * __ch_i)) & 1, __ch_i)),"
-            f"'col2', aggregate(sequence(0, 31), CAST(0 AS BIGINT),"
-            f" (__ch_ac, __ch_i) -> __ch_ac"
-            f" + shiftleft((({z}) >> (2 * __ch_i + 1)) & 1, __ch_i)))"
-        )
-        sql = sql[: m.start()] + de + sql[close1 + 1:]
-    return sql
+    sql = _rewrite_calls(sql, _SCALAR_RULES_HEAD)
+    sql = _rewrite_calls(sql, _array_size_rules(_array_cols(specs)))
+    return _rewrite_calls(sql, _SCALAR_RULES_TAIL)
 
 
 def _count_capture_groups(pat: str) -> int | None:
     """Capturing-group count of a literal SQL string pattern (both
     escape layers undone), or None when the pattern is not a literal."""
-    if not re.fullmatch(r"'(?:[^'\\]|\\.|'')*'", pat):
+    if not _SQL_STR_LIT.fullmatch(pat):
         return None
-    body, chars, i = pat[1:-1], [], 0
-    while i < len(body):
-        if body[i] == "\\" and i + 1 < len(body):
-            chars.append(body[i + 1])
-            i += 2
-            continue
-        if body[i: i + 2] == "''":
-            chars.append("'")
-            i += 2
-            continue
-        chars.append(body[i])
-        i += 1
-    rx, ncap, i = "".join(chars), 0, 0
+    rx, ncap, i = _unescape_sql_literal(pat[1:-1]), 0, 0
     while i < len(rx):
         if rx[i] == "\\":
             i += 2
@@ -4833,10 +4368,10 @@ def _rewrite_brackets(sql: str) -> str:
     a bracket (``IN [1, 2]``) mean a literal."""
     pos = 0
     while True:
-        instr_at = _instr_map(sql)
+        sidx = _scan_index(sql)
         idx = None
         for i in range(pos, len(sql)):
-            if sql[i] == "[" and not instr_at.get(i, False):
+            if sql[i] == "[" and not _idx_in_string(sidx, i):
                 idx = i
                 break
         if idx is None:
@@ -4898,90 +4433,259 @@ _INTERVAL_FNS = {
 }
 
 
+def _tuple_of_intervals(sql, m, close, args):
+    # add/subtractTupleOfIntervals(d, (i1, i2, ...)) chains the
+    # interval arithmetic left-to-right over a LITERAL tuple (the
+    # elements are toIntervalX calls the templates below translate)
+    name = m.group(1)
+    t = args[1].strip() if len(args) == 2 else ""
+    if not (t.startswith("(") and t.endswith(")")):
+        raise ValueError(
+            f"{name} expects (date, (interval, ...)) with a"
+            " literal tuple"
+        )
+    op = "+" if name == "addTupleOfIntervals" else "-"
+    expr = f"({args[0]})"
+    for it in _split_top_commas(t[1:-1]):
+        expr = f"({expr} {op} {it.strip()})"
+    return expr
+
+
+def _to_interval(sql, m, close, args):
+    # the generic toInterval(n, 'Unit') spelling resolves its literal
+    # unit to the toIntervalX template
+    um = (
+        re.fullmatch(r"'(\w+?)s?'", args[1].strip(), re.I)
+        if len(args) == 2 else None
+    )
+    target = f"toInterval{um.group(1).capitalize()}" if um else None
+    if target not in _INTERVAL_FNS:
+        raise ValueError(
+            "toInterval translates only with a literal unit in"
+            " Year/Quarter/Month/Week/Day/Hour/Minute/Second —"
+            " a computed unit has no static interval type"
+        )
+    return f"{target}({args[0]})"
+
+
+_INTERVAL_RULES = _rules(
+    ("(addTupleOfIntervals)", _tuple_of_intervals),
+    ("(subtractTupleOfIntervals)", _tuple_of_intervals),
+    ("toInterval", _to_interval),
+    *_INTERVAL_FNS.items(),
+)
+
+
 def _rewrite_intervals(sql: str) -> str:
     """``toIntervalDay(n)`` family → ``make_interval`` (argument can be
     any expression, so a typed SQL-UDF alias can't cover it — intervals
     are not a UDF return type). The generic ``toInterval(n, 'Unit')``
     spelling resolves its literal unit here first; a computed unit has
     no static interval type and refuses."""
-    # add/subtractTupleOfIntervals(d, (i1, i2, ...)) chains the
-    # interval arithmetic left-to-right over a LITERAL tuple (the
-    # elements are toIntervalX calls the templates below translate)
-    for _tname, _top in (
-        ("addTupleOfIntervals", "+"),
-        ("subtractTupleOfIntervals", "-"),
-    ):
-        while True:
-            m = _find_case_exact(sql, rf"\b{_tname}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            t = args[1].strip() if len(args) == 2 else ""
-            if not (t.startswith("(") and t.endswith(")")):
-                raise ValueError(
-                    f"{_tname} expects (date, (interval, ...)) with a"
-                    " literal tuple"
-                )
-            items = [
-                i for i in _split_top_commas(t[1:-1]) if i.strip()
-            ]
-            expr = f"({args[0]})"
-            for it in items:
-                expr = f"({expr} {_top} {it.strip()})"
-            sql = sql[: m.start()] + expr + sql[close1 + 1:]
-    while True:
-        m = _find_case_exact(sql, r"\btoInterval\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        um = (
-            re.fullmatch(r"'(\w+?)s?'", args[1].strip(), re.I)
-            if len(args) == 2 else None
-        )
-        target = f"toInterval{um.group(1).capitalize()}" if um else None
-        if target not in _INTERVAL_FNS:
-            raise ValueError(
-                "toInterval translates only with a literal unit in"
-                " Year/Quarter/Month/Week/Day/Hour/Minute/Second —"
-                " a computed unit has no static interval type"
-            )
-        sql = sql[: m.start()] + f"{target}({args[0]})" + sql[close1 + 1:]
-    for name, template in _INTERVAL_FNS.items():
-        while True:
-            m = _find_case_exact(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            x = sql[open1 + 1: close1]
-            sql = (
-                sql[: m.start()] + template.format(x=x) + sql[close1 + 1:]
-            )
-    return sql
-
-
-def _find_case_exact(
-    sql: str, pattern: str, pos: int = 0
-) -> re.Match | None:
-    """First CASE-SENSITIVE match outside string literals (any depth)
-    at or after ``pos``. _find_top_anywhere compiles with re.I;
-    ClickHouse names are exact."""
-    rx = _rxc(pattern, 0)
-    idx = _scan_index(sql)
-    for m in rx.finditer(sql, pos):
-        if not _idx_in_string(idx, m.start()):
-            return m
-    return None
+    return _rewrite_calls(sql, _INTERVAL_RULES)
 
 
 _RESAMPLE_MAX_BUCKETS = 1000  # bounded textual expansion
 
 
-def _rewrite_resample(sql: str) -> str:  # noqa: C901
+def _resample(sql, m, close, args):
+    base = m.group(1)
+    outer_if = bool(m.group(2))  # aggResampleIf: -If applied LAST
+    params = args
+    if len(params) != 3 or not all(
+        re.fullmatch(r"-?\d+", p) for p in params
+    ):
+        raise ValueError(
+            f"{base}Resample expects three integer literal"
+            " parameters: (start, end, step)"
+        )
+    start, end, step = (int(p) for p in params)
+    if step <= 0 or end <= start:
+        raise ValueError(
+            f"{base}Resample: need step > 0 and end > start"
+        )
+    n_buckets = -(-(end - start) // step)
+    if n_buckets > _RESAMPLE_MAX_BUCKETS:
+        raise ValueError(
+            f"{base}Resample: {n_buckets} buckets exceeds the"
+            f" {_RESAMPLE_MAX_BUCKETS}-bucket textual-expansion cap"
+            " — bucket with width_bucket + groupBy instead"
+        )
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            f"{base}Resample(start, end, step)(args..., key)"
+        )
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if not args:
+        raise ValueError(
+            f"{base}Resample(start, end, step)(args..., key)"
+        )
+    # CH builds combinator names left to right, so both stacking
+    # orders are legal spellings: aggIfResample(s,e,p)(args, cond,
+    # key) (-If first: cond precedes the resample key) and
+    # aggResampleIf(s,e,p)(args, key, cond) (-If last: cond is the
+    # final argument). Either way the per-bucket cell is a single
+    # -If with the conditions ANDed — emitting a doubled
+    # ``<base>IfIf`` name would resolve nowhere.
+    extra_conds = []
+    if outer_if:
+        if len(args) < 2:
+            raise ValueError(
+                f"{base}ResampleIf(start, end, step)"
+                "(args..., key, cond)"
+            )
+        extra_conds.append(args[-1].strip())
+        args = args[:-1]
+    plain = base
+    if base.endswith("If") and len(base) > 2:
+        if len(args) < 2:
+            raise ValueError(
+                f"{base}Resample(start, end, step)"
+                "(args..., cond, key)"
+            )
+        plain = base[:-2]
+        extra_conds.append(args[-2].strip())
+        args = args[:-2] + args[-1:]
+    key = args[-1].strip()
+    lead = ", ".join(a.strip() for a in args[:-1])
+    lead = f"{lead}, " if lead else ""
+    cells = []
+    for i in range(n_buckets):
+        lo = start + i * step
+        hi = min(lo + step, end)
+        cond = f"({key}) >= {lo} AND ({key}) < {hi}"
+        for ec in extra_conds:
+            cond = f"({ec}) AND {cond}"
+        cell = f"{plain}If({lead}{cond})"
+        # numeric sum family only: a map-typed cell
+        # (sumMapResample) must NOT be coalesced against numeric 0.
+        # The -Array sums count too (CH's sumArray default over an
+        # empty bucket is 0, and the NULLed-array -If rewrite
+        # yields NULL there)
+        if plain in ("sum", "sumKahan", "sumWithOverflow", "count",
+                     "sumArray", "countArray"):
+            cell = f"coalesce({cell}, 0)"
+        cells.append(cell)
+    return f"array({', '.join(cells)})", tail[1] + 1
+
+
+def _arg_extreme(sql, m, close, args):
+    # -ArgMin / -ArgMax combinators: agg(x) restricted to the rows
+    # whose key attains the group extreme — ALL tied rows contribute
+    # (min_by/max_by would pick one). One collect_list bound via the
+    # single-element transform trick, extreme key from the same array,
+    # then the per-base fold over the filtered entries. sum/avg fold
+    # in DOUBLE (the documented numeric-fold deviation); min/max/any
+    # are type-preserving.
+    base, direction = m.group(1), m.group(2)
+    # -If stacking: the trailing condition NULLs the whole struct
+    # out (collect_list skips NULL elements, so non-matching rows
+    # never enter the extreme-key search)
+    cond = None
+    if m.group(3):
+        if len(args) < 2:
+            raise ValueError(
+                f"{base}Arg{direction}If expects (args..., cond)"
+            )
+        cond = args[-1].strip()
+        args = args[:-1]
+    want = 1 if base == "count" else 2
+    if len(args) != want:
+        raise ValueError(
+            f"{base}Arg{direction} expects "
+            + ("(key)" if base == "count" else "(x, key)")
+        )
+    key = args[-1].strip()
+    val = key if base == "count" else args[0].strip()
+    struct = f"named_struct('v', ({val}), 'k', ({key}))"
+    # CH skips rows whose ordering key is NULL (argMin/argMax
+    # NULL handling): guard them out of the collected candidate
+    # set alongside the -If condition, so a NULL key can never
+    # become the "extreme" nor poison the tie filter
+    knn = f"(({key}) IS NOT NULL)"
+    guard = knn if cond is None else f"(({cond}) AND {knn})"
+    struct = f"if({guard}, {struct}, NULL)"
+    arr = f"collect_list({struct})"
+    ext = "array_min" if direction == "Min" else "array_max"
+    # NULL values at the extreme key are skipped by the base
+    # aggregate (CH: sum/avg/any ignore NULLs), never poison the
+    # fold, and an all-NULL/empty tied set returns NULL (the
+    # nullif/NULL-init guards double as the ADVICE zero-match fix:
+    # ANSI mode neither divides by zero nor indexes into an empty
+    # array here)
+    if base == "sum":
+        body = (
+            "aggregate(__amf, CAST(NULL AS DOUBLE),"
+            " (acc, e) -> CASE WHEN e.v IS NULL THEN acc"
+            " WHEN acc IS NULL THEN CAST(e.v AS DOUBLE)"
+            " ELSE acc + CAST(e.v AS DOUBLE) END)"
+        )
+    elif base == "count":
+        body = "CAST(size(__amf) AS BIGINT)"
+    elif base == "avg":
+        body = (
+            "aggregate(__amf,"
+            " named_struct('n', CAST(0 AS DOUBLE),"
+            " 'c', CAST(0 AS DOUBLE)),"
+            " (acc, e) -> if(e.v IS NULL, acc,"
+            " named_struct('n', acc.n + CAST(e.v AS DOUBLE),"
+            " 'c', acc.c + CAST(1 AS DOUBLE))),"
+            " acc -> acc.n / nullif(acc.c, CAST(0 AS DOUBLE)))"
+        )
+    elif base == "any":
+        body = (
+            "try_element_at(filter(__amf,"
+            " __amn -> __amn.v IS NOT NULL), 1).v"
+        )
+    else:  # min / max over the tied rows, type-preserving
+        fn = "array_min" if base == "min" else "array_max"
+        body = f"{fn}(transform(__amf, __ame -> __ame.v))"
+    expr = (
+        f"element_at(transform(array({arr}), __ama -> "
+        f"element_at(transform(array({ext}(transform(__ama,"
+        " __amq -> __amq.k))), __amm -> "
+        "element_at(transform(array(filter(__ama,"
+        " __ame -> __ame.k <=> __amm)), __amf -> "
+        f"{body}), 1)), 1)), 1)"
+    )
+    return expr
+
+
+def _t_test_one_sample(sql, m, close, args):
+    # studentTTestOneSample(population_mean)(x)
+    mu = sql[m.end(): close].strip()
+    tail = _trailing_paren(sql, close)
+    if tail is None or not mu:
+        raise ValueError(
+            "studentTTestOneSample expects"
+            " studentTTestOneSample(population_mean)(sample)"
+        )
+    x = sql[tail[0] + 1: tail[1]].strip()
+    xd = f"CAST(({x}) AS DOUBLE)"
+    t = (
+        f"((avg({xd}) - ({mu}))"
+        f" / (stddev_samp({xd}) / sqrt(count({xd}))))"
+    )
+    z = f"(abs({t}) / sqrt(2.0))"
+    u = f"(1.0 / (1.0 + 0.3275911 * {z}))"
+    p = (
+        f"((0.254829592 * {u} - 0.284496736 * pow({u}, 2)"
+        f" + 1.421413741 * pow({u}, 3) - 1.453152027 * pow({u}, 4)"
+        f" + 1.061405429 * pow({u}, 5)) * exp(-{z} * {z}))"
+    )
+    expr = f"struct({t} AS t_statistic, {p} AS p_value)"
+    return expr, tail[1] + 1
+
+
+_RESAMPLE_RULES = _rules(
+    (r"([a-zA-Z][a-zA-Z0-9]*?)Resample(If)?", _resample),
+    (r"(sum|count|min|max|avg|any)Arg(Min|Max)(If)?", _arg_extreme),
+    ("studentTTestOneSample", _t_test_one_sample),
+)
+
+
+def _rewrite_resample(sql: str) -> str:
     """ClickHouse's ``-Resample`` combinator:
     ``aggResample(start, end, step)(args..., key)`` buckets the rows by
     ``key`` into ``[start + i*step, min(start + (i+1)*step, end))`` and
@@ -5011,234 +4715,7 @@ def _rewrite_resample(sql: str) -> str:  # noqa: C901
         re.compile(r"\buniqCombined\s*\(\s*\d+\s*\)\s*\("),
         "uniqCombined(",
     )
-    rx = re.compile(r"\b([a-zA-Z][a-zA-Z0-9]*?)Resample(If)?\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        base = m.group(1)
-        outer_if = bool(m.group(2))  # aggResampleIf: -If applied LAST
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        params = [p.strip() for p in _split_top_commas(sql[open1 + 1: close1])]
-        if len(params) != 3 or not all(
-            re.fullmatch(r"-?\d+", p) for p in params
-        ):
-            raise ValueError(
-                f"{base}Resample expects three integer literal"
-                " parameters: (start, end, step)"
-            )
-        start, end, step = (int(p) for p in params)
-        if step <= 0 or end <= start:
-            raise ValueError(
-                f"{base}Resample: need step > 0 and end > start"
-            )
-        n_buckets = -(-(end - start) // step)
-        if n_buckets > _RESAMPLE_MAX_BUCKETS:
-            raise ValueError(
-                f"{base}Resample: {n_buckets} buckets exceeds the"
-                f" {_RESAMPLE_MAX_BUCKETS}-bucket textual-expansion cap"
-                " — bucket with width_bucket + groupBy instead"
-            )
-        am = re.match(r"\s*\(", sql[close1 + 1:])
-        if not am:
-            raise ValueError(
-                f"{base}Resample(start, end, step)(args..., key)"
-            )
-        open2 = close1 + 1 + am.end() - 1
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open2 + 1: close2])
-        if not args:
-            raise ValueError(
-                f"{base}Resample(start, end, step)(args..., key)"
-            )
-        # CH builds combinator names left to right, so both stacking
-        # orders are legal spellings: aggIfResample(s,e,p)(args, cond,
-        # key) (-If first: cond precedes the resample key) and
-        # aggResampleIf(s,e,p)(args, key, cond) (-If last: cond is the
-        # final argument). Either way the per-bucket cell is a single
-        # -If with the conditions ANDed — emitting a doubled
-        # ``<base>IfIf`` name would resolve nowhere.
-        extra_conds = []
-        if outer_if:
-            if len(args) < 2:
-                raise ValueError(
-                    f"{base}ResampleIf(start, end, step)"
-                    "(args..., key, cond)"
-                )
-            extra_conds.append(args[-1].strip())
-            args = args[:-1]
-        plain = base
-        if base.endswith("If") and len(base) > 2:
-            if len(args) < 2:
-                raise ValueError(
-                    f"{base}Resample(start, end, step)"
-                    "(args..., cond, key)"
-                )
-            plain = base[:-2]
-            extra_conds.append(args[-2].strip())
-            args = args[:-2] + args[-1:]
-        key = args[-1].strip()
-        lead = ", ".join(a.strip() for a in args[:-1])
-        lead = f"{lead}, " if lead else ""
-        cells = []
-        for i in range(n_buckets):
-            lo = start + i * step
-            hi = min(lo + step, end)
-            cond = f"({key}) >= {lo} AND ({key}) < {hi}"
-            for ec in extra_conds:
-                cond = f"({ec}) AND {cond}"
-            cell = f"{plain}If({lead}{cond})"
-            # numeric sum family only: a map-typed cell
-            # (sumMapResample) must NOT be coalesced against numeric 0.
-            # The -Array sums count too (CH's sumArray default over an
-            # empty bucket is 0, and the NULLed-array -If rewrite
-            # yields NULL there)
-            if plain in ("sum", "sumKahan", "sumWithOverflow", "count",
-                         "sumArray", "countArray"):
-                cell = f"coalesce({cell}, 0)"
-            cells.append(cell)
-        sql = sql[: m.start()] + f"array({', '.join(cells)})" + sql[close2 + 1:]
-        pos = m.start()
-    # -ArgMin / -ArgMax combinators: agg(x) restricted to the rows
-    # whose key attains the group extreme — ALL tied rows contribute
-    # (min_by/max_by would pick one). One collect_list bound via the
-    # single-element transform trick, extreme key from the same array,
-    # then the per-base fold over the filtered entries. sum/avg fold
-    # in DOUBLE (the documented numeric-fold deviation); min/max/any
-    # are type-preserving.
-    am_rx = re.compile(
-        r"\b(sum|count|min|max|avg|any)Arg(Min|Max)(If)?\s*\("
-    )
-    pos = 0
-    while True:
-        m = am_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        base, direction = m.group(1), m.group(2)
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        # -If stacking: the trailing condition NULLs the whole struct
-        # out (collect_list skips NULL elements, so non-matching rows
-        # never enter the extreme-key search)
-        cond = None
-        if m.group(3):
-            if len(args) < 2:
-                raise ValueError(
-                    f"{base}Arg{direction}If expects (args..., cond)"
-                )
-            cond = args[-1].strip()
-            args = args[:-1]
-        want = 1 if base == "count" else 2
-        if len(args) != want:
-            raise ValueError(
-                f"{base}Arg{direction} expects "
-                + ("(key)" if base == "count" else "(x, key)")
-            )
-        key = args[-1].strip()
-        val = key if base == "count" else args[0].strip()
-        struct = f"named_struct('v', ({val}), 'k', ({key}))"
-        # CH skips rows whose ordering key is NULL (argMin/argMax
-        # NULL handling): guard them out of the collected candidate
-        # set alongside the -If condition, so a NULL key can never
-        # become the "extreme" nor poison the tie filter
-        knn = f"(({key}) IS NOT NULL)"
-        guard = knn if cond is None else f"(({cond}) AND {knn})"
-        struct = f"if({guard}, {struct}, NULL)"
-        arr = f"collect_list({struct})"
-        ext = "array_min" if direction == "Min" else "array_max"
-        # NULL values at the extreme key are skipped by the base
-        # aggregate (CH: sum/avg/any ignore NULLs), never poison the
-        # fold, and an all-NULL/empty tied set returns NULL (the
-        # nullif/NULL-init guards double as the ADVICE zero-match fix:
-        # ANSI mode neither divides by zero nor indexes into an empty
-        # array here)
-        if base == "sum":
-            body = (
-                "aggregate(__amf, CAST(NULL AS DOUBLE),"
-                " (acc, e) -> CASE WHEN e.v IS NULL THEN acc"
-                " WHEN acc IS NULL THEN CAST(e.v AS DOUBLE)"
-                " ELSE acc + CAST(e.v AS DOUBLE) END)"
-            )
-        elif base == "count":
-            body = "CAST(size(__amf) AS BIGINT)"
-        elif base == "avg":
-            body = (
-                "aggregate(__amf,"
-                " named_struct('n', CAST(0 AS DOUBLE),"
-                " 'c', CAST(0 AS DOUBLE)),"
-                " (acc, e) -> if(e.v IS NULL, acc,"
-                " named_struct('n', acc.n + CAST(e.v AS DOUBLE),"
-                " 'c', acc.c + CAST(1 AS DOUBLE))),"
-                " acc -> acc.n / nullif(acc.c, CAST(0 AS DOUBLE)))"
-            )
-        elif base == "any":
-            body = (
-                "try_element_at(filter(__amf,"
-                " __amn -> __amn.v IS NOT NULL), 1).v"
-            )
-        else:  # min / max over the tied rows, type-preserving
-            fn = "array_min" if base == "min" else "array_max"
-            body = f"{fn}(transform(__amf, __ame -> __ame.v))"
-        expr = (
-            f"element_at(transform(array({arr}), __ama -> "
-            f"element_at(transform(array({ext}(transform(__ama,"
-            " __amq -> __amq.k))), __amm -> "
-            "element_at(transform(array(filter(__ama,"
-            " __ame -> __ame.k <=> __amm)), __amf -> "
-            f"{body}), 1)), 1)), 1)"
-        )
-        sql = sql[: m.start()] + expr + sql[close1 + 1:]
-        pos = m.start()
-    # studentTTestOneSample(population_mean)(x)
-    pos = 0
-    os_rx = re.compile(r"\bstudentTTestOneSample\s*\(")
-    while True:
-        m = os_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        mu = sql[open1 + 1: close1].strip()
-        am = re.match(r"\s*\(", sql[close1 + 1:])
-        if not am or not mu:
-            raise ValueError(
-                "studentTTestOneSample expects"
-                " studentTTestOneSample(population_mean)(sample)"
-            )
-        open2 = close1 + 1 + am.end() - 1
-        close2 = _call_end(sql, open2)
-        x = sql[open2 + 1: close2].strip()
-        xd = f"CAST(({x}) AS DOUBLE)"
-        t = (
-            f"((avg({xd}) - ({mu}))"
-            f" / (stddev_samp({xd}) / sqrt(count({xd}))))"
-        )
-        z = f"(abs({t}) / sqrt(2.0))"
-        u = f"(1.0 / (1.0 + 0.3275911 * {z}))"
-        p = (
-            f"((0.254829592 * {u} - 0.284496736 * pow({u}, 2)"
-            f" + 1.421413741 * pow({u}, 3) - 1.453152027 * pow({u}, 4)"
-            f" + 1.061405429 * pow({u}, 5)) * exp(-{z} * {z}))"
-        )
-        expr = f"struct({t} AS t_statistic, {p} AS p_value)"
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-        pos = m.start()
-    return sql
+    return _rewrite_calls(sql, _RESAMPLE_RULES)
 
 
 def _time_decayed_running_route(
@@ -5316,6 +4793,109 @@ def _time_decayed_running_route(
     )
 
 
+def _time_decayed(sql, m, close, args):
+    kind = m.group(1)
+    name = f"exponentialTimeDecayed{kind}"
+    lam = sql[m.end(): close].strip()
+    if not re.fullmatch(r"[0-9]+(?:\.[0-9]+)?", lam):
+        raise ValueError(
+            f"{name} needs a literal numeric decay length"
+            " (in the time column's units; seconds for timestamps)"
+        )
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            f"{name} uses the parametric spelling: {name}(x)("
+            + ("time)" if kind == "Count" else "value, time)")
+        )
+    close2 = tail[1]
+    args = _split_top_commas(sql[tail[0] + 1: close2])
+    want = 1 if kind == "Count" else 2
+    if len(args) != want:
+        raise ValueError(
+            f"{name}(x) takes {want} argument(s): "
+            + ("(time)" if kind == "Count" else "(value, time)")
+        )
+    over = _trailing_over(sql, close2)
+    nm = re.match(r"(?is)\s*OVER\s+`?(\w+)`?", sql[close2 + 1:])
+    if over:
+        spec, close3 = sql[over[0] + 1: over[1]], over[1]
+    elif nm:
+        # OVER <name>: resolve the named window from the WINDOW
+        # clause — the emitted collect_list needs the spec inline
+        # (the WINDOW clause itself stays; Spark supports it)
+        wname = nm.group(1)
+        # the WINDOW clause sits after the SELECT list that uses
+        # OVER <name>, at the same nesting depth — which is NOT
+        # top level for subqueries, so scan string-safely at any
+        # depth and take the first definition past the call site
+        wm = _find_top_anywhere(
+            sql, rf"\bWINDOW\s+`?{wname}`?\s+AS\s*\(", close2 + 1
+        )
+        if not wm:
+            raise ValueError(
+                f"{name} OVER {wname}: no WINDOW {wname} AS (...)"
+                " clause found to resolve the named window"
+            )
+        wopen = sql.index("(", wm.end() - 1)
+        spec = sql[wopen + 1: _call_end(sql, wopen)]
+        close3 = close2 + nm.end()
+    else:
+        raise ValueError(
+            f"{name} translates as a window function — add an OVER"
+            " clause, or use operators/windows.py:"
+            "exponential_moving_average for grouped smoothing"
+        )
+    # via TIMESTAMP first: NTZ (parquet naive times) cannot cast
+    # straight to DOUBLE; LTZ is identity; numerics read as seconds
+    # (µs-quantized — exact for any realistic epoch value)
+    texpr = f"CAST(CAST(({args[-1].strip()}) AS TIMESTAMP) AS DOUBLE)"
+    vexpr = (
+        "CAST(1 AS DOUBLE)"
+        if kind == "Count"
+        else f"CAST(({args[0].strip()}) AS DOUBLE)"
+    )
+    routed = _time_decayed_running_route(
+        kind, lam, texpr, vexpr, spec, args[-1].strip()
+    )
+    if routed is not None:
+        return routed, close3 + 1
+    arr = (
+        f"collect_list(named_struct('v', {vexpr}, 't', {texpr}))"
+        f" OVER ({spec})"
+    )
+    w = f"exp((e.t - __edt) / ({lam}))"
+    if kind in ("Sum", "Count"):
+        body = (
+            "aggregate(__eda, CAST(0 AS DOUBLE),"
+            f" (acc, e) -> acc + e.v * {w})"
+        )
+    elif kind == "Max":
+        body = (
+            "aggregate(__eda, CAST('-Infinity' AS DOUBLE),"
+            f" (acc, e) -> greatest(acc, e.v * {w}))"
+        )
+    else:  # Avg
+        body = (
+            "aggregate(__eda,"
+            " named_struct('n', CAST(0 AS DOUBLE), 'd', CAST(0 AS DOUBLE)),"
+            f" (acc, e) -> named_struct('n', acc.n + e.v * {w},"
+            f" 'd', acc.d + {w}),"
+            " acc -> acc.n / acc.d)"
+        )
+    expr = (
+        f"element_at(transform(array({arr}), __eda -> "
+        "element_at(transform(array(array_max(transform(__eda,"
+        f" __edq -> __edq.t))), __edt -> {body}), 1)), 1)"
+    )
+    return expr, close3 + 1
+
+
+_TIME_DECAYED = _rules(
+    (r"exponentialTimeDecayed(Sum|Count|Max|Avg)", _time_decayed),
+)
+
+
 def _rewrite_time_decayed(sql: str) -> str:
     """ClickHouse ``exponentialTimeDecayed{Sum,Count,Max,Avg}(x)(v, t)
     OVER (spec)`` window functions → a collect_list window + HOF fold.
@@ -5369,127 +4949,472 @@ def _rewrite_time_decayed(sql: str) -> str:
     applyInPandas twin operators/windows.py:time_decayed remains for
     DataFrame-API users.
     """
-    rx = re.compile(r"\bexponentialTimeDecayed(Sum|Count|Max|Avg)\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(sql, pos)
-        if not m:
+    return _rewrite_calls(sql, _TIME_DECAYED)
+
+
+def _retention(sql, m, close, args):
+    if not args:
+        raise ValueError("retention expects at least one condition")
+    r1 = f"max(if({args[0]}, 1, 0))"
+    elems = [r1] + [f"({r1} * max(if({c}, 1, 0)))" for c in args[1:]]
+    return f"array({', '.join(elems)})"
+
+
+_SEQ_TOKEN = re.compile(
+    r"\(\?(\d+)\)"
+    r"|\(\?t\s*(<=|>=|==|<|>)\s*(\d+(?:\.\d+)?)\)"
+    r"|\.\*"
+)
+
+
+def _sequence_tokens(pat: str) -> tuple[list[tuple], int]:
+    """The sequenceMatch/sequenceCount pattern grammar: (?N) condition
+    refs, .* separators and (?t op n) time gaps, read from the start;
+    returns the tokens and where the reading stopped."""
+    toks, pos = [], 0
+    for tm in _SEQ_TOKEN.finditer(pat):
+        if tm.start() != pos:
             break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        kind = m.group(1)
-        name = f"exponentialTimeDecayed{kind}"
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        lam = sql[open1 + 1: close1].strip()
-        if not re.fullmatch(r"[0-9]+(?:\.[0-9]+)?", lam):
-            raise ValueError(
-                f"{name} needs a literal numeric decay length"
-                " (in the time column's units; seconds for timestamps)"
-            )
-        cm = re.match(r"(?s)\s*\(", sql[close1 + 1:])
-        if not cm:
-            raise ValueError(
-                f"{name} uses the parametric spelling: {name}(x)("
-                + ("time)" if kind == "Count" else "value, time)")
-            )
-        open2 = close1 + 1 + cm.end() - 1
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open2 + 1: close2])
-        want = 1 if kind == "Count" else 2
-        if len(args) != want:
-            raise ValueError(
-                f"{name}(x) takes {want} argument(s): "
-                + ("(time)" if kind == "Count" else "(value, time)")
-            )
-        om = re.match(r"(?is)\s*OVER\s*\(", sql[close2 + 1:])
-        nm = re.match(r"(?is)\s*OVER\s+`?(\w+)`?", sql[close2 + 1:])
-        if om:
-            open3 = close2 + 1 + om.end() - 1
-            close3 = _call_end(sql, open3)
-            spec = sql[open3 + 1: close3]
-        elif nm:
-            # OVER <name>: resolve the named window from the WINDOW
-            # clause — the emitted collect_list needs the spec inline
-            # (the WINDOW clause itself stays; Spark supports it)
-            wname = nm.group(1)
-            # the WINDOW clause sits after the SELECT list that uses
-            # OVER <name>, at the same nesting depth — which is NOT
-            # top level for subqueries, so scan string-safely at any
-            # depth and take the first definition past the call site
-            wrx = re.compile(rf"(?i)\bWINDOW\s+`?{wname}`?\s+AS\s*\(")
-            instr_w = _instr_map(sql)
-            wm = next(
-                (
-                    c
-                    for c in wrx.finditer(sql)
-                    if c.start() > close2 and not instr_w.get(c.start(), False)
-                ),
-                None,
-            )
-            if not wm:
-                raise ValueError(
-                    f"{name} OVER {wname}: no WINDOW {wname} AS (...)"
-                    " clause found to resolve the named window"
-                )
-            wopen = sql.index("(", wm.end() - 1)
-            spec = sql[wopen + 1: _call_end(sql, wopen)]
-            close3 = close2 + nm.end()
+        pos = tm.end()
+        if tm.group(1):
+            toks.append(("ref", tm.group(1)))
+        elif tm.group(2):
+            toks.append(("gap", tm.group(2), tm.group(3)))
         else:
-            raise ValueError(
-                f"{name} translates as a window function — add an OVER"
-                " clause, or use operators/windows.py:"
-                "exponential_moving_average for grouped smoothing"
-            )
-        # via TIMESTAMP first: NTZ (parquet naive times) cannot cast
-        # straight to DOUBLE; LTZ is identity; numerics read as seconds
-        # (µs-quantized — exact for any realistic epoch value)
-        texpr = f"CAST(CAST(({args[-1].strip()}) AS TIMESTAMP) AS DOUBLE)"
-        vexpr = (
-            "CAST(1 AS DOUBLE)"
-            if kind == "Count"
-            else f"CAST(({args[0].strip()}) AS DOUBLE)"
+            toks.append(("any",))
+    return toks, pos
+
+
+def _sequence_match(sql, m, close, args):
+    pat = sql[m.end(): close].strip().strip("'\"")
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            "sequenceMatch expects sequenceMatch('(?1).*(?2)')(ts, conds...)"
         )
-        routed = _time_decayed_running_route(
-            kind, lam, texpr, vexpr, spec, args[-1].strip()
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    ts, conds = args[0], args[1:]
+    # token grammar: (?N) condition refs, .* (any events between),
+    # and (?t OP n) time gaps.  Two refs with NOTHING between them
+    # ('(?1)(?2)') are ADJACENT in ClickHouse: the matched events
+    # must be consecutive among events matching ANY listed condition
+    # (the docs' example with a third matching condition returns 0)
+    # — translated exactly below via a no-event-between clause.
+    # Deviation note: a (?t op n) separator is treated as the time
+    # bound alone (intermediate matching events allowed), the
+    # funnel-with-deadline reading.
+    toks, pos2 = _sequence_tokens(pat)
+    order = [t[1] for t in toks if t[0] == "ref"]
+    ok = bool(order) and pos2 == len(pat)
+    # align each (?t op n) to the adjacent ref pair it sits between;
+    # a ref directly following another ref marks that pair adjacent
+    gaps: list[tuple[str, str] | None] = [None] * max(len(order) - 1, 0)
+    adjacent: list[bool] = [False] * max(len(order) - 1, 0)
+    ref_i = -1
+    prev_tok = None
+    for t in toks:
+        if t[0] == "ref":
+            if prev_tok is not None and prev_tok[0] == "ref" and ref_i + 1 < len(order):
+                adjacent[ref_i + 1 - 1] = True
+            ref_i += 1
+        elif t[0] == "gap":
+            if ref_i < 0 or ref_i >= len(order) - 1 or gaps[ref_i]:
+                ok = False  # leading/trailing/doubled time condition
+            else:
+                gaps[ref_i] = (t[1], t[2])
+        prev_tok = t
+    if toks and toks[-1][0] == "gap":
+        ok = False
+    if not ok:
+        raise ValueError(
+            f"sequenceMatch pattern {pat!r} is not a sequential"
+            " (?1)[.*|(?t op n)](?2)... form — use"
+            " operators.windows.sequence_match"
         )
-        if routed is not None:
-            sql = sql[: m.start()] + routed + sql[close3 + 1:]
-            pos = m.start()
-            continue
-        arr = (
-            f"collect_list(named_struct('v', {vexpr}, 't', {texpr}))"
-            f" OVER ({spec})"
-        )
-        w = f"exp((e.t - __edt) / ({lam}))"
-        if kind in ("Sum", "Count"):
-            body = (
-                "aggregate(__eda, CAST(0 AS DOUBLE),"
-                f" (acc, e) -> acc + e.v * {w})"
-            )
-        elif kind == "Max":
-            body = (
-                "aggregate(__eda, CAST('-Infinity' AS DOUBLE),"
-                f" (acc, e) -> greatest(acc, e.v * {w}))"
-            )
-        else:  # Avg
-            body = (
-                "aggregate(__eda,"
-                " named_struct('n', CAST(0 AS DOUBLE), 'd', CAST(0 AS DOUBLE)),"
-                f" (acc, e) -> named_struct('n', acc.n + e.v * {w},"
-                f" 'd', acc.d + {w}),"
-                " acc -> acc.n / acc.d)"
+    fields = ", ".join(
+        [f"CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE) AS t"]
+        + [f"({c}) AS s{i + 1}" for i, c in enumerate(conds)]
+    )
+    if any(gaps) or any(adjacent):
+        # Time-bounded chains need EXACT re-anchoring (an upper
+        # bound makes the greedy chain incomplete: A@0 A@100 B@105
+        # under t<=10 only matches via the second A), and adjacency
+        # needs backtracking a greedy fold can't do — so emit the
+        # nested-exists search — the SQL spelling of
+        # operators/windows.py:sequence_match_times.  Catalyst
+        # dedupes the semantically-equal collect_list aggregates,
+        # so the repeated {evs} text is one physical buffer.
+        evs = f"collect_list(struct({fields}))"
+        gap_op = {"==": "="}
+        # ClickHouse adjacency counts events matching ANY listed
+        # condition (referenced or not) as separators
+        def _anycond(var: str) -> str:
+            return " OR ".join(f"{var}.s{j + 1}" for j in range(len(conds)))
+
+        def nest(i: int) -> str:
+            var = f"__ch_e{i}"
+            c = [f"{var}.s{order[i]}"]
+            if i > 0:
+                prev = f"__ch_e{i - 1}"
+                c.append(f"{var}.t > {prev}.t")
+                if gaps[i - 1]:
+                    op, n = gaps[i - 1]
+                    c.append(
+                        f"({var}.t - {prev}.t) {gap_op.get(op, op)} {n}"
+                    )
+                if adjacent[i - 1]:
+                    z = f"__ch_z{i}"
+                    c.append(
+                        f"NOT exists({evs}, {z} -> ({_anycond(z)})"
+                        f" AND {z}.t > {prev}.t AND {z}.t < {var}.t)"
+                    )
+            body = " AND ".join(c)
+            if i + 1 < len(order):
+                body += f" AND exists({evs}, {nest(i + 1)})"
+            return f"{var} -> {body}"
+
+        expr = f"exists({evs}, {nest(0)})"
+    else:
+        # pure sequential form: the greedy-earliest fold is complete
+        # for existence (if any chain exists, the greedy one does)
+        evs = f"array_sort(collect_list(struct({fields})))"
+        init = "named_struct('d', 0, 'p', CAST(0.0 AS DOUBLE))"
+        cases = []
+        for k, ref in enumerate(order, start=1):
+            guard = "" if k == 1 else " AND __ch_e.t > __ch_ac.p"
+            cases.append(
+                f"WHEN __ch_ac.d = {k - 1} AND __ch_e.s{ref}{guard} THEN"
+                f" named_struct('d', {k}, 'p', __ch_e.t)"
             )
         expr = (
-            f"element_at(transform(array({arr}), __eda -> "
-            "element_at(transform(array(array_max(transform(__eda,"
-            f" __edq -> __edq.t))), __edt -> {body}), 1)), 1)"
+            f"(aggregate({evs}, {init},"
+            f" (__ch_ac, __ch_e) -> CASE {' '.join(cases)}"
+            f" ELSE __ch_ac END,"
+            f" __ch_ac -> __ch_ac.d) = {len(order)})"
         )
-        sql = sql[: m.start()] + expr + sql[close3 + 1:]
-        pos = m.start()
-    return sql
+    return expr, tail[1] + 1
+
+
+def _sequence_count(sql, m, close, args):
+    pat = sql[m.end(): close].strip().strip("'\"")
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            "sequenceCount expects sequenceCount('(?1).*(?2)')(ts, conds...)"
+        )
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    ts, conds = args[0], args[1:]
+    toks, pos2 = _sequence_tokens(pat)
+    order = [t[1] for t in toks if t[0] == "ref"]
+    if not order or pos2 != len(pat) or toks[0][0] == "gap" or toks[-1][0] == "gap":
+        raise ValueError(
+            f"sequenceCount pattern {pat!r} is not a sequential"
+            " (?1)[.*|(?t op n)](?2)... form — use"
+            " operators.stats.sequence_count"
+        )
+    # edges[i] (between ref i+1 and ref i+2, 0-indexed): "adj" when
+    # the refs are directly adjacent (ClickHouse adjacency: the two
+    # matched events must be CONSECUTIVE among events matching ANY
+    # listed condition), ("gap", op, n) for a (?t op n) separator
+    # (the r5-documented funnel-with-deadline reading: time bound
+    # alone, intermediate matching events allowed), "any" for .*
+    edges: list = []
+    pend: list = []
+    started = False
+    for t in toks:
+        if t[0] == "ref":
+            if started:
+                if any(p[0] == "gap" for p in pend):
+                    gaps_here = [p for p in pend if p[0] == "gap"]
+                    if len(gaps_here) > 1:
+                        raise ValueError(
+                            f"sequenceCount pattern {pat!r}: doubled"
+                            " time condition between two refs"
+                        )
+                    edges.append(("gap", gaps_here[0][1], gaps_here[0][2]))
+                elif pend:
+                    edges.append(("any",))
+                else:
+                    edges.append(("adj",))
+            started, pend = True, []
+        else:
+            pend.append(t)
+    adjacent = [e[0] == "adj" for e in edges]
+    fields = ", ".join(
+        [f"CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE) AS t"]
+        + [f"({c}) AS s{i + 1}" for i, c in enumerate(conds)]
+    )
+    # Greedy non-overlapping counter (CH semantics: earliest-completing
+    # match first, then the search restarts after the match's last
+    # event).
+    evs = f"array_sort(collect_list(struct({fields})))"
+    L = len(order)
+    has_gap = any(e[0] == "gap" for e in edges)
+    if has_gap:
+        # Timed multi-slot NFA (r7, replacing the r6 single-slot
+        # fold): per depth keep the live SET of previous-ref
+        # timestamps, compressed by what the depth's OUTGOING edge
+        # can distinguish. All chains advancing on one event share
+        # its time t, so each set holds distinct event times.
+        #   '>'/'>=' edges: the EARLIEST time strictly dominates
+        #     (both the strict-after guard and the lower bound favor
+        #     smaller p, ties included) — one slot.
+        #   '<='/'<'/'.*' edges: the latest time dominates EXCEPT
+        #     at equal timestamps — the strict t > p guard can fail
+        #     for the max while a discarded smaller value passes
+        #     (found by a tie repro: '(?2)(?t<=5)(?1)' on B@1 B@2
+        #     A@2 — the r6 single-slot fold answered 0, reference
+        #     1). Keeping the TWO largest distinct values is exact:
+        #     any future event time t' >= max, so the best usable
+        #     p is max (when max < t') or the second-max (when
+        #     max == t', and second-max < max <= t' always passes).
+        #   '==' edges: NO dominance order exists (a chain with
+        #     time p fires only at exactly p + n), so the full
+        #     distinct set is kept, capped at 64 with a loud
+        #     runtime error naming the rewrite.
+        #   adjacency edges: killed by any listed event, as in the
+        #     bitmask NFA.
+        # Completion resets every slot (CH's non-overlapping
+        # restart). Validated against the backtracking reference on
+        # exhaustive grids with and without ties
+        # (tests/test_property.py).
+        any_cond = " OR ".join(
+            f"__ch_e.s{j + 1}" for j in range(len(conds))
+        )
+        empty = "CAST(array() AS ARRAY<DOUBLE>)"
+        init_arr = "array(" + ", ".join([empty] * (L - 1)) + ")"
+
+        def gapok(i: int, p: str) -> str:
+            e = edges[i]
+            if e[0] == "gap":
+                op = {"==": "="}.get(e[1], e[1])
+                return (
+                    f"(__ch_e.t > {p} AND __ch_e.t - {p} {op} {e[2]})"
+                )
+            return f"__ch_e.t > {p}"
+
+        slot_exprs = []
+        for d in range(1, L):  # depth d lives in 0-indexed slot d-1
+            if d == 1:
+                adv = f"__ch_e.s{order[0]}"
+            else:
+                adv = (
+                    f"(__ch_e.s{order[d - 1]} AND"
+                    f" exists(__ch_ac.p[{d - 2}],"
+                    f" __ch_q -> {gapok(d - 2, '__ch_q')}))"
+                )
+            out_edge = edges[d - 1]
+            if out_edge[0] == "adj":
+                ns = (
+                    f"CASE WHEN {adv} THEN array(__ch_e.t)"
+                    f" ELSE {empty} END"
+                )
+            elif out_edge[0] == "gap" and out_edge[1] == "==":
+                base = f"__ch_ac.p[{d - 1}]"
+                grown = (
+                    f"CASE WHEN {adv} THEN"
+                    f" CASE WHEN array_contains({base}, __ch_e.t)"
+                    f" THEN {base}"
+                    f" ELSE concat({base}, array(__ch_e.t)) END"
+                    f" ELSE {base} END"
+                )
+                ns = (
+                    f"CASE WHEN size({grown}) > 64 THEN"
+                    f" array(CAST(assert_true(false,"
+                    f" 'sequenceCount (?t == n): more than 64 live"
+                    f" chains at depth {d} — restate the bound as a"
+                    f" range or use operators.stats.sequence_count')"
+                    f" AS DOUBLE))"
+                    f" ELSE {grown} END"
+                )
+            elif out_edge[0] == "gap" and out_edge[1] in (">", ">="):
+                base = f"__ch_ac.p[{d - 1}]"
+                ns = (
+                    f"CASE WHEN {adv} AND size({base}) = 0"
+                    f" THEN array(__ch_e.t) ELSE {base} END"
+                )
+            else:
+                # '.*' or '<='/'<' gap: keep the TWO largest
+                # distinct times (max may be blocked by the strict
+                # t > p guard at a tie; second-max always passes it)
+                base = f"__ch_ac.p[{d - 1}]"
+                ns = (
+                    f"CASE WHEN NOT ({adv}) THEN {base}"
+                    f" WHEN size({base}) = 0 THEN array(__ch_e.t)"
+                    f" WHEN element_at({base}, -1) = __ch_e.t"
+                    f" THEN {base}"
+                    f" ELSE array(element_at({base}, -1), __ch_e.t)"
+                    f" END"
+                )
+            slot_exprs.append(ns)
+        complete = (
+            f"__ch_e.s{order[L - 1]} AND"
+            f" exists(__ch_ac.p[{L - 2}],"
+            f" __ch_q -> {gapok(L - 2, '__ch_q')})"
+        )
+        expr = (
+            f"aggregate({evs}, named_struct('c', 0, 'p', {init_arr}),"
+            f" (__ch_ac, __ch_e) -> CASE"
+            f" WHEN NOT ({any_cond}) THEN __ch_ac"
+            f" WHEN {complete} THEN"
+            f" named_struct('c', __ch_ac.c + 1, 'p', {init_arr})"
+            f" ELSE named_struct('c', __ch_ac.c,"
+            f" 'p', array({', '.join(slot_exprs)})) END,"
+            f" __ch_ac -> __ch_ac.c)"
+        )
+    elif any(adjacent):
+        # Adjacency makes a single live chain insufficient: an event
+        # can match BOTH the expected next ref and the anchor of a
+        # better chain (exhaustively confirmed: greedy-with-fallback
+        # miscounts '(?1)(?2)(?3)(?1)' on A B A B A A). Exact method:
+        # NFA subset simulation — the state is a bitmask of live
+        # depths (bit d = a chain has matched refs 1..d). Per listed
+        # event: a live depth advances when the event matches its
+        # expected ref; it also SURVIVES the event only if its
+        # incoming wait-edge is '.*' (an adjacent edge is broken by
+        # any other listed event); depth 0 is always live. Any chain
+        # reaching depth L completes: count += 1 and the frontier
+        # resets to {0} (non-overlapping restart, event consumed).
+        # Events matching no listed condition are invisible. Equal
+        # timestamps process in array-sort order (CH leaves tie order
+        # unspecified). Exactness is property-tested against a
+        # backtracking reference matcher (tests/test_property.py).
+        any_cond = " OR ".join(f"__ch_e.s{j + 1}" for j in range(len(conds)))
+        surv = 1  # bit 0
+        for d in range(1, L):
+            if not adjacent[d - 1]:
+                surv |= 1 << d
+        adv = " | ".join(
+            f"(CASE WHEN (__ch_ac.s & {1 << d}) != 0"
+            f" AND __ch_e.s{order[d]} THEN {1 << (d + 1)} ELSE 0 END)"
+            for d in range(L)
+        )
+        expr = (
+            f"aggregate({evs}, named_struct('s', 1, 'c', 0),"
+            f" (__ch_ac, __ch_e) -> CASE"
+            f" WHEN NOT ({any_cond}) THEN __ch_ac"
+            f" WHEN (({adv}) & {1 << L}) != 0 THEN"
+            f" named_struct('s', 1, 'c', __ch_ac.c + 1)"
+            f" ELSE named_struct('s',"
+            f" CAST(1 | (__ch_ac.s & {surv}) | ({adv}) AS INT),"
+            f" 'c', __ch_ac.c) END,"
+            f" __ch_ac -> __ch_ac.c)"
+        )
+    else:
+        # Pure '.*' (subsequence) patterns: the scalar greedy fold is
+        # exact — consuming the expected ref at the earliest possible
+        # event never delays completion (exchange argument for
+        # subsequence matching), and the completing step resets depth
+        # for the non-overlapping restart.
+        init = "named_struct('d', 0, 'p', CAST(0.0 AS DOUBLE), 'c', 0)"
+        cases = []
+        for k, ref in enumerate(order, start=1):
+            guard = "" if k == 1 else " AND __ch_e.t > __ch_ac.p"
+            if k < L:
+                nxt = f"named_struct('d', {k}, 'p', __ch_e.t, 'c', __ch_ac.c)"
+            else:
+                nxt = "named_struct('d', 0, 'p', __ch_e.t, 'c', __ch_ac.c + 1)"
+            cases.append(
+                f"WHEN __ch_ac.d = {k - 1} AND __ch_e.s{ref}{guard} THEN {nxt}"
+            )
+        expr = (
+            f"aggregate({evs}, {init},"
+            f" (__ch_ac, __ch_e) -> CASE {' '.join(cases)}"
+            f" ELSE __ch_ac END,"
+            f" __ch_ac -> __ch_ac.c)"
+        )
+    return expr, tail[1] + 1
+
+
+def _window_funnel(sql, m, close, args):
+    known_modes = {
+        "strict_order",
+        "strict_deduplication",
+        "strict_dedup",
+        "strict_increase",
+        # pre-21.x spelling, deprecated alias of strict_deduplication
+        "strict",
+    }
+    modes = set()
+    for p in args[1:]:
+        mode = p.strip().strip("'\"")
+        if mode not in known_modes:
+            raise ValueError(f"windowFunnel: unknown mode {mode!r}")
+        modes.add(
+            "strict_dedup"
+            if mode in ("strict_deduplication", "strict")
+            else mode
+        )
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError("windowFunnel expects windowFunnel(W)(ts, conds...)")
+    params, args = args, _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if len(args) < 2:
+        raise ValueError("windowFunnel expects (timestamp, cond1, ...)")
+    w, ts, conds = params[0], args[0], args[1:]
+    # epoch seconds for the window math; the TIMESTAMP hop also
+    # accepts TIMESTAMP_NTZ and numeric time columns uniformly
+    fields = ", ".join(
+        [f"CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE) AS t"]
+        + [f"({c}) AS s{i + 1}" for i, c in enumerate(conds)]
+    )
+    evs = f"array_sort(collect_list(struct({fields})))"
+    if not modes:
+        # Bare windowFunnel(W) runs ClickHouse's EXACT re-anchoring
+        # DP (r6): per depth keep the LATEST chain-anchor timestamp
+        # among chains reaching it — a step-d event propagates the
+        # depth-(d-1) anchor when it lands within W of it, a step-1
+        # event refreshes the anchor. Later anchors dominate (they
+        # satisfy every window a smaller one does), so one slot per
+        # depth is exact; slots only grow, so depth = filled-prefix
+        # size. Same engine as operators/windows.py:funnel_exact,
+        # validated against a brute-force subsequence matcher on
+        # ~97k exhaustive cases. Mode strings take the full
+        # event-loop simulation below instead (r7).
+        K = len(conds)
+        init = "array(" + ", ".join(["CAST(NULL AS DOUBLE)"] * K) + ")"
+        slots = []
+        for d in range(1, K + 1):
+            if d == 1:
+                cand = "CASE WHEN __ch_e.s1 THEN __ch_e.t END"
+            else:
+                cand = (
+                    f"CASE WHEN __ch_e.s{d} AND __ch_a[{d - 2}] IS NOT NULL"
+                    f" AND __ch_e.t - __ch_a[{d - 2}] <= ({w})"
+                    f" THEN __ch_a[{d - 2}] END"
+                )
+            slots.append(f"greatest(__ch_a[{d - 1}], {cand})")
+        expr = (
+            f"size(filter(aggregate({evs}, {init},"
+            f" (__ch_a, __ch_e) -> array({', '.join(slots)})),"
+            f" __ch_x -> __ch_x IS NOT NULL))"
+        )
+        return expr, tail[1] + 1
+    # Mode strings run ClickHouse's EXACT event loop (r7) — the
+    # shared fold in operators/windows.py:funnel_ch_fold_sql, a
+    # direct transliteration of the published windowFunnel algorithm
+    # (per-level (anchor, last) slots, level-1 refresh preceding the
+    # dedup/order checks, early termination on dedup repeat /
+    # order violation / full depth, strict_increase on the previous
+    # level's LAST event time). Validated against a pure-Python
+    # model of the same loop on a ~98k-case exhaustive grid
+    # (tests/test_property.py). Equal-timestamp ties keep the
+    # funnel family's pinned (t asc, cond DESC) order; ClickHouse's
+    # own tie order is merge-order nondeterministic.
+    from .operators.windows import funnel_ch_fold_sql
+
+    expr = funnel_ch_fold_sql(ts, conds, w, modes)
+    return expr, tail[1] + 1
+
+
+
+
+_FUNNEL_RULES = _rules(
+    ("retention", _retention),
+    ("sequenceMatch", _sequence_match),
+    ("sequenceCount", _sequence_count),
+    ("windowFunnel", _window_funnel),
+)
 
 
 def _rewrite_funnel_aggs(sql: str) -> str:
@@ -5509,490 +5434,7 @@ def _rewrite_funnel_aggs(sql: str) -> str:
       exhaustive grid. Pure JVM, one shuffle, linear in the group's
       event count.
     """
-    while True:
-        m = _find_case_exact(sql, r"\bretention\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        conds = _split_top_commas(sql[open1 + 1: close1])
-        if not conds:
-            raise ValueError("retention expects at least one condition")
-        r1 = f"max(if({conds[0]}, 1, 0))"
-        elems = [r1] + [f"({r1} * max(if({c}, 1, 0)))" for c in conds[1:]]
-        sql = sql[: m.start()] + f"array({', '.join(elems)})" + sql[close1 + 1:]
-    while True:
-        m = _find_case_exact(sql, r"\bsequenceMatch\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        pat = sql[open1 + 1: close1].strip().strip("'\"")
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError(
-                "sequenceMatch expects sequenceMatch('(?1).*(?2)')(ts, conds...)"
-            )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open2 + 1: close2])
-        ts, conds = args[0], args[1:]
-        # token grammar: (?N) condition refs, .* (any events between),
-        # and (?t OP n) time gaps.  Two refs with NOTHING between them
-        # ('(?1)(?2)') are ADJACENT in ClickHouse: the matched events
-        # must be consecutive among events matching ANY listed condition
-        # (the docs' example with a third matching condition returns 0)
-        # — translated exactly below via a no-event-between clause.
-        # Deviation note: a (?t op n) separator is treated as the time
-        # bound alone (intermediate matching events allowed), the
-        # funnel-with-deadline reading.
-        tok_rx = re.compile(
-            r"\(\?(\d+)\)"
-            r"|\(\?t\s*(<=|>=|==|<|>)\s*(\d+(?:\.\d+)?)\)"
-            r"|\.\*"
-        )
-        toks, pos2 = [], 0
-        for tm in tok_rx.finditer(pat):
-            if tm.start() != pos2:
-                break
-            pos2 = tm.end()
-            if tm.group(1):
-                toks.append(("ref", tm.group(1)))
-            elif tm.group(2):
-                toks.append(("gap", tm.group(2), tm.group(3)))
-            else:
-                toks.append(("any",))
-        order = [t[1] for t in toks if t[0] == "ref"]
-        ok = bool(order) and pos2 == len(pat)
-        # align each (?t op n) to the adjacent ref pair it sits between;
-        # a ref directly following another ref marks that pair adjacent
-        gaps: list[tuple[str, str] | None] = [None] * max(len(order) - 1, 0)
-        adjacent: list[bool] = [False] * max(len(order) - 1, 0)
-        ref_i = -1
-        prev_tok = None
-        for t in toks:
-            if t[0] == "ref":
-                if prev_tok is not None and prev_tok[0] == "ref" and ref_i + 1 < len(order):
-                    adjacent[ref_i + 1 - 1] = True
-                ref_i += 1
-            elif t[0] == "gap":
-                if ref_i < 0 or ref_i >= len(order) - 1 or gaps[ref_i]:
-                    ok = False  # leading/trailing/doubled time condition
-                else:
-                    gaps[ref_i] = (t[1], t[2])
-            prev_tok = t
-        if toks and toks[-1][0] == "gap":
-            ok = False
-        if not ok:
-            raise ValueError(
-                f"sequenceMatch pattern {pat!r} is not a sequential"
-                " (?1)[.*|(?t op n)](?2)... form — use"
-                " operators.windows.sequence_match"
-            )
-        fields = ", ".join(
-            [f"CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE) AS t"]
-            + [f"({c}) AS s{i + 1}" for i, c in enumerate(conds)]
-        )
-        if any(gaps) or any(adjacent):
-            # Time-bounded chains need EXACT re-anchoring (an upper
-            # bound makes the greedy chain incomplete: A@0 A@100 B@105
-            # under t<=10 only matches via the second A), and adjacency
-            # needs backtracking a greedy fold can't do — so emit the
-            # nested-exists search — the SQL spelling of
-            # operators/windows.py:sequence_match_times.  Catalyst
-            # dedupes the semantically-equal collect_list aggregates,
-            # so the repeated {evs} text is one physical buffer.
-            evs = f"collect_list(struct({fields}))"
-            gap_op = {"==": "="}
-            # ClickHouse adjacency counts events matching ANY listed
-            # condition (referenced or not) as separators
-            def _anycond(var: str) -> str:
-                return " OR ".join(f"{var}.s{j + 1}" for j in range(len(conds)))
-
-            def nest(i: int) -> str:
-                var = f"__ch_e{i}"
-                c = [f"{var}.s{order[i]}"]
-                if i > 0:
-                    prev = f"__ch_e{i - 1}"
-                    c.append(f"{var}.t > {prev}.t")
-                    if gaps[i - 1]:
-                        op, n = gaps[i - 1]
-                        c.append(
-                            f"({var}.t - {prev}.t) {gap_op.get(op, op)} {n}"
-                        )
-                    if adjacent[i - 1]:
-                        z = f"__ch_z{i}"
-                        c.append(
-                            f"NOT exists({evs}, {z} -> ({_anycond(z)})"
-                            f" AND {z}.t > {prev}.t AND {z}.t < {var}.t)"
-                        )
-                body = " AND ".join(c)
-                if i + 1 < len(order):
-                    body += f" AND exists({evs}, {nest(i + 1)})"
-                return f"{var} -> {body}"
-
-            expr = f"exists({evs}, {nest(0)})"
-        else:
-            # pure sequential form: the greedy-earliest fold is complete
-            # for existence (if any chain exists, the greedy one does)
-            evs = f"array_sort(collect_list(struct({fields})))"
-            init = "named_struct('d', 0, 'p', CAST(0.0 AS DOUBLE))"
-            cases = []
-            for k, ref in enumerate(order, start=1):
-                guard = "" if k == 1 else " AND __ch_e.t > __ch_ac.p"
-                cases.append(
-                    f"WHEN __ch_ac.d = {k - 1} AND __ch_e.s{ref}{guard} THEN"
-                    f" named_struct('d', {k}, 'p', __ch_e.t)"
-                )
-            expr = (
-                f"(aggregate({evs}, {init},"
-                f" (__ch_ac, __ch_e) -> CASE {' '.join(cases)}"
-                f" ELSE __ch_ac END,"
-                f" __ch_ac -> __ch_ac.d) = {len(order)})"
-            )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    while True:
-        m = _find_case_exact(sql, r"\bsequenceCount\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        pat = sql[open1 + 1: close1].strip().strip("'\"")
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError(
-                "sequenceCount expects sequenceCount('(?1).*(?2)')(ts, conds...)"
-            )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open2 + 1: close2])
-        ts, conds = args[0], args[1:]
-        # same token grammar as sequenceMatch: (?N) refs, .* separators,
-        # and (?t op n) time gaps
-        tok_rx = re.compile(
-            r"\(\?(\d+)\)"
-            r"|\(\?t\s*(<=|>=|==|<|>)\s*(\d+(?:\.\d+)?)\)"
-            r"|\.\*"
-        )
-        toks, pos2 = [], 0
-        for tm in tok_rx.finditer(pat):
-            if tm.start() != pos2:
-                break
-            pos2 = tm.end()
-            if tm.group(1):
-                toks.append(("ref", tm.group(1)))
-            elif tm.group(2):
-                toks.append(("gap", tm.group(2), tm.group(3)))
-            else:
-                toks.append(("any",))
-        order = [t[1] for t in toks if t[0] == "ref"]
-        if not order or pos2 != len(pat) or toks[0][0] == "gap" or toks[-1][0] == "gap":
-            raise ValueError(
-                f"sequenceCount pattern {pat!r} is not a sequential"
-                " (?1)[.*|(?t op n)](?2)... form — use"
-                " operators.stats.sequence_count"
-            )
-        # edges[i] (between ref i+1 and ref i+2, 0-indexed): "adj" when
-        # the refs are directly adjacent (ClickHouse adjacency: the two
-        # matched events must be CONSECUTIVE among events matching ANY
-        # listed condition), ("gap", op, n) for a (?t op n) separator
-        # (the r5-documented funnel-with-deadline reading: time bound
-        # alone, intermediate matching events allowed), "any" for .*
-        edges: list = []
-        pend: list = []
-        started = False
-        for t in toks:
-            if t[0] == "ref":
-                if started:
-                    if any(p[0] == "gap" for p in pend):
-                        gaps_here = [p for p in pend if p[0] == "gap"]
-                        if len(gaps_here) > 1:
-                            raise ValueError(
-                                f"sequenceCount pattern {pat!r}: doubled"
-                                " time condition between two refs"
-                            )
-                        edges.append(("gap", gaps_here[0][1], gaps_here[0][2]))
-                    elif pend:
-                        edges.append(("any",))
-                    else:
-                        edges.append(("adj",))
-                started, pend = True, []
-            else:
-                pend.append(t)
-        adjacent = [e[0] == "adj" for e in edges]
-        fields = ", ".join(
-            [f"CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE) AS t"]
-            + [f"({c}) AS s{i + 1}" for i, c in enumerate(conds)]
-        )
-        # Greedy non-overlapping counter (CH semantics: earliest-completing
-        # match first, then the search restarts after the match's last
-        # event).
-        evs = f"array_sort(collect_list(struct({fields})))"
-        L = len(order)
-        has_gap = any(e[0] == "gap" for e in edges)
-        if has_gap:
-            # Timed multi-slot NFA (r7, replacing the r6 single-slot
-            # fold): per depth keep the live SET of previous-ref
-            # timestamps, compressed by what the depth's OUTGOING edge
-            # can distinguish. All chains advancing on one event share
-            # its time t, so each set holds distinct event times.
-            #   '>'/'>=' edges: the EARLIEST time strictly dominates
-            #     (both the strict-after guard and the lower bound favor
-            #     smaller p, ties included) — one slot.
-            #   '<='/'<'/'.*' edges: the latest time dominates EXCEPT
-            #     at equal timestamps — the strict t > p guard can fail
-            #     for the max while a discarded smaller value passes
-            #     (found by a tie repro: '(?2)(?t<=5)(?1)' on B@1 B@2
-            #     A@2 — the r6 single-slot fold answered 0, reference
-            #     1). Keeping the TWO largest distinct values is exact:
-            #     any future event time t' >= max, so the best usable
-            #     p is max (when max < t') or the second-max (when
-            #     max == t', and second-max < max <= t' always passes).
-            #   '==' edges: NO dominance order exists (a chain with
-            #     time p fires only at exactly p + n), so the full
-            #     distinct set is kept, capped at 64 with a loud
-            #     runtime error naming the rewrite.
-            #   adjacency edges: killed by any listed event, as in the
-            #     bitmask NFA.
-            # Completion resets every slot (CH's non-overlapping
-            # restart). Validated against the backtracking reference on
-            # exhaustive grids with and without ties
-            # (tests/test_property.py).
-            any_cond = " OR ".join(
-                f"__ch_e.s{j + 1}" for j in range(len(conds))
-            )
-            empty = "CAST(array() AS ARRAY<DOUBLE>)"
-            init_arr = "array(" + ", ".join([empty] * (L - 1)) + ")"
-
-            def gapok(i: int, p: str) -> str:
-                e = edges[i]
-                if e[0] == "gap":
-                    op = {"==": "="}.get(e[1], e[1])
-                    return (
-                        f"(__ch_e.t > {p} AND __ch_e.t - {p} {op} {e[2]})"
-                    )
-                return f"__ch_e.t > {p}"
-
-            slot_exprs = []
-            for d in range(1, L):  # depth d lives in 0-indexed slot d-1
-                if d == 1:
-                    adv = f"__ch_e.s{order[0]}"
-                else:
-                    adv = (
-                        f"(__ch_e.s{order[d - 1]} AND"
-                        f" exists(__ch_ac.p[{d - 2}],"
-                        f" __ch_q -> {gapok(d - 2, '__ch_q')}))"
-                    )
-                out_edge = edges[d - 1]
-                if out_edge[0] == "adj":
-                    ns = (
-                        f"CASE WHEN {adv} THEN array(__ch_e.t)"
-                        f" ELSE {empty} END"
-                    )
-                elif out_edge[0] == "gap" and out_edge[1] == "==":
-                    base = f"__ch_ac.p[{d - 1}]"
-                    grown = (
-                        f"CASE WHEN {adv} THEN"
-                        f" CASE WHEN array_contains({base}, __ch_e.t)"
-                        f" THEN {base}"
-                        f" ELSE concat({base}, array(__ch_e.t)) END"
-                        f" ELSE {base} END"
-                    )
-                    ns = (
-                        f"CASE WHEN size({grown}) > 64 THEN"
-                        f" array(CAST(assert_true(false,"
-                        f" 'sequenceCount (?t == n): more than 64 live"
-                        f" chains at depth {d} — restate the bound as a"
-                        f" range or use operators.stats.sequence_count')"
-                        f" AS DOUBLE))"
-                        f" ELSE {grown} END"
-                    )
-                elif out_edge[0] == "gap" and out_edge[1] in (">", ">="):
-                    base = f"__ch_ac.p[{d - 1}]"
-                    ns = (
-                        f"CASE WHEN {adv} AND size({base}) = 0"
-                        f" THEN array(__ch_e.t) ELSE {base} END"
-                    )
-                else:
-                    # '.*' or '<='/'<' gap: keep the TWO largest
-                    # distinct times (max may be blocked by the strict
-                    # t > p guard at a tie; second-max always passes it)
-                    base = f"__ch_ac.p[{d - 1}]"
-                    ns = (
-                        f"CASE WHEN NOT ({adv}) THEN {base}"
-                        f" WHEN size({base}) = 0 THEN array(__ch_e.t)"
-                        f" WHEN element_at({base}, -1) = __ch_e.t"
-                        f" THEN {base}"
-                        f" ELSE array(element_at({base}, -1), __ch_e.t)"
-                        f" END"
-                    )
-                slot_exprs.append(ns)
-            complete = (
-                f"__ch_e.s{order[L - 1]} AND"
-                f" exists(__ch_ac.p[{L - 2}],"
-                f" __ch_q -> {gapok(L - 2, '__ch_q')})"
-            )
-            expr = (
-                f"aggregate({evs}, named_struct('c', 0, 'p', {init_arr}),"
-                f" (__ch_ac, __ch_e) -> CASE"
-                f" WHEN NOT ({any_cond}) THEN __ch_ac"
-                f" WHEN {complete} THEN"
-                f" named_struct('c', __ch_ac.c + 1, 'p', {init_arr})"
-                f" ELSE named_struct('c', __ch_ac.c,"
-                f" 'p', array({', '.join(slot_exprs)})) END,"
-                f" __ch_ac -> __ch_ac.c)"
-            )
-        elif any(adjacent):
-            # Adjacency makes a single live chain insufficient: an event
-            # can match BOTH the expected next ref and the anchor of a
-            # better chain (exhaustively confirmed: greedy-with-fallback
-            # miscounts '(?1)(?2)(?3)(?1)' on A B A B A A). Exact method:
-            # NFA subset simulation — the state is a bitmask of live
-            # depths (bit d = a chain has matched refs 1..d). Per listed
-            # event: a live depth advances when the event matches its
-            # expected ref; it also SURVIVES the event only if its
-            # incoming wait-edge is '.*' (an adjacent edge is broken by
-            # any other listed event); depth 0 is always live. Any chain
-            # reaching depth L completes: count += 1 and the frontier
-            # resets to {0} (non-overlapping restart, event consumed).
-            # Events matching no listed condition are invisible. Equal
-            # timestamps process in array-sort order (CH leaves tie order
-            # unspecified). Exactness is property-tested against a
-            # backtracking reference matcher (tests/test_property.py).
-            any_cond = " OR ".join(f"__ch_e.s{j + 1}" for j in range(len(conds)))
-            surv = 1  # bit 0
-            for d in range(1, L):
-                if not adjacent[d - 1]:
-                    surv |= 1 << d
-            adv = " | ".join(
-                f"(CASE WHEN (__ch_ac.s & {1 << d}) != 0"
-                f" AND __ch_e.s{order[d]} THEN {1 << (d + 1)} ELSE 0 END)"
-                for d in range(L)
-            )
-            expr = (
-                f"aggregate({evs}, named_struct('s', 1, 'c', 0),"
-                f" (__ch_ac, __ch_e) -> CASE"
-                f" WHEN NOT ({any_cond}) THEN __ch_ac"
-                f" WHEN (({adv}) & {1 << L}) != 0 THEN"
-                f" named_struct('s', 1, 'c', __ch_ac.c + 1)"
-                f" ELSE named_struct('s',"
-                f" CAST(1 | (__ch_ac.s & {surv}) | ({adv}) AS INT),"
-                f" 'c', __ch_ac.c) END,"
-                f" __ch_ac -> __ch_ac.c)"
-            )
-        else:
-            # Pure '.*' (subsequence) patterns: the scalar greedy fold is
-            # exact — consuming the expected ref at the earliest possible
-            # event never delays completion (exchange argument for
-            # subsequence matching), and the completing step resets depth
-            # for the non-overlapping restart.
-            init = "named_struct('d', 0, 'p', CAST(0.0 AS DOUBLE), 'c', 0)"
-            cases = []
-            for k, ref in enumerate(order, start=1):
-                guard = "" if k == 1 else " AND __ch_e.t > __ch_ac.p"
-                if k < L:
-                    nxt = f"named_struct('d', {k}, 'p', __ch_e.t, 'c', __ch_ac.c)"
-                else:
-                    nxt = "named_struct('d', 0, 'p', __ch_e.t, 'c', __ch_ac.c + 1)"
-                cases.append(
-                    f"WHEN __ch_ac.d = {k - 1} AND __ch_e.s{ref}{guard} THEN {nxt}"
-                )
-            expr = (
-                f"aggregate({evs}, {init},"
-                f" (__ch_ac, __ch_e) -> CASE {' '.join(cases)}"
-                f" ELSE __ch_ac END,"
-                f" __ch_ac -> __ch_ac.c)"
-            )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    while True:
-        m = _find_case_exact(sql, r"\bwindowFunnel\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        params = _split_top_commas(sql[open1 + 1: close1])
-        known_modes = {
-            "strict_order",
-            "strict_deduplication",
-            "strict_dedup",
-            "strict_increase",
-            # pre-21.x spelling, deprecated alias of strict_deduplication
-            "strict",
-        }
-        modes = set()
-        for p in params[1:]:
-            mode = p.strip().strip("'\"")
-            if mode not in known_modes:
-                raise ValueError(f"windowFunnel: unknown mode {mode!r}")
-            modes.add(
-                "strict_dedup"
-                if mode in ("strict_deduplication", "strict")
-                else mode
-            )
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError("windowFunnel expects windowFunnel(W)(ts, conds...)")
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open2 + 1: close2])
-        if len(args) < 2:
-            raise ValueError("windowFunnel expects (timestamp, cond1, ...)")
-        w, ts, conds = params[0], args[0], args[1:]
-        # epoch seconds for the window math; the TIMESTAMP hop also
-        # accepts TIMESTAMP_NTZ and numeric time columns uniformly
-        fields = ", ".join(
-            [f"CAST(CAST({ts} AS TIMESTAMP) AS DOUBLE) AS t"]
-            + [f"({c}) AS s{i + 1}" for i, c in enumerate(conds)]
-        )
-        evs = f"array_sort(collect_list(struct({fields})))"
-        if not modes:
-            # Bare windowFunnel(W) runs ClickHouse's EXACT re-anchoring
-            # DP (r6): per depth keep the LATEST chain-anchor timestamp
-            # among chains reaching it — a step-d event propagates the
-            # depth-(d-1) anchor when it lands within W of it, a step-1
-            # event refreshes the anchor. Later anchors dominate (they
-            # satisfy every window a smaller one does), so one slot per
-            # depth is exact; slots only grow, so depth = filled-prefix
-            # size. Same engine as operators/windows.py:funnel_exact,
-            # validated against a brute-force subsequence matcher on
-            # ~97k exhaustive cases. Mode strings take the full
-            # event-loop simulation below instead (r7).
-            K = len(conds)
-            init = "array(" + ", ".join(["CAST(NULL AS DOUBLE)"] * K) + ")"
-            slots = []
-            for d in range(1, K + 1):
-                if d == 1:
-                    cand = "CASE WHEN __ch_e.s1 THEN __ch_e.t END"
-                else:
-                    cand = (
-                        f"CASE WHEN __ch_e.s{d} AND __ch_a[{d - 2}] IS NOT NULL"
-                        f" AND __ch_e.t - __ch_a[{d - 2}] <= ({w})"
-                        f" THEN __ch_a[{d - 2}] END"
-                    )
-                slots.append(f"greatest(__ch_a[{d - 1}], {cand})")
-            expr = (
-                f"size(filter(aggregate({evs}, {init},"
-                f" (__ch_a, __ch_e) -> array({', '.join(slots)})),"
-                f" __ch_x -> __ch_x IS NOT NULL))"
-            )
-            sql = sql[: m.start()] + expr + sql[close2 + 1:]
-            continue
-        # Mode strings run ClickHouse's EXACT event loop (r7) — the
-        # shared fold in operators/windows.py:funnel_ch_fold_sql, a
-        # direct transliteration of the published windowFunnel algorithm
-        # (per-level (anchor, last) slots, level-1 refresh preceding the
-        # dedup/order checks, early termination on dedup repeat /
-        # order violation / full depth, strict_increase on the previous
-        # level's LAST event time). Validated against a pure-Python
-        # model of the same loop on a ~98k-case exhaustive grid
-        # (tests/test_property.py). Equal-timestamp ties keep the
-        # funnel family's pinned (t asc, cond DESC) order; ClickHouse's
-        # own tie order is merge-order nondeterministic.
-        from .operators.windows import funnel_ch_fold_sql
-
-        expr = funnel_ch_fold_sql(ts, conds, w, modes)
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    return sql
+    return _rewrite_calls(sql, _FUNNEL_RULES)
 
 
 # rank/contingency/iterative aggregates no string rewrite can express —
@@ -6491,697 +5933,456 @@ _AGG_IF_ALL = {
 }
 
 
-def _call_end(s: str, open_idx: int) -> int:
-    """Index of the ``)`` matching the ``(`` at ``open_idx``
-    (quote-aware: parens inside string literals don't count, so e.g.
-    ``extract(s, 'a\\(bc')`` finds its real closer)."""
-    depth, quote = 0, None
-    for j in range(open_idx, len(s)):
-        ch = s[j]
-        if quote:
-            if ch == quote and s[j - 1] != "\\":
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-    raise ValueError(f"unbalanced parens after position {open_idx}")
+def _q_interp(pv: str, exclusive: bool) -> str:
+    """Linear interpolation between sorted[floor(h)] and
+    sorted[floor(h) + 1] of the sorted array ``__ch_qa``: the inclusive
+    percentile (h = 1 + q*(n-1)), or Excel PERCENTILE.EXC (h = q*(n+1),
+    end-clamped) for CH's ExactExclusive."""
+    if exclusive:
+        h = (
+            "least(greatest(CAST((" + pv + ") AS DOUBLE)"
+            " * (size(__ch_qa) + 1), CAST(1 AS DOUBLE)),"
+            " CAST(size(__ch_qa) AS DOUBLE))"
+        )
+    else:
+        h = f"(1 + CAST(({pv}) AS DOUBLE) * (size(__ch_qa) - 1))"
+    lo = "try_element_at(__ch_qa, CAST(floor(__ch_h) AS INT))"
+    hi = (
+        "coalesce(try_element_at(__ch_qa,"
+        " CAST(floor(__ch_h) AS INT) + 1), " + lo + ")"
+    )
+    return (
+        f"element_at(transform(array({h}), __ch_h ->"
+        f" {lo} + (__ch_h - floor(__ch_h)) * ({hi} - {lo})),"
+        " 1)"
+    )
 
 
-def _rewrite_agg_spellings(sql: str) -> str:
-    """ClickHouse aggregate-function spellings → Spark builtins, so the
-    aggregates in a reference user's saved SQL run verbatim:
+def _q_order_stat(pv: str, variant: str) -> str:
+    """CH's ExactLow/High ORDER STATISTICS over the sorted array
+    ``__ch_qa``: Low takes sorted[floor(q * (n-1))], High
+    sorted[ceil(q * (n-1))] (type-preserving, NULL over the empty
+    group)."""
+    rnd = "floor" if variant == "ExactLow" else "ceil"
+    return (
+        "try_element_at(__ch_qa, greatest(1,"
+        f" CAST({rnd}(({pv}) * (size(__ch_qa) - 1)) AS INT)"
+        " + 1))"
+    )
 
-    - name-for-name (``uniq``→``approx_count_distinct``, ``argMax``→
-      ``max_by``, ``any``→``any_value``, ``groupArray``→``collect_list``,
-      ...) — case-sensitive, longest name first;
-    - ``uniqExact(x)`` → ``count(DISTINCT x)``;
-    - ``-If`` combinators ``sumIf/avgIf/minIf/maxIf(x, c)`` →
-      ``agg(if(c, x, NULL))`` (``countIf``→``count_if`` is native);
-    - the parametric quantile family ``quantileX(p)(x)`` /
-      ``quantilesX(p1, ...)(x)``: ``Exact`` variants → exact
-      ``percentile``, everything else (TDigest/Timing/BFloat16/plain) →
-      ``approx_percentile`` (CH's default quantile is approximate too);
-      bare ``quantile(x)`` / ``median(x)`` → p = 0.5;
-    - ``count()`` → ``count(*)``.
 
-    Weighted variants (quantileExactWeighted, topKWeighted) are NOT
-    string-rewritable to a builtin — use functions/clickhouse.py /
-    operators; they pass through and fail with Spark's clear
-    unresolved-function error."""
+def _q_levels(ps: list[str], plural: bool, sel) -> str:
+    if plural:
+        return f"transform(array({', '.join(ps)}), __ch_qp -> {sel('__ch_qp')})"
+    return sel(ps[0])
+
+
+def _quantile_array(sql, m, close, args):
     # parametric -Array stackings of quantile/topK (batch-78): the
     # element stream is the flatten of the group's arrays, so each
     # variant routes through the SAME per-variant selector the scalar
-    # pass uses (ADVICE r10: the old catch-all folded every variant
+    # rule uses (ADVICE r10: the old catch-all folded every variant
     # into the inclusive interpolation): ExactLow/High are order
     # statistics over the sorted flat array, ExactExclusive is Excel
     # PERCENTILE.EXC, everything else (plain/Exact/TDigest/Timing/...)
-    # is the inclusive interpolation. topK is a frequency fold with a
-    # value tiebreak. Handled BEFORE the scalar parametric pass so the
-    # names don't collide.
-    while True:
-        m = _find_case_exact(
-            sql,
-            r"\b(quantiles?)((?:Exact|TDigest|Timing|BFloat16"
-            r"|Interpolated|Deterministic|GK|DD)?\w*?)Array\s*\(",
+    # is the inclusive interpolation.
+    plural = m.group(1) == "quantiles"
+    variant = m.group(2)
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            f"{m.group(0).split('(')[0].strip()} expects the"
+            " parametric form quantile...Array(p...)(arr)"
         )
-        if not m:
-            break
-        plural = m.group(1) == "quantiles"
-        variant = m.group(2)
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
+    ps = args
+    arr_args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if len(arr_args) != 1:
+        # ADVICE r10: quantileExactWeightedArray(0.5)(arr, w) and
+        # friends used to swallow both args into one CAST and die
+        # with an opaque AnalysisException — refuse loudly instead
+        raise ValueError(
+            f"quantile{'s' if plural else ''}{variant}Array takes"
+            " exactly ONE array argument — the weighted/"
+            "deterministic multi-array forms (arr, w) have no SQL"
+            " rewrite; explode the arrays and use the scalar"
+            f" quantile{variant}(p)(x, w) instead"
+        )
+    arr_arg = arr_args[0]
+    if variant in ("GK", "DD"):
+        # the leading accuracy knob has no role in the exact
+        # sorted-array stand-in — drop it, keep the levels (same
+        # contract as the scalar rule)
+        if len(ps) < 2:
             raise ValueError(
-                f"{m.group(0).split('(')[0].strip()} expects the"
-                " parametric form quantile...Array(p...)(arr)"
+                f"quantile{variant}Array expects"
+                f" quantile{variant}Array(accuracy, level...)(arr)"
             )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        ps = _split_top_commas(sql[open1 + 1: close1])
-        arr_args = _split_top_commas(sql[open2 + 1: close2])
-        if len(arr_args) != 1:
-            # ADVICE r10: quantileExactWeightedArray(0.5)(arr, w) and
-            # friends used to swallow both args into one CAST and die
-            # with an opaque AnalysisException — refuse loudly instead
-            raise ValueError(
-                f"quantile{'s' if plural else ''}{variant}Array takes"
-                " exactly ONE array argument — the weighted/"
-                "deterministic multi-array forms (arr, w) have no SQL"
-                " rewrite; explode the arrays and use the scalar"
-                f" quantile{variant}(p)(x, w) instead"
-            )
-        arr_arg = arr_args[0]
-        if variant in ("GK", "DD"):
-            # the leading accuracy knob has no role in the exact
-            # sorted-array stand-in — drop it, keep the levels (same
-            # contract as the scalar pass)
-            if len(ps) < 2:
-                raise ValueError(
-                    f"quantile{variant}Array expects"
-                    f" quantile{variant}Array(accuracy, level...)(arr)"
-                )
-            ps = ps[1:]
+        ps = ps[1:]
+    if variant in ("ExactLow", "ExactHigh"):
+        body = _q_levels(ps, plural, lambda pv: _q_order_stat(pv, variant))
+        coll = f"flatten(collect_list({arr_arg}))"
+    else:
+        excl = variant == "ExactExclusive"
+        body = _q_levels(ps, plural, lambda pv: _q_interp(pv, excl))
+        coll = f"flatten(collect_list(CAST(({arr_arg}) AS ARRAY<DOUBLE>)))"
+    return (
+        f"element_at(transform(array(array_sort({coll})),"
+        f" __ch_qa -> {body}), 1)"
+    ), tail[1] + 1
 
-        def _qinc(pv: str) -> str:
-            h = f"(1 + CAST(({pv}) AS DOUBLE) * (size(__ch_qa) - 1))"
-            lo = "try_element_at(__ch_qa, CAST(floor(__ch_h) AS INT))"
-            hi = (
-                "coalesce(try_element_at(__ch_qa,"
-                " CAST(floor(__ch_h) AS INT) + 1), " + lo + ")"
-            )
-            return (
-                f"element_at(transform(array({h}), __ch_h ->"
-                f" {lo} + (__ch_h - floor(__ch_h)) * ({hi} - {lo})),"
-                " 1)"
-            )
 
-        def _qexc(pv: str) -> str:
-            # PERCENTILE.EXC: h = q*(n+1), end-clamped (same selector
-            # as the scalar ExactExclusive branch)
-            h = (
-                "least(greatest(CAST((" + pv + ") AS DOUBLE)"
-                " * (size(__ch_qa) + 1), CAST(1 AS DOUBLE)),"
-                " CAST(size(__ch_qa) AS DOUBLE))"
-            )
-            lo = "try_element_at(__ch_qa, CAST(floor(__ch_h) AS INT))"
-            hi = (
-                "coalesce(try_element_at(__ch_qa,"
-                " CAST(floor(__ch_h) AS INT) + 1), " + lo + ")"
-            )
-            return (
-                f"element_at(transform(array({h}), __ch_h ->"
-                f" {lo} + (__ch_h - floor(__ch_h)) * ({hi} - {lo})),"
-                " 1)"
-            )
+def _top_k_array(sql, m, close, args):
+    # topK is a frequency fold with a value tiebreak
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError("topKArray expects topKArray(k)(arr)")
+    k = args[0].strip()
+    arr_arg = sql[tail[0] + 1: tail[1]]
+    return (
+        "element_at(transform(array(flatten(collect_list("
+        f"({arr_arg})))), __ch_fa -> slice(transform(array_sort("
+        "transform(array_distinct(__ch_fa), __ch_v -> struct("
+        "-size(filter(__ch_fa, __ch_e -> __ch_e <=> __ch_v))"
+        " AS negn, __ch_v AS v))), __ch_s -> __ch_s.v),"
+        f" 1, CAST(({k}) AS INT))), 1)"
+    ), tail[1] + 1
 
-        def _qord(pv: str) -> str:
-            # ExactLow/High order statistics (same selector as the
-            # scalar branch; type-preserving)
+
+_Q_WEIGHTED = (
+    "ExactWeighted", "ExactWeightedInterpolated",
+    "InterpolatedWeighted", "TDigestWeighted",
+    "TimingWeighted", "BFloat16Weighted",
+)
+
+
+def _quantile(sql, m, close, args):
+    # parametric quantiles: their names share prefixes with nothing.
+    # The optional -If combinator composes: quantileIf(p)(x, cond).
+    plural = m.group(1) == "quantiles"
+    variant = m.group(2)
+    exact = variant.startswith("Exact") or variant == "InterpolatedWeighted"
+    # weighted approximate variants (Timing/BFloat16/TDigest
+    # Weighted) map to Spark's exact weighted percentile — a more
+    # precise stand-in for CH's approximation
+    weighted = variant in _Q_WEIGHTED
+    has_if = bool(m.group(3))
+    fn = "percentile" if exact else "approx_percentile"
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        # bare quantile(x) / quantileIf(x, cond): CH semantics = median
+        if has_if:
+            if len(args) != 2:
+                raise ValueError("quantileIf expects (expr, cond)")
+            x = f"if({args[1]}, {args[0]}, NULL)"
+        else:
+            x = sql[m.end(): close]
+        if variant in ("ExactLow", "ExactHigh"):
+            # bare form = the lower/upper median order statistic
             rnd = "floor" if variant == "ExactLow" else "ceil"
             return (
-                "try_element_at(__ch_qa, greatest(1,"
-                f" CAST({rnd}(({pv}) * (size(__ch_qa) - 1)) AS INT)"
-                " + 1))"
+                "element_at(transform(array(array_sort("
+                f"collect_list({x}))), __ch_qa ->"
+                " try_element_at(__ch_qa, greatest(1,"
+                f" CAST({rnd}(0.5 * (size(__ch_qa) - 1)) AS INT)"
+                " + 1))), 1)"
             )
-
-        if variant in ("ExactLow", "ExactHigh"):
-            sel = _qord
-            coll = f"flatten(collect_list({arr_arg}))"
-        else:
-            sel = _qexc if variant == "ExactExclusive" else _qinc
-            coll = (
-                f"flatten(collect_list(CAST(({arr_arg})"
-                " AS ARRAY<DOUBLE>)))"
+        return f"{fn}({x}, 0.5)"
+    ps = args
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if variant == "GK":
+        # quantileGK(accuracy, level)(x): accuracy leads the
+        # parameter list and maps to approx_percentile's third
+        if len(ps) < 2:
+            raise ValueError("quantileGK expects quantileGK(accuracy, level)(x)")
+        acc, ps = ps[0], ps[1:]
+    if variant == "DD":
+        # quantileDD(relative_accuracy, levels...)(x): the DDSketch
+        # accuracy knob has no approx_percentile analogue — drop it,
+        # keep the levels
+        if len(ps) < 2:
+            raise ValueError(
+                "quantileDD expects"
+                " quantileDD(relative_accuracy, level...)(x)"
             )
-        body = (
-            f"transform(array({', '.join(ps)}), __ch_qp ->"
-            f" {sel('__ch_qp')})"
-            if plural else sel(ps[0])
-        )
-        expr = (
-            f"element_at(transform(array(array_sort({coll})),"
+        ps = ps[1:]
+    if variant == "Deterministic" and not has_if and len(args) == 2:
+        args = args[:1]  # the determinism seed has no Spark role
+    if has_if:
+        need = 3 if weighted else 2
+        if len(args) != need:
+            raise ValueError("quantile...If expects (expr[, w], cond)")
+        cond = args[-1]
+        x = f"if({cond}, {args[0]}, NULL)"
+        if weighted:
+            args = [args[0], f"if({cond}, {args[1]}, 0)", cond]
+    else:
+        x = args[0] if (weighted or variant == "Deterministic") \
+            else sql[tail[0] + 1: tail[1]]
+    p_expr = f"array({', '.join(ps)})" if plural else ps[0]
+    if weighted:
+        if len(args) < 2:
+            raise ValueError(f"quantile{variant} expects (expr, weight) arguments")
+        call = f"percentile({x}, {p_expr}, CAST({args[1]} AS BIGINT))"
+    elif variant == "GK":
+        call = f"approx_percentile({x}, {p_expr}, {acc})"
+    elif variant == "ExactExclusive":
+        # CH's ExactExclusive is Excel PERCENTILE.EXC (batch-77; it
+        # previously fell through to Spark's INCLUSIVE percentile —
+        # 3.25 where CH says 2.75 for q=0.25 over 1..10).
+        # ExactInclusive == PERCENTILE.INC == Spark percentile, which
+        # the fall-through below already is.
+        body = _q_levels(ps, plural, lambda pv: _q_interp(pv, True))
+        call = (
+            "element_at(transform(array(array_sort("
+            f"collect_list(CAST(({x}) AS DOUBLE)))),"
             f" __ch_qa -> {body}), 1)"
         )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    while True:
-        # anyHeavyArray(arr): mode over the flattened elements — the
-        # head of the exact topKArray(1) fold (count desc, value asc,
-        # the scalar anyHeavy contract; batch-82b)
-        m = _find_case_exact(sql, r"\banyHeavyArray\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        sql = (
-            sql[: m.start()]
-            + f"try_element_at(topKArray(1)({sql[open1 + 1: close1]}), 1)"
-            + sql[close1 + 1:]
+    elif variant in ("ExactLow", "ExactHigh"):
+        # for an even count at q=0.5 the order statistics are the
+        # lower/upper median, which is CH-exact (batch-72; both
+        # previously fell through to the interpolated form, returning
+        # 5.5 where CH says 5/6). At non-median levels this is the
+        # (n-1)-scaled convention — CH's own selector is
+        # level-dependent in ways only testable against a live server
+        # (documented convention deviation).
+        body = _q_levels(ps, plural, lambda pv: _q_order_stat(pv, variant))
+        call = (
+            "element_at(transform(array(array_sort("
+            f"collect_list({x}))), __ch_qa -> {body}), 1)"
         )
-    while True:
-        m = _find_case_exact(sql, r"\btopKArray\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError("topKArray expects topKArray(k)(arr)")
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        k = _split_top_commas(sql[open1 + 1: close1])[0].strip()
-        arr_arg = sql[open2 + 1: close2]
-        expr = (
-            "element_at(transform(array(flatten(collect_list("
-            f"({arr_arg})))), __ch_fa -> slice(transform(array_sort("
-            "transform(array_distinct(__ch_fa), __ch_v -> struct("
-            "-size(filter(__ch_fa, __ch_e -> __ch_e <=> __ch_v))"
-            " AS negn, __ch_v AS v))), __ch_s -> __ch_s.v),"
-            f" 1, CAST(({k}) AS INT))), 1)"
-        )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    # parametric quantiles first: their names share prefixes with nothing.
-    # The optional -If combinator composes: quantileIf(p)(x, cond).
-    while True:
-        m = _find_top_anywhere(
-            sql,
-            r"\b(quantiles?)((?:Exact(?:WeightedInterpolated|Weighted|Low|High|Inclusive|Exclusive)?|InterpolatedWeighted|TDigest(?:Weighted)?|Timing(?:Weighted)?|BFloat16(?:Weighted)?|Deterministic|DD|GK)?)(If)?\s*\(",
-        )
-        if not m:
-            break
-        plural = m.group(1) == "quantiles"
-        variant = m.group(2)
-        exact = variant.startswith("Exact") or variant == "InterpolatedWeighted"
-        # weighted approximate variants (Timing/BFloat16/TDigest
-        # Weighted) map to Spark's exact weighted percentile — a more
-        # precise stand-in for CH's approximation
-        weighted = variant in (
-            "ExactWeighted", "ExactWeightedInterpolated",
-            "InterpolatedWeighted", "TDigestWeighted",
-            "TimingWeighted", "BFloat16Weighted",
-        )
-        has_if = bool(m.group(3))
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        fn = "percentile" if exact else "approx_percentile"
-        if rest.startswith("("):
-            open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-            close2 = _call_end(sql, open2)
-            ps = _split_top_commas(sql[open1 + 1: close1])
-            args = _split_top_commas(sql[open2 + 1: close2])
-            if variant == "GK":
-                # quantileGK(accuracy, level)(x): accuracy leads the
-                # parameter list and maps to approx_percentile's third
-                if len(ps) < 2:
-                    raise ValueError(
-                        "quantileGK expects quantileGK(accuracy, level)(x)"
-                    )
-                acc, ps = ps[0], ps[1:]
-            if variant == "DD":
-                # quantileDD(relative_accuracy, levels...)(x): the
-                # DDSketch accuracy knob has no approx_percentile
-                # analogue — drop it, keep the levels
-                if len(ps) < 2:
-                    raise ValueError(
-                        "quantileDD expects"
-                        " quantileDD(relative_accuracy, level...)(x)"
-                    )
-                ps = ps[1:]
-            if variant == "Deterministic" and not has_if and len(args) == 2:
-                args = args[:1]  # the determinism seed has no Spark role
-            if has_if:
-                need = 3 if weighted else 2
-                if len(args) != need:
-                    raise ValueError("quantile...If expects (expr[, w], cond)")
-                cond = args[-1]
-                x = f"if({cond}, {args[0]}, NULL)"
-                if weighted:
-                    args = [args[0], f"if({cond}, {args[1]}, 0)", cond]
-            else:
-                x = args[0] if (weighted or variant == "Deterministic") \
-                    else sql[open2 + 1: close2]
-            p_expr = f"array({', '.join(ps)})" if plural else ps[0]
-            if weighted:
-                if len(args) < 2:
-                    raise ValueError(
-                        f"quantile{variant} expects (expr, weight) arguments"
-                    )
-                call = f"percentile({x}, {p_expr}, CAST({args[1]} AS BIGINT))"
-            elif variant == "GK":
-                call = f"approx_percentile({x}, {p_expr}, {acc})"
-            elif variant == "ExactExclusive":
-                # CH's ExactExclusive is Excel PERCENTILE.EXC:
-                # h = q*(n+1), linear interpolation between
-                # sorted[floor(h)] and sorted[floor(h)+1], clamped to
-                # the array ends (batch-77; it previously fell through
-                # to Spark's INCLUSIVE percentile — 3.25 where CH says
-                # 2.75 for q=0.25 over 1..10). ExactInclusive ==
-                # PERCENTILE.INC == Spark percentile, which the
-                # fall-through below already is.
-                def _exc(pv: str) -> str:
-                    h = (
-                        "least(greatest(CAST((" + pv + ")"
-                        " AS DOUBLE) * (size(__ch_qa) + 1),"
-                        " CAST(1 AS DOUBLE)),"
-                        " CAST(size(__ch_qa) AS DOUBLE))"
-                    )
-                    lo = "try_element_at(__ch_qa, CAST(floor(__ch_h) AS INT))"
-                    hi = (
-                        "coalesce(try_element_at(__ch_qa,"
-                        " CAST(floor(__ch_h) AS INT) + 1), "
-                        + lo + ")"
-                    )
-                    return (
-                        f"element_at(transform(array({h}), __ch_h ->"
-                        f" {lo} + (__ch_h - floor(__ch_h))"
-                        f" * ({hi} - {lo})), 1)"
-                    )
+    else:
+        call = f"{fn}({x}, {p_expr})"
+    return call, tail[1] + 1
 
-                body = (
-                    f"transform(array({', '.join(ps)}),"
-                    f" __ch_qp -> {_exc('__ch_qp')})"
-                    if plural else _exc(ps[0])
-                )
-                call = (
-                    "element_at(transform(array(array_sort("
-                    f"collect_list(CAST(({x}) AS DOUBLE)))),"
-                    f" __ch_qa -> {body}), 1)"
-                )
-            elif variant in ("ExactLow", "ExactHigh"):
-                # CH's Low/High variants are ORDER STATISTICS, not the
-                # interpolated percentile: Low takes sorted[floor(q *
-                # (n-1))], High sorted[ceil(q * (n-1))] — for an even
-                # count at q=0.5 that's the lower/upper median, which
-                # is CH-exact (batch-72; both previously fell through
-                # to the interpolated form, returning 5.5 where CH
-                # says 5/6). At non-median levels this is the
-                # (n-1)-scaled convention — CH's own selector is
-                # level-dependent in ways only testable against a live
-                # server (documented convention deviation).
-                # Type-preserving, NULL over the empty group.
-                rnd = "floor" if variant == "ExactLow" else "ceil"
 
-                def _sel(pv: str) -> str:
-                    return (
-                        "try_element_at(__ch_qa, greatest(1,"
-                        f" CAST({rnd}(({pv}) * (size(__ch_qa) - 1))"
-                        " AS INT) + 1))"
-                    )
-
-                body = (
-                    f"transform(array({', '.join(ps)}),"
-                    f" __ch_qp -> {_sel('__ch_qp')})"
-                    if plural else _sel(ps[0])
-                )
-                call = (
-                    "element_at(transform(array(array_sort("
-                    f"collect_list({x}))), __ch_qa -> {body}), 1)"
-                )
-            else:
-                call = f"{fn}({x}, {p_expr})"
-            sql = sql[: m.start()] + call + sql[close2 + 1:]
-        else:
-            # bare quantile(x) / quantileIf(x, cond): CH semantics = median
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if has_if:
-                if len(args) != 2:
-                    raise ValueError("quantileIf expects (expr, cond)")
-                x = f"if({args[1]}, {args[0]}, NULL)"
-            else:
-                x = sql[open1 + 1: close1]
-            if variant in ("ExactLow", "ExactHigh"):
-                # bare form = the lower/upper median order statistic
-                rnd = "floor" if variant == "ExactLow" else "ceil"
-                call = (
-                    "element_at(transform(array(array_sort("
-                    f"collect_list({x}))), __ch_qa ->"
-                    " try_element_at(__ch_qa, greatest(1,"
-                    f" CAST({rnd}(0.5 * (size(__ch_qa) - 1)) AS INT)"
-                    " + 1))), 1)"
-                )
-            else:
-                call = f"{fn}({x}, 0.5)"
-            sql = sql[: m.start()] + call + sql[close1 + 1:]
-    # parametric size caps: groupArray(n)(x) / groupUniqArray(n)(x) keep
-    # at most n elements; uniqUpTo(n)(x) = exact count clamped at n+1.
-    # redundant-OrNull stackings strip first (probe batch 66): the
-    # conditional/array-flattened aggregate already yields NULL over an
-    # empty match set in Spark
-    sql = re.sub(
-        r"\b(sum|avg|min|max|anyHeavy|any)IfOrNull\s*\(", r"\1If(", sql
-    )
-    sql = re.sub(
-        r"\b(sum|avg|min|max)ArrayOrNull\s*\(", r"\1Array(", sql
-    )
+def _group_array_if_params(sql, m, close, args):
     # parametric groupArray*If(params)(args..., cond): fold the If into
-    # the argument BEFORE the parametric pass below consumes the name
-    # (collect_list/collect_set skip NULLs). Scan with an advancing
-    # offset so a NON-parametric groupArrayIf(x, c) earlier in the
-    # statement doesn't stop the search before a later parametric
-    # groupArrayIf(n)(x, c) (ADVICE r9)
-    ga_if_pos = 0
-    while True:
-        m = _find_case_exact(
-            sql,
-            r"\bgroup(Uniq)?Array(Sorted|Sample|Last)?If\s*\(",
-            ga_if_pos,
+    # the argument BEFORE the parametric rule below consumes the name
+    # (collect_list/collect_set skip NULLs); the non-parametric form is
+    # left for the -If table
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        return None
+    base = m.group(0).split("(")[0].strip()[: -2]  # drop 'If'
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if len(args) < 2:
+        raise ValueError(f"{base}If expects (args..., cond)")
+    cond = args[-1]
+    wrapped = ", ".join(f"if({cond}, {a}, NULL)" for a in args[:-1])
+    return f"{base}({sql[m.end(): close]})({wrapped})", tail[1] + 1
+
+
+# parametric size caps: groupArray(n)(x) / groupUniqArray(n)(x) keep at
+# most n elements; uniqUpTo(n)(x) = exact count clamped at n+1
+_SIZE_CAPS = {
+    "groupUniqArray": "slice(collect_set({x}), 1, {k})",
+    "groupArraySorted": "slice(array_sort(collect_list({x})), 1, {k})",
+    # deterministic pseudo-random sample: md5-keyed sort stands in for
+    # CH's RNG so reruns and the DuckDB oracle agree; the optional seed
+    # parameter is accepted and ignored (documented determinism
+    # deviation)
+    "groupArraySample":
+        "transform(slice(array_sort(transform(collect_list({x}),"
+        " __ch_v -> struct(md5(CAST(__ch_v AS STRING)) AS h,"
+        " __ch_v AS v))), 1, {k}), __ch_s -> __ch_s.v)",
+    "groupArrayLast":
+        "slice(collect_list({x}),"
+        " greatest(size(collect_list({x})) - ({k}) + 1, 1), ({k}))",
+    "groupArray": "slice(collect_list({x}), 1, {k})",
+    "uniqUpTo": "least(count(DISTINCT {x}), ({k}) + 1)",
+}
+
+
+def _size_cap(sql, m, close, args):
+    name = m.group(1)
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        if name in ("uniqUpTo", "groupArrayLast", "groupArraySample"):
+            raise ValueError(f"{name} expects {name}(n)(x)")
+        return None  # plain groupArray(x): the name map handles it
+    k = sql[m.end(): close].strip()
+    if name == "groupArraySample":
+        k = args[0].strip()  # drop optional seed
+    x = sql[tail[0] + 1: tail[1]]
+    return _SIZE_CAPS[name].format(x=x, k=k), tail[1] + 1
+
+
+def _sum_map_filtered(sql, m, close, args):
+    # sumMapFiltered(keep)(keys, values): filter the parallel arrays by
+    # key membership FIRST, then fall through to the plain sumMap fold
+    # (WithOverflow differs only in CH's fixed-width arithmetic —
+    # Spark's BIGINT/DOUBLE never overflows here, documented no-op)
+    keep = sql[m.end(): close].strip()
+    tail = _trailing_paren(sql, close)
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]]) if tail else []
+    if len(args) != 2:
+        raise ValueError(
+            "sumMapFiltered expects sumMapFiltered(keys_to_keep)"
+            "(keys, values)"
         )
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            # non-parametric form: the -If table handles it; keep
-            # scanning past it for parametric occurrences
-            ga_if_pos = close1 + 1
-            continue
-        base = m.group(0).split("(")[0].strip()[: -2]  # drop 'If'
-        params = sql[open1 + 1: close1]
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open2 + 1: close2])
-        if len(args) < 2:
-            raise ValueError(f"{base}If expects (args..., cond)")
-        cond = args[-1]
-        wrapped = ", ".join(f"if({cond}, {a}, NULL)" for a in args[:-1])
-        sql = (
-            sql[: m.start()] + f"{base}({params})({wrapped})"
-            + sql[close2 + 1:]
-        )
-    for name, template in (
-        ("groupUniqArray", "slice(collect_set({x}), 1, {k})"),
-        ("groupArraySorted", "slice(array_sort(collect_list({x})), 1, {k})"),
-        # deterministic pseudo-random sample: md5-keyed sort stands in
-        # for CH's RNG so reruns and the DuckDB oracle agree; the
-        # optional seed parameter is accepted and ignored (documented
-        # determinism deviation)
-        ("groupArraySample",
-         "transform(slice(array_sort(transform(collect_list({x}),"
-         " __ch_v -> struct(md5(CAST(__ch_v AS STRING)) AS h,"
-         " __ch_v AS v))), 1, {k}), __ch_s -> __ch_s.v)"),
-        ("groupArrayLast",
-         "slice(collect_list({x}),"
-         " greatest(size(collect_list({x})) - ({k}) + 1, 1), ({k}))"),
-        ("groupArray", "slice(collect_list({x}), 1, {k})"),
-        ("uniqUpTo", "least(count(DISTINCT {x}), ({k}) + 1)"),
-    ):
-        pos = 0
-        rx = re.compile(rf"\b{name}\s*\(")
-        while True:
-            m = rx.search(sql, pos)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            rest = sql[close1 + 1:].lstrip()
-            if not rest.startswith("("):
-                if name in ("uniqUpTo", "groupArrayLast", "groupArraySample"):
-                    raise ValueError(f"{name} expects {name}(n)(x)")
-                pos = close1  # plain groupArray(x): the name map handles it
-                continue
-            open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-            close2 = _call_end(sql, open2)
-            k = sql[open1 + 1: close1].strip()
-            if name == "groupArraySample":
-                k = _split_top_commas(k)[0].strip()  # drop optional seed
-            x = sql[open2 + 1: close2]
-            sql = (
-                sql[: m.start()]
-                + template.format(x=x, k=k)
-                + sql[close2 + 1:]
-            )
-            pos = m.start()
+    pairs = (
+        f"filter(zip_with({args[0]}, {args[1]},"
+        f" (__ch_fk, __ch_fv) -> struct(__ch_fk AS k,"
+        f" __ch_fv AS v)), __ch_fp ->"
+        f" array_contains({keep}, __ch_fp.k))"
+    )
+    return (
+        f"sumMap(transform({pairs}, __ch_fp -> __ch_fp.k),"
+        f" transform({pairs}, __ch_fp -> __ch_fp.v))"
+    ), tail[1] + 1
+
+
+# per-key merge folds: sum / min / max over every key seen in the group
+# (minMap/maxMap are sumMap's siblings; the NULL-init fold seeds min/max
+# from the first value instead of 0)
+_MAP_MERGE = {
+    "sumMap": "__ch_s + __ch_e.value",
+    "minMap": "IF(__ch_s IS NULL, CAST(__ch_e.value AS DOUBLE),"
+              " least(__ch_s, __ch_e.value))",
+    "maxMap": "IF(__ch_s IS NULL, CAST(__ch_e.value AS DOUBLE),"
+              " greatest(__ch_s, __ch_e.value))",
+}
+
+
+def _map_agg(sql, m, close, args):
     # sumMap: per-key sums across rows. Map argument or the classic
     # (keys, values) two-array form; returns a sorted MAP (ClickHouse
     # returns a (keys, values) tuple for the array form — documented
-    # shape deviation, same content).
-    # per-key merge folds: sum / min / max over every key seen in the
-    # group (minMap/maxMap are sumMap's siblings; the NULL-init fold
-    # seeds min/max from the first value instead of 0)
-    _MAP_MERGE = {
-        "sumMap": "__ch_s + __ch_e.value",
-        "minMap": "IF(__ch_s IS NULL, CAST(__ch_e.value AS DOUBLE),"
-                  " least(__ch_s, __ch_e.value))",
-        "maxMap": "IF(__ch_s IS NULL, CAST(__ch_e.value AS DOUBLE),"
-                  " greatest(__ch_s, __ch_e.value))",
-    }
-    while True:
-        # sumMapFiltered(keep)(keys, values): filter the parallel
-        # arrays by key membership FIRST, then fall through to the
-        # plain sumMap fold below (WithOverflow differs only in CH's
-        # fixed-width arithmetic — Spark's BIGINT/DOUBLE never
-        # overflows here, documented no-op)
-        m = _find_case_exact(
-            sql, r"\bsumMapFiltered(WithOverflow)?\s*\("
+    # shape deviation, same content). <agg>MappedArrays is ClickHouse's
+    # alias for the two-array form — same fold; the -If combinator NULLs
+    # the map argument out on non-matching rows (collect_list skips
+    # NULLs)
+    head = m.group(0).split("(")[0].strip()
+    has_if = head.endswith("If")
+    # WithOverflow differs only in CH's fixed-width arithmetic;
+    # BIGINT/DOUBLE folds never overflow here (documented no-op)
+    fname = (
+        head.removesuffix("If")
+        .removesuffix("WithOverflow")
+        .replace("MappedArrays", "Map")
+    )
+    if has_if:
+        if len(args) < 2:
+            raise ValueError(f"{head} expects (args..., cond)")
+        cond = args[-1]
+        args = [f"if({cond}, {a}, NULL)" for a in args[:-1]]
+    if len(args) == 1:
+        entries = f"flatten(collect_list(map_entries({args[0]})))"
+    elif len(args) == 2:
+        entries = (
+            f"flatten(collect_list(zip_with({args[0]}, {args[1]},"
+            f" (__ch_k, __ch_v) ->"
+            f" struct(__ch_k AS key, __ch_v AS value))))"
         )
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        keep = sql[open1 + 1: close1].strip()
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError(
-                "sumMapFiltered expects sumMapFiltered(keys_to_keep)"
-                "(keys, values)"
-            )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        args = _split_top_commas(sql[open2 + 1: close2])
-        if len(args) != 2:
-            raise ValueError(
-                "sumMapFiltered expects sumMapFiltered(keys_to_keep)"
-                "(keys, values)"
-            )
-        pairs = (
-            f"filter(zip_with({args[0]}, {args[1]},"
-            f" (__ch_fk, __ch_fv) -> struct(__ch_fk AS k,"
-            f" __ch_fv AS v)), __ch_fp ->"
-            f" array_contains({keep}, __ch_fp.k))"
+    else:
+        raise ValueError(f"{fname} expects (map) or (keys, values)")
+    # per-key value expression: sum/min/max are _MAP_MERGE folds; the
+    # r7 -Map combinator extensions derive from the same
+    # filtered-entries frame (count = entry count, avg = sum/count,
+    # uniq = exact distinct values — deterministic, and a per-key
+    # array is already materialized here)
+    keyed = f"filter({entries}, __ch_e -> __ch_e.key = __ch_k)"
+    if fname in _MAP_MERGE:
+        init = "CAST(0.0 AS DOUBLE)" if fname == "sumMap" else "CAST(NULL AS DOUBLE)"
+        value = (
+            f"aggregate({keyed}, {init},"
+            f" (__ch_s, __ch_e) -> {_MAP_MERGE[fname]})"
         )
-        call = (
-            f"sumMap(transform({pairs}, __ch_fp -> __ch_fp.k),"
-            f" transform({pairs}, __ch_fp -> __ch_fp.v))"
+    elif fname == "countMap":
+        value = f"size({keyed})"
+    elif fname == "avgMap":
+        value = (
+            f"aggregate({keyed}, CAST(0.0 AS DOUBLE),"
+            f" (__ch_s, __ch_e) -> __ch_s + __ch_e.value)"
+            f" / size({keyed})"
         )
-        sql = sql[: m.start()] + call + sql[close2 + 1:]
-    while True:
-        # <agg>MappedArrays is ClickHouse's alias for the (keys, values)
-        # two-array form — same fold; the -If combinator NULLs the map
-        # argument out on non-matching rows (collect_list skips NULLs)
-        m = _find_case_exact(
-            sql,
-            r"\b(sum|min|max|avg|count|uniqExact|uniq|anyHeavy)"
-            r"(?:Map|MappedArrays)"
-            r"(?:WithOverflow)?(If)?\s*\(",
+    elif fname == "anyHeavyMap":
+        # per-key deterministic mode (count desc, value asc) — the same
+        # contract as the scalar anyHeavy
+        vlist = f"transform({keyed}, __ch_e -> __ch_e.value)"
+        value = (
+            f"element_at(transform(array_sort(transform("
+            f"array_distinct({vlist}), __ch_u -> struct("
+            f"-size(filter({vlist}, __ch_w -> __ch_w <=> __ch_u))"
+            f" AS negc, __ch_u AS val))), __ch_t -> __ch_t.val), 1)"
         )
-        if not m:
-            break
-        head = m.group(0).split("(")[0].strip()
-        has_if = head.endswith("If")
-        # WithOverflow differs only in CH's fixed-width arithmetic;
-        # BIGINT/DOUBLE folds never overflow here (documented no-op)
-        fname = (
-            head.removesuffix("If")
-            .removesuffix("WithOverflow")
-            .replace("MappedArrays", "Map")
+    else:  # uniqMap
+        value = (
+            f"size(array_distinct(transform({keyed},"
+            f" __ch_e -> __ch_e.value)))"
         )
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if has_if:
-            if len(args) < 2:
-                raise ValueError(f"{head} expects (args..., cond)")
-            cond = args[-1]
-            args = [f"if({cond}, {a}, NULL)" for a in args[:-1]]
-        if len(args) == 1:
-            entries = f"flatten(collect_list(map_entries({args[0]})))"
-        elif len(args) == 2:
-            entries = (
-                f"flatten(collect_list(zip_with({args[0]}, {args[1]},"
-                f" (__ch_k, __ch_v) ->"
-                f" struct(__ch_k AS key, __ch_v AS value))))"
-            )
-        else:
-            raise ValueError(f"{fname} expects (map) or (keys, values)")
-        # per-key value expression: sum/min/max are _MAP_MERGE folds;
-        # the r7 -Map combinator extensions derive from the same
-        # filtered-entries frame (count = entry count, avg = sum/count,
-        # uniq = exact distinct values — deterministic, and a per-key
-        # array is already materialized here)
-        keyed = f"filter({entries}, __ch_e -> __ch_e.key = __ch_k)"
-        if fname in _MAP_MERGE:
-            init = (
-                "CAST(0.0 AS DOUBLE)" if fname == "sumMap"
-                else "CAST(NULL AS DOUBLE)"
-            )
-            value = (
-                f"aggregate({keyed}, {init},"
-                f" (__ch_s, __ch_e) -> {_MAP_MERGE[fname]})"
-            )
-        elif fname == "countMap":
-            value = f"size({keyed})"
-        elif fname == "avgMap":
-            value = (
-                f"aggregate({keyed}, CAST(0.0 AS DOUBLE),"
-                f" (__ch_s, __ch_e) -> __ch_s + __ch_e.value)"
-                f" / size({keyed})"
-            )
-        elif fname == "anyHeavyMap":
-            # per-key deterministic mode (count desc, value asc) —
-            # the same contract as the scalar anyHeavy
-            vlist = f"transform({keyed}, __ch_e -> __ch_e.value)"
-            value = (
-                f"element_at(transform(array_sort(transform("
-                f"array_distinct({vlist}), __ch_u -> struct("
-                f"-size(filter({vlist}, __ch_w -> __ch_w <=> __ch_u))"
-                f" AS negc, __ch_u AS val))), __ch_t -> __ch_t.val), 1)"
-            )
-        else:  # uniqMap
-            value = (
-                f"size(array_distinct(transform({keyed},"
-                f" __ch_e -> __ch_e.value)))"
-            )
-        # {entries} carries user text inside lambda bodies below, so the
-        # lambda vars must be collision-improbable names
-        expr = (
-            f"map_from_entries(array_sort(transform("
-            f"array_distinct(transform({entries}, __ch_e -> __ch_e.key)),"
-            f" __ch_k -> struct(__ch_k AS key,"
-            f" {value} AS value))))"
-        )
-        sql = sql[: m.start()] + expr + sql[close1 + 1:]
+    # {entries} carries user text inside lambda bodies below, so the
+    # lambda vars must be collision-improbable names
+    return (
+        f"map_from_entries(array_sort(transform("
+        f"array_distinct(transform({entries}, __ch_e -> __ch_e.key)),"
+        f" __ch_k -> struct(__ch_k AS key,"
+        f" {value} AS value))))"
+    )
+
+
+def _approx_top(target, sql, m, close, args):
     # approx_top_* aliases of the topK family — rename only the
     # PARAMETRIC form f(k)(x); the plain 2-arg approx_top_k(x, k) is
     # Spark's own native function and passes through untouched
-    for alias, target in (
-        ("approx_top_k", "topK"),
-        ("approx_top_count", "topK"),
-        ("approx_top_sum", "topKWeighted"),
-    ):
-        pos_a = 0
-        a_rx = re.compile(rf"\b{alias}\s*\(")
-        while True:
-            m = a_rx.search(sql, pos_a)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos_a = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            if sql[close1 + 1:].lstrip().startswith("("):
-                sql = sql[: m.start()] + target + sql[open1:]
-            pos_a = m.start() + len(target)
+    if _trailing_paren(sql, close) is None:
+        return None
+    return target, m.end() - 1
+
+
+def _top_k(sql, m, close, args):
     # parametric topK(k)(x): EXACT most-frequent-k as a pure-SQL fold
-    # over collect_list (CH's SpaceSaving sketch is approximate; exact is
-    # strictly better at this per-group shape). Ties break by value asc
-    # so the DuckDB oracle can reproduce the pick. topKWeighted keeps its
-    # documented pass-through (operators/functions cover it).
-    topk_rx = re.compile(r"\btopK(If)?\s*\(")  # case-exact (CH names are)
-    while True:
-        m = None
-        instr_at = _instr_map(sql)
-        for mm in topk_rx.finditer(sql):
-            if not instr_at.get(mm.start(), False):
-                m = mm
-                break
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError("topK expects the parametric form topK(k)(x)")
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        k = sql[open1 + 1: close1].strip()
-        if m.group(1):  # topKIf(k)(x, cond): collect_list skips NULLs
-            ifargs = _split_top_commas(sql[open2 + 1: close2])
-            if len(ifargs) != 2:
-                raise ValueError("topKIf expects topKIf(k)(x, cond)")
-            x = f"if({ifargs[1]}, {ifargs[0]}, NULL)"
-        else:
-            x = sql[open2 + 1: close2]
-        arr = f"collect_list({x})"
-        # {arr} carries user text inside both lambda bodies —
-        # collision-improbable lambda vars required
-        expr = (
-            f"transform(slice(array_sort(transform(array_distinct({arr}),"
-            f" __ch_v -> struct(-size(filter({arr},"
-            f" __ch_y -> __ch_y = __ch_v)) AS c, __ch_v AS val))),"
-            f" 1, {k}), __ch_s -> __ch_s.val)"
-        )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
+    # over collect_list (CH's SpaceSaving sketch is approximate; exact
+    # is strictly better at this per-group shape). Ties break by value
+    # asc so the DuckDB oracle can reproduce the pick.
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError("topK expects the parametric form topK(k)(x)")
+    k = sql[m.end(): close].strip()
+    if m.group(1):  # topKIf(k)(x, cond): collect_list skips NULLs
+        ifargs = _split_top_commas(sql[tail[0] + 1: tail[1]])
+        if len(ifargs) != 2:
+            raise ValueError("topKIf expects topKIf(k)(x, cond)")
+        x = f"if({ifargs[1]}, {ifargs[0]}, NULL)"
+    else:
+        x = sql[tail[0] + 1: tail[1]]
+    arr = f"collect_list({x})"
+    # {arr} carries user text inside both lambda bodies —
+    # collision-improbable lambda vars required
+    return (
+        f"transform(slice(array_sort(transform(array_distinct({arr}),"
+        f" __ch_v -> struct(-size(filter({arr},"
+        f" __ch_y -> __ch_y = __ch_v)) AS c, __ch_v AS val))),"
+        f" 1, {k}), __ch_s -> __ch_s.val)"
+    ), tail[1] + 1
+
+
+def _top_k_weighted(sql, m, close, args):
     # parametric topKWeighted(k)(x, w): exact weighted fold — per-value
     # weight sums, sort desc, slice k (ties by value asc, oracle-stable)
-    topkw_rx = re.compile(r"\btopKWeighted\s*\(")
-    while True:
-        m = None
-        instr_at = _instr_map(sql)
-        for mm in topkw_rx.finditer(sql):
-            if not instr_at.get(mm.start(), False):
-                m = mm
-                break
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError(
-                "topKWeighted expects the parametric form"
-                " topKWeighted(k)(x, weight)"
-            )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        k = sql[open1 + 1: close1].strip()
-        args = _split_top_commas(sql[open2 + 1: close2])
-        if len(args) != 2:
-            raise ValueError("topKWeighted(k)(x, weight) takes two arguments")
-        x, w = args[0], args[1]
-        arr = f"collect_list(named_struct('val', {x}, 'wt', CAST({w} AS DOUBLE)))"
-        expr = (
-            f"transform(slice(array_sort(transform("
-            f"array_distinct(transform({arr}, __ch_e -> __ch_e.val)),"
-            f" __ch_v -> struct(-aggregate(filter({arr},"
-            f" __ch_e -> __ch_e.val = __ch_v), CAST(0.0 AS DOUBLE),"
-            f" (__ch_s, __ch_e) -> __ch_s + __ch_e.wt) AS c,"
-            f" __ch_v AS val))), 1, {k}), __ch_s -> __ch_s.val)"
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            "topKWeighted expects the parametric form"
+            " topKWeighted(k)(x, weight)"
         )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
+    k = sql[m.end(): close].strip()
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if len(args) != 2:
+        raise ValueError("topKWeighted(k)(x, weight) takes two arguments")
+    x, w = args[0], args[1]
+    arr = f"collect_list(named_struct('val', {x}, 'wt', CAST({w} AS DOUBLE)))"
+    return (
+        f"transform(slice(array_sort(transform("
+        f"array_distinct(transform({arr}, __ch_e -> __ch_e.val)),"
+        f" __ch_v -> struct(-aggregate(filter({arr},"
+        f" __ch_e -> __ch_e.val = __ch_v), CAST(0.0 AS DOUBLE),"
+        f" (__ch_s, __ch_e) -> __ch_s + __ch_e.wt) AS c,"
+        f" __ch_v AS val))), 1, {k}), __ch_s -> __ch_s.val)"
+    ), tail[1] + 1
+
+
+def _sparkbar(sql, m, close, args):
     # parametric sparkbar(width[, min_x, max_x])(x, y): the terminal
     # bar-chart aggregate as a pure-SQL fold. Equal-width buckets over
     # [min_x, max_x] (defaulting to the group's x range), per-bucket
@@ -7189,85 +6390,63 @@ def _rewrite_agg_spellings(sql: str) -> str:
     # (documented, not bit-identical to CH's renderer): empty bucket
     # -> ' ', else bars[max(1, ceil(h * 8 / max_h))]. Out-of-range x
     # values are skipped when explicit bounds are given (CH does too).
-    sb_rx = re.compile(r"\bsparkbar\s*\(", re.I)
-    while True:
-        m = None
-        instr_at = _instr_map(sql)
-        for mm in sb_rx.finditer(sql):
-            if not instr_at.get(mm.start(), False):
-                m = mm
-                break
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError(
-                "sparkbar expects the parametric form"
-                " sparkbar(width[, min_x, max_x])(x, y)"
-            )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        params = _split_top_commas(sql[open1 + 1: close1])
-        args = _split_top_commas(sql[open2 + 1: close2])
-        if len(params) not in (1, 3) or len(args) != 2:
-            raise ValueError(
-                "sparkbar takes sparkbar(width[, min_x, max_x])(x, y)"
-            )
-        n = params[0].strip()
-        x, y = args[0], args[1]
-        pair = (
-            f"named_struct('x', CAST({x} AS DOUBLE),"
-            f" 'y', CAST({y} AS DOUBLE))"
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            "sparkbar expects the parametric form"
+            " sparkbar(width[, min_x, max_x])(x, y)"
         )
-        if len(params) == 3:
-            mn0 = f"CAST({params[1]} AS DOUBLE)"
-            mx0 = f"CAST({params[2]} AS DOUBLE)"
-            cl0 = (
-                f"filter(collect_list({pair}),"
-                f" __ch_e -> __ch_e.x >= {mn0} AND __ch_e.x <= {mx0})"
-            )
-        else:
-            cl0 = f"collect_list({pair})"
-            mn0 = f"array_min(transform({cl0}, __ch_e -> __ch_e.x))"
-            mx0 = f"array_max(transform({cl0}, __ch_e -> __ch_e.x))"
-        # LET-bind (cl, mn, mx) via a 1-element transform, then the
-        # heights array via a second let: without these, mn/mx (an
-        # array_min over the whole group) re-evaluate per ELEMENT per
-        # bucket — O(n^2 * width) blowup measured on q251 at sf0.01
-        env = (
-            f"named_struct('cl', {cl0}, 'mn', {mn0}, 'mx', {mx0})"
+    params = args
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if len(params) not in (1, 3) or len(args) != 2:
+        raise ValueError("sparkbar takes sparkbar(width[, min_x, max_x])(x, y)")
+    n = params[0].strip()
+    x, y = args[0], args[1]
+    pair = f"named_struct('x', CAST({x} AS DOUBLE), 'y', CAST({y} AS DOUBLE))"
+    if len(params) == 3:
+        mn0 = f"CAST({params[1]} AS DOUBLE)"
+        mx0 = f"CAST({params[2]} AS DOUBLE)"
+        cl0 = (
+            f"filter(collect_list({pair}),"
+            f" __ch_e -> __ch_e.x >= {mn0} AND __ch_e.x <= {mx0})"
         )
-        bucket = (
-            "IF(__ch_sb.mx = __ch_sb.mn, 0,"
-            f" least(CAST({n} AS INT) - 1,"
-            " CAST(floor((__ch_e.x - __ch_sb.mn)"
-            f" * ({n}) / (__ch_sb.mx - __ch_sb.mn)) AS INT)))"
-        )
-        heights = (
-            f"transform(sequence(0, CAST({n} AS INT) - 1),"
-            " __ch_b -> aggregate(filter(__ch_sb.cl,"
-            f" __ch_e -> {bucket} = __ch_b), CAST(0 AS DOUBLE),"
-            " (__ch_a, __ch_e) -> __ch_a + __ch_e.y))"
-        )
-        bars = ("array('▁', '▂', '▃', '▄',"
-                " '▅', '▆', '▇', '█')")
-        render = (
-            "concat_ws('', transform(__ch_hh,"
-            " __ch_h -> CASE WHEN __ch_h <= 0 THEN ' '"
-            f" ELSE element_at({bars}, greatest(1,"
-            " CAST(ceil(__ch_h * 8 / array_max(__ch_hh))"
-            " AS INT))) END))"
-        )
-        expr = (
-            f"element_at(transform(array({env}), __ch_sb ->"
-            f" element_at(transform(array({heights}),"
-            f" __ch_hh -> {render}), 1)), 1)"
-        )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    # groupConcat[(sep[, limit])](x) → array_join over the collected
-    # group (CH's default separator is the empty string)
+    else:
+        cl0 = f"collect_list({pair})"
+        mn0 = f"array_min(transform({cl0}, __ch_e -> __ch_e.x))"
+        mx0 = f"array_max(transform({cl0}, __ch_e -> __ch_e.x))"
+    # LET-bind (cl, mn, mx) via a 1-element transform, then the
+    # heights array via a second let: without these, mn/mx (an
+    # array_min over the whole group) re-evaluate per ELEMENT per
+    # bucket — O(n^2 * width) blowup measured on q251 at sf0.01
+    env = f"named_struct('cl', {cl0}, 'mn', {mn0}, 'mx', {mx0})"
+    bucket = (
+        "IF(__ch_sb.mx = __ch_sb.mn, 0,"
+        f" least(CAST({n} AS INT) - 1,"
+        " CAST(floor((__ch_e.x - __ch_sb.mn)"
+        f" * ({n}) / (__ch_sb.mx - __ch_sb.mn)) AS INT)))"
+    )
+    heights = (
+        f"transform(sequence(0, CAST({n} AS INT) - 1),"
+        " __ch_b -> aggregate(filter(__ch_sb.cl,"
+        f" __ch_e -> {bucket} = __ch_b), CAST(0 AS DOUBLE),"
+        " (__ch_a, __ch_e) -> __ch_a + __ch_e.y))"
+    )
+    bars = "array('▁', '▂', '▃', '▄', '▅', '▆', '▇', '█')"
+    render = (
+        "concat_ws('', transform(__ch_hh,"
+        " __ch_h -> CASE WHEN __ch_h <= 0 THEN ' '"
+        f" ELSE element_at({bars}, greatest(1,"
+        " CAST(ceil(__ch_h * 8 / array_max(__ch_hh))"
+        " AS INT))) END))"
+    )
+    return (
+        f"element_at(transform(array({env}), __ch_sb ->"
+        f" element_at(transform(array({heights}),"
+        f" __ch_hh -> {render}), 1)), 1)"
+    ), tail[1] + 1
+
+
+def _time_series_grid(sql, m, close, args):
     # parametric timeSeries*ToGrid(start, end, step, window)(ts, v)
     # (r9): the 25.x PromQL-compatible grid family as a pure-SQL fold.
     # Samples collect per group, sort by time; every grid point
@@ -7283,546 +6462,410 @@ def _rewrite_agg_spellings(sql: str) -> str:
     #     the window length
     # Scalar ts/v arguments (arrayJoin array series first). Returns
     # ARRAY<DOUBLE> with NULL at grid points lacking enough samples.
-    while True:
-        m = _find_case_exact(
-            sql,
-            r"\btimeSeries(RateToGrid|InstantRateToGrid|DeltaToGrid"
-            r"|InstantDeltaToGrid|ResampleToGridWithStaleness)\s*\(",
+    kind = m.group(1)
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            f"timeSeries{kind} expects the parametric form"
+            f" timeSeries{kind}(start, end, step, window)"
+            "(timestamp, value)"
         )
-        if not m:
-            break
-        kind = m.group(1)
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError(
-                f"timeSeries{kind} expects the parametric form"
-                f" timeSeries{kind}(start, end, step, window)"
-                "(timestamp, value)"
-            )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        ps = _split_top_commas(sql[open1 + 1: close1])
-        args = _split_top_commas(sql[open2 + 1: close2])
-        if len(ps) != 4 or len(args) != 2:
-            raise ValueError(
-                f"timeSeries{kind} takes (start, end, step,"
-                " window)(timestamp, value)"
-            )
-        # fold literal toDateTime[64]('...') grid params into timestamp
-        # LITERALS: a SQL-UDF call among the grid params makes Spark's
-        # aggregate-extraction rule orphan the lambda variables
-        # (MISSING_ATTRIBUTES) — a literal keeps the whole grid
-        # expression in one projection
-        ps = [
-            re.sub(
-                r"^\s*toDateTime(?:64)?\s*\(\s*('(?:[^']|'')*')"
-                r"\s*(?:,\s*\d+\s*)?\)\s*$",
-                r"TIMESTAMP \1",
-                p,
-            )
-            for p in ps
-        ]
-        start = f"CAST(CAST(({ps[0]}) AS TIMESTAMP) AS DOUBLE)"
-        end = f"CAST(CAST(({ps[1]}) AS TIMESTAMP) AS DOUBLE)"
-        step = f"CAST(({ps[2]}) AS DOUBLE)"
-        w = f"CAST(({ps[3]}) AS DOUBLE)"
-        # Bound the per-group state to the grid span INSIDE the
-        # aggregate: a sample at t <= start - window or t > end can
-        # never fall in any grid point's (g - window, g] lookback, so
-        # it is nulled out before collection (collect_list skips NULL
-        # inputs).  Without this guard the collected array grows with
-        # the full series length regardless of the requested grid —
-        # a year of 1 Hz samples asked for a 1-day grid would
-        # materialize ~31M structs in one Tungsten row.
-        ts_d = f"CAST(CAST(({args[0]}) AS TIMESTAMP) AS DOUBLE)"
-        cl = (
-            f"array_sort(collect_list(IF({ts_d} > {start} - {w}"
-            f" AND {ts_d} <= {end}, named_struct("
-            f"'t', {ts_d},"
-            f" 'v', CAST(({args[1]}) AS DOUBLE)), NULL)))"
+    ps = args
+    args = _split_top_commas(sql[tail[0] + 1: tail[1]])
+    if len(ps) != 4 or len(args) != 2:
+        raise ValueError(
+            f"timeSeries{kind} takes (start, end, step,"
+            " window)(timestamp, value)"
         )
-        g = f"({start} + __ch_i * {step})"
-        win = (
-            f"filter({cl}, __ch_e -> __ch_e.t > {g} - {w}"
-            f" AND __ch_e.t <= {g})"
+    # fold literal toDateTime[64]('...') grid params into timestamp
+    # LITERALS: a SQL-UDF call among the grid params makes Spark's
+    # aggregate-extraction rule orphan the lambda variables
+    # (MISSING_ATTRIBUTES) — a literal keeps the whole grid
+    # expression in one projection
+    ps = [
+        re.sub(
+            r"^\s*toDateTime(?:64)?\s*\(\s*('(?:[^']|'')*')"
+            r"\s*(?:,\s*\d+\s*)?\)\s*$",
+            r"TIMESTAMP \1",
+            p,
         )
-        wv = "__ch_w"  # the window bound by the let-transform below
-        last = f"element_at({wv}, size({wv}))"
-        prev = f"element_at({wv}, size({wv}) - 1)"
-        if kind == "ResampleToGridWithStaleness":
-            val = (
-                f"IF(size({wv}) = 0, CAST(NULL AS DOUBLE), {last}.v)"
-            )
-        elif kind == "InstantDeltaToGrid":
-            val = (
-                f"IF(size({wv}) < 2, CAST(NULL AS DOUBLE),"
-                f" {last}.v - {prev}.v)"
-            )
-        elif kind == "InstantRateToGrid":
-            val = (
-                f"IF(size({wv}) < 2, CAST(NULL AS DOUBLE),"
-                f" IF({last}.v >= {prev}.v, {last}.v - {prev}.v,"
-                f" {last}.v) / nullif({last}.t - {prev}.t, 0))"
-            )
-        else:  # DeltaToGrid / RateToGrid: PromQL extrapolation
-            is_rate = kind == "RateToGrid"
-            corr = (
-                f"aggregate(sequence(2, size({wv})),"
-                " CAST(0 AS DOUBLE), (__ch_a, __ch_j) -> __ch_a"
-                f" + IF(element_at({wv}, __ch_j).v"
-                f" < element_at({wv}, __ch_j - 1).v,"
-                f" element_at({wv}, __ch_j - 1).v,"
-                " CAST(0 AS DOUBLE)))"
-            ) if is_rate else "CAST(0 AS DOUBLE)"
-            stats = (
-                "named_struct("
-                f"'t1', element_at({wv}, 1).t,"
-                f" 'v1', element_at({wv}, 1).v,"
-                f" 'tn', {last}.t, 'vn', {last}.v,"
-                f" 'nn', CAST(size({wv}) AS DOUBLE),"
-                f" 'corr', {corr}, 'gs', {g} - {w}, 'ge', {g})"
-            )
-            inc = "(__ch_s.vn - __ch_s.v1 + __ch_s.corr)"
-            si = "(__ch_s.tn - __ch_s.t1)"
-            avg = f"({si} / (__ch_s.nn - 1))"
-            ds0 = "(__ch_s.t1 - __ch_s.gs)"
-            if is_rate:
-                # counter-zero clamp: never extrapolate below v = 0
-                ds = (
-                    f"(CASE WHEN {inc} > 0 AND __ch_s.v1 >= 0"
-                    f" AND {si} * __ch_s.v1 / nullif({inc}, 0) < {ds0}"
-                    f" THEN {si} * __ch_s.v1 / {inc} ELSE {ds0} END)"
-                )
-            else:
-                ds = ds0
-            de = "(__ch_s.ge - __ch_s.tn)"
-            extrap = (
-                f"({si} + IF({ds} < 1.1 * {avg}, {ds}, {avg} / 2)"
-                f" + IF({de} < 1.1 * {avg}, {de}, {avg} / 2))"
-            )
-            result = f"{inc} * {extrap} / {si}"
-            if is_rate:
-                result = f"({result}) / {w}"
-            val = (
-                f"IF(size({wv}) < 2, CAST(NULL AS DOUBLE),"
-                f" element_at(transform(array({stats}), __ch_s ->"
-                f" IF({si} <= 0, CAST(NULL AS DOUBLE), {result})), 1))"
-            )
-        expr = (
-            f"transform(sequence(0, CAST(floor(({end} - {start})"
-            f" / {step}) AS INT)), __ch_i ->"
-            f" element_at(transform(array({win}),"
-            f" {wv} -> {val}), 1))"
+        for p in ps
+    ]
+    start = f"CAST(CAST(({ps[0]}) AS TIMESTAMP) AS DOUBLE)"
+    end = f"CAST(CAST(({ps[1]}) AS TIMESTAMP) AS DOUBLE)"
+    step = f"CAST(({ps[2]}) AS DOUBLE)"
+    w = f"CAST(({ps[3]}) AS DOUBLE)"
+    # Bound the per-group state to the grid span INSIDE the
+    # aggregate: a sample at t <= start - window or t > end can
+    # never fall in any grid point's (g - window, g] lookback, so
+    # it is nulled out before collection (collect_list skips NULL
+    # inputs).  Without this guard the collected array grows with
+    # the full series length regardless of the requested grid —
+    # a year of 1 Hz samples asked for a 1-day grid would
+    # materialize ~31M structs in one Tungsten row.
+    ts_d = f"CAST(CAST(({args[0]}) AS TIMESTAMP) AS DOUBLE)"
+    cl = (
+        f"array_sort(collect_list(IF({ts_d} > {start} - {w}"
+        f" AND {ts_d} <= {end}, named_struct("
+        f"'t', {ts_d},"
+        f" 'v', CAST(({args[1]}) AS DOUBLE)), NULL)))"
+    )
+    g = f"({start} + __ch_i * {step})"
+    win = f"filter({cl}, __ch_e -> __ch_e.t > {g} - {w} AND __ch_e.t <= {g})"
+    wv = "__ch_w"  # the window bound by the let-transform below
+    last = f"element_at({wv}, size({wv}))"
+    prev = f"element_at({wv}, size({wv}) - 1)"
+    if kind == "ResampleToGridWithStaleness":
+        val = f"IF(size({wv}) = 0, CAST(NULL AS DOUBLE), {last}.v)"
+    elif kind == "InstantDeltaToGrid":
+        val = (
+            f"IF(size({wv}) < 2, CAST(NULL AS DOUBLE),"
+            f" {last}.v - {prev}.v)"
         )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    # the -Distinct combinator composes (probe batch 56):
-    # groupConcatDistinct dedups the collected values first
-    gc_rx = re.compile(r"\bgroupConcat(Distinct)?\s*\(")
-    while True:
-        m = None
-        instr_at = _instr_map(sql)
-        for mm in gc_rx.finditer(sql):
-            if not instr_at.get(mm.start(), False):
-                m = mm
-                break
-        if not m:
-            break
-        dedup = "array_distinct" if m.group(1) else ""
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if rest.startswith("("):
-            open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-            close2 = _call_end(sql, open2)
-            ps = _split_top_commas(sql[open1 + 1: close1])
-            x = sql[open2 + 1: close2]
-            sep = ps[0].strip()
-            coll = f"collect_list(CAST({x} AS STRING))"
-            if dedup:
-                coll = f"{dedup}({coll})"
-            if len(ps) == 2:
-                coll = f"slice({coll}, 1, {ps[1].strip()})"
-            sql = (
-                sql[: m.start()]
-                + f"array_join({coll}, {sep})"
-                + sql[close2 + 1:]
+    elif kind == "InstantRateToGrid":
+        val = (
+            f"IF(size({wv}) < 2, CAST(NULL AS DOUBLE),"
+            f" IF({last}.v >= {prev}.v, {last}.v - {prev}.v,"
+            f" {last}.v) / nullif({last}.t - {prev}.t, 0))"
+        )
+    else:  # DeltaToGrid / RateToGrid: PromQL extrapolation
+        is_rate = kind == "RateToGrid"
+        corr = (
+            f"aggregate(sequence(2, size({wv})),"
+            " CAST(0 AS DOUBLE), (__ch_a, __ch_j) -> __ch_a"
+            f" + IF(element_at({wv}, __ch_j).v"
+            f" < element_at({wv}, __ch_j - 1).v,"
+            f" element_at({wv}, __ch_j - 1).v,"
+            " CAST(0 AS DOUBLE)))"
+        ) if is_rate else "CAST(0 AS DOUBLE)"
+        stats = (
+            "named_struct("
+            f"'t1', element_at({wv}, 1).t,"
+            f" 'v1', element_at({wv}, 1).v,"
+            f" 'tn', {last}.t, 'vn', {last}.v,"
+            f" 'nn', CAST(size({wv}) AS DOUBLE),"
+            f" 'corr', {corr}, 'gs', {g} - {w}, 'ge', {g})"
+        )
+        inc = "(__ch_s.vn - __ch_s.v1 + __ch_s.corr)"
+        si = "(__ch_s.tn - __ch_s.t1)"
+        avg = f"({si} / (__ch_s.nn - 1))"
+        ds0 = "(__ch_s.t1 - __ch_s.gs)"
+        if is_rate:
+            # counter-zero clamp: never extrapolate below v = 0
+            ds = (
+                f"(CASE WHEN {inc} > 0 AND __ch_s.v1 >= 0"
+                f" AND {si} * __ch_s.v1 / nullif({inc}, 0) < {ds0}"
+                f" THEN {si} * __ch_s.v1 / {inc} ELSE {ds0} END)"
             )
         else:
-            x = sql[open1 + 1: close1]
-            coll = f"collect_list(CAST({x} AS STRING))"
-            if dedup:
-                coll = f"{dedup}({coll})"
-            sql = (
-                sql[: m.start()]
-                + f"array_join({coll}, '')"
-                + sql[close1 + 1:]
-            )
+            ds = ds0
+        de = "(__ch_s.ge - __ch_s.tn)"
+        extrap = (
+            f"({si} + IF({ds} < 1.1 * {avg}, {ds}, {avg} / 2)"
+            f" + IF({de} < 1.1 * {avg}, {de}, {avg} / 2))"
+        )
+        result = f"{inc} * {extrap} / {si}"
+        if is_rate:
+            result = f"({result}) / {w}"
+        val = (
+            f"IF(size({wv}) < 2, CAST(NULL AS DOUBLE),"
+            f" element_at(transform(array({stats}), __ch_s ->"
+            f" IF({si} <= 0, CAST(NULL AS DOUBLE), {result})), 1))"
+        )
+    return (
+        f"transform(sequence(0, CAST(floor(({end} - {start})"
+        f" / {step}) AS INT)), __ch_i ->"
+        f" element_at(transform(array({win}),"
+        f" {wv} -> {val}), 1))"
+    ), tail[1] + 1
+
+
+def _group_concat(sql, m, close, args):
+    # groupConcat[(sep[, limit])](x) → array_join over the collected
+    # group (CH's default separator is the empty string); the
+    # -Distinct combinator composes (probe batch 56):
+    # groupConcatDistinct dedups the collected values first
+    tail = _trailing_paren(sql, close)
+    x = sql[tail[0] + 1: tail[1]] if tail else sql[m.end(): close]
+    coll = f"collect_list(CAST({x} AS STRING))"
+    if m.group(1):
+        coll = f"array_distinct({coll})"
+    if tail is None:
+        return f"array_join({coll}, '')"
+    if len(args) == 2:
+        coll = f"slice({coll}, 1, {args[1].strip()})"
+    return f"array_join({coll}, {args[0].strip()})", tail[1] + 1
+
+
+def _group_array_moving(sql, m, close, args):
     # parametric groupArrayMovingSum/Avg(n)(x): windowed sums over the
     # group's collected sequence (insertion-order caveat as in CH —
     # pair with an ORDER BY-ed subquery for determinism). MovingAvg
     # divides by the full window size n even for the leading partial
     # windows, exactly like ClickHouse.
-    while True:
-        m = _find_case_exact(sql, r"\bgroupArrayMoving(Sum|Avg)\s*\(")
-        if not m:
-            break
-        kind = m.group(1)
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError(
-                f"groupArrayMoving{kind} expects the parametric form"
-                f" groupArrayMoving{kind}(n)(x)"
-            )
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        n_w = sql[open1 + 1: close1].strip()
-        x = sql[open2 + 1: close2]
-        arr = f"collect_list({x})"
-        win_sum = (
-            f"aggregate(slice({arr},"
-            f" greatest(__ch_i - ({n_w}) + 2, 1),"
-            f" least(({n_w}), __ch_i + 1)),"
-            f" CAST(0.0 AS DOUBLE), (__ch_s, __ch_t) -> __ch_s + __ch_t)"
+    kind = m.group(1)
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError(
+            f"groupArrayMoving{kind} expects the parametric form"
+            f" groupArrayMoving{kind}(n)(x)"
         )
-        if kind == "Avg":
-            win_sum = f"({win_sum} / ({n_w}))"
-        expr = (
-            f"transform(sequence(0, size({arr}) - 1),"
-            f" __ch_i -> {win_sum})"
+    n_w = sql[m.end(): close].strip()
+    arr = f"collect_list({sql[tail[0] + 1: tail[1]]})"
+    win_sum = (
+        f"aggregate(slice({arr},"
+        f" greatest(__ch_i - ({n_w}) + 2, 1),"
+        f" least(({n_w}), __ch_i + 1)),"
+        f" CAST(0.0 AS DOUBLE), (__ch_s, __ch_t) -> __ch_s + __ch_t)"
+    )
+    if kind == "Avg":
+        win_sum = f"({win_sum} / ({n_w}))"
+    return (
+        f"transform(sequence(0, size({arr}) - 1), __ch_i -> {win_sum})"
+    ), tail[1] + 1
+
+
+# -Array combinators: aggregate over all ELEMENTS across rows. avgArray
+# is sum-of-elements / count-of-elements, NOT avg of per-row means —
+# matching CH exactly.
+_ARRAY_AGG_FORMS = {
+    "sumArray": "sum(aggregate({x}, CAST(0.0 AS DOUBLE), (s, t) -> s + t))",
+    "minArray": "min(array_min({x}))",
+    "maxArray": "max(array_max({x}))",
+    "avgArray": (
+        "(sum(aggregate({x}, CAST(0.0 AS DOUBLE), (s, t) -> s + t))"
+        " / sum(size({x})))"
+    ),
+    "countArray": "sum(size({x}))",
+    # distinct ELEMENTS across all rows' arrays (CH uniqArray); exact,
+    # like the uniqExact translation
+    "uniqArray": "size(array_distinct(flatten(collect_list({x}))))",
+    "uniqExactArray": "size(array_distinct(flatten(collect_list({x}))))",
+    # concatenation / distinct-union of the group's arrays
+    "groupArrayArray": "flatten(collect_list({x}))",
+    "groupUniqArrayArray": "array_distinct(flatten(collect_list({x})))",
+}
+
+# -ForEach combinators: aggregate POSITION-WISE across the group's
+# arrays (result length = longest array; shorter arrays simply
+# contribute nothing at the missing positions, matching CH's
+# default-padding for sum/count and absent-value skip for min/max).
+# One collect_list aggregate + a per-position fold — Catalyst dedupes
+# the repeated semantically-equal collect_list text.
+_FOREACH_BASES = {
+    "sum": (
+        "aggregate({v}, CAST(0.0 AS DOUBLE),"
+        " (__ch_s, __ch_t) -> __ch_s + __ch_t)"
+    ),
+    "min": "array_min({v})",
+    "max": "array_max({v})",
+    "avg": (
+        "(aggregate({v}, CAST(0.0 AS DOUBLE),"
+        " (__ch_s, __ch_t) -> __ch_s + __ch_t) / size({v}))"
+    ),
+    "count": "size({v})",
+    # first / last surviving value per position ({v} is already
+    # null-filtered) — the any family's skip-NULL contract (batch-78).
+    # anyLast scans before any (prefix overlap).
+    "anyLast": "try_element_at({v}, -1)",
+    "any": "try_element_at({v}, 1)",
+    # position-wise deterministic mode (count desc, value asc) — the
+    # scalar anyHeavy contract per position (batch-82b)
+    "anyHeavy": (
+        "element_at(transform(array_sort(transform("
+        "array_distinct({v}), __ch_u -> struct("
+        "-size(filter({v}, __ch_w -> __ch_w <=> __ch_u)) AS negc,"
+        " __ch_u AS val))), __ch_t -> __ch_t.val), 1)"
+    ),
+    "uniq": "size(array_distinct({v}))",
+    "uniqExact": "size(array_distinct({v}))",
+}
+_FOREACH_VALS = (
+    "filter(transform(collect_list({x}),"
+    " __ch_a -> try_element_at(__ch_a, __ch_i)),"
+    " __ch_x -> __ch_x IS NOT NULL)"
+)
+# all-empty guard: Spark's sequence(1, 0) DESCENDS to [1, 0], so a zero
+# max width must yield an empty spine
+_FOREACH_WIDTH = (
+    "coalesce(array_max(transform(collect_list({x}),"
+    " __ch_a -> size(__ch_a))), 0)"
+)
+_FOREACH_SPINE = (
+    f"(CASE WHEN {_FOREACH_WIDTH} >= 1 THEN sequence(1, {_FOREACH_WIDTH})"
+    f" ELSE CAST(array() AS ARRAY<INT>) END)"
+)
+
+
+def _agg_if(sql, m, close, args):
+    # generalized -If combinator: <base>If(args..., cond)
+    name = m.group(1)
+    if _trailing_paren(sql, close) is not None:
+        # a parametric <agg>If(params)(...) reaching THIS rule has no
+        # parametric rewrite of its own (the groupArray family is
+        # folded earlier) — refuse loudly rather than emit text no
+        # later rule consumes
+        raise ValueError(
+            f"{name}If(params)(...) has no parametric rewrite —"
+            " supported parametric -If forms: quantile*, topK,"
+            " the groupArray family"
         )
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
-    while True:
-        m = _find_top_anywhere(sql, r"\bmedian\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        x = sql[open1 + 1: close1]
-        sql = sql[: m.start()] + f"approx_percentile({x}, 0.5)" + sql[close1 + 1:]
-    while True:
-        m = _find_top_anywhere(sql, r"\buniqExact\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        sql = (
-            sql[: m.start()]
-            + f"count(DISTINCT {sql[open1 + 1: close1]})"
-            + sql[close1 + 1:]
-        )
-    # stacked -ArrayIf combinators reduce to -Array over a NULLed-out
-    # array (collect_list / the element folds all skip NULL rows), so
-    # they run FIRST and feed the -Array templates below
-    for base in (
-        "sum", "min", "max", "avg", "count", "uniq",
-        "groupArray", "groupUniqArray",
-    ):
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{base}ArrayIf\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 2:
-                raise ValueError(f"{base}ArrayIf expects (array_expr, cond)")
-            sql = (
-                sql[: m.start()]
-                + f"{base}Array(if({args[1]}, {args[0]}, NULL))"
-                + sql[close1 + 1:]
-            )
-    # -Array combinators: aggregate over all ELEMENTS across rows.
-    # avgArray is sum-of-elements / count-of-elements, NOT avg of
-    # per-row means — matching CH exactly.
-    array_forms = {
-        "sumArray": "sum(aggregate({e}, CAST(0.0 AS DOUBLE), (s, t) -> s + t))",
-        "minArray": "min(array_min({e}))",
-        "maxArray": "max(array_max({e}))",
-        "avgArray": (
-            "(sum(aggregate({e}, CAST(0.0 AS DOUBLE), (s, t) -> s + t))"
-            " / sum(size({e})))"
-        ),
-        "countArray": "sum(size({e}))",
-        # distinct ELEMENTS across all rows' arrays (CH uniqArray);
-        # exact, like the uniqExact translation
-        "uniqArray": "size(array_distinct(flatten(collect_list({e}))))",
-        "uniqExactArray": "size(array_distinct(flatten(collect_list({e}))))",
-        # concatenation / distinct-union of the group's arrays
-        "groupArrayArray": "flatten(collect_list({e}))",
-        "groupUniqArrayArray": "array_distinct(flatten(collect_list({e})))",
-    }
-    for name, template in array_forms.items():
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            e = sql[open1 + 1: close1]
-            sql = sql[: m.start()] + template.format(e=e) + sql[close1 + 1:]
-    # -ForEach combinators: aggregate POSITION-WISE across the group's
-    # arrays (result length = longest array; shorter arrays simply
-    # contribute nothing at the missing positions, matching CH's
-    # default-padding for sum/count and absent-value skip for min/max).
-    # One collect_list aggregate + a per-position fold — Catalyst
-    # dedupes the repeated semantically-equal collect_list text.
-    foreach_bases = {
-        "sum": (
-            "aggregate({v}, CAST(0.0 AS DOUBLE),"
-            " (__ch_s, __ch_t) -> __ch_s + __ch_t)"
-        ),
-        "min": "array_min({v})",
-        "max": "array_max({v})",
-        "avg": (
-            "(aggregate({v}, CAST(0.0 AS DOUBLE),"
-            " (__ch_s, __ch_t) -> __ch_s + __ch_t) / size({v}))"
-        ),
-        "count": "size({v})",
-        # first / last surviving value per position ({v} is already
-        # null-filtered) — the any family's skip-NULL contract
-        # (batch-78). anyLast scans before any (prefix overlap).
-        "anyLast": "try_element_at({v}, -1)",
-        "any": "try_element_at({v}, 1)",
-        # position-wise deterministic mode (count desc, value asc) —
-        # the scalar anyHeavy contract per position (batch-82b)
-        "anyHeavy": (
-            "element_at(transform(array_sort(transform("
-            "array_distinct({v}), __ch_u -> struct("
-            "-size(filter({v}, __ch_w -> __ch_w <=> __ch_u)) AS negc,"
-            " __ch_u AS val))), __ch_t -> __ch_t.val), 1)"
-        ),
-        "uniq": "size(array_distinct({v}))",
-        "uniqExact": "size(array_distinct({v}))",
-    }
-    for base, combine in foreach_bases.items():
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{base}ForEachIf\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 2:
-                raise ValueError(f"{base}ForEachIf expects (array_expr, cond)")
-            sql = (
-                sql[: m.start()]
-                + f"{base}ForEach(if({args[1]}, {args[0]}, NULL))"
-                + sql[close1 + 1:]
-            )
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{base}ForEach\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            e = sql[open1 + 1: close1]
-            ls = f"collect_list({e})"
-            vals = (
-                f"filter(transform({ls},"
-                f" __ch_a -> try_element_at(__ch_a, __ch_i)),"
-                f" __ch_x -> __ch_x IS NOT NULL)"
-            )
-            # all-empty guard: Spark's sequence(1, 0) DESCENDS to
-            # [1, 0], so a zero max width must yield an empty spine
-            width = (
-                f"coalesce(array_max(transform({ls},"
-                f" __ch_a -> size(__ch_a))), 0)"
-            )
-            spine = (
-                f"(CASE WHEN {width} >= 1 THEN sequence(1, {width})"
-                f" ELSE CAST(array() AS ARRAY<INT>) END)"
-            )
-            expr = (
-                f"transform({spine},"
-                f" __ch_i -> {combine.format(v=vals)})"
-            )
-            sql = sql[: m.start()] + expr + sql[close1 + 1:]
-    # -Distinct combinators (countDistinct is already the Spark name).
-    # anyHeavyDistinct: every distinct value occurs once in the
-    # distinct stream, so the deterministic mode tie-break (lowest
-    # value) IS min — rewritten directly (batch-82b)
-    while True:
-        m = _find_case_exact(sql, r"\banyHeavyDistinct\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        sql = (
-            sql[: m.start()]
-            + f"min({sql[open1 + 1: close1]})"
-            + sql[close1 + 1:]
-        )
-    for name, base in (("sumDistinct", "sum"), ("avgDistinct", "avg")):
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            sql = (
-                sql[: m.start()]
-                + f"{base}(DISTINCT {sql[open1 + 1: close1]})"
-                + sql[close1 + 1:]
-            )
-    # generalized -If combinator: <base>If(args..., cond). Special-case
-    # the two that don't fit the wrap-each-arg rule first.
-    for special, template in (
-        ("uniqExactIf", "count(DISTINCT if({c}, {a}, NULL))"),
-        ("medianIf", "approx_percentile(if({c}, {a}, NULL), 0.5)"),
-    ):
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{special}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 2:
-                raise ValueError(f"{special} expects (expr, cond)")
-            sql = (
-                sql[: m.start()]
-                + template.format(a=args[0], c=args[1])
-                + sql[close1 + 1:]
-            )
-    for name, base in _AGG_IF_ALL.items():
-        if name not in sql:  # cheap substring pre-filter (case-exact)
-            continue
-        while True:
-            # case-sensitive (CH names are exact)
-            rx = _rxc(rf"\b{name}If\s*\(")
-            hit = None
-            idx = _scan_index(sql)
-            for mm in rx.finditer(sql):
-                if not _idx_in_string(idx, mm.start()):
-                    hit = mm
-                    break
-            if not hit:
-                break
-            open1 = sql.index("(", hit.end() - 1)
-            close1 = _call_end(sql, open1)
-            rest = sql[close1 + 1:].lstrip()
-            if rest.startswith("("):
-                # a parametric <agg>If(params)(...) reaching THIS loop
-                # has no parametric rewrite of its own (the groupArray
-                # family is folded earlier) — refuse loudly rather than
-                # emit text no later pass consumes
-                raise ValueError(
-                    f"{name}If(params)(...) has no parametric rewrite —"
-                    " supported parametric -If forms: quantile*, topK,"
-                    " the groupArray family"
-                )
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) < 2:
-                raise ValueError(f"{name}If expects (args..., cond)")
-            cond = args[-1]
-            wrapped = ", ".join(f"if({cond}, {a}, NULL)" for a in args[:-1])
-            repl = (
-                base.format(wrapped) if "{}" in base
-                else f"{base}({wrapped})"
-            )
-            sql = sql[: hit.start()] + repl + sql[close1 + 1:]
+    if len(args) < 2:
+        raise ValueError(f"{name}If expects (args..., cond)")
+    cond = args[-1]
+    wrapped = ", ".join(f"if({cond}, {a}, NULL)" for a in args[:-1])
+    base = _AGG_IF_ALL[name]
+    return base.format(wrapped) if "{}" in base else f"{base}({wrapped})"
+
+
+def _leftover_parametric_if(sql, m, close, args):
     # any LEFTOVER parametric <agg>If(params)(args) — a name outside
     # _AGG_IF_ALL, e.g. topKWeightedIf / histogramIf — previously fell
     # through to an opaque Spark unresolved-routine error (batch-72):
     # refuse loudly with the supported list instead
-    lp_pos = 0
-    while True:
-        m = _find_case_exact(sql, r"\b([A-Za-z_]\w*)If\s*\(", lp_pos)
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        if sql[close1 + 1:].lstrip().startswith("("):
-            raise ValueError(
-                f"{m.group(1)}If(params)(...) has no parametric"
-                " rewrite — supported parametric -If forms:"
-                " quantile*, topK, the groupArray family"
-            )
-        lp_pos = close1
+    if _trailing_paren(sql, close) is not None:
+        raise ValueError(
+            f"{m.group(1)}If(params)(...) has no parametric"
+            " rewrite — supported parametric -If forms:"
+            " quantile*, topK, the groupArray family"
+        )
+    return None
+
+
+def _quantile_merge(sql, m, close, args):
+    # quantileMerge(p)(state): states are DDSketch log-bucket histogram
+    # maps (streaming/matview.py) — merge cell-wise across rows, then
+    # walk with the registered chDDQuantile read-out
+    plural = sql[m.start(): m.start() + 9] == "quantiles"
+    tail = _trailing_paren(sql, close)
+    if tail is None:
+        raise ValueError("quantileMerge expects quantileMerge(p)(state)")
+    fl = f"flatten(collect_list(map_entries({sql[tail[0] + 1: tail[1]]})))"
+    # {fl} carries user text inside lambda bodies — collision-
+    # improbable lambda vars required
+    merged = (
+        f"map_from_entries(array_sort(transform("
+        f"array_distinct(transform({fl}, __ch_e -> __ch_e.key)),"
+        f" __ch_k -> struct(__ch_k AS key,"
+        f" aggregate(filter({fl}, __ch_e -> __ch_e.key = __ch_k),"
+        f" CAST(0 AS BIGINT),"
+        f" (__ch_s, __ch_e) -> __ch_s + __ch_e.value) AS value))))"
+    )
+    if plural:
+        expr = "array({})".format(
+            ", ".join(f"chDDQuantile({merged}, {p})" for p in args)
+        )
+    else:
+        expr = f"chDDQuantile({merged}, {args[0]})"
+    return expr, tail[1] + 1
+
+
+def _state_forms(*entries) -> tuple:
+    """-State / -Merge splice forms: ``{x}`` templates take the raw
+    argument text; ``{0}``/``{1}`` templates take that many arguments."""
+    out = []
+    for name, tpl in entries:
+        if "{0}" in tpl:
+            need = 2 if "{1}" in tpl else 1
+            tpl = {need: tpl, None: f"{name} expects {need} argument(s)"}
+        out.append((name, tpl))
+    return tuple(out)
+
+
+# the aggregate-spelling passes of _rewrite_agg_spellings, in pass order
+# (the two IfOrNull/ArrayOrNull strips run between the two tables)
+_AGG_RULES_HEAD = _rules(
+    # parametric -Array stackings, handled BEFORE the scalar parametric
+    # rule so the names don't collide
+    (r"(quantiles?)((?:Exact|TDigest|Timing|BFloat16"
+     r"|Interpolated|Deterministic|GK|DD)?\w*?)Array", _quantile_array),
+    # anyHeavyArray(arr): mode over the flattened elements — the head
+    # of the exact topKArray(1) fold (count desc, value asc, the scalar
+    # anyHeavy contract; batch-82b)
+    ("anyHeavyArray", "try_element_at(topKArray(1)({x}), 1)"),
+    ("topKArray", _top_k_array),
+    (r"(quantiles?)((?:Exact(?:WeightedInterpolated|Weighted|Low|High"
+     r"|Inclusive|Exclusive)?|InterpolatedWeighted|TDigest(?:Weighted)?"
+     r"|Timing(?:Weighted)?|BFloat16(?:Weighted)?|Deterministic|DD|GK)?)"
+     r"(If)?", _quantile, re.I),
+)
+_AGG_RULES_TAIL = _rules(
+    (r"group(Uniq)?Array(Sorted|Sample|Last)?If", _group_array_if_params),
+    *((f"({name})", _size_cap) for name in _SIZE_CAPS),
+    (r"sumMapFiltered(WithOverflow)?", _sum_map_filtered),
+    (r"(sum|min|max|avg|count|uniqExact|uniq|anyHeavy)(?:Map|MappedArrays)"
+     r"(?:WithOverflow)?(If)?", _map_agg),
+    ("approx_top_k", _partial(_approx_top, "topK")),
+    ("approx_top_count", _partial(_approx_top, "topK")),
+    ("approx_top_sum", _partial(_approx_top, "topKWeighted")),
+    (r"topK(If)?", _top_k),
+    ("topKWeighted", _top_k_weighted),
+    ("sparkbar", _sparkbar, re.I),
+    (r"timeSeries(RateToGrid|InstantRateToGrid|DeltaToGrid"
+     r"|InstantDeltaToGrid|ResampleToGridWithStaleness)", _time_series_grid),
+    (r"groupConcat(Distinct)?", _group_concat),
+    (r"groupArrayMoving(Sum|Avg)", _group_array_moving),
+    ("median", "approx_percentile({x}, 0.5)", re.I),
+    ("uniqExact", "count(DISTINCT {x})", re.I),
+    # stacked -ArrayIf combinators reduce to -Array over a NULLed-out
+    # array (collect_list / the element folds all skip NULL rows), so
+    # they run FIRST and feed the -Array templates below
+    *((f"{base}ArrayIf", {
+        2: f"{base}Array(if({{1}}, {{0}}, NULL))",
+        None: f"{base}ArrayIf expects (array_expr, cond)",
+    }, re.I) for base in (
+        "sum", "min", "max", "avg", "count", "uniq",
+        "groupArray", "groupUniqArray",
+    )),
+    *((name, tpl, re.I) for name, tpl in _ARRAY_AGG_FORMS.items()),
+    *(rule for base, combine in _FOREACH_BASES.items() for rule in (
+        (f"{base}ForEachIf", {
+            2: f"{base}ForEach(if({{1}}, {{0}}, NULL))",
+            None: f"{base}ForEachIf expects (array_expr, cond)",
+        }, re.I),
+        (f"{base}ForEach",
+         f"transform({_FOREACH_SPINE},"
+         f" __ch_i -> {combine.format(v=_FOREACH_VALS)})", re.I),
+    )),
+    # -Distinct combinators (countDistinct is already the Spark name).
+    # anyHeavyDistinct: every distinct value occurs once in the
+    # distinct stream, so the deterministic mode tie-break (lowest
+    # value) IS min — rewritten directly (batch-82b)
+    ("anyHeavyDistinct", "min({x})"),
+    ("sumDistinct", "sum(DISTINCT {x})", re.I),
+    ("avgDistinct", "avg(DISTINCT {x})", re.I),
+    # generalized -If combinator: special-case the two that don't fit
+    # the wrap-each-arg rule first
+    ("uniqExactIf", {
+        2: "count(DISTINCT if({1}, {0}, NULL))",
+        None: "uniqExactIf expects (expr, cond)",
+    }, re.I),
+    ("medianIf", {
+        2: "approx_percentile(if({1}, {0}, NULL), 0.5)",
+        None: "medianIf expects (expr, cond)",
+    }, re.I),
+    *((f"({name})If", _agg_if) for name in _AGG_IF_ALL),
+    (r"([A-Za-z_]\w*)If", _leftover_parametric_if),
     # uniqMerge(state): merge HLL partials, then estimate — the read
     # side of the matview/projection uniqState storage (hll_sketch_agg).
     # The uniq VARIANT spellings (Combined/HLL12/Theta) write the same
     # sketch family here, so their -Merge forms read identically.
-    for _umerge in (
+    *((name, "hll_sketch_estimate(hll_union_agg({x}))") for name in (
         "uniqCombined64Merge", "uniqCombinedMerge", "uniqHLL12Merge",
         "uniqThetaMerge", "uniqMerge",
-    ):
-        while True:
-            m = _find_case_exact(sql, rf"\b{_umerge}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            sql = (
-                sql[: m.start()]
-                + "hll_sketch_estimate(hll_union_agg("
-                + sql[open1 + 1: close1]
-                + "))"
-                + sql[close1 + 1:]
-            )
-    # quantileMerge(p)(state): states are DDSketch log-bucket histogram
-    # maps (streaming/matview.py) — merge cell-wise across rows, then
-    # walk with the registered chDDQuantile read-out
-    while True:
-        m = _find_case_exact(
-            sql,
-            r"\bquantiles?(?:TDigest|Timing|BFloat16|Exact|Deterministic)?Merge\s*\(",
-        )
-        if not m:
-            break
-        plural = sql[m.start(): m.start() + 9] == "quantiles"
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rest = sql[close1 + 1:].lstrip()
-        if not rest.startswith("("):
-            raise ValueError("quantileMerge expects quantileMerge(p)(state)")
-        open2 = close1 + 1 + (len(sql[close1 + 1:]) - len(rest))
-        close2 = _call_end(sql, open2)
-        ps = _split_top_commas(sql[open1 + 1: close1])
-        x = sql[open2 + 1: close2]
-        fl = f"flatten(collect_list(map_entries({x})))"
-        # {fl} carries user text inside lambda bodies — collision-
-        # improbable lambda vars required
-        merged = (
-            f"map_from_entries(array_sort(transform("
-            f"array_distinct(transform({fl}, __ch_e -> __ch_e.key)),"
-            f" __ch_k -> struct(__ch_k AS key,"
-            f" aggregate(filter({fl}, __ch_e -> __ch_e.key = __ch_k),"
-            f" CAST(0 AS BIGINT),"
-            f" (__ch_s, __ch_e) -> __ch_s + __ch_e.value) AS value))))"
-        )
-        if plural:
-            expr = "array({})".format(
-                ", ".join(f"chDDQuantile({merged}, {p})" for p in ps)
-            )
-        else:
-            expr = f"chDDQuantile({merged}, {ps[0]})"
-        sql = sql[: m.start()] + expr + sql[close2 + 1:]
+    )),
+    (r"quantiles?(?:TDigest|Timing|BFloat16|Exact|Deterministic)?Merge",
+     _quantile_merge),
     # avgMerge(state): the stored avg state is a (sum, count) struct
     # (ddl.MatView.states) — merge both, then divide
-    while True:
-        m = _find_case_exact(sql, r"\bavgMerge\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        x = sql[open1 + 1: close1]
-        sql = (
-            sql[: m.start()]
-            + f"(sum(({x}).s) / sum(({x}).c))"
-            + sql[close1 + 1:]
-        )
+    ("avgMerge", "(sum(({x}).s) / sum(({x}).c))"),
     # -State / -Merge splice forms whose state is not a plain value:
     # avg states are the (s, c) structs avgMerge above reads back;
     # groupArray states are the arrays themselves (merging
     # concatenates); uniqExact states are exact element sets (merging
     # is distinct union — memory-linear in distinct values, same as
     # ClickHouse's uniqExact hash-set state).
-    for name, tpl in (
+    *_state_forms(
         # anyHeavy states are per-value counts maps (the heavy-hitters
         # counter structure, exact): merging sums counts per key, the
         # -Merge readout is the deterministic mode (count desc, key
@@ -7887,25 +6930,7 @@ def _rewrite_agg_spellings(sql: str) -> str:
         ("countOrDefault", "count({x})"),
         ("uniqExactOrDefault", "coalesce(count(DISTINCT {x}), 0)"),
         ("uniqOrDefault", "coalesce(approx_count_distinct({x}), 0)"),
-    ):
-        if name not in sql:  # cheap substring pre-filter (case-exact)
-            continue
-        while True:
-            m = _find_case_exact(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            body = sql[open1 + 1: close1]
-            if "{0}" in tpl:
-                args = _split_top_commas(body)
-                need = 2 if "{1}" in tpl else 1
-                if len(args) != need:
-                    raise ValueError(f"{name} expects {need} argument(s)")
-                repl = tpl.format(*args)
-            else:
-                repl = tpl.format(x=body)
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
+    ),
     # CH's any/anyLast/anyHeavy SKIP NULLs; Spark's any_value/last only
     # do so with the ignoreNulls flag, so the bare rename silently
     # returned NULL whenever the first-encountered row was NULL
@@ -7917,55 +6942,54 @@ def _rewrite_agg_spellings(sql: str) -> str:
     # Spark's Mode keeps per-group state bounded by the DISTINCT count
     # with map-side partials, and skips NULLs natively (the true here
     # is the deterministic flag, not ignoreNulls).
-    for ch_name, spark_fn in (
+    *((name, f"{fn}({{x}}, true)") for name, fn in (
         ("anyLastOrNull", "last"), ("anyOrNull", "any_value"),
         ("anyHeavySimpleState", "mode"), ("anyHeavyOrNull", "mode"),
         ("anyLast", "last"), ("anyHeavy", "mode"),
         ("any", "any_value"),
-    ):
-        if ch_name not in sql:  # cheap substring pre-filter (case-exact)
-            continue
-        while True:
-            m = _find_case_exact(sql, rf"\b{ch_name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            sql = (
-                sql[: m.start()]
-                + f"{spark_fn}({sql[open1 + 1: close1]}, true)"
-                + sql[close1 + 1:]
-            )
-    for name, target in _AGG_NAME_MAP.items():
-        if name not in sql:  # cheap substring pre-filter (case-exact)
-            continue
-        while True:
-            # case-sensitive: compile without re.I (CH names are exact)
-            rx = _rxc(rf"\b{name}(\s*\()")
-            hit = None
-            idx = _scan_index(sql)
-            for mm in rx.finditer(sql):
-                if not _idx_in_string(idx, mm.start()):
-                    hit = mm
-                    break
-            if not hit:
-                break
-            sql = sql[: hit.start()] + target + hit.group(1) + sql[hit.end():]
-    while True:
-        cm = _find_top_anywhere(sql, r"\bcount\s*\(\s*\)")
-        if not cm:
-            break
-        sql = sql[: cm.start()] + "count(*)" + sql[cm.end():]
+    )),
+    *_AGG_NAME_MAP.items(),
+    (r"count(?=\s*\(\s*\))", "count(*)", re.I),
     # aggregates that need a rank/contingency/iterative pass a string
     # rewrite cannot express: fail with the operator to use instead of
     # Spark's bare unresolved-routine error
-    for name, alt in _OPERATOR_ONLY_AGGS.items():
-        m = _find_case_exact(sql, rf"\b{name}\s*\(")
-        if m:
-            raise ValueError(
-                f"{name} is not SQL-translatable — use {alt}"
-            )
-    return sql
+    *((name, {None: f"{name} is not SQL-translatable — use {alt}"})
+      for name, alt in _OPERATOR_ONLY_AGGS.items()),
+)
+
+
+def _rewrite_agg_spellings(sql: str) -> str:
+    """ClickHouse aggregate-function spellings → Spark builtins, so the
+    aggregates in a reference user's saved SQL run verbatim:
+
+    - name-for-name (``uniq``→``approx_count_distinct``, ``argMax``→
+      ``max_by``, ``any``→``any_value``, ``groupArray``→``collect_list``,
+      ...) — case-sensitive, longest name first;
+    - ``uniqExact(x)`` → ``count(DISTINCT x)``;
+    - ``-If`` combinators ``sumIf/avgIf/minIf/maxIf(x, c)`` →
+      ``agg(if(c, x, NULL))`` (``countIf``→``count_if`` is native);
+    - the parametric quantile family ``quantileX(p)(x)`` /
+      ``quantilesX(p1, ...)(x)``: ``Exact`` variants → exact
+      ``percentile``, everything else (TDigest/Timing/BFloat16/plain) →
+      ``approx_percentile`` (CH's default quantile is approximate too);
+      bare ``quantile(x)`` / ``median(x)`` → p = 0.5;
+    - ``count()`` → ``count(*)``.
+
+    Weighted variants (quantileExactWeighted, topKWeighted) are NOT
+    string-rewritable to a builtin — use functions/clickhouse.py /
+    operators; they pass through and fail with Spark's clear
+    unresolved-routine error."""
+    sql = _rewrite_calls(sql, _AGG_RULES_HEAD)
+    # redundant-OrNull stackings strip first (probe batch 66): the
+    # conditional/array-flattened aggregate already yields NULL over an
+    # empty match set in Spark
+    sql = re.sub(
+        r"\b(sum|avg|min|max|anyHeavy|any)IfOrNull\s*\(", r"\1If(", sql
+    )
+    sql = re.sub(
+        r"\b(sum|avg|min|max)ArrayOrNull\s*\(", r"\1Array(", sql
+    )
+    return _rewrite_calls(sql, _AGG_RULES_TAIL)
 
 
 # ClickHouse higher-order array functions put the LAMBDA FIRST
@@ -8017,58 +7041,47 @@ def _rewrite_scalar_with(sql: str) -> str:
     return sql[: m.start()] + head + rest
 
 
-def _rewrite_array_hofs(sql: str) -> str:
-    """Lambda-first ClickHouse array HOFs → array-first Spark builtins:
-    arrayMap/arrayFilter/arrayExists/arrayAll(f, a) → transform/filter/
-    exists/forall(a, f); arrayMap(f, a, b) → zip_with(a, b, f);
-    arrayCount(f, a) → size(filter(a, f)); arrayFirst(f, a) →
-    element_at(filter(a, f), 1) (NULL when nothing matches — CH returns
-    the type's default value there; NULL is the honest Spark spelling
-    and the deviation is this docstring)."""
-    for name, target in _HOF_SWAP.items():
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) < 2:
-                raise ValueError(f"{name} expects (lambda, array...)")
-            # Spark can't resolve SQL-UDF macros inside a lambda body
-            # (same limitation as generators — see _inline_ch_macros),
-            # so ClickHouse spellings in the lambda inline to their
-            # builtin bodies first.
-            lam, arrs = _inline_ch_macros(args[0]), args[1:]
-            if name == "arrayMap" and len(arrs) == 2:
-                repl = f"zip_with({arrs[0]}, {arrs[1]}, {lam})"
-            elif len(arrs) == 2:
-                # the two-array forms (batch-86): evaluate the lambda
-                # over the zipped pair, then fold the flags —
-                # arrayFilter keeps the FIRST array's elements at
-                # truthy positions (CH's contract); exists/forall test
-                # the flag stream (CAST covers UInt8-returning lambdas)
-                flags = f"zip_with({arrs[0]}, {arrs[1]}, {lam})"
-                if name == "arrayFilter":
-                    repl = (
-                        f"transform(filter(zip_with({arrs[0]}, {flags},"
-                        " (__ch_hv, __ch_hk) -> struct(__ch_hv AS v,"
-                        " __ch_hk AS k)),"
-                        " __ch_hs -> CAST(__ch_hs.k AS BOOLEAN)),"
-                        " __ch_hs -> __ch_hs.v)"
-                    )
-                else:
-                    repl = (
-                        f"{target}({flags},"
-                        " __ch_hx -> CAST(__ch_hx AS BOOLEAN))"
-                    )
-            elif len(arrs) != 1:
-                raise ValueError(
-                    f"{name}: expected one or two array arguments"
-                )
-            else:
-                repl = f"{target}({arrs[0]}, {lam})"
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
+def _hof_swap(name, sql, m, close, args):
+    target = _HOF_SWAP[name]
+    if len(args) < 2:
+        raise ValueError(f"{name} expects (lambda, array...)")
+    # Spark can't resolve SQL-UDF macros inside a lambda body
+    # (same limitation as generators — see _inline_ch_macros),
+    # so ClickHouse spellings in the lambda inline to their
+    # builtin bodies first.
+    lam, arrs = _inline_ch_macros(args[0]), args[1:]
+    if name == "arrayMap" and len(arrs) == 2:
+        repl = f"zip_with({arrs[0]}, {arrs[1]}, {lam})"
+    elif len(arrs) == 2:
+        # the two-array forms (batch-86): evaluate the lambda
+        # over the zipped pair, then fold the flags —
+        # arrayFilter keeps the FIRST array's elements at
+        # truthy positions (CH's contract); exists/forall test
+        # the flag stream (CAST covers UInt8-returning lambdas)
+        flags = f"zip_with({arrs[0]}, {arrs[1]}, {lam})"
+        if name == "arrayFilter":
+            repl = (
+                f"transform(filter(zip_with({arrs[0]}, {flags},"
+                " (__ch_hv, __ch_hk) -> struct(__ch_hv AS v,"
+                " __ch_hk AS k)),"
+                " __ch_hs -> CAST(__ch_hs.k AS BOOLEAN)),"
+                " __ch_hs -> __ch_hs.v)"
+            )
+        else:
+            repl = (
+                f"{target}({flags},"
+                " __ch_hx -> CAST(__ch_hx AS BOOLEAN))"
+            )
+    elif len(arrs) != 1:
+        raise ValueError(
+            f"{name}: expected one or two array arguments"
+        )
+    else:
+        repl = f"{target}({arrs[0]}, {lam})"
+    return repl
+
+
+def _array_split(sp_name, sql, m, close, args):
     # arraySplit / arrayReverseSplit (lambda-first): segment the data
     # array at flagged positions — Split cuts BEFORE a flagged element
     # (the flag marks a segment head; position 1's flag is a no-op),
@@ -8076,57 +7089,62 @@ def _rewrite_array_hofs(sql: str) -> str:
     # position's flag is a no-op) — the ClickHouse doc examples
     # verbatim. Data + computed flags bind once via the single-element
     # transform trick; cut positions become slice() bounds.
-    for sp_name, sp_after in (("arrayReverseSplit", True), ("arraySplit", False)):
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{sp_name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) not in (2, 3):
-                raise ValueError(
-                    f"{sp_name} expects (lambda, data[, flags])"
-                )
-            lam = _inline_ch_macros(args[0])
-            d = args[1].strip()
-            if len(args) == 2:
-                flags = f"transform({d}, {lam})"
-            else:
-                flags = f"zip_with({d}, {args[2].strip()}, {lam})"
-            if sp_after:
-                cond = (
-                    "__i < size(__sp.d)"
-                    " AND CAST(element_at(__sp.f, __i) AS BOOLEAN)"
-                )
-                cutpos = "__i + 1"
-            else:
-                cond = (
-                    "__i > 1"
-                    " AND CAST(element_at(__sp.f, __i) AS BOOLEAN)"
-                )
-                cutpos = "__i"
-            repl = (
-                f"(CASE WHEN size({d}) <= 0"
-                f" THEN transform({d}, __sp0 -> {d}) ELSE"
-                f" element_at(transform(array(named_struct('d', {d},"
-                f" 'f', {flags})), __sp ->"
-                " element_at(transform(array(concat(array(1),"
-                " filter(transform(sequence(1, size(__sp.d)),"
-                f" __i -> IF({cond}, {cutpos}, CAST(NULL AS INT))),"
-                " __p -> __p IS NOT NULL),"
-                " array(size(__sp.d) + 1))), __cuts ->"
-                " transform(sequence(1, size(__cuts) - 1),"
-                " __k -> slice(__sp.d, element_at(__cuts, __k),"
-                " element_at(__cuts, __k + 1)"
-                " - element_at(__cuts, __k)))), 1)), 1) END)"
-            )
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
+    sp_after = sp_name == "arrayReverseSplit"
+    if len(args) not in (2, 3):
+        raise ValueError(
+            f"{sp_name} expects (lambda, data[, flags])"
+        )
+    lam = _inline_ch_macros(args[0])
+    d = args[1].strip()
+    if len(args) == 2:
+        flags = f"transform({d}, {lam})"
+    else:
+        flags = f"zip_with({d}, {args[2].strip()}, {lam})"
+    if sp_after:
+        cond = (
+            "__i < size(__sp.d)"
+            " AND CAST(element_at(__sp.f, __i) AS BOOLEAN)"
+        )
+        cutpos = "__i + 1"
+    else:
+        cond = (
+            "__i > 1"
+            " AND CAST(element_at(__sp.f, __i) AS BOOLEAN)"
+        )
+        cutpos = "__i"
+    return (
+        f"(CASE WHEN size({d}) <= 0"
+        f" THEN transform({d}, __sp0 -> {d}) ELSE"
+        f" element_at(transform(array(named_struct('d', {d},"
+        f" 'f', {flags})), __sp ->"
+        " element_at(transform(array(concat(array(1),"
+        " filter(transform(sequence(1, size(__sp.d)),"
+        f" __i -> IF({cond}, {cutpos}, CAST(NULL AS INT))),"
+        " __p -> __p IS NOT NULL),"
+        " array(size(__sp.d) + 1))), __cuts ->"
+        " transform(sequence(1, size(__cuts) - 1),"
+        " __k -> slice(__sp.d, element_at(__cuts, __k),"
+        " element_at(__cuts, __k + 1)"
+        " - element_at(__cuts, __k)))), 1)), 1) END)"
+    )
+
+
+def _lambda_first(name, template, sql, m, close, args):
+    if len(args) != 2:
+        raise ValueError(f"{name} expects (lambda, array)")
+    return template.format(f=_inline_ch_macros(args[0]), a=args[1])
+
+
+_HOF_RULES = _rules(
+    *((name, _partial(_hof_swap, name), re.I) for name in _HOF_SWAP),
+    *((name, _partial(_array_split, name), re.I)
+      for name in ("arrayReverseSplit", "arraySplit")),
     # try_element_at everywhere: under ANSI mode a plain element_at
     # THROWS when no element matches (empty filter result); NULL is the
     # no-match value (CH returns the type default — NULL is the Spark
     # idiom, and the *Index forms coalesce to CH's 0)
-    for name, template in (
+    *((name, _partial(_lambda_first, name, template), re.I)
+      for name, template in (
         ("arrayCount", "size(filter({a}, {f}))"),
         # longest names first so arrayFirstIndex never matches arrayFirst.
         # Value-keyed position is exact: the lambda is a pure function of
@@ -8142,22 +7160,19 @@ def _rewrite_array_hofs(sql: str) -> str:
          " try_element_at(filter({a}, {f}), -1)), 0)"),
         ("arrayFirst", "try_element_at(filter({a}, {f}), 1)"),
         ("arrayLast", "try_element_at(filter({a}, {f}), -1)"),
-    ):
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 2:
-                raise ValueError(f"{name} expects (lambda, array)")
-            sql = (
-                sql[: m.start()]
-                + template.format(f=_inline_ch_macros(args[0]), a=args[1])
-                + sql[close1 + 1:]
-            )
-    return sql
+    )),
+)
+
+
+def _rewrite_array_hofs(sql: str) -> str:
+    """Lambda-first ClickHouse array HOFs → array-first Spark builtins:
+    arrayMap/arrayFilter/arrayExists/arrayAll(f, a) → transform/filter/
+    exists/forall(a, f); arrayMap(f, a, b) → zip_with(a, b, f);
+    arrayCount(f, a) → size(filter(a, f)); arrayFirst(f, a) →
+    element_at(filter(a, f), 1) (NULL when nothing matches — CH returns
+    the type's default value there; NULL is the honest Spark spelling
+    and the deviation is this docstring)."""
+    return _rewrite_calls(sql, _HOF_RULES)
 
 
 def _rewrite_any_join(sql: str, specs: dict | None) -> str:
@@ -8315,6 +7330,82 @@ def _spark_type_name(ch: str) -> str | None:
     return _CH_TYPE_NAMES.get(t.lower())
 
 
+def _accurate_cast_or_default(sql, m, close, args):
+    # accurateCastOrDefault(x, 'Type'[, d]): TRY_CAST coalesced onto the
+    # default (or the type's zero default when omitted, like CH)
+    if len(args) not in (2, 3):
+        raise ValueError(
+            "accurateCastOrDefault expects (expr, 'Type'[, default])"
+        )
+    tname = args[1].strip().strip("'\"")
+    spark_t = _spark_type_name(tname) or tname
+    if len(args) == 3:
+        default = args[2]
+    else:
+        # CH's implicit default is the type's zero value; literal 0
+        # doesn't CAST to temporal/bool targets in Spark (ADVICE r9)
+        su = spark_t.upper()
+        if su.startswith(("STRING", "VARCHAR", "CHAR")):
+            default = "''"
+        elif su.startswith("TIMESTAMP"):
+            default = "TIMESTAMP'1970-01-01 00:00:00'"
+        elif su.startswith("DATE"):
+            default = "DATE'1970-01-01'"
+        elif su.startswith("BOOL"):
+            default = "false"
+        else:
+            default = "0"
+    return (
+        f"coalesce(TRY_CAST({args[0]} AS {spark_t}),"
+        f" CAST({default} AS {spark_t}))"
+    )
+
+
+def _accurate_cast(name, sql, m, close, args):
+    if len(args) != 2:
+        raise ValueError(f"{name} expects (expr, 'Type')")
+    tname = args[1].strip().strip("'\"")
+    spark_t = _spark_type_name(tname) or tname
+    fn = "TRY_CAST" if name == "accurateCastOrNull" else "CAST"
+    return f"{fn}({args[0]} AS {spark_t})"
+
+
+_AS_SEP = re.compile(r"(?i)(?= AS[ \t])")
+
+
+def _cast_type(sql, m, close, args):
+    # CAST(expr AS Type): rewrite the type token after the LAST
+    # top-level AS inside the call when it is a ClickHouse name
+    inner = sql[m.end(): close]
+    idx = _scan_index(inner)
+    as_pos = None
+    for am in _AS_SEP.finditer(inner):
+        if _idx_depth(idx, am.start()) == 0 and not _idx_in_string(idx, am.start()):
+            as_pos = am.start()
+    if as_pos is not None:
+        tok = inner[as_pos + 4:].strip()
+        spark_t = _spark_type_name(tok)
+        if not spark_t or spark_t.upper() == tok.upper():
+            return None
+        return f"{m.group(0)}{inner[: as_pos]} AS {spark_t})"
+    # ClickHouse's comma form: CAST(x, 'Type')
+    if len(args) == 2 and re.fullmatch(r"'[^']+'|\"[^\"]+\"", args[1]):
+        tname = args[1].strip("'\"")
+        spark_t = _spark_type_name(tname) or tname
+        return f"{m.group(0)}{args[0]} AS {spark_t})"
+    return None
+
+
+# accurateCastOrDefault first (its name would not collide with the
+# 2-arg forms, but the 3rd default argument needs its own shape)
+_CAST_RULES = _rules(
+    ("accurateCastOrDefault", _accurate_cast_or_default, re.I),
+    ("accurateCastOrNull", _partial(_accurate_cast, "accurateCastOrNull"), re.I),
+    ("accurateCast", _partial(_accurate_cast, "accurateCast"), re.I),
+    (r"(?:TRY_)?CAST", _cast_type, re.I),
+)
+
+
 def _rewrite_ch_casts(sql: str) -> str:
     """Type names in cast positions: ``CAST(x AS Float64)``,
     ``x::Float64`` (Spark 4 parses ``::``, but not ClickHouse type
@@ -8322,96 +7413,7 @@ def _rewrite_ch_casts(sql: str) -> str:
     CAST/TRY_CAST with the Spark spelling. Only tokens that resolve as
     ClickHouse types are touched, so Spark-native CAST targets pass
     through unchanged."""
-    # accurateCastOrDefault(x, 'Type'[, d]) first (its name would not
-    # collide with the 2-arg forms, but the 3rd default argument needs
-    # its own shape): TRY_CAST coalesced onto the default (or the
-    # type's zero default when omitted, like CH)
-    while True:
-        m = _find_top_anywhere(sql, r"\baccurateCastOrDefault\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        if len(args) not in (2, 3):
-            raise ValueError(
-                "accurateCastOrDefault expects (expr, 'Type'[, default])"
-            )
-        tname = args[1].strip().strip("'\"")
-        spark_t = _spark_type_name(tname) or tname
-        if len(args) == 3:
-            default = args[2]
-        else:
-            # CH's implicit default is the type's zero value; literal 0
-            # doesn't CAST to temporal/bool targets in Spark (ADVICE r9)
-            su = spark_t.upper()
-            if su.startswith(("STRING", "VARCHAR", "CHAR")):
-                default = "''"
-            elif su.startswith("TIMESTAMP"):
-                default = "TIMESTAMP'1970-01-01 00:00:00'"
-            elif su.startswith("DATE"):
-                default = "DATE'1970-01-01'"
-            elif su.startswith("BOOL"):
-                default = "false"
-            else:
-                default = "0"
-        sql = (
-            sql[: m.start()]
-            + f"coalesce(TRY_CAST({args[0]} AS {spark_t}),"
-            f" CAST({default} AS {spark_t}))"
-            + sql[close1 + 1:]
-        )
-    for name, fn in (("accurateCastOrNull", "TRY_CAST"), ("accurateCast", "CAST")):
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) != 2:
-                raise ValueError(f"{name} expects (expr, 'Type')")
-            tname = args[1].strip().strip("'\"")
-            spark_t = _spark_type_name(tname) or tname
-            sql = (
-                sql[: m.start()]
-                + f"{fn}({args[0]} AS {spark_t})"
-                + sql[close1 + 1:]
-            )
-    # CAST(expr AS Type): rewrite the type token after the LAST top-level
-    # AS inside the call when it is a ClickHouse name. One left-to-right
-    # pass; pos advances into the call body so nested CASTs are found.
-    pos = 0
-    cast_rx = re.compile(r"\b(?:TRY_)?CAST\s*\(", re.I)
-    while True:
-        m = cast_rx.search(sql, pos)
-        if not m:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
-            pos = m.end()
-            continue
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        inner = sql[open1 + 1: close1]
-        as_pos = None
-        for i, _, depth, q in _scan_level(inner):
-            if depth == 0 and not q and inner[i: i + 4].upper() in (" AS ", " AS\t"):
-                as_pos = i
-        if as_pos is not None:
-            tok = inner[as_pos + 4:].strip()
-            spark_t = _spark_type_name(tok)
-            if spark_t and spark_t.upper() != tok.upper():
-                new_inner = inner[: as_pos] + " AS " + spark_t
-                sql = sql[: open1 + 1] + new_inner + sql[close1:]
-        else:
-            # ClickHouse's comma form: CAST(x, 'Type')
-            args = _split_top_commas(inner)
-            if len(args) == 2 and re.fullmatch(r"'[^']+'|\"[^\"]+\"", args[1]):
-                tname = args[1].strip("'\"")
-                spark_t = _spark_type_name(tname) or tname
-                sql = sql[: open1 + 1] + f"{args[0]} AS {spark_t}" + sql[close1:]
-        pos = m.end()
+    sql = _rewrite_calls(sql, _CAST_RULES)
     # expr::Type — rewrite just the type token (Spark 4 owns the ::)
     pos = 0
     colon_rx = re.compile(r"::\s*([A-Za-z][A-Za-z0-9]*)(\s*\()?")
@@ -8419,8 +7421,7 @@ def _rewrite_ch_casts(sql: str) -> str:
         m = colon_rx.search(sql, pos)
         if not m:
             break
-        instr_at = _instr_map(sql)
-        if instr_at.get(m.start(), False):
+        if _idx_in_string(_scan_index(sql), m.start()):
             pos = m.end()
             continue
         if m.group(2):
@@ -8450,21 +7451,127 @@ def _tuple_items(arg: str) -> list[str] | None:
     reference, subquery, ...) — arity is not knowable from text then."""
     a = arg.strip()
     m = re.match(r"^tuple\s*\(", a)
-    if not m:
-        # CH's bare parenthesized tuple literal (a, b[, ...]) — a paren
-        # group with a top-level comma can only be a tuple in
-        # expression position (batch-80; subqueries excluded)
-        if a.startswith("(") and _call_end(a, 0) == len(a) - 1:
-            inner = a[1:-1]
-            if not re.match(r"(?is)^\s*SELECT\b", inner):
-                items = _split_top_commas(inner)
-                if len(items) >= 2:
-                    return items
+    start = m.end() if m else 1
+    if a[start - 1: start] != "(" or _call_end(a, start - 1) != len(a) - 1:
         return None
-    open1 = a.index("(", m.end() - 1)
-    if _call_end(a, open1) != len(a) - 1:
+    inner = a[start: len(a) - 1]
+    if m:
+        return _split_top_commas(inner)
+    # CH's bare parenthesized tuple literal (a, b[, ...]) — a paren
+    # group with a top-level comma can only be a tuple in expression
+    # position (batch-80; subqueries excluded)
+    if re.match(r"(?is)^\s*SELECT\b", inner):
         return None
-    return _split_top_commas(a[open1 + 1: len(a) - 1])
+    items = _split_top_commas(inner)
+    return items if len(items) >= 2 else None
+
+
+def _untuple(sql, m, close, args):
+    # untuple(tuple(a, b)) -> a, b (select-list expansion)
+    items = _tuple_items(sql[m.end(): close])
+    if items is None:
+        raise ValueError(
+            "untuple translates only for literal tuple(...) arguments"
+            " — select the struct fields directly ((t).col1, (t).col2)"
+        )
+    return ", ".join(items)
+
+
+def _tuple_concat(sql, m, close, args):
+    parts: list[str] = []
+    for a in args:
+        items = _tuple_items(a)
+        if items is None:
+            raise ValueError(
+                "tupleConcat translates only for literal tuple(...)"
+                " arguments — build the struct directly"
+            )
+        parts.extend(items)
+    return f"tuple({', '.join(parts)})"
+
+
+def _tuple_pair(args: list[str]):
+    if len(args) != 2:
+        return None, None
+    return _tuple_items(args[0]), _tuple_items(args[1])
+
+
+def _tuple_vector_op(name, sql, m, close, args):
+    ta, tb = _tuple_pair(args)
+    if ta is None or tb is None or len(ta) != len(tb):
+        raise ValueError(
+            f"{name} translates only for equal-arity literal"
+            " tuple(...) arguments — spell the element-wise"
+            " arithmetic over struct fields instead"
+        )
+    op = _TUPLE_VECTOR_OPS[name]
+    if name == "tupleIntDiv":
+        items = [f"CAST(floor(({x}) / ({y})) AS BIGINT)" for x, y in zip(ta, tb)]
+    else:
+        items = [f"(({x}) {op} ({y}))" for x, y in zip(ta, tb)]
+    return f"tuple({', '.join(items)})"
+
+
+def _tuple_by_number(name, op, sql, m, close, args):
+    # tupleMultiplyByNumber/tupleDivideByNumber (batch-80): scale every
+    # element by a scalar; the scalar expression is spliced per element
+    # (CH usage is literal/column scalars — document if side-effecting)
+    ta = _tuple_items(args[0]) if len(args) == 2 else None
+    if ta is None:
+        raise ValueError(
+            f"{name} translates only for a literal tuple(...)"
+            " first argument — spell the element-wise"
+            " arithmetic over struct fields instead"
+        )
+    return f"tuple({', '.join(f'(({x}) {op} ({args[1]}))' for x in ta)})"
+
+
+def _dot_product(sql, m, close, args):
+    # dotProduct over two literal tuples (batch-80): CH accepts tuple
+    # and array forms; the tuple form folds to the element-wise product
+    # sum here, the array form stays on the zip_with SQL alias
+    ta, tb = _tuple_pair(args)
+    if ta is None or tb is None:
+        return None  # array form — the SQL alias owns it
+    if len(ta) != len(tb):
+        raise ValueError("dotProduct tuple arguments must have equal arity")
+    return "(" + " + ".join(f"(({x}) * ({y}))" for x, y in zip(ta, tb)) + ")"
+
+
+def _tuple_negate(sql, m, close, args):
+    items = _tuple_items(sql[m.end(): close])
+    if items is None:
+        raise ValueError(
+            "tupleNegate translates only for literal tuple(...) arguments"
+        )
+    return f"tuple({', '.join(f'(-({x}))' for x in items)})"
+
+
+def _tuple_hamming(sql, m, close, args):
+    ta, tb = _tuple_pair(args)
+    if ta is None or tb is None or len(ta) != len(tb):
+        raise ValueError(
+            "tupleHammingDistance translates only for equal-arity"
+            " literal tuple(...) arguments"
+        )
+    return "(" + " + ".join(
+        f"CAST(({x}) <> ({y}) AS INT)" for x, y in zip(ta, tb)
+    ) + ")"
+
+
+_TUPLE_RULES = _rules(
+    ("untuple", _untuple, re.I),
+    ("tupleConcat", _tuple_concat, re.I),
+    *((name, _partial(_tuple_vector_op, name), re.I)
+      for name in _TUPLE_VECTOR_OPS),
+    ("tupleMultiplyByNumber",
+     _partial(_tuple_by_number, "tupleMultiplyByNumber", "*"), re.I),
+    ("tupleDivideByNumber",
+     _partial(_tuple_by_number, "tupleDivideByNumber", "/"), re.I),
+    ("dotProduct", _dot_product, re.I),
+    ("tupleNegate", _tuple_negate, re.I),
+    ("tupleHammingDistance", _tuple_hamming, re.I),
+)
 
 
 def _rewrite_tuple_fns(sql: str) -> str:
@@ -8473,143 +7580,7 @@ def _rewrite_tuple_fns(sql: str) -> str:
     Modulo/Negate, and tupleHammingDistance.  Arity comes from the
     tuple(...) literal text, so non-literal arguments raise with the
     struct-field spelling to use instead (``(t).col1 + (u).col1``)."""
-    # untuple(tuple(a, b)) -> a, b (select-list expansion)
-    while True:
-        m = _find_top_anywhere(sql, r"\buntuple\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        items = _tuple_items(sql[open1 + 1: close1])
-        if items is None:
-            raise ValueError(
-                "untuple translates only for literal tuple(...) arguments"
-                " — select the struct fields directly ((t).col1, (t).col2)"
-            )
-        sql = sql[: m.start()] + ", ".join(items) + sql[close1 + 1:]
-    while True:
-        m = _find_top_anywhere(sql, r"\btupleConcat\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        parts: list[str] = []
-        for a in args:
-            items = _tuple_items(a)
-            if items is None:
-                raise ValueError(
-                    "tupleConcat translates only for literal tuple(...)"
-                    " arguments — build the struct directly"
-                )
-            parts.extend(items)
-        sql = sql[: m.start()] + f"tuple({', '.join(parts)})" + sql[close1 + 1:]
-    for name, op in _TUPLE_VECTOR_OPS.items():
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            ta = _tuple_items(args[0]) if len(args) == 2 else None
-            tb = _tuple_items(args[1]) if len(args) == 2 else None
-            if ta is None or tb is None or len(ta) != len(tb):
-                raise ValueError(
-                    f"{name} translates only for equal-arity literal"
-                    " tuple(...) arguments — spell the element-wise"
-                    " arithmetic over struct fields instead"
-                )
-            if name == "tupleIntDiv":
-                items = [f"CAST(floor(({x}) / ({y})) AS BIGINT)" for x, y in zip(ta, tb)]
-            else:
-                items = [f"(({x}) {op} ({y}))" for x, y in zip(ta, tb)]
-            sql = sql[: m.start()] + f"tuple({', '.join(items)})" + sql[close1 + 1:]
-    # tupleMultiplyByNumber/tupleDivideByNumber (batch-80): scale every
-    # element by a scalar; the scalar expression is spliced per element
-    # (CH usage is literal/column scalars — document if side-effecting)
-    for name, op in (("tupleMultiplyByNumber", "*"),
-                     ("tupleDivideByNumber", "/")):
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{name}\s*\(")
-            if not m:
-                break
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            ta = _tuple_items(args[0]) if len(args) == 2 else None
-            if ta is None:
-                raise ValueError(
-                    f"{name} translates only for a literal tuple(...)"
-                    " first argument — spell the element-wise"
-                    " arithmetic over struct fields instead"
-                )
-            items = [f"(({x}) {op} ({args[1]}))" for x in ta]
-            sql = (
-                sql[: m.start()]
-                + f"tuple({', '.join(items)})"
-                + sql[close1 + 1:]
-            )
-    # dotProduct over two literal tuples (batch-80): CH accepts tuple
-    # and array forms; the tuple form folds to the element-wise product
-    # sum here, the array form stays on the zip_with SQL alias
-    dp_pos = 0
-    while True:
-        m = _find_top_anywhere(sql, r"\bdotProduct\s*\(", dp_pos)
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        ta = _tuple_items(args[0]) if len(args) == 2 else None
-        tb = _tuple_items(args[1]) if len(args) == 2 else None
-        if ta is None or tb is None:
-            dp_pos = m.end()  # array form — the SQL alias owns it
-            continue
-        if len(ta) != len(tb):
-            raise ValueError(
-                "dotProduct tuple arguments must have equal arity"
-            )
-        body = " + ".join(
-            f"(({x}) * ({y}))" for x, y in zip(ta, tb)
-        )
-        sql = sql[: m.start()] + f"({body})" + sql[close1 + 1:]
-        dp_pos = m.start()
-    while True:
-        m = _find_top_anywhere(sql, r"\btupleNegate\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        items = _tuple_items(sql[open1 + 1: close1])
-        if items is None:
-            raise ValueError(
-                "tupleNegate translates only for literal tuple(...) arguments"
-            )
-        sql = (
-            sql[: m.start()]
-            + f"tuple({', '.join(f'(-({x}))' for x in items)})"
-            + sql[close1 + 1:]
-        )
-    while True:
-        m = _find_top_anywhere(sql, r"\btupleHammingDistance\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        ta = _tuple_items(args[0]) if len(args) == 2 else None
-        tb = _tuple_items(args[1]) if len(args) == 2 else None
-        if ta is None or tb is None or len(ta) != len(tb):
-            raise ValueError(
-                "tupleHammingDistance translates only for equal-arity"
-                " literal tuple(...) arguments"
-            )
-        terms = " + ".join(
-            f"CAST(({x}) <> ({y}) AS INT)" for x, y in zip(ta, tb)
-        )
-        sql = sql[: m.start()] + f"({terms})" + sql[close1 + 1:]
-    return sql
+    return _rewrite_calls(sql, _TUPLE_RULES)
 
 
 _DATE_UNIT_KW = re.compile(
@@ -8629,44 +7600,41 @@ def _rewrite_date_unit_forms(sql: str) -> str:
 
     The native Spark forms (2-arg days, 3-arg unit add) pass through
     untouched."""
+    return _rewrite_calls(sql, _DATE_UNIT_RULES)
+
+
+def _date_unit_form(sign, sql, m, close, args):
+    if len(args) == 2 and re.match(r"(?i)^INTERVAL\b", args[1].strip()):
+        return f"(({args[0]}) {sign} {args[1].strip()})"
+    if len(args) == 3 and _DATE_UNIT_KW.match(args[0].strip()) and sign == "-":
+        return f"timestampadd({args[0].strip()}, -({args[1]}), {args[2]})"
+    return None  # native Spark form — leave untouched
+
+
+_DATE_UNIT_RULES = _rules(*(
+    (name, _partial(_date_unit_form, sign), re.I if "_" in name else 0)
     for name, sign in (
         ("date_add", "+"), ("dateAdd", "+"),
         ("timestamp_add", "+"), ("timestampAdd", "+"),
         ("date_sub", "-"), ("dateSub", "-"),
         ("timestamp_sub", "-"), ("timestampSub", "-"),
-    ):
-        pos = 0
-        rx = re.compile(rf"\b{name}\s*\(", re.I if "_" in name else 0)
-        while True:
-            m = rx.search(sql, pos)
-            if not m:
-                break
-            instr_at = _instr_map(sql)
-            if instr_at.get(m.start(), False):
-                pos = m.end()
-                continue
-            open1 = sql.index("(", m.end() - 1)
-            close1 = _call_end(sql, open1)
-            args = _split_top_commas(sql[open1 + 1: close1])
-            if len(args) == 2 and re.match(
-                r"(?i)^INTERVAL\b", args[1].strip()
-            ):
-                repl = f"(({args[0]}) {sign} {args[1].strip()})"
-            elif (
-                len(args) == 3
-                and _DATE_UNIT_KW.match(args[0].strip())
-                and sign == "-"
-            ):
-                repl = (
-                    f"timestampadd({args[0].strip()},"
-                    f" -({args[1]}), {args[2]})"
-                )
-            else:
-                pos = close1
-                continue  # native Spark form — leave untouched
-            sql = sql[: m.start()] + repl + sql[close1 + 1:]
-            pos = m.start()
-    return sql
+    )
+))
+
+
+def _tuple_struct(sql, m, close, args):
+    if not args:
+        return "struct()"
+    body = ", ".join(f"'col{k + 1}', ({x})" for k, x in enumerate(args))
+    return f"named_struct({body})"
+
+
+# tuple(a, b, ...) -> named_struct with CANONICAL col1..colN field names
+# (batch-81; was a bare struct() rename, which names fields after the
+# expressions — so positional access `.colN` / tupleElement(t, N) only
+# worked for literal elements, not tuple(i, s) over columns). Empty
+# tuple() stays struct().
+_TUPLE_STRUCT = _rules(("tuple", _tuple_struct, re.I))
 
 
 def translate(
@@ -8727,42 +7695,15 @@ def translate(
     # tuple algebra (untuple/tupleConcat/tuplePlus/...) resolves over
     # literal tuples BEFORE the rename below erases the tuple( spelling
     sql = _rewrite_tuple_fns(sql)
-    # tuple(a, b, ...) -> named_struct with CANONICAL col1..colN field
-    # names (batch-81; was a bare struct() rename, which names fields
-    # after the expressions — so positional access `.colN` /
-    # tupleElement(t, N) only worked for literal elements, not
-    # tuple(i, s) over columns). Empty tuple() stays struct().
-    while True:
-        tm = _find_top_anywhere(sql, r"\btuple\s*\(")
-        if not tm:
-            break
-        open1 = sql.index("(", tm.end() - 1)
-        close1 = _call_end(sql, open1)
-        items = _split_top_commas(sql[open1 + 1: close1])
-        if not items or (len(items) == 1 and not items[0].strip()):
-            repl = "struct()"
-        else:
-            body = ", ".join(
-                f"'col{k + 1}', ({x})" for k, x in enumerate(items)
-            )
-            repl = f"named_struct({body})"
-        sql = sql[: tm.start()] + repl + sql[close1 + 1:]
+    sql = _rewrite_calls(sql, _TUPLE_STRUCT)
     # ClickHouse positional tuple access t.1 / tuple(...).1 -> .colN
     # (struct fields from the rename above are col1, col2, ...). Only
     # the close-paren form is rewritten — `x.1` on a bare identifier is
     # ambiguous with decimal literals and qualified names.
-    pos_t = 0
-    t_rx = re.compile(r"\)\.(\d+)(?![\d.])")
-    while True:
-        tm = t_rx.search(sql, pos_t)
-        if not tm:
-            break
-        instr_at = _instr_map(sql)
-        if instr_at.get(tm.start(), False):
-            pos_t = tm.end()
-            continue
-        sql = sql[: tm.start()] + f").col{tm.group(1)}" + sql[tm.end():]
-        pos_t = tm.start() + 1
+    sql = _sub_outside_strings(
+        sql, re.compile(r"\)\.(\d+)(?![\d.])"),
+        lambda tm: f").col{tm.group(1)}",
+    )
     sql = _rewrite_to_start_of_interval(sql)
     sql = _rewrite_tumble(sql)
     # clause-level rewrites apply per nesting level: subqueries first
@@ -8863,10 +7804,10 @@ def _rewrite_inline_paren_aliases(sql: str) -> str:
     while True:
         fm = _find_top(sql, r"(?i)\bFROM\b")
         sel_end = fm.start() if fm else len(sql)
-        level = {i: (d, q) for i, _, d, q in _scan_level(sql)}
+        sidx = _scan_index(sql)
         hit = None
         for i in range(sel_end):
-            if sql[i] != "(" or level.get(i, (0, False))[1]:
+            if sql[i] != "(" or _idx_in_string(sidx, i):
                 continue
             close = _call_end(sql, i)
             if close >= sel_end:
@@ -8911,11 +7852,10 @@ def _rewrite_inline_paren_aliases(sql: str) -> str:
             if not mm:
                 out.append(sql[pos:])
                 break
-            level = _instr_map(sql)
             before = sql[: mm.start()].rstrip()
             after = sql[mm.end():].lstrip()
             if (
-                level.get(mm.start(), False)
+                _idx_in_string(_scan_index(sql), mm.start())
                 or after.startswith("(")
                 or before.endswith(".")
                 or before.endswith("`")
@@ -9006,8 +7946,9 @@ def _inline_select_aliases_in_where(sql: str) -> str:
     wend = wstart + tail_m.start() if tail_m else len(sql)
     wseg = sql[wstart:wend]
     # positions to leave alone: string literals + sub-SELECT bodies
-    instr_at = _instr_map(wseg)
-    blocked = [bool(instr_at.get(i, False)) for i in range(len(wseg))]
+    blocked = [False] * len(wseg)
+    for a, b in zip(*_scan_index(wseg)[:2]):
+        blocked[a:b] = [True] * (b - a)
     i = 0
     while i < len(wseg):
         if wseg[i] == "(" and not blocked[i]:
@@ -9202,10 +8143,10 @@ def _rewrite_clauses_recursive(sql: str, specs: dict | None) -> str:
     re-entered."""
     pos = 0
     while True:
-        instr_at = _instr_map(sql)
+        sidx = _scan_index(sql)
         idx = None
         for i in range(pos, len(sql)):
-            if sql[i] == "(" and not instr_at.get(i, False):
+            if sql[i] == "(" and not _idx_in_string(sidx, i):
                 after = sql[i + 1:].lstrip()
                 if re.match(r"(?i)(SELECT|WITH)\b", after):
                     idx = i

@@ -688,11 +688,13 @@ def _udf_bit_slice(
     s: pd.Series, offset: pd.Series, length: pd.Series
 ) -> pd.Series:
     out = []
+    # a NULL in an integer column arrives as NaN (the 2-arg bitSlice
+    # spelling pads a NULL length)
     for v, o, n in zip(s, offset, length):
-        if v is None or o is None:
+        if v is None or pd.isna(o):
             out.append(None)
         else:
-            out.append(bit_slice(v, int(o), None if n is None else int(n)))
+            out.append(bit_slice(v, int(o), None if pd.isna(n) else int(n)))
     return pd.Series(out, dtype="object")
 
 

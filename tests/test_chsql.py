@@ -5864,3 +5864,18 @@ def test_fuzz_r11_date_rollup_group_by_splices(views):
     # no ch-alias UDF call survives in the translated rollup
     sql = translate("SELECT toMonday(d) AS wk FROM dr_t GROUP BY wk").sql
     assert "toMonday" not in sql
+
+
+def test_backtick_identifiers_share_the_paren_quoting_rule(views):
+    """Matching a call's ``)`` and splitting its arguments follow one
+    quoting rule (backticks quote, like ' and "): a backticked column
+    name holding a paren does not end the call."""
+    views.createDataFrame(
+        [(5, 2, 7, 3, "ab")], ["a)b", "x", "v(1", "ts", "s)"]
+    ).createOrReplaceTempView("bt_t")
+    r = views.sql(translate("SELECT sumIf(`a)b`, x > 1) FROM bt_t").sql).first()
+    assert r[0] == 5
+    r = views.sql(translate("SELECT argMax(`v(1`, ts) FROM bt_t").sql).first()
+    assert r[0] == 7
+    r = views.sql(translate("SELECT bitSlice(`s)`, 1) FROM bt_t").sql).first()
+    assert r[0] == b"ab"

@@ -1,0 +1,39 @@
+"""Source lint: new dialect spellings go through the rewrite primitive.
+
+``chsql._rewrite_calls`` owns the call-site loop every function
+spelling used to hand-roll (regex hit, string-literal check, matching
+``)``, argument split, splice, resume point). A new spelling is a rule
+in one of its ordered tables, not another ``while True:`` loop with its
+own ``_call_end`` — so the counts of both in ``chsql.py`` may only go
+down. Lower the caps when a change removes sites; raising them needs a
+reason a rule table cannot serve.
+"""
+
+from __future__ import annotations
+
+from pathlib import Path
+
+CHSQL = Path(__file__).resolve().parent.parent / "ed_clickhouse_spark" / "chsql.py"
+
+# the definition, the primitive, its two trailing-group helpers, and
+# the clause-level scanners that are not call-shaped
+MAX_CALL_END_SITES = 23
+# clause-level rewrites (FROM/ARRAY JOIN/LIMIT BY/...) and the few
+# non-call literal scans
+MAX_WHILE_TRUE_LOOPS = 34
+
+
+def test_call_end_sites_do_not_grow():
+    n = CHSQL.read_text().count("_call_end(")
+    assert n <= MAX_CALL_END_SITES, (
+        f"chsql.py has {n} `_call_end(` sites (cap {MAX_CALL_END_SITES}):"
+        " add the spelling as a _rewrite_calls rule instead"
+    )
+
+
+def test_while_true_loops_do_not_grow():
+    n = CHSQL.read_text().count("while True:")
+    assert n <= MAX_WHILE_TRUE_LOOPS, (
+        f"chsql.py has {n} `while True:` loops (cap {MAX_WHILE_TRUE_LOOPS}):"
+        " add the spelling as a _rewrite_calls rule instead"
+    )
