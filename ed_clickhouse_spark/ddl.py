@@ -92,29 +92,30 @@ _DECIMAL_SCALED = {"decimal32": 9, "decimal64": 18, "decimal128": 38, "decimal25
 
 
 def _split_top(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren/quote depth 0."""
-    parts, depth, cur, in_q = [], 0, [], None
-    for ch in s:
-        if in_q:
-            cur.append(ch)
-            if ch == in_q:
-                in_q = None
-            continue
-        if ch in "'\"":
-            in_q = ch
-            cur.append(ch)
+    """Split on ``sep`` at paren/bracket depth 0, outside quotes.
+
+    The quoting rule is chsql._scan_index's: ``'``, ``"`` and backtick
+    all quote, and inside a quote a backslash escapes the next
+    character (``'it\\'s, ok'`` is one literal)."""
+    parts, depth, start, quote, esc = [], 0, 0, None, False
+    for i, ch in enumerate(s):
+        if quote:
+            if esc:
+                esc = False
+            elif ch == "\\":
+                esc = True
+            elif ch == quote:
+                quote = None
+        elif ch in "'\"`":
+            quote = ch
         elif ch in "([":
             depth += 1
-            cur.append(ch)
         elif ch in ")]":
             depth -= 1
-            cur.append(ch)
         elif ch == sep and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
+            parts.append(s[start:i].strip())
+            start = i + 1
+    tail = s[start:].strip()
     if tail:
         parts.append(tail)
     return parts

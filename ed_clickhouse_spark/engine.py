@@ -14,12 +14,21 @@ service (NATS -> nine ClickHouse tables), DDL for those tables
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import shutil
+import time
+from dataclasses import replace
+from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ed_clickhouse_spark import chsql, ddl
 from ed_clickhouse_spark.functions import register_sql_aliases
+from ed_clickhouse_spark.operators import dictionary as _dic
+from ed_clickhouse_spark.operators import mutate as _mut
 from ed_clickhouse_spark.session import get_spark
 from ed_clickhouse_spark.sources.registry import DLQ_TABLE, FAMILIES, BY_TABLE
 from ed_clickhouse_spark.streaming.pipeline import start_ingest
@@ -43,25 +52,21 @@ class _ToTableMV:
         """Depth-0 ``WITH name AS ( body )`` declarations → name→body.
         Scalar WITH forms (``WITH 1 AS x``) stop the scan — they don't
         introduce table names a FROM could target."""
-        import re as _re
-
-        from ed_clickhouse_spark.chsql import _call_end, _find_top
-
         out: dict = {}
-        m = _find_top(sql, r"^\s*WITH\b")
+        m = chsql._find_top(sql, r"^\s*WITH\b")
         if not m:
             return out
         pos = m.end()
-        rx = _re.compile(r"\s*`?(\w+)`?\s+AS\s*\(", _re.I)
+        rx = re.compile(r"\s*`?(\w+)`?\s+AS\s*\(", re.I)
         while True:
             mm = rx.match(sql, pos)
             if not mm:
                 break
             open1 = sql.index("(", mm.end() - 1)
-            close1 = _call_end(sql, open1)
+            close1 = chsql._call_end(sql, open1)
             out[mm.group(1)] = sql[open1 + 1: close1]
             pos = close1 + 1
-            sep = _re.match(r"\s*,", sql[pos:])
+            sep = re.match(r"\s*,", sql[pos:])
             if not sep:
                 break
             pos += sep.end()
@@ -69,20 +74,15 @@ class _ToTableMV:
 
     def __init__(self, engine: "Engine", name: str, to_table: str,
                  body: str):
-        from types import SimpleNamespace
-
-        from ed_clickhouse_spark.chsql import _find_top
-
         # the SOURCE is the outer query's main FROM table — a depth-0
         # match, so a scalar subquery in the SELECT list (e.g.
         # SELECT (SELECT max(x) FROM other) ... FROM src) can't hijack
         # the binding (ADVICE r8)
-        fm = _find_top(body, r"\bFROM\s+`?(\w+)`?")
+        fm = chsql._find_top(body, r"\bFROM\s+`?(\w+)`?")
         if not fm:
             # derived-table body (FROM (SELECT ...)): the leftmost
             # textual table reference is the feeding source
-            import re as _re
-            fm = _re.search(r"\bFROM\s+`?(\w+)`?", body, _re.I)
+            fm = re.search(r"\bFROM\s+`?(\w+)`?", body, re.I)
         if not fm:
             raise ValueError(
                 "materialized view body must read FROM a source table"
@@ -98,10 +98,9 @@ class _ToTableMV:
         while source in cte_map and source not in seen:
             seen.add(source)
             sub = cte_map[source]
-            sfm = _find_top(sub, r"\bFROM\s+`?(\w+)`?")
+            sfm = chsql._find_top(sub, r"\bFROM\s+`?(\w+)`?")
             if not sfm:
-                import re as _re
-                sfm = _re.search(r"\bFROM\s+`?(\w+)`?", sub, _re.I)
+                sfm = re.search(r"\bFROM\s+`?(\w+)`?", sub, re.I)
             if not sfm:
                 break  # table-less CTE (SELECT 1): keep the CTE name
             source = sfm.group(1)
@@ -113,11 +112,6 @@ class _ToTableMV:
         self.spec = SimpleNamespace(name=name, source=source)
 
     def on_batch(self, batch: DataFrame, epoch_id=None) -> None:
-        import re as _re
-
-        from ed_clickhouse_spark import ddl as _ddl
-        from ed_clickhouse_spark.chsql import translate as _tr
-
         view = f"__mv_batch_{self.spec.name}"
         batch.createOrReplaceTempView(view)
         # the trigger sees ONLY the inserted batch (CH semantics), so
@@ -126,13 +120,11 @@ class _ToTableMV:
         # that happens to appear first textually): ClickHouse feeds the
         # inserted block to the leftmost main-FROM table, while a
         # self-join's other references read the stored table
-        from ed_clickhouse_spark.chsql import _find_top as _ft
-
-        fm = _ft(self.body, rf"\bFROM\s+`?{self.spec.source}`?\b")
+        fm = chsql._find_top(self.body, rf"\bFROM\s+`?{self.spec.source}`?\b")
         if fm is None:
             # derived-table body: same fallback __init__ took
-            fm = _re.search(
-                rf"\bFROM\s+`?{self.spec.source}`?\b", self.body, _re.I
+            fm = re.search(
+                rf"\bFROM\s+`?{self.spec.source}`?\b", self.body, re.I
             )
         if fm is None:  # unreachable: __init__ anchored the same match
             raise ValueError(
@@ -144,14 +136,14 @@ class _ToTableMV:
             + self.body[fm.end():]
         )
         out = self.engine.spark.sql(
-            _tr(body, self.engine.table_specs).sql
+            chsql.translate(body, self.engine.table_specs).sql
         )
         spec = self.engine.table_specs[self.to_table]
         # align to the target's declared columns (positional SELECT
         # aliases must already match, like a CH INSERT SELECT)
         out = out.select(*[f.name for f in spec.schema.fields])
-        _ddl.append_rows(out, spec, self.engine.warehouse)
-        _ddl.register_view(
+        ddl.append_rows(out, spec, self.engine.warehouse)
+        ddl.register_view(
             self.engine.spark, spec, self.engine.warehouse
         )
 
@@ -283,26 +275,20 @@ class Engine:
         policy and provisioned idempotently.  A user can point their
         existing ClickHouse migrations here unchanged.  Returns the
         parsed TableSpecs."""
-        from ed_clickhouse_spark import ddl
-
         os.makedirs(self.warehouse, exist_ok=True)
         specs = ddl.migrate(self.spark, migrations_dir, self.warehouse)
         self.table_specs = {s.name: s for s in specs}
-        # CREATE MATERIALIZED VIEW statements: ClickHouse insert triggers.
-        # Provisioned as MatView wrappers — ch_sql INSERTs and the ingest
+        # CREATE MATERIALIZED VIEW statements: ClickHouse insert triggers,
+        # built by the same handler ch_sql runs (so the TO form writes
+        # into its target here too) — ch_sql INSERTs and the ingest
         # pipeline (views= hook) both fire them per batch.
-        import re as _re
-
         for fn in sorted(os.listdir(migrations_dir)):
             if not fn.endswith(".up.sql"):
                 continue
             with open(os.path.join(migrations_dir, fn)) as f:
                 for stmt in ddl._split_top(f.read(), ";"):
-                    if _re.search(r"CREATE\s+MATERIALIZED\s+VIEW", stmt, _re.I):
-                        mspec = ddl.parse_materialized_view(stmt)
-                        self.matviews[mspec.name] = ddl.MatView(
-                            self.spark, mspec, self.warehouse
-                        )
+                    if _CREATE_MV.search(stmt):
+                        self._create_matview(stmt)
         return specs
 
     # -- EP1: ingestion ---------------------------------------------------
@@ -415,12 +401,10 @@ class Engine:
         """Spark SQL over the event tables (ClickHouse spellings like
         toStartOfDay/JSONExtractString registered). Every call is
         recorded in :meth:`query_log` (≙ ``system.query_log``)."""
-        import time as _time
-
-        t0 = _time.time()
+        t0 = time.time()
         df = self.spark.sql(query)
         self._query_log.append(
-            (t0, "spark", query, round((_time.time() - t0) * 1000, 3))
+            (t0, "spark", query, round((time.time() - t0) * 1000, 3))
         )
         return df
 
@@ -443,189 +427,224 @@ class Engine:
         spellings are already registered. ``params`` fills
         clickhouse-client ``{name:Type}`` placeholders with typed
         literals before any parsing. A requested FORMAT name is
-        recorded on the result as ``df.ch_format``."""
-        import time as _time
+        recorded on the result as ``df.ch_format``.
 
-        from ed_clickhouse_spark.chsql import substitute_params, translate
-
-        t0 = _time.time()
+        Metadata, INSERT, DDL and mutation statements run the handler of
+        the first :data:`_STATEMENTS` entry their text matches; anything
+        else is a query."""
+        t0 = time.time()
         if params:
-            query = substitute_params(query, params)
-        meta = self._maybe_meta(query)
-        if meta is not None:
-            self._query_log.append(
-                (t0, "clickhouse", query, round((_time.time() - t0) * 1000, 3))
-            )
-            return meta
-        ins = self._maybe_insert(query)
-        if ins is not None:
-            self._query_log.append(
-                (t0, "clickhouse", query.split("\n", 1)[0],
-                 round((_time.time() - t0) * 1000, 3))
-            )
-            return ins
-        mut = self._maybe_mutation(query)
-        if mut is not None:
-            self._query_log.append(
-                (t0, "clickhouse", query, round((_time.time() - t0) * 1000, 3))
-            )
-            return mut
-        tr = translate(query, self.table_specs)
-        if "system_" in tr.sql:
-            self._refresh_system_views()
-        sql = self._route_projection(tr.sql)
-        df = self.spark.sql(sql)
-        df.ch_format = tr.format
+            query = chsql.substitute_params(query, params)
+        entry, m = _statement(query)
+        if entry is not None:
+            df = entry[1](self, *m.groups())
+        else:
+            tr = chsql.translate(query, self.table_specs)
+            if "system_" in tr.sql:
+                self._refresh_system_views()
+            df = self.spark.sql(self._route_projection(tr.sql))
+            df.ch_format = tr.format
+        # an INSERT logs its first line: an inline payload stays out
+        logged = query.split("\n", 1)[0] if _INSERT.match(query.lstrip()) else query
         self._query_log.append(
-            (t0, "clickhouse", query, round((_time.time() - t0) * 1000, 3))
+            (t0, "clickhouse", logged, round((time.time() - t0) * 1000, 3))
         )
         return df
 
-    def _maybe_meta(self, query: str):
-        """ClickHouse metadata statements: ``SHOW CREATE TABLE t``
-        (canonical DDL reconstructed from the migrated spec — parse
-        round-trip pinned in test_ddl) and ``EXISTS TABLE t``. Other
-        SHOW/DESCRIBE forms pass through — Spark's own SHOW TABLES /
-        DESCRIBE TABLE accept the same spelling."""
-        import re as _re
+    # -- statement helpers ------------------------------------------------
+    def _status(self, table: str, op: str, n) -> DataFrame:
+        """The one-row (table, op, affected) result of a DDL, mutation
+        or SYSTEM statement."""
+        return self.spark.createDataFrame(
+            [(table, op, int(n))], "table string, op string, affected long"
+        )
 
-        q0 = query.strip().rstrip(";").strip()
-        if _re.match(r"^SHOW\s+PROCESSLIST$", q0, _re.I):
-            self._refresh_system_views()
-            return self.spark.table("system_processes")
-        if _re.match(r"^SHOW\s+DICTIONARIES$", q0, _re.I):
-            self._refresh_system_views()
-            return self.spark.table("system_dictionaries").select("name")
-        m = _re.match(
-            r"^SHOW\s+SETTINGS(?:\s+(?:I?LIKE)\s+'([^']*)')?$", q0, _re.I
-        )
-        if m:
-            self._refresh_system_views()
-            df = self.spark.table("system_settings")
-            if m.group(1):
-                df = df.where(F.col("name").like(m.group(1)))
-            return df
-        m = _re.match(
-            r"^SHOW\s+(?:TEMPORARY\s+)?TABLES\s+(NOT\s+)?(I?LIKE)"
-            r"\s+'([^']*)'$", q0, _re.I
-        )
-        if m:
-            # Spark's own SHOW TABLES LIKE takes a GLOB, not SQL LIKE
-            # (batch-84: LIKE 't%' silently matched nothing) — filter
-            # Spark's listing with the real LIKE/ILIKE/NOT semantics
-            df = self.spark.sql("SHOW TABLES")
-            col = F.col("tableName")
-            cond = (
-                col.ilike(m.group(3))
-                if m.group(2).upper() == "ILIKE" else col.like(m.group(3))
-            )
-            if m.group(1):
-                cond = ~cond
-            return df.where(cond)
-        if _re.match(r"^SHOW\s+GRANTS\b", q0, _re.I):
-            # single-tenant: the session user owns everything
-            return self.spark.createDataFrame(
-                [(f"GRANT ALL ON *.* TO {os.environ.get('USER', 'default')}"
-                  " WITH GRANT OPTION",)],
-                "grants string",
-            )
-        if _re.match(r"^(GRANT|REVOKE)\b", q0, _re.I):
-            raise ValueError(
-                "GRANT/REVOKE are not implemented — this engine is"
-                " single-tenant (no access-control store); enforce"
-                " permissions at the lakehouse/catalog layer"
-            )
-        m = _re.match(r"^\s*SHOW\s+CREATE\s+TABLE\s+(\w+)\s*;?\s*$", query, _re.I)
-        if m:
-            from ed_clickhouse_spark.ddl import show_create
+    def _refresh(self, table: str) -> None:
+        """Re-register a table's views after its files or spec changed;
+        a table without a spec (an event family) re-registers them all."""
+        spec = self.table_specs.get(table)
+        if spec is not None:
+            ddl.register_view(self.spark, spec, self.warehouse)
+        else:
+            self.refresh_views()
 
-            spec = self.table_specs.get(m.group(1))
-            if spec is None:
-                raise KeyError(f"unknown table {m.group(1)!r}; run migrate() first")
-            return self.spark.createDataFrame(
-                [(show_create(spec),)], "statement string"
-            )
-        # the TABLE keyword is optional in clickhouse-client
-        m = _re.match(
-            r"^\s*EXISTS\s+(?:TABLE\s+)?(\w+)\s*;?\s*$", query, _re.I
-        )
-        if m:
-            name = m.group(1)
-            # a table exists if migrations declared it OR the engine
-            # provisioned/registered it (event families, CTAS views)
-            known = (
-                name in self.table_specs
-                or self.spark.catalog.tableExists(name)
-                or os.path.exists(os.path.join(self.warehouse, name))
-            )
-            return self.spark.createDataFrame(
-                [(1 if known else 0,)], "result int"
-            )
-        if _re.match(r"^KILL\s+QUERY\b", q0, _re.I):
-            # single-process engine: ch_sql calls are synchronous, so
-            # by the time KILL parses there is nothing in-flight —
-            # SHOW PROCESSLIST is empty for the same reason. CH's
-            # response shape: one row per matched query, so none.
-            # (KILL MUTATION keeps its status-row handler below.)
-            return self.spark.createDataFrame(
-                [], "query_id string, result string"
-            )
-        m = _re.match(
-            r"^\s*EXPLAIN\s+(SYNTAX|AST|PIPELINE|PLAN|ESTIMATE)?\s*(.+)$",
-            query,
-            _re.I | _re.S,
-        )
-        if m:
-            # ClickHouse EXPLAIN SELECT ... -> Spark's plan for the
-            # TRANSLATED query (including projection routing), so users
-            # see what actually executes. Variants (r8 batch 50):
-            # SYNTAX/AST -> the translated SQL itself (CH returns the
-            # rewritten query — ours IS the rewrite output);
-            # PIPELINE -> the formatted physical plan; ESTIMATE ->
-            # per-table rows/parts/bytes from the warehouse metadata
-            # (the same numbers system.parts serves); PLAN/default ->
-            # Spark's EXPLAIN.
-            from ed_clickhouse_spark.chsql import translate as _tr
+    def _table(self, name: str):
+        spec = self.table_specs.get(name)
+        path = os.path.join(self.warehouse, name)
+        if not os.path.isdir(path):
+            raise KeyError(f"unknown table {name!r}")
+        return spec, path
 
-            kind = (m.group(1) or "PLAN").upper()
-            inner = self._route_projection(
-                _tr(m.group(2), self.table_specs).sql
+    def _spec_of(self, name: str):
+        spec, _path = self._table(name)
+        if spec is None:
+            raise KeyError(f"no spec for table {name!r}")
+        return spec
+
+    def _declared(self, table: str):
+        spec = self.table_specs.get(table)
+        if spec is None:
+            raise KeyError(f"unknown table {table!r}; run migrate() first")
+        return spec
+
+    def _footprint(self, table: str, projections) -> list:
+        """Everything a table owns outside its spec, as (directory,
+        views) pairs: first the table's own files with its ``t`` and
+        ``t_raw`` views, then each named projection's
+        ``t__proj_<p>`` files with its merged and ``_parts`` views.
+        DROP, RENAME, EXCHANGE, DETACH and DROP PROJECTION all act on
+        this one list."""
+        parts = [(os.path.join(self.warehouse, table), (table, f"{table}_raw"))]
+        for p in projections:
+            view = f"{table}__proj_{p}"
+            parts.append(
+                (ddl.projection_path(self.warehouse, table, p), (view, f"{view}_parts"))
             )
-            if kind in ("SYNTAX", "AST"):
-                return self.spark.createDataFrame(
-                    [(inner,)], "explain string"
+        return parts
+
+    def _unlink(self, parts, keep_files: bool = False) -> None:
+        for path, views in parts:
+            if not keep_files and os.path.isdir(path):
+                shutil.rmtree(path)
+            for view in views:
+                self.spark.catalog.dropTempView(view)
+
+    def _move(self, old: str, new: str, projections) -> None:
+        """Rename a table's directories (projections included) from
+        ``old`` to ``new`` and drop the views that named the old ones."""
+        parts = self._footprint(old, projections)
+        for (src, _views), (dst, _new_views) in zip(
+            parts, self._footprint(new, projections)
+        ):
+            if os.path.isdir(src):
+                os.rename(src, dst)
+        self._unlink(parts, keep_files=True)
+
+    def _append(self, table: str, df: DataFrame, n) -> DataFrame:
+        """The one insert tail: append ``df`` under the table's write
+        policy (partition dirs + ORDER BY sort), re-register its views,
+        fire materialized-view insert triggers on the written batch
+        (DEFAULT/MATERIALIZED applied) and return the (table,
+        rows_inserted) frame. ``n`` is the row count, or the
+        Observation counting the append job."""
+        spec = self.table_specs[table]
+        written = ddl.append_rows(df, spec, self.warehouse)
+        ddl.register_view(self.spark, spec, self.warehouse)
+        if isinstance(n, Observation):
+            n = n.get["n"]
+        for mv in self.matviews.values():
+            if mv.spec.source == table:
+                # the written batch is lazy: a trigger re-runs the input
+                # (one more job over it, never the whole table;
+                # non-deterministic SELECTs should materialize first).
+                # Re-register the MV's read views too — parquet file
+                # listings are snapshotted per plan, so stale views would
+                # miss new states
+                mv.on_batch(written)
+                self._register_mv(mv)
+        return self.spark.createDataFrame(
+            [(table, int(n))], "table string, rows_inserted long"
+        )
+
+    # -- metadata statements ----------------------------------------------
+    # SHOW CREATE TABLE reconstructs canonical DDL from the migrated spec
+    # (parse round-trip pinned in test_ddl). Other SHOW/DESCRIBE forms
+    # pass through — Spark's own SHOW TABLES / DESCRIBE TABLE accept the
+    # same spelling.
+    def _show_processlist(self) -> DataFrame:
+        self._refresh_system_views()
+        return self.spark.table("system_processes")
+
+    def _show_dictionaries(self) -> DataFrame:
+        self._refresh_system_views()
+        return self.spark.table("system_dictionaries").select("name")
+
+    def _show_settings(self, like) -> DataFrame:
+        self._refresh_system_views()
+        df = self.spark.table("system_settings")
+        return df.where(F.col("name").like(like)) if like else df
+
+    def _show_tables_like(self, negate, op: str, pattern: str) -> DataFrame:
+        # Spark's own SHOW TABLES LIKE takes a GLOB, not SQL LIKE
+        # (batch-84: LIKE 't%' silently matched nothing) — filter
+        # Spark's listing with the real LIKE/ILIKE/NOT semantics
+        col = F.col("tableName")
+        cond = col.ilike(pattern) if op.upper() == "ILIKE" else col.like(pattern)
+        return self.spark.sql("SHOW TABLES").where(~cond if negate else cond)
+
+    def _show_grants(self) -> DataFrame:
+        # single-tenant: the session user owns everything
+        return self.spark.createDataFrame(
+            [(f"GRANT ALL ON *.* TO {os.environ.get('USER', 'default')}"
+              " WITH GRANT OPTION",)],
+            "grants string",
+        )
+
+    def _show_create(self, name: str) -> DataFrame:
+        return self.spark.createDataFrame(
+            [(ddl.show_create(self._declared(name)),)], "statement string"
+        )
+
+    def _exists(self, name: str) -> DataFrame:
+        # a table exists if migrations declared it OR the engine
+        # provisioned/registered it (event families, CTAS views)
+        known = (
+            name in self.table_specs
+            or self.spark.catalog.tableExists(name)
+            or os.path.exists(os.path.join(self.warehouse, name))
+        )
+        return self.spark.createDataFrame([(1 if known else 0,)], "result int")
+
+    def _kill_query(self) -> DataFrame:
+        # single-process engine: ch_sql calls are synchronous, so
+        # by the time KILL parses there is nothing in-flight —
+        # SHOW PROCESSLIST is empty for the same reason. CH's
+        # response shape: one row per matched query, so none.
+        # (KILL MUTATION keeps its status-row handler.)
+        return self.spark.createDataFrame([], "query_id string, result string")
+
+    def _explain(self, kind, query: str) -> DataFrame:
+        # ClickHouse EXPLAIN SELECT ... -> Spark's plan for the
+        # TRANSLATED query (including projection routing), so users
+        # see what actually executes. Variants (r8 batch 50):
+        # SYNTAX/AST -> the translated SQL itself (CH returns the
+        # rewritten query — ours IS the rewrite output);
+        # PIPELINE -> the formatted physical plan; ESTIMATE ->
+        # per-table rows/parts/bytes from the warehouse metadata
+        # (the same numbers system.parts serves); PLAN/default ->
+        # Spark's EXPLAIN.
+        kind = (kind or "PLAN").upper()
+        inner = self._route_projection(
+            chsql.translate(query, self.table_specs).sql
+        )
+        if kind in ("SYNTAX", "AST"):
+            return self.spark.createDataFrame([(inner,)], "explain string")
+        if kind == "ESTIMATE":
+            # CH shape: (table, parts, rows, bytes) per scanned
+            # table. parts/bytes come from the warehouse metadata;
+            # rows is a parquet-footer count (metadata-only scan)
+            self._refresh_system_views()
+            tables = [t for t in self.table_specs if re.search(rf"\b{t}\b", inner)]
+            meta = {
+                r["name"]: (r["n_files"], r["bytes"])
+                for r in self.spark.table("system_parts")
+                .where(F.col("name").isin(tables)).collect()
+            }
+            rows = [
+                (
+                    t,
+                    int(meta.get(t, (0, 0))[0]),
+                    self.spark.table(t).count(),
+                    int(meta.get(t, (0, 0))[1]),
                 )
-            if kind == "ESTIMATE":
-                # CH shape: (table, parts, rows, bytes) per scanned
-                # table. parts/bytes come from the warehouse metadata;
-                # rows is a parquet-footer count (metadata-only scan)
-                self._refresh_system_views()
-                tables = [
-                    t for t in self.table_specs
-                    if _re.search(rf"\b{t}\b", inner)
-                ]
-                meta = {
-                    r["name"]: (r["n_files"], r["bytes"])
-                    for r in self.spark.table("system_parts")
-                    .where(F.col("name").isin(tables)).collect()
-                }
-                rows = [
-                    (
-                        t,
-                        int(meta.get(t, (0, 0))[0]),
-                        self.spark.table(t).count(),
-                        int(meta.get(t, (0, 0))[1]),
-                    )
-                    for t in tables
-                ]
-                return self.spark.createDataFrame(
-                    rows,
-                    "table string, parts long, rows long, bytes long",
-                )
-            if kind == "PIPELINE":
-                return self.spark.sql(f"EXPLAIN FORMATTED {inner}")
-            return self.spark.sql(f"EXPLAIN {inner}")
-        return None
+                for t in tables
+            ]
+            return self.spark.createDataFrame(
+                rows, "table string, parts long, rows long, bytes long"
+            )
+        if kind == "PIPELINE":
+            return self.spark.sql(f"EXPLAIN FORMATTED {inner}")
+        return self.spark.sql(f"EXPLAIN {inner}")
 
     def _route_projection(self, sql: str) -> str:
         """ClickHouse-style automatic projection selection, for the safe
@@ -639,11 +658,9 @@ class Engine:
         projection exists to serve.  Anything that doesn't validate falls
         through untouched (fail-open): joins, subqueries, non-dim
         predicates, aggregates the projection doesn't carry."""
-        import re as _re
-
-        if _re.search(r"\b(JOIN|UNION|WITH|DISTINCT|OVER)\b", sql, _re.I):
+        if re.search(r"\b(JOIN|UNION|WITH|DISTINCT|OVER)\b", sql, re.I):
             return sql
-        m = _re.search(r"\bFROM\s+(\w+)\b", sql, _re.I)
+        m = re.search(r"\bFROM\s+(\w+)\b", sql, re.I)
         if not m or sql[: m.start()].count("(") != sql[: m.start()].count(")"):
             return sql
         table = m.group(1)
@@ -661,818 +678,62 @@ class Engine:
                     pat = r"\bcount\s*\(\s*\*?\s*\)"
                     rep = f"sum(__cnt_{alias})"
                 elif func == "avg":
-                    pat = rf"\bavg\s*\(\s*`?{_re.escape(col)}`?\s*\)"
+                    pat = rf"\bavg\s*\(\s*`?{re.escape(col)}`?\s*\)"
                     rep = f"(sum(__sum_{alias}) / sum(__cnt_{alias}))"
                 elif func == "sum":
-                    pat = rf"\bsum\s*\(\s*`?{_re.escape(col)}`?\s*\)"
+                    pat = rf"\bsum\s*\(\s*`?{re.escape(col)}`?\s*\)"
                     rep = f"sum(__sum_{alias})"
                 else:
-                    pat = rf"\b{func}\s*\(\s*`?{_re.escape(col)}`?\s*\)"
+                    pat = rf"\b{func}\s*\(\s*`?{re.escape(col)}`?\s*\)"
                     rep = f"{func}(__{func}_{alias})"
-                new = _re.sub(pat, rep, new, flags=_re.I)
+                new = re.sub(pat, rep, new, flags=re.I)
             # any aggregate the projection can't serve -> fall through
             # (identify leftover agg calls not over partial __ columns)
-            for am in _re.finditer(r"\b(sum|min|max|avg|count)\s*\(\s*([^)]*)\)", new, _re.I):
+            for am in re.finditer(r"\b(sum|min|max|avg|count)\s*\(\s*([^)]*)\)", new, re.I):
                 if not am.group(2).strip().startswith("__"):
                     ok = False
                     break
             if ok:
                 # every base-table column still referenced must be a dim
-                ids = set(_re.findall(r"[A-Za-z_]\w*", new))
+                ids = set(re.findall(r"[A-Za-z_]\w*", new))
                 if (ids & base_cols) - set(proj.dims):
                     ok = False
             if ok:
-                return _re.sub(
+                return re.sub(
                     rf"\bFROM\s+{table}\b",
                     f"FROM {table}__proj_{proj.name}_parts",
                     new,
-                    flags=_re.I,
+                    flags=re.I,
                 )
         return sql
 
-    def _maybe_mutation(self, query: str):
-        """ClickHouse operational statements, routed onto the mutation /
-        compaction operators (operators/mutate.py) so the spellings a
-        reference user runs work verbatim:
-
-          ALTER TABLE t DELETE WHERE <pred>
-          ALTER TABLE t UPDATE a = <expr>[, ...] WHERE <pred>
-          ALTER TABLE t DROP PARTITION <value>
-          OPTIMIZE TABLE t [PARTITION <value>] [FINAL]
-          TRUNCATE TABLE t
-
-        Expressions go through F.expr with the ClickHouse SQL spellings
-        registered, so ``toDate(ts) = '2024-01-01'`` works.  All paths
-        are partition-selective (never a full-table rewrite unless every
-        partition matches); views are re-registered afterwards.  Returns
-        a 1-row status DataFrame, or None when not a mutation."""
-        import re as _re
-
-        from ed_clickhouse_spark.operators import mutate as _mut
-
-        def _table(name: str):
-            spec = self.table_specs.get(name)
-            path = os.path.join(self.warehouse, name)
-            if not os.path.isdir(path):
-                raise KeyError(f"unknown table {name!r}")
-            return spec, path
-
-        def _mutation_read_args(spec):
-            # rename-aware rewrite args (both column spellings read and
-            # canonicalized); path-only tables fall back to mergeSchema
-            # inside the mutation helpers
-            if spec is None:
-                return None, None
-            from ed_clickhouse_spark import ddl as _ddl
-
-            return _ddl.mutation_read_args(spec)
-
-        def _done(table: str, op: str, n) -> DataFrame:
-            spec = self.table_specs.get(table)
-            if spec is not None:
-                from ed_clickhouse_spark import ddl as _ddl
-
-                _ddl.register_view(self.spark, spec, self.warehouse)
-            else:
-                self.refresh_views()
-            return self.spark.createDataFrame(
-                [(table, op, int(n))], "table string, op string, affected long"
-            )
-
-        def _rebuild_projections(table: str) -> None:
-            # Mutations invalidate insert-time partial states; like
-            # ClickHouse (which rebuilds or drops projection parts on
-            # mutations), rebuild each projection from the current base —
-            # one pass over the mutated table, not the history.
-            spec = self.table_specs.get(table)
-            if spec is None or not spec.projections:
-                return
-            from ed_clickhouse_spark import ddl as _ddl
-
-            base = self.spark.read.parquet(os.path.join(self.warehouse, table))
-            for proj in spec.projections:
-                _ddl.projection_batch(base, proj).write.mode("overwrite").parquet(
-                    _ddl.projection_path(self.warehouse, table, proj.name)
-                )
-
-        q = query.strip().rstrip(";").strip()
-        m = _re.match(
-            r"^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*(.*?)\s*"
-            r"\bAS\s+(SELECT\b.+)$",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            return self._create_table_as(m.group(1), m.group(2), m.group(3))
-        m = _re.match(
-            r"^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-            r"`?(\w+)`?\s+AS\s+`?(\w+)`?\s*(?:ENGINE\s*=.*)?$",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            # structure clone (CREATE TABLE a AS b): same spec, empty data
-            from dataclasses import replace as _replace
-
-            from ed_clickhouse_spark import ddl as _ddl
-
-            src_spec, _sp = _table(m.group(4))
-            if src_spec is None:
-                raise KeyError(f"no spec for table {m.group(4)!r}")
-            name = m.group(3)
-            if name in self.table_specs:
-                if m.group(2):
-                    return _done(name, "create_table", 0)
-                if not m.group(1):
-                    raise ValueError(f"table {name!r} already exists")
-                self._maybe_mutation(f"DROP TABLE {name}")
-            spec = _replace(src_spec, name=name, projections=[])
-            _ddl.provision_table(self.spark, spec, self.warehouse)
-            self.table_specs[name] = spec
-            return _done(name, "create_table", 1)
-        m = _re.match(
-            r"^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-            r"`?(\w+)`?\s*\(",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            # ad-hoc CREATE TABLE through ch_sql — the same ddl.py
-            # parse/provision path migrate() runs, so a reference
-            # user's interactive DDL works without a migration file
-            from ed_clickhouse_spark import ddl as _ddl
-
-            name = m.group(3)
-            if name in self.table_specs:
-                if m.group(2):
-                    return _done(name, "create_table", 0)
-                if not m.group(1):
-                    raise ValueError(
-                        f"table {name!r} already exists — use"
-                        " CREATE OR REPLACE TABLE or IF NOT EXISTS"
-                    )
-                self._maybe_mutation(f"DROP TABLE {name}")
-            stmt = _re.sub(
-                r"^CREATE\s+OR\s+REPLACE\s+TABLE",
-                "CREATE TABLE",
-                q,
-                flags=_re.I,
-            )
-            spec = _ddl.parse_clickhouse_ddl(stmt)
-            _ddl.provision_table(self.spark, spec, self.warehouse)
-            self.table_specs[spec.name] = spec
-            return _done(spec.name, "create_table", 1)
-        m = _re.match(r"^CREATE\s+MATERIALIZED\s+VIEW\b", q, _re.I)
-        if m:
-            # interactive MV creation; POPULATE backfills from the
-            # source's current contents (CH semantics: without it the
-            # MV only sees future inserts)
-            from ed_clickhouse_spark import ddl as _ddl
-
-            populate = bool(_re.search(r"\bPOPULATE\b", q, _re.I))
-            stmt = _re.sub(r"\bPOPULATE\b", "", q, flags=_re.I)
-            tm = _re.match(
-                r"^CREATE\s+MATERIALIZED\s+VIEW\s+"
-                r"(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s+TO\s+`?(\w+)`?"
-                r"\s+AS\s+((?:SELECT|WITH)\b.+)$",
-                stmt,
-                _re.I | _re.S,
-            )
-            if tm:
-                # the TO form: partials land in the NAMED table (the
-                # classic MV -> AggregatingMergeTree rollup pair). The
-                # body — typically -State aggregates — re-runs through
-                # the dialect per inserted batch and appends under the
-                # target's write policy; reads then hit the target
-                # table's own merged view with -Merge spellings.
-                mv = _ToTableMV(self, tm.group(1), tm.group(2),
-                                tm.group(3))
-                if mv.to_table not in self.table_specs:
-                    raise KeyError(
-                        f"TO table {mv.to_table!r} does not exist —"
-                        " CREATE it first (ClickHouse requires the"
-                        " same)"
-                    )
-                if populate:
-                    # ClickHouse rejects POPULATE with the TO clause
-                    # ("POPULATE is not supported with TO [db].[table]")
-                    # — match it; backfill with an explicit
-                    # INSERT INTO target SELECT ... instead
-                    raise ValueError(
-                        "POPULATE is not allowed with"
-                        " CREATE MATERIALIZED VIEW ... TO (ClickHouse"
-                        " rejects it too) — backfill the target with"
-                        " INSERT INTO ... SELECT"
-                    )
-                self.matviews[mv.spec.name] = mv
-                return _done(tm.group(1), "create_materialized_view", 0)
-            mspec = _ddl.parse_materialized_view(stmt)
-            mv = _ddl.MatView(self.spark, mspec, self.warehouse)
-            self.matviews[mspec.name] = mv
-            if populate:
-                mv.on_batch(self.spark.table(mspec.source))
-            return _done(mspec.name, "create_materialized_view",
-                         1 if populate else 0)
-        m = _re.match(
-            r"^CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"`?(\w+)`?\s+AS\s+(.+)$",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            # plain views: the body is CLICKHOUSE dialect — translate
-            # it once and register the Spark SQL as a temp view
-            from ed_clickhouse_spark.chsql import translate as _tr
-
-            body = _tr(m.group(2), self.table_specs).sql
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {m.group(1)} AS {body}"
-            )
-            return _done(m.group(1), "create_view", 1)
-        m = _re.match(
-            r"^DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?\s*$", q, _re.I
-        )
-        if m:
-            existed = self.spark.catalog.dropTempView(m.group(1))
-            return _done(m.group(1), "drop_view", 1 if existed else 0)
-        m = _re.match(
-            r"^EXCHANGE\s+TABLES\s+`?(\w+)`?\s+AND\s+`?(\w+)`?\s*$", q, _re.I
-        )
-        if m:
-            # atomic name swap: three directory renames + spec swap
-            from dataclasses import replace as _replace
-
-            from ed_clickhouse_spark import ddl as _ddl
-
-            a, b = m.group(1), m.group(2)
-            sa, pa = _table(a)
-            sb, pb = _table(b)
-            if sa is None or sb is None:
-                raise KeyError(f"EXCHANGE TABLES: no spec for {a!r}/{b!r}")
-            tmp = pa + ".__xchg"
-            os.rename(pa, tmp)
-            os.rename(pb, pa)
-            os.rename(tmp, pb)
-            na, nb = _replace(sb, name=a), _replace(sa, name=b)
-            self.table_specs[a], self.table_specs[b] = na, nb
-            _ddl.register_view(self.spark, na, self.warehouse)
-            _ddl.register_view(self.spark, nb, self.warehouse)
-            return _done(a, f"exchange_tables:{b}", 2)
-        m = _re.match(
-            r"^DETACH\s+TABLE\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?"
-            r"(?:\s+PERMANENTLY)?\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            # metadata-only: the files stay, the name stops resolving
-            name = m.group(1)
-            spec = self.table_specs.pop(name, None)
-            if spec is None:
-                return _done(name, "detach_table", 0)
-            self._detached[name] = spec
-            self.spark.catalog.dropTempView(name)
-            self.spark.catalog.dropTempView(f"{name}_raw")
-            return self.spark.createDataFrame(
-                [(name, "detach_table", 1)],
-                "table string, op string, affected long",
-            )
-        m = _re.match(
-            r"^ATTACH\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            from ed_clickhouse_spark import ddl as _ddl
-
-            name = m.group(1)
-            spec = self._detached.pop(name, None)
-            if spec is None:
-                raise KeyError(
-                    f"table {name!r} is not detached — ATTACH"
-                    " re-registers a DETACHed table's files"
-                )
-            self.table_specs[name] = spec
-            _ddl.register_view(self.spark, spec, self.warehouse)
-            return _done(name, "attach_table", 1)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+FREEZE"
-            r"(?:\s+WITH\s+NAME\s+'(\w+)')?\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            # snapshot via hardlinks under <warehouse>/shadow/<label>/,
-            # exactly ClickHouse's FREEZE mechanism (copy2 fallback for
-            # filesystems without link support)
-            spec, path = _table(m.group(1))
-            if spec is None and not os.path.isdir(path):
-                raise KeyError(f"no table {m.group(1)!r}")
-            shadow_root = os.path.join(self.warehouse, "shadow")
-            os.makedirs(shadow_root, exist_ok=True)
-            label = m.group(2) or str(len(os.listdir(shadow_root)) + 1)
-            dest_root = os.path.join(shadow_root, label, m.group(1))
-            n = 0
-            for root, _dirs, files in os.walk(path):
-                rel = os.path.relpath(root, path)
-                dest = os.path.join(dest_root, rel)
-                os.makedirs(dest, exist_ok=True)
-                for fn in files:
-                    dst = os.path.join(dest, fn)
-                    if os.path.exists(dst):
-                        continue
-                    try:
-                        os.link(os.path.join(root, fn), dst)
-                    except OSError:
-                        import shutil as _shutil
-
-                        _shutil.copy2(os.path.join(root, fn), dst)
-                    n += 1
-            return _done(m.group(1), f"freeze:{label}", n)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+COMMENT\s+'.*'\s*$",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            # table comments are metadata-only, like COMMENT COLUMN
-            return _done(m.group(1), "modify_comment", 1)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+COLUMN\s+`?(\w+)`?\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            # MATERIALIZED/DEFAULT expressions are computed on READ here
-            # (the served view), so a file backfill is semantically a
-            # no-op — accepted so CH maintenance scripts run unchanged
-            return _done(m.group(1), f"materialize_column:{m.group(2)}", 0)
-        if _re.match(
-            r"^ALTER\s+TABLE\s+\w+\s+(ATTACH|DETACH)\s+PARTITION\b",
-            q, _re.I,
-        ):
-            raise ValueError(
-                "ALTER ... ATTACH/DETACH PARTITION is not implemented —"
-                " there is no detached-parts store here; use ALTER"
-                " TABLE t DROP PARTITION to remove data and INSERT /"
-                " sources/io.py to add it"
-            )
-        if _re.match(r"^ALTER\s+TABLE\s+\w+\s+CLEAR\s+COLUMN\b", q, _re.I):
-            raise ValueError(
-                "ALTER ... CLEAR COLUMN is not implemented — run"
-                " ALTER TABLE t UPDATE col = <default> WHERE"
-                " <partition predicate> (the same rewrite ClickHouse"
-                " executes)"
-            )
-        m = _re.match(
-            r"^DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.+)$", q, _re.I | _re.S
-        )
-        if m:
-            # lightweight DELETE: identical end state to ALTER DELETE
-            # here (no mask column — mutations are synchronous)
-            _spec, path = _table(m.group(1))
-            rs, cf = _mutation_read_args(_spec)
-            n = _mut.delete_where(
-                self.spark, path, F.expr(m.group(2)),
-                read_schema=rs, conform=cf,
-            )
-            _rebuild_projections(m.group(1))
-            return _done(m.group(1), "delete", n)
-        if _re.match(r"^KILL\s+MUTATION\b", q, _re.I):
-            # mutations run synchronously inside ch_sql — there is
-            # never a pending mutation to kill
-            return self.spark.createDataFrame(
-                [("", "kill_mutation", 0)],
-                "table string, op string, affected long",
-            )
-        m = _re.match(
-            r"^SYSTEM\s+(STOP|START)\s+MERGES(?:\s+`?(\w+)`?)?\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            # merges happen only inside OPTIMIZE here — no background
-            # scheduler to pause
-            return self.spark.createDataFrame(
-                [(m.group(2) or "", f"{m.group(1).lower()}_merges", 0)],
-                "table string, op string, affected long",
-            )
-        if _re.match(r"^SYSTEM\s+FLUSH\s+LOGS\s*$", q, _re.I):
-            # the query log is in-memory and always current
-            return self.spark.createDataFrame(
-                [("", "flush_logs", len(self._query_log))],
-                "table string, op string, affected long",
-            )
-        m = _re.match(
-            r"^SYSTEM\s+RELOAD\s+DICTIONAR(?:Y\s+`?(\w+)`?|IES)\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            # dictionaries snapshot their source at CREATE; re-running
-            # CREATE DICTIONARY is the refresh (LIFETIME stance)
-            from ed_clickhouse_spark.operators import dictionary as _dic
-
-            return self.spark.createDataFrame(
-                [(m.group(1) or "", "reload_dictionaries",
-                  len(_dic._DICTS))],
-                "table string, op string, affected long",
-            )
-        if _re.match(r"^SYSTEM\s+DROP\s+\w+\s+CACHE\s*$", q, _re.I):
-            self.spark.catalog.clearCache()
-            return self.spark.createDataFrame(
-                [("", "drop_cache", 1)],
-                "table string, op string, affected long",
-            )
-        if _re.match(r"^UNDROP\s+TABLE\b", q, _re.I):
-            raise ValueError(
-                "UNDROP TABLE is not implemented — DROP TABLE deletes"
-                " files immediately here (no detached-parts retention);"
-                " restore from an ALTER TABLE ... FREEZE snapshot under"
-                " <warehouse>/shadow/"
-            )
-        m = _re.match(r"^CHECK\s+TABLE\s+`?(\w+)`?\s*$", q, _re.I)
-        if m:
-            # readability pass over every file (the role CH's checksum
-            # verification plays); raises on a corrupt footer
-            _spec, path = _table(m.group(1))
-            self.spark.read.parquet(path).count()
-            return self.spark.createDataFrame(
-                [(m.group(1), "check_table", 1)],
-                "table string, op string, affected long",
-            )
-        m = _re.match(r"^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", q, _re.I)
-        if m:
-            name = m.group(1)
-            path = os.path.join(self.warehouse, name)
-            existed = os.path.isdir(path)
-            if existed:
-                import shutil as _shutil
-
-                _shutil.rmtree(path)
-            dropped = self.table_specs.pop(name, None)
-            self.spark.catalog.dropTempView(name)
-            self.spark.catalog.dropTempView(f"{name}_raw")
-            for proj in (dropped.projections if dropped else []):
-                from ed_clickhouse_spark import ddl as _ddl
-
-                ppath = _ddl.projection_path(self.warehouse, name, proj.name)
-                if os.path.isdir(ppath):
-                    import shutil as _shutil
-
-                    _shutil.rmtree(ppath)
-                self.spark.catalog.dropTempView(f"{name}__proj_{proj.name}")
-                self.spark.catalog.dropTempView(f"{name}__proj_{proj.name}_parts")
-            return self.spark.createDataFrame(
-                [(name, "drop_table", 1 if existed else 0)],
-                "table string, op string, affected long",
-            )
-        m = _re.match(r"^RENAME\s+TABLE\s+(\w+)\s+TO\s+(\w+)\s*$", q, _re.I)
-        if m:
-            from dataclasses import replace as _replace
-
-            old, new = m.group(1), m.group(2)
-            spec, path = _table(old)
-            os.rename(path, os.path.join(self.warehouse, new))
-            self.spark.catalog.dropTempView(old)
-            self.spark.catalog.dropTempView(f"{old}_raw")
-            self.table_specs.pop(old, None)
-            if spec is not None:
-                spec = _replace(spec, name=new)
-                self.table_specs[new] = spec
-            return _done(new, "rename_table", 1)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+(ADD|DROP|RENAME|MODIFY)\s+COLUMN\b.*$",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            from ed_clickhouse_spark import ddl as _ddl
-
-            spec = _ddl.apply_alter(self.spark, q, self.table_specs, self.warehouse)
-            self.table_specs[spec.name] = spec
-            return _done(spec.name, f"{m.group(2).lower()}_column", 1)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+ADD\s+(PROJECTION\s+.+)$", q, _re.I | _re.S
-        )
-        if m:
-            from ed_clickhouse_spark import ddl as _ddl
-
-            spec, path = _table(m.group(1))
-            if spec is None:
-                raise KeyError(f"no spec for table {m.group(1)!r}")
-            proj = _ddl._parse_projection(m.group(2))
-            if any(p.name == proj.name for p in spec.projections):
-                raise ValueError(f"projection {proj.name!r} already exists")
-            spec.projections.append(proj)
-            # backfill (≙ MATERIALIZE PROJECTION): one pass over the
-            # existing table builds the initial partial states; later
-            # inserts maintain them incrementally
-            base = self.spark.read.parquet(path)
-            _ddl.projection_batch(base, proj).write.mode("overwrite").parquet(
-                _ddl.projection_path(self.warehouse, spec.name, proj.name)
-            )
-            return _done(m.group(1), f"add_projection:{proj.name}", 1)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+DROP\s+PROJECTION\s+`?(\w+)`?\s*$", q, _re.I
-        )
-        if m:
-            from ed_clickhouse_spark import ddl as _ddl
-
-            spec, _path = _table(m.group(1))
-            if spec is None:
-                raise KeyError(f"no spec for table {m.group(1)!r}")
-            keep = [p for p in spec.projections if p.name != m.group(2)]
-            existed = len(keep) != len(spec.projections)
-            spec.projections[:] = keep
-            ppath = _ddl.projection_path(self.warehouse, m.group(1), m.group(2))
-            if os.path.isdir(ppath):
-                import shutil as _shutil
-
-                _shutil.rmtree(ppath)
-            self.spark.catalog.dropTempView(f"{m.group(1)}__proj_{m.group(2)}")
-            self.spark.catalog.dropTempView(f"{m.group(1)}__proj_{m.group(2)}_parts")
-            return _done(m.group(1), f"drop_projection:{m.group(2)}", 1 if existed else 0)
-        # mutation predicates CAST to BOOLEAN (batch-85): CH treats any
-        # nonzero numeric as true (ALTER ... WHERE 1), where Spark's
-        # ANSI filter demands a boolean — the cast is a no-op on real
-        # predicates and CH-exact on numerics. The optional
-        # `IN PARTITION 'v'` clause folds into the predicate as a
-        # partition-column equality, which _affected_partitions prunes
-        # on — the metadata-speed path CH users expect.
-        def _mut_pred(where: str, path: str, part):
-            pred = F.expr(where).cast("boolean")
-            if part is not None:
-                pc = _mut._partition_col(self.spark, path)
-                if pc is None:
-                    raise ValueError(
-                        "IN PARTITION on an unpartitioned table"
-                    )
-                pred = pred & (F.col(pc) == part)
-            return pred
-
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+DELETE\s+"
-            r"(?:IN\s+PARTITION\s+'?([^'\s]+)'?\s+)?WHERE\s+(.+)$",
-            q, _re.I | _re.S,
-        )
-        if m:
-            _spec, path = _table(m.group(1))
-            rs, cf = _mutation_read_args(_spec)
-            n = _mut.delete_where(
-                self.spark, path,
-                _mut_pred(m.group(3), path, m.group(2)),
-                read_schema=rs, conform=cf,
-            )
-            _rebuild_projections(m.group(1))
-            return _done(m.group(1), "delete", n)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+UPDATE\s+(.+?)\s+"
-            r"(?:IN\s+PARTITION\s+'?([^'\s]+)'?\s+)?WHERE\s+(.+)$",
-            q, _re.I | _re.S,
-        )
-        if m:
-            from ed_clickhouse_spark.ddl import _split_top
-
-            _spec, path = _table(m.group(1))
-            assignments = {}
-            for part in _split_top(m.group(2)):
-                col, expr = part.split("=", 1)
-                assignments[col.strip().strip("`")] = F.expr(expr.strip())
-            rs, cf = _mutation_read_args(_spec)
-            n = _mut.update_where(
-                self.spark,
-                path,
-                _mut_pred(m.group(4), path, m.group(3)),
-                assignments,
-                read_schema=rs,
-                conform=cf,
-            )
-            _rebuild_projections(m.group(1))
-            return _done(m.group(1), "update", n)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+DROP\s+PARTITION\s+'?([^'\s;]+)'?\s*$", q, _re.I
-        )
-        if m:
-            _spec, path = _table(m.group(1))
-            ok = _mut.drop_partition(self.spark, path, m.group(2))
-            _rebuild_projections(m.group(1))
-            return _done(m.group(1), "drop_partition", 1 if ok else 0)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+TTL\s+(\w+)\s*\+\s*"
-            r"(?:INTERVAL\s+)?(\d+)\s*(SECOND|MINUTE|HOUR|DAY|WEEK|MONTH|YEAR)S?\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            # update the eviction policy; enforcement stays on-demand
-            # (apply_ttl), exactly like the CREATE-time TTL clause
-            from dataclasses import replace as _replace2
-
-            spec, _path = _table(m.group(1))
-            if spec is None:
-                raise KeyError(f"no spec for table {m.group(1)!r}")
-            spec = _replace2(
-                spec,
-                ttl=(m.group(2), int(m.group(3)), m.group(4).upper()),
-            )
-            self.table_specs[spec.name] = spec
-            return _done(spec.name, "modify_ttl", 1)
-        m = _re.match(
-            r"^ALTER\s+TABLE\s+(\w+)\s+COMMENT\s+COLUMN\s+`?(\w+)`?\s+'.*'\s*$",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            # column comments are metadata-only in ClickHouse; accepted
-            # as a no-op so migration scripts run unchanged
-            return _done(m.group(1), "comment_column", 1)
-        m = _re.match(
-            r"^OPTIMIZE\s+TABLE\s+(\w+)(?:\s+PARTITION\s+'?([^'\s;]+)'?)?"
-            r"(?:\s+FINAL)?(?:\s+(DEDUPLICATE)(?:\s+BY\s+(.+?))?)?\s*$",
-            q,
-            _re.I,
-        )
-        if m:
-            spec, path = _table(m.group(1))
-            sort_cols = [c for c in (spec.order_by if spec else []) if c]
-            dedup_cols = None
-            if m.group(4):
-                dedup_cols = [
-                    c.strip().strip("`")
-                    for c in m.group(4).strip().strip("()").split(",")
-                    if c.strip()
-                ]
-            rs, cf = _mutation_read_args(spec)
-            n = _mut.compact_partitions(
-                self.spark,
-                path,
-                sort_cols=sort_cols or None,
-                partitions=[m.group(2)] if m.group(2) else None,
-                dedup=bool(m.group(3)),
-                dedup_cols=dedup_cols,
-                read_schema=rs,
-                conform=cf,
-            )
-            # OPTIMIZE also merges projection partial states down to one
-            # row per dims (ClickHouse's background merges do the same
-            # for projection parts)
-            if spec is not None:
-                from ed_clickhouse_spark import ddl as _ddl
-
-                for proj in spec.projections:
-                    _ddl.compact_projection(self.spark, spec, proj, self.warehouse)
-            return _done(m.group(1), "optimize", n)
-        m = _re.match(
-            r"^CREATE\s+DICTIONARY\s+(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s*"
-            r"\((.*?)\)\s*PRIMARY\s+KEY\s+`?(\w+)`?\s*"
-            r".*?SOURCE\s*\(\s*CLICKHOUSE\s*\(\s*TABLE\s+'(\w+)'\s*\)\s*\)",
-            q,
-            _re.I | _re.S,
-        )
-        if m:
-            # ClickHouse external dictionary over a warehouse table.
-            # LAYOUT(...) is parsed-and-ignored — every layout maps to
-            # the broadcast lookup (operators/dictionary.py, size-
-            # guarded); LIFETIME refresh = re-running CREATE DICTIONARY.
-            from ed_clickhouse_spark.ddl import _split_top
-            from ed_clickhouse_spark.operators.dictionary import register_dict
-
-            name, cols_txt, key, src = m.groups()
-            cols = [
-                c.strip().split()[0].strip("`")
-                for c in _split_top(cols_txt)
-                if c.strip()
-            ]
-            df = self.spark.table(src).select(*cols)
-            register_dict(name, df, key)
-            return self.spark.createDataFrame(
-                [(name, "create_dictionary", len(cols))],
-                "table string, op string, affected long",
-            )
-        m = _re.match(r"^DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?\s*$", q, _re.I)
-        if m:
-            from ed_clickhouse_spark.operators import dictionary as _dic
-
-            existed = m.group(1) in _dic._DICTS
-            _dic._DICTS.pop(m.group(1), None)
-            _dic._SIZE_OK.discard(m.group(1))
-            self.spark.catalog.dropTempView(f"dict_{m.group(1)}")
-            return self.spark.createDataFrame(
-                [(m.group(1), "drop_dictionary", 1 if existed else 0)],
-                "table string, op string, affected long",
-            )
-        m = _re.match(r"^TRUNCATE\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", q, _re.I)
-        if m:
-            spec, path = _table(m.group(1))
-            schema = self.spark.read.parquet(path).schema
-            import shutil as _shutil
-
-            _shutil.rmtree(path, ignore_errors=True)
-            self.spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
-            _rebuild_projections(m.group(1))
-            return _done(m.group(1), "truncate", 0)
-        return None
-
-    def _maybe_insert(self, query: str):
-        """Handle the ClickHouse CLI ingestion idiom
+    # -- INSERT statements -------------------------------------------------
+    def _insert_json(self, table: str, payload: str) -> DataFrame:
+        """The ClickHouse CLI ingestion idiom
         ``INSERT INTO <table> FORMAT JSONEachRow\\n{json}\\n{json}...``:
         the inline payload decodes against the migrated table's DECLARED
         schema (from_json — malformed rows become NULL columns exactly
         like the streaming decode path) and appends under the table's
-        MergeTree-equivalent write policy (partition dirs + ORDER BY
-        sort). Returns a 1-row (table, rows_inserted) DataFrame, or
-        None when the statement is not an INSERT."""
-        import re as _re
-
-        fm = _re.match(
-            r"^\s*INSERT\s+INTO\s+(\w+)\s+FORMAT\s+"
-            r"(CSVWithNames|CSV|TSVWithNames|TSV|TabSeparatedWithNames|"
-            r"TabSeparated|JSONCompactEachRow|TSKV|Values)\s*[\n ](.*)$",
-            query,
-            _re.I | _re.S,
-        )
-        if fm:
-            return self._insert_format(
-                fm.group(1), fm.group(2), fm.group(3)
-            )
-        m = _re.match(
-            r"^\s*INSERT\s+INTO\s+(\w+)\s+FORMAT\s+(JSONEachRow)\s*\n(.*)$",
-            query,
-            _re.I | _re.S,
-        )
-        if not m:
-            sm = _re.match(
-                r"^\s*INSERT\s+INTO\s+(\w+)\s*(\([^)]*\))?\s*"
-                r"(SELECT\b.*)$",
-                query, _re.I | _re.S,
-            )
-            if sm:
-                return self._insert_select(
-                    sm.group(1), sm.group(3), sm.group(2)
-                )
-            vm = _re.match(
-                r"^\s*INSERT\s+INTO\s+(\w+)\s*(\([^)]*\))?\s*VALUES\s*(.+)$",
-                query,
-                _re.I | _re.S,
-            )
-            if vm:
-                return self._insert_values(
-                    vm.group(1), vm.group(2), vm.group(3)
-                )
-            if _re.match(r"^\s*INSERT\b", query, _re.I):
-                raise ValueError(
-                    "only INSERT INTO <table> FORMAT JSONEachRow with an "
-                    "inline payload or INSERT INTO <table> SELECT ... is "
-                    "supported; use DataFrame writes or the ingest "
-                    "pipeline for other paths"
-                )
-            return None
-        from ed_clickhouse_spark import ddl
-
-        table, payload = m.group(1), m.group(3)
-        spec = self.table_specs.get(table)
-        if spec is None:
-            raise KeyError(f"unknown table {table!r}; run migrate() first")
+        MergeTree-equivalent write policy."""
+        spec = self._declared(table)
         lines = [ln for ln in payload.splitlines() if ln.strip()]
         raw = self.spark.createDataFrame([(ln,) for ln in lines], "j string")
         decoded = raw.select(
             F.from_json("j", spec.schema).alias("r")
         ).select("r.*")
-        written = ddl.append_rows(decoded, spec, self.warehouse)
-        ddl.register_view(self.spark, spec, self.warehouse)
-        # fire materialized-view insert triggers on the written batch
-        # (DEFAULT/MATERIALIZED applied) and re-register their merged
-        # read views (parquet file listings are snapshotted per plan, so
-        # stale views would miss new states)
-        for mv in self.matviews.values():
-            if mv.spec.source == table:
-                mv.on_batch(written)
-                self._register_mv(mv)
-        return self.spark.createDataFrame(
-            [(table, len(lines))], "table string, rows_inserted long"
-        )
+        return self._append(table, decoded, len(lines))
 
-    def _insert_format(self, table: str, fmt: str, payload: str):
+    def _insert_format(self, table: str, fmt: str, payload: str) -> DataFrame:
         """The clickhouse-client inline-payload formats beyond
-        JSONEachRow (r8 probe batch 51): CSV[WithNames],
+        JSONEachRow and Values (r8 probe batch 51): CSV[WithNames],
         TSV/TabSeparated[WithNames], JSONCompactEachRow (positional
-        JSON arrays), TSKV (key=value pairs) and the Values form
-        (delegates to the VALUES literal parser). Text rows decode
+        JSON arrays) and TSKV (key=value pairs). Text rows decode
         against the declared schema positionally (WithNames headers
         reorder by name), then append under the table's write policy —
         the same path as JSONEachRow. RowBinary/Native stay refused:
         binary wire formats belong to the streaming decode path."""
-        import json as _json
-
-        from ed_clickhouse_spark import ddl
-
-        spec = self.table_specs.get(table)
-        if spec is None:
-            raise KeyError(f"unknown table {table!r}; run migrate() first")
+        spec = self._declared(table)
         f = fmt.lower()
-        if f == "values":
-            return self._insert_values(table, None, payload)
         declared = [fl.name for fl in spec.schema.fields]
         header: list[str] | None = None
         # rows hold str (literal value) or None (NULL); the per-format
@@ -1584,7 +845,7 @@ class Engine:
             rows = parsed
         elif f == "jsoncompacteachrow":
             lines = [ln for ln in payload.splitlines() if ln.strip()]
-            rows = [_json.loads(ln) for ln in lines]
+            rows = [json.loads(ln) for ln in lines]
         elif f == "tskv":
             lines = [ln for ln in payload.splitlines() if ln.strip()]
             dicts = []
@@ -1624,42 +885,29 @@ class Engine:
                 for fl in spec.schema.fields
             ]
         )
-        written = ddl.append_rows(decoded, spec, self.warehouse)
-        ddl.register_view(self.spark, spec, self.warehouse)
-        for mv in self.matviews.values():
-            if mv.spec.source == table:
-                mv.on_batch(written)
-                self._register_mv(mv)
-        return self.spark.createDataFrame(
-            [(table, len(rows))], "table string, rows_inserted long"
-        )
+        return self._append(table, decoded, len(rows))
 
     def _insert_values(self, table: str, col_list: str | None, values: str) -> DataFrame:
         """``INSERT INTO t [(cols)] VALUES (..), (..)`` — the clickhouse-
-        client literal form.  Tuples parse at paren/quote depth (string
-        literals may contain commas/parens), values resolve as one
-        SELECT over a VALUES clause so expressions (now(), arithmetic)
-        work, then the batch appends through the normal insert path,
-        firing MV triggers."""
-        from ed_clickhouse_spark import ddl
-        from ed_clickhouse_spark.ddl import _split_top
-
-        spec = self.table_specs.get(table)
-        if spec is None:
-            raise KeyError(f"unknown table {table!r}; run migrate() first")
+        client literal form, also spelled ``FORMAT Values``.  Tuples
+        parse at paren/quote depth (string literals may contain
+        commas/parens), values resolve as one SELECT over a VALUES
+        clause so expressions (now(), arithmetic) work, then the batch
+        appends through the normal insert path, firing MV triggers."""
+        spec = self._declared(table)
         cols = (
-            [c.strip().strip("`") for c in _split_top(col_list.strip("() "))]
+            [c.strip().strip("`") for c in ddl._split_top(col_list.strip("() "))]
             if col_list
             else [f.name for f in spec.schema.fields]
         )
-        tuples = [t.strip() for t in _split_top(values) if t.strip()]
+        tuples = [t.strip() for t in ddl._split_top(values) if t.strip()]
         bad = [t for t in tuples if not (t.startswith("(") and t.endswith(")"))]
         if bad:
             raise ValueError(f"malformed VALUES tuple(s): {bad[:3]}")
         sql = " UNION ALL ".join(
             "SELECT " + ", ".join(
                 f"{expr.strip()} AS `{c}`"
-                for c, expr in zip(cols, _split_top(t[1:-1]))
+                for c, expr in zip(cols, ddl._split_top(t[1:-1]))
             )
             for t in tuples
         )
@@ -1671,47 +919,10 @@ class Engine:
                 # omitted columns: NULL unless a DEFAULT/MATERIALIZED
                 # expression fills them in append_rows
                 result = result.withColumn(f.name, F.lit(None).cast(f.dataType))
-        written = ddl.append_rows(result, spec, self.warehouse)
-        ddl.register_view(self.spark, spec, self.warehouse)
-        for mv in self.matviews.values():
-            if mv.spec.source == table:
-                mv.on_batch(written)
-                self._register_mv(mv)
-        return self.spark.createDataFrame(
-            [(table, len(tuples))], "table string, rows_inserted long"
-        )
-
-    def _create_table_as(self, name: str, head: str, select_sql: str) -> DataFrame:
-        """``CREATE TABLE t [ENGINE = ...] [ORDER BY ...] [PARTITION BY
-        ...] AS SELECT ...``: the result schema is inverse-mapped to
-        ClickHouse column types and assembled into canonical DDL, so CTAS
-        reuses the exact provisioning path migrations take (engine merge
-        semantics, write policy, views).  The SELECT then appends through
-        the normal insert path (one job; MV triggers don't apply — the
-        new table has none)."""
-        import re
-
-        from ed_clickhouse_spark import ddl
-        from ed_clickhouse_spark.chsql import translate
-
-        if name in self.table_specs:
-            raise ValueError(f"table {name!r} already exists")
-        result = self.spark.sql(translate(select_sql, self.table_specs).sql)
-        cols = ",\n  ".join(
-            f"`{f.name}` {ddl.spark_type_to_ch(f.dataType)}"
-            for f in result.schema.fields
-        )
-        head = head.strip()
-        if not re.search(r"\bENGINE\s*=", head, re.I):
-            head = f"ENGINE = MergeTree()\n{head}" if head else "ENGINE = MergeTree()"
-        synthesized = f"CREATE TABLE {name} (\n  {cols}\n) {head}"
-        spec = ddl.parse_clickhouse_ddl(synthesized)
-        ddl.provision_table(self.spark, spec, self.warehouse)
-        self.table_specs[name] = spec
-        return self._insert_select(name, select_sql)
+        return self._append(table, result, len(tuples))
 
     def _insert_select(
-        self, table: str, select_sql: str, cols: str | None = None
+        self, table: str, cols: str | None, select_sql: str
     ) -> DataFrame:
         """``INSERT INTO t [(cols)] SELECT ...`` — the translated
         SELECT runs as one Catalyst job whose result appends under the
@@ -1727,15 +938,8 @@ class Engine:
         DEFAULT/MATERIALIZED backfill) stays fail-loud. The row count
         comes from an Observation on the append job — no second
         scan."""
-        from pyspark.sql import Observation
-
-        from ed_clickhouse_spark import ddl
-        from ed_clickhouse_spark.chsql import translate
-
-        spec = self.table_specs.get(table)
-        if spec is None:
-            raise KeyError(f"unknown table {table!r}; run migrate() first")
-        result = self.spark.sql(translate(select_sql, self.table_specs).sql)
+        spec = self._declared(table)
+        result = self.spark.sql(chsql.translate(select_sql, self.table_specs).sql)
         if cols:
             listed = [c.strip().strip('`"') for c in
                       cols.strip()[1:-1].split(",") if c.strip()]
@@ -1782,19 +986,424 @@ class Engine:
                 result = result.withColumn(f.name, F.col(f.name).cast(f.dataType))
         obs = Observation(f"ins_{table}")
         result = result.observe(obs, F.count(F.lit(1)).alias("n"))
-        written = ddl.append_rows(result, spec, self.warehouse)
-        ddl.register_view(self.spark, spec, self.warehouse)
-        n = int(obs.get["n"])
-        for mv in self.matviews.values():
-            if mv.spec.source == table:
-                # fire on the written batch (lazy — re-runs the SELECT,
-                # one more job over the input, never the whole table;
-                # non-deterministic SELECTs should materialize first)
-                mv.on_batch(written)
-                self._register_mv(mv)
-        return self.spark.createDataFrame(
-            [(table, n)], "table string, rows_inserted long"
+        return self._append(table, result, obs)
+
+    # -- DDL and mutation statements --------------------------------------
+    # Routed onto ddl.py and the mutation / compaction operators
+    # (operators/mutate.py) so the spellings a reference user runs work
+    # verbatim. Expressions go through F.expr with the ClickHouse SQL
+    # spellings registered, so ``toDate(ts) = '2024-01-01'`` works. All
+    # mutation paths are partition-selective (never a full-table rewrite
+    # unless every partition matches); views are re-registered
+    # afterwards, and each statement returns a _status row.
+    def _create_table_as(self, name: str, head: str, select_sql: str) -> DataFrame:
+        """``CREATE TABLE t [ENGINE = ...] [ORDER BY ...] [PARTITION BY
+        ...] AS SELECT ...``: the result schema is inverse-mapped to
+        ClickHouse column types and assembled into canonical DDL, so CTAS
+        reuses the exact provisioning path migrations take (engine merge
+        semantics, write policy, views).  The SELECT then appends through
+        the normal insert path (one job; MV triggers don't apply — the
+        new table has none)."""
+        if name in self.table_specs:
+            raise ValueError(f"table {name!r} already exists")
+        result = self.spark.sql(chsql.translate(select_sql, self.table_specs).sql)
+        cols = ",\n  ".join(
+            f"`{f.name}` {ddl.spark_type_to_ch(f.dataType)}"
+            for f in result.schema.fields
         )
+        head = head.strip()
+        if not re.search(r"\bENGINE\s*=", head, re.I):
+            head = f"ENGINE = MergeTree()\n{head}" if head else "ENGINE = MergeTree()"
+        synthesized = f"CREATE TABLE {name} (\n  {cols}\n) {head}"
+        spec = ddl.parse_clickhouse_ddl(synthesized)
+        ddl.provision_table(self.spark, spec, self.warehouse)
+        self.table_specs[name] = spec
+        return self._insert_select(name, None, select_sql)
+
+    def _create_table_like(self, or_replace, if_not_exists, name: str, src: str) -> DataFrame:
+        # structure clone (CREATE TABLE a AS b): same spec, empty data
+        src_spec = self._spec_of(src)
+        if name in self.table_specs:
+            if if_not_exists:
+                return self._status(name, "create_table", 0)
+            if not or_replace:
+                raise ValueError(f"table {name!r} already exists")
+            self._drop_table(name)
+        spec = replace(src_spec, name=name, projections=[])
+        ddl.provision_table(self.spark, spec, self.warehouse)
+        self.table_specs[name] = spec
+        return self._status(name, "create_table", 1)
+
+    def _create_table(self, stmt: str, or_replace, if_not_exists, name: str) -> DataFrame:
+        # ad-hoc CREATE TABLE through ch_sql — the same ddl.py
+        # parse/provision path migrate() runs, so a reference
+        # user's interactive DDL works without a migration file
+        if name in self.table_specs:
+            if if_not_exists:
+                return self._status(name, "create_table", 0)
+            if not or_replace:
+                raise ValueError(
+                    f"table {name!r} already exists — use"
+                    " CREATE OR REPLACE TABLE or IF NOT EXISTS"
+                )
+            self._drop_table(name)
+        spec = ddl.parse_clickhouse_ddl(
+            re.sub(r"^CREATE\s+OR\s+REPLACE\s+TABLE", "CREATE TABLE", stmt, flags=re.I)
+        )
+        ddl.provision_table(self.spark, spec, self.warehouse)
+        self.table_specs[spec.name] = spec
+        return self._status(spec.name, "create_table", 1)
+
+    def _create_matview(self, stmt: str) -> DataFrame:
+        """``CREATE MATERIALIZED VIEW`` from ch_sql and from migration
+        files alike; POPULATE backfills from the source's current
+        contents (CH semantics: without it the MV only sees future
+        inserts)."""
+        populate = bool(re.search(r"\bPOPULATE\b", stmt, re.I))
+        stmt = re.sub(r"\bPOPULATE\b", "", stmt, flags=re.I)
+        tm = _MV_TO.match(stmt)
+        if tm:
+            # the TO form: partials land in the NAMED table (the
+            # classic MV -> AggregatingMergeTree rollup pair). The
+            # body — typically -State aggregates — re-runs through
+            # the dialect per inserted batch and appends under the
+            # target's write policy; reads then hit the target
+            # table's own merged view with -Merge spellings.
+            mv = _ToTableMV(self, tm.group(1), tm.group(2), tm.group(3))
+            if mv.to_table not in self.table_specs:
+                raise KeyError(
+                    f"TO table {mv.to_table!r} does not exist —"
+                    " CREATE it first (ClickHouse requires the"
+                    " same)"
+                )
+            if populate:
+                # ClickHouse rejects POPULATE with the TO clause
+                # ("POPULATE is not supported with TO [db].[table]")
+                # — match it; backfill with an explicit
+                # INSERT INTO target SELECT ... instead
+                raise ValueError(
+                    "POPULATE is not allowed with"
+                    " CREATE MATERIALIZED VIEW ... TO (ClickHouse"
+                    " rejects it too) — backfill the target with"
+                    " INSERT INTO ... SELECT"
+                )
+            self.matviews[mv.spec.name] = mv
+            self._refresh(mv.spec.name)
+            return self._status(mv.spec.name, "create_materialized_view", 0)
+        mspec = ddl.parse_materialized_view(stmt)
+        mv = ddl.MatView(self.spark, mspec, self.warehouse)
+        self.matviews[mspec.name] = mv
+        if populate:
+            mv.on_batch(self.spark.table(mspec.source))
+        self._refresh(mspec.name)
+        return self._status(mspec.name, "create_materialized_view", 1 if populate else 0)
+
+    def _create_view(self, name: str, body: str) -> DataFrame:
+        # plain views: the body is CLICKHOUSE dialect — translate
+        # it once and register the Spark SQL as a temp view
+        body = chsql.translate(body, self.table_specs).sql
+        self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {body}")
+        self._refresh(name)
+        return self._status(name, "create_view", 1)
+
+    def _drop_view(self, name: str) -> DataFrame:
+        existed = self.spark.catalog.dropTempView(name)
+        self._refresh(name)
+        return self._status(name, "drop_view", 1 if existed else 0)
+
+    def _exchange_tables(self, a: str, b: str) -> DataFrame:
+        # atomic name swap: every directory of both footprints moves
+        # through a temporary name (projection partials travel with
+        # their table), then the specs swap
+        sa, _pa = self._table(a)
+        sb, _pb = self._table(b)
+        if sa is None or sb is None:
+            raise KeyError(f"EXCHANGE TABLES: no spec for {a!r}/{b!r}")
+        tmp = f"{a}.__xchg"
+        self._move(a, tmp, _projection_names(sa))
+        self._move(b, a, _projection_names(sb))
+        self._move(tmp, b, _projection_names(sa))
+        na, nb = replace(sb, name=a), replace(sa, name=b)
+        self.table_specs[a], self.table_specs[b] = na, nb
+        ddl.register_view(self.spark, na, self.warehouse)
+        ddl.register_view(self.spark, nb, self.warehouse)
+        return self._status(a, f"exchange_tables:{b}", 2)
+
+    def _detach_table(self, name: str) -> DataFrame:
+        # metadata-only: the files stay, the name stops resolving
+        spec = self.table_specs.pop(name, None)
+        if spec is None:
+            return self._status(name, "detach_table", 0)
+        self._detached[name] = spec
+        self._unlink(self._footprint(name, _projection_names(spec)), keep_files=True)
+        return self._status(name, "detach_table", 1)
+
+    def _attach_table(self, name: str) -> DataFrame:
+        spec = self._detached.pop(name, None)
+        if spec is None:
+            raise KeyError(
+                f"table {name!r} is not detached — ATTACH"
+                " re-registers a DETACHed table's files"
+            )
+        self.table_specs[name] = spec
+        ddl.register_view(self.spark, spec, self.warehouse)
+        return self._status(name, "attach_table", 1)
+
+    def _freeze(self, table: str, label) -> DataFrame:
+        # snapshot via hardlinks under <warehouse>/shadow/<label>/,
+        # exactly ClickHouse's FREEZE mechanism (copy2 fallback for
+        # filesystems without link support)
+        _spec, path = self._table(table)
+        shadow_root = os.path.join(self.warehouse, "shadow")
+        os.makedirs(shadow_root, exist_ok=True)
+        label = label or str(len(os.listdir(shadow_root)) + 1)
+        dest_root = os.path.join(shadow_root, label, table)
+        n = 0
+        for root, _dirs, files in os.walk(path):
+            rel = os.path.relpath(root, path)
+            dest = os.path.join(dest_root, rel)
+            os.makedirs(dest, exist_ok=True)
+            for fn in files:
+                dst = os.path.join(dest, fn)
+                if os.path.exists(dst):
+                    continue
+                try:
+                    os.link(os.path.join(root, fn), dst)
+                except OSError:
+                    shutil.copy2(os.path.join(root, fn), dst)
+                n += 1
+        return self._status(table, f"freeze:{label}", n)
+
+    def _modify_comment(self, table: str) -> DataFrame:
+        # table comments are metadata-only, like COMMENT COLUMN
+        return self._status(table, "modify_comment", 1)
+
+    def _materialize_column(self, table: str, col: str) -> DataFrame:
+        # MATERIALIZED/DEFAULT expressions are computed on READ here
+        # (the served view), so a file backfill is semantically a
+        # no-op — accepted so CH maintenance scripts run unchanged
+        return self._status(table, f"materialize_column:{col}", 0)
+
+    def _mutated(self, table: str, op: str, n) -> DataFrame:
+        """Close a data rewrite: rebuild the table's projections and
+        re-register its views."""
+        self._rebuild_projections(table)
+        self._refresh(table)
+        return self._status(table, op, n)
+
+    def _rebuild_projections(self, table: str) -> None:
+        # Mutations invalidate insert-time partial states; like
+        # ClickHouse (which rebuilds or drops projection parts on
+        # mutations), rebuild each projection from the current base —
+        # one pass over the mutated table, not the history.
+        spec = self.table_specs.get(table)
+        if spec is None or not spec.projections:
+            return
+        base = self.spark.read.parquet(os.path.join(self.warehouse, table))
+        for proj in spec.projections:
+            ddl.projection_batch(base, proj).write.mode("overwrite").parquet(
+                ddl.projection_path(self.warehouse, table, proj.name)
+            )
+
+    @staticmethod
+    def _read_args(spec):
+        # rename-aware rewrite args (both column spellings read and
+        # canonicalized); path-only tables fall back to mergeSchema
+        # inside the mutation helpers
+        return ddl.mutation_read_args(spec) if spec is not None else (None, None)
+
+    def _mut_pred(self, where: str, path: str, part):
+        # mutation predicates CAST to BOOLEAN (batch-85): CH treats any
+        # nonzero numeric as true (ALTER ... WHERE 1), where Spark's
+        # ANSI filter demands a boolean — the cast is a no-op on real
+        # predicates and CH-exact on numerics. The optional
+        # `IN PARTITION 'v'` clause folds into the predicate as a
+        # partition-column equality, which _affected_partitions prunes
+        # on — the metadata-speed path CH users expect.
+        pred = F.expr(where).cast("boolean")
+        if part is not None:
+            pc = _mut._partition_col(self.spark, path)
+            if pc is None:
+                raise ValueError("IN PARTITION on an unpartitioned table")
+            pred = pred & (F.col(pc) == part)
+        return pred
+
+    def _delete(self, table: str, part, where: str) -> DataFrame:
+        # ALTER TABLE t DELETE and the lightweight DELETE FROM t share
+        # one path: identical end state here (no mask column —
+        # mutations are synchronous)
+        spec, path = self._table(table)
+        rs, cf = self._read_args(spec)
+        n = _mut.delete_where(
+            self.spark, path, self._mut_pred(where, path, part),
+            read_schema=rs, conform=cf,
+        )
+        return self._mutated(table, "delete", n)
+
+    def _update(self, table: str, sets: str, part, where: str) -> DataFrame:
+        spec, path = self._table(table)
+        assignments = {}
+        for item in ddl._split_top(sets):
+            col, expr = item.split("=", 1)
+            assignments[col.strip().strip("`")] = F.expr(expr.strip())
+        rs, cf = self._read_args(spec)
+        n = _mut.update_where(
+            self.spark, path, self._mut_pred(where, path, part), assignments,
+            read_schema=rs, conform=cf,
+        )
+        return self._mutated(table, "update", n)
+
+    def _drop_partition(self, table: str, value: str) -> DataFrame:
+        _spec, path = self._table(table)
+        ok = _mut.drop_partition(self.spark, path, value)
+        return self._mutated(table, "drop_partition", 1 if ok else 0)
+
+    def _truncate(self, table: str) -> DataFrame:
+        _spec, path = self._table(table)
+        schema = self.spark.read.parquet(path).schema
+        shutil.rmtree(path, ignore_errors=True)
+        self.spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
+        return self._mutated(table, "truncate", 0)
+
+    def _kill_mutation(self) -> DataFrame:
+        # mutations run synchronously inside ch_sql — there is
+        # never a pending mutation to kill
+        return self._status("", "kill_mutation", 0)
+
+    def _system_merges(self, verb: str, table) -> DataFrame:
+        # merges happen only inside OPTIMIZE here — no background
+        # scheduler to pause
+        return self._status(table or "", f"{verb.lower()}_merges", 0)
+
+    def _flush_logs(self) -> DataFrame:
+        # the query log is in-memory and always current
+        return self._status("", "flush_logs", len(self._query_log))
+
+    def _reload_dictionaries(self, name) -> DataFrame:
+        # dictionaries snapshot their source at CREATE; re-running
+        # CREATE DICTIONARY is the refresh (LIFETIME stance)
+        return self._status(name or "", "reload_dictionaries", len(_dic._DICTS))
+
+    def _drop_cache(self) -> DataFrame:
+        self.spark.catalog.clearCache()
+        return self._status("", "drop_cache", 1)
+
+    def _check_table(self, table: str) -> DataFrame:
+        # readability pass over every file (the role CH's checksum
+        # verification plays); raises on a corrupt footer
+        _spec, path = self._table(table)
+        self.spark.read.parquet(path).count()
+        return self._status(table, "check_table", 1)
+
+    def _drop_table(self, name: str) -> DataFrame:
+        existed = os.path.isdir(os.path.join(self.warehouse, name))
+        dropped = self.table_specs.pop(name, None)
+        self._unlink(self._footprint(name, _projection_names(dropped)))
+        return self._status(name, "drop_table", 1 if existed else 0)
+
+    def _rename_table(self, old: str, new: str) -> DataFrame:
+        spec, _path = self._table(old)
+        self._move(old, new, _projection_names(spec))
+        self.table_specs.pop(old, None)
+        if spec is not None:
+            self.table_specs[new] = replace(spec, name=new)
+        self._refresh(new)
+        return self._status(new, "rename_table", 1)
+
+    def _alter_column(self, stmt: str, table: str, verb: str) -> DataFrame:
+        spec = ddl.apply_alter(self.spark, stmt, self.table_specs, self.warehouse)
+        self.table_specs[spec.name] = spec
+        self._refresh(spec.name)
+        return self._status(spec.name, f"{verb.lower()}_column", 1)
+
+    def _add_projection(self, table: str, clause: str) -> DataFrame:
+        spec = self._spec_of(table)
+        proj = ddl._parse_projection(clause)
+        if any(p.name == proj.name for p in spec.projections):
+            raise ValueError(f"projection {proj.name!r} already exists")
+        spec.projections.append(proj)
+        # backfill (≙ MATERIALIZE PROJECTION): one pass over the
+        # existing table builds the initial partial states; later
+        # inserts maintain them incrementally
+        base = self.spark.read.parquet(os.path.join(self.warehouse, table))
+        ddl.projection_batch(base, proj).write.mode("overwrite").parquet(
+            ddl.projection_path(self.warehouse, table, proj.name)
+        )
+        self._refresh(table)
+        return self._status(table, f"add_projection:{proj.name}", 1)
+
+    def _drop_projection(self, table: str, name: str) -> DataFrame:
+        spec = self._spec_of(table)
+        keep = [p for p in spec.projections if p.name != name]
+        existed = len(keep) != len(spec.projections)
+        spec.projections[:] = keep
+        # the projection's own (directory, views) pair — not the table's
+        self._unlink(self._footprint(table, [name])[1:])
+        self._refresh(table)
+        return self._status(table, f"drop_projection:{name}", 1 if existed else 0)
+
+    def _modify_ttl(self, table: str, col: str, n: str, unit: str) -> DataFrame:
+        # update the eviction policy; enforcement stays on-demand
+        # (apply_ttl), exactly like the CREATE-time TTL clause
+        spec = replace(self._spec_of(table), ttl=(col, int(n), unit.upper()))
+        self.table_specs[spec.name] = spec
+        self._refresh(spec.name)
+        return self._status(spec.name, "modify_ttl", 1)
+
+    def _comment_column(self, table: str) -> DataFrame:
+        # column comments are metadata-only in ClickHouse; accepted
+        # as a no-op so migration scripts run unchanged
+        return self._status(table, "comment_column", 1)
+
+    def _optimize(self, table: str, part, dedup, by) -> DataFrame:
+        spec, path = self._table(table)
+        sort_cols = [c for c in (spec.order_by if spec else []) if c]
+        dedup_cols = None
+        if by:
+            dedup_cols = [
+                c.strip().strip("`")
+                for c in by.strip().strip("()").split(",")
+                if c.strip()
+            ]
+        rs, cf = self._read_args(spec)
+        n = _mut.compact_partitions(
+            self.spark,
+            path,
+            sort_cols=sort_cols or None,
+            partitions=[part] if part else None,
+            dedup=bool(dedup),
+            dedup_cols=dedup_cols,
+            read_schema=rs,
+            conform=cf,
+        )
+        # OPTIMIZE also merges projection partial states down to one
+        # row per dims (ClickHouse's background merges do the same
+        # for projection parts)
+        if spec is not None:
+            for proj in spec.projections:
+                ddl.compact_projection(self.spark, spec, proj, self.warehouse)
+        self._refresh(table)
+        return self._status(table, "optimize", n)
+
+    def _create_dictionary(self, name: str, cols_txt: str, key: str, src: str) -> DataFrame:
+        # ClickHouse external dictionary over a warehouse table.
+        # LAYOUT(...) is parsed-and-ignored — every layout maps to
+        # the broadcast lookup (operators/dictionary.py, size-
+        # guarded); LIFETIME refresh = re-running CREATE DICTIONARY.
+        cols = [
+            c.strip().split()[0].strip("`")
+            for c in ddl._split_top(cols_txt)
+            if c.strip()
+        ]
+        _dic.register_dict(name, self.spark.table(src).select(*cols), key)
+        return self._status(name, "create_dictionary", len(cols))
+
+    def _drop_dictionary(self, name: str) -> DataFrame:
+        existed = name in _dic._DICTS
+        _dic._DICTS.pop(name, None)
+        _dic._SIZE_OK.discard(name)
+        self.spark.catalog.dropTempView(f"dict_{name}")
+        return self._status(name, "drop_dictionary", 1 if existed else 0)
 
     def table(self, name: str) -> DataFrame:
         if name != "dlq" and name not in BY_TABLE:
@@ -1852,8 +1461,6 @@ class Engine:
 
         ``reasons`` restricts the replay (e.g. just "unroutable_subject"
         after adding a family); the rest stay in the DLQ untouched."""
-        from pyspark.sql import functions as F
-
         from ed_clickhouse_spark.streaming.pipeline import process_batch
 
         dlq_path = os.path.join(self.warehouse, DLQ_TABLE)
@@ -1876,8 +1483,6 @@ class Engine:
         # with no file lineage.
         batch = batch.localCheckpoint(eager=True)
         staged = keep.localCheckpoint(eager=True) if keep is not None else None
-        import shutil
-
         shutil.rmtree(dlq_path)
         if staged is not None:
             staged.write.mode("append").parquet(dlq_path)
@@ -1984,7 +1589,6 @@ class Engine:
         spelling the dialect front-end translates, with the mechanism
         that implements it. Introspection only — the list is assembled
         from the translation tables, so it can't drift from reality."""
-        from ed_clickhouse_spark import chsql
         from ed_clickhouse_spark.functions.clickhouse import (
             _SQL_SCALAR_ALIASES,
         )
@@ -2063,8 +1667,6 @@ class Engine:
         # ch_sql, merges only inside OPTIMIZE); processes shows no
         # concurrent queries; replicas is single-replica-empty;
         # dictionaries/disks/settings carry real values
-        import shutil as _shutil
-
         spark = self.spark
         spark.createDataFrame(
             [("default", "Atomic")], "name string, engine string"
@@ -2089,13 +1691,11 @@ class Engine:
             "database string, table string, is_leader int,"
             " absolute_delay long",
         ).createOrReplaceTempView("system_replicas")
-        from ed_clickhouse_spark.operators import dictionary as _dic
-
         spark.createDataFrame(
             [(n, "LOADED") for n in sorted(_dic._DICTS)] or [],
             "name string, status string",
         ).createOrReplaceTempView("system_dictionaries")
-        du = _shutil.disk_usage(
+        du = shutil.disk_usage(
             self.warehouse if os.path.isdir(self.warehouse) else "/"
         )
         spark.createDataFrame(
@@ -2123,3 +1723,169 @@ class Engine:
         """≙ the reference's ClickHouse /ping startup check
         (src/click_house.rs:46-59)."""
         return self.spark.sql("SELECT 1").collect()[0][0] == 1
+
+
+def _projection_names(spec) -> list[str]:
+    return [p.name for p in spec.projections] if spec is not None else []
+
+
+def _rx(pattern: str, flags: int = 0) -> re.Pattern:
+    return re.compile(pattern, re.I | flags)
+
+
+def _refuse(message: str):
+    """Handler for a recognised statement this engine does not run."""
+    def refuse(engine, *_groups):
+        raise ValueError(message)
+    return refuse
+
+
+_INSERT = _rx(r"INSERT\b")
+_CREATE_MV = _rx(r"CREATE\s+MATERIALIZED\s+VIEW")
+_MV_TO = _rx(
+    r"^CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?"
+    r"\s+TO\s+`?(\w+)`?\s+AS\s+((?:SELECT|WITH)\b.+)$",
+    re.S,
+)
+
+# Every non-query statement Engine.ch_sql runs, as ordered (pattern,
+# handler) entries: the first pattern that matches wins, and its groups
+# are the handler's arguments after the engine. INSERT forms match the
+# raw text (an inline payload's whitespace is data); every other
+# pattern matches the statement stripped of blanks and trailing ``;``.
+# A handler returns the statement's DataFrame or raises. Text no entry
+# matches is a query (chsql.translate -> projection routing -> Spark).
+_STATEMENTS: list[tuple[re.Pattern, object]] = [
+    # metadata
+    (_rx(r"^SHOW\s+PROCESSLIST$"), Engine._show_processlist),
+    (_rx(r"^SHOW\s+DICTIONARIES$"), Engine._show_dictionaries),
+    (_rx(r"^SHOW\s+SETTINGS(?:\s+(?:I?LIKE)\s+'([^']*)')?$"), Engine._show_settings),
+    (_rx(r"^SHOW\s+(?:TEMPORARY\s+)?TABLES\s+(NOT\s+)?(I?LIKE)\s+'([^']*)'$"),
+     Engine._show_tables_like),
+    (_rx(r"^SHOW\s+GRANTS\b"), Engine._show_grants),
+    (_rx(r"^(?:GRANT|REVOKE)\b"), _refuse(
+        "GRANT/REVOKE are not implemented — this engine is"
+        " single-tenant (no access-control store); enforce"
+        " permissions at the lakehouse/catalog layer"
+    )),
+    (_rx(r"^SHOW\s+CREATE\s+TABLE\s+(\w+)$"), Engine._show_create),
+    # the TABLE keyword is optional in clickhouse-client
+    (_rx(r"^EXISTS\s+(?:TABLE\s+)?(\w+)$"), Engine._exists),
+    (_rx(r"^KILL\s+QUERY\b"), Engine._kill_query),
+    (_rx(r"^EXPLAIN\s+(SYNTAX|AST|PIPELINE|PLAN|ESTIMATE)?\s*(.+)$", re.S),
+     Engine._explain),
+    # INSERT (raw text)
+    (_rx(r"^\s*INSERT\s+INTO\s+(\w+)\s+FORMAT\s+"
+         r"(CSVWithNames|CSV|TSVWithNames|TSV|TabSeparatedWithNames|"
+         r"TabSeparated|JSONCompactEachRow|TSKV)\s*[\n ](.*)$", re.S),
+     Engine._insert_format),
+    (_rx(r"^\s*INSERT\s+INTO\s+(\w+)\s+FORMAT\s+JSONEachRow\s*\n(.*)$", re.S),
+     Engine._insert_json),
+    (_rx(r"^\s*INSERT\s+INTO\s+(\w+)\s*(\([^)]*\))?\s*(SELECT\b.*)$", re.S),
+     Engine._insert_select),
+    (_rx(r"^\s*INSERT\s+INTO\s+(\w+)\s*(\([^)]*\))?\s*(?:FORMAT\s+)?VALUES\s*(.+)$",
+         re.S),
+     Engine._insert_values),
+    (_INSERT, _refuse(
+        "only INSERT INTO <table> FORMAT JSONEachRow with an "
+        "inline payload or INSERT INTO <table> SELECT ... is "
+        "supported; use DataFrame writes or the ingest "
+        "pipeline for other paths"
+    )),
+    # DDL, mutations, SYSTEM
+    (_rx(r"^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*(.*?)\s*"
+         r"\bAS\s+(SELECT\b.+)$", re.S), Engine._create_table_as),
+    (_rx(r"^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
+         r"`?(\w+)`?\s+AS\s+`?(\w+)`?\s*(?:ENGINE\s*=.*)?$", re.S),
+     Engine._create_table_like),
+    (_rx(r"^(CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
+         r"`?(\w+)`?\s*\(.*)$", re.S), Engine._create_table),
+    (_rx(r"^(CREATE\s+MATERIALIZED\s+VIEW\b.*)$", re.S), Engine._create_matview),
+    (_rx(r"^CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+         r"`?(\w+)`?\s+AS\s+(.+)$", re.S), Engine._create_view),
+    (_rx(r"^DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?\s*$"), Engine._drop_view),
+    (_rx(r"^EXCHANGE\s+TABLES\s+`?(\w+)`?\s+AND\s+`?(\w+)`?\s*$"),
+     Engine._exchange_tables),
+    (_rx(r"^DETACH\s+TABLE\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?(?:\s+PERMANENTLY)?\s*$"),
+     Engine._detach_table),
+    (_rx(r"^ATTACH\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s*$"),
+     Engine._attach_table),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+FREEZE(?:\s+WITH\s+NAME\s+'(\w+)')?\s*$"),
+     Engine._freeze),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+COMMENT\s+'.*'\s*$", re.S),
+     Engine._modify_comment),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+COLUMN\s+`?(\w+)`?\s*$"),
+     Engine._materialize_column),
+    (_rx(r"^ALTER\s+TABLE\s+\w+\s+(?:ATTACH|DETACH)\s+PARTITION\b"), _refuse(
+        "ALTER ... ATTACH/DETACH PARTITION is not implemented —"
+        " there is no detached-parts store here; use ALTER"
+        " TABLE t DROP PARTITION to remove data and INSERT /"
+        " sources/io.py to add it"
+    )),
+    (_rx(r"^ALTER\s+TABLE\s+\w+\s+CLEAR\s+COLUMN\b"), _refuse(
+        "ALTER ... CLEAR COLUMN is not implemented — run"
+        " ALTER TABLE t UPDATE col = <default> WHERE"
+        " <partition predicate> (the same rewrite ClickHouse"
+        " executes)"
+    )),
+    (_rx(r"^DELETE\s+FROM\s+(\w+)\s+"
+         r"(?:IN\s+PARTITION\s+'?([^'\s]+)'?\s+)?WHERE\s+(.+)$", re.S),
+     Engine._delete),
+    (_rx(r"^KILL\s+MUTATION\b"), Engine._kill_mutation),
+    (_rx(r"^SYSTEM\s+(STOP|START)\s+MERGES(?:\s+`?(\w+)`?)?\s*$"),
+     Engine._system_merges),
+    (_rx(r"^SYSTEM\s+FLUSH\s+LOGS\s*$"), Engine._flush_logs),
+    (_rx(r"^SYSTEM\s+RELOAD\s+DICTIONAR(?:Y\s+`?(\w+)`?|IES)\s*$"),
+     Engine._reload_dictionaries),
+    (_rx(r"^SYSTEM\s+DROP\s+\w+\s+CACHE\s*$"), Engine._drop_cache),
+    (_rx(r"^UNDROP\s+TABLE\b"), _refuse(
+        "UNDROP TABLE is not implemented — DROP TABLE deletes"
+        " files immediately here (no detached-parts retention);"
+        " restore from an ALTER TABLE ... FREEZE snapshot under"
+        " <warehouse>/shadow/"
+    )),
+    (_rx(r"^CHECK\s+TABLE\s+`?(\w+)`?\s*$"), Engine._check_table),
+    (_rx(r"^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$"), Engine._drop_table),
+    (_rx(r"^RENAME\s+TABLE\s+(\w+)\s+TO\s+(\w+)\s*$"), Engine._rename_table),
+    (_rx(r"^(ALTER\s+TABLE\s+(\w+)\s+(ADD|DROP|RENAME|MODIFY)\s+COLUMN\b.*)$", re.S),
+     Engine._alter_column),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+ADD\s+(PROJECTION\s+.+)$", re.S),
+     Engine._add_projection),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+DROP\s+PROJECTION\s+`?(\w+)`?\s*$"),
+     Engine._drop_projection),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+DELETE\s+"
+         r"(?:IN\s+PARTITION\s+'?([^'\s]+)'?\s+)?WHERE\s+(.+)$", re.S),
+     Engine._delete),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+UPDATE\s+(.+?)\s+"
+         r"(?:IN\s+PARTITION\s+'?([^'\s]+)'?\s+)?WHERE\s+(.+)$", re.S),
+     Engine._update),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+DROP\s+PARTITION\s+'?([^'\s;]+)'?\s*$"),
+     Engine._drop_partition),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+TTL\s+(\w+)\s*\+\s*(?:INTERVAL\s+)?"
+         r"(\d+)\s*(SECOND|MINUTE|HOUR|DAY|WEEK|MONTH|YEAR)S?\s*$"),
+     Engine._modify_ttl),
+    (_rx(r"^ALTER\s+TABLE\s+(\w+)\s+COMMENT\s+COLUMN\s+`?\w+`?\s+'.*'\s*$", re.S),
+     Engine._comment_column),
+    (_rx(r"^OPTIMIZE\s+TABLE\s+(\w+)(?:\s+PARTITION\s+'?([^'\s;]+)'?)?"
+         r"(?:\s+FINAL)?(?:\s+(DEDUPLICATE)(?:\s+BY\s+(.+?))?)?\s*$"),
+     Engine._optimize),
+    (_rx(r"^CREATE\s+DICTIONARY\s+(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s*"
+         r"\((.*?)\)\s*PRIMARY\s+KEY\s+`?(\w+)`?\s*"
+         r".*?SOURCE\s*\(\s*CLICKHOUSE\s*\(\s*TABLE\s+'(\w+)'\s*\)\s*\)", re.S),
+     Engine._create_dictionary),
+    (_rx(r"^DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?\s*$"),
+     Engine._drop_dictionary),
+    (_rx(r"^TRUNCATE\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$"), Engine._truncate),
+]
+
+
+def _statement(query: str):
+    """The first :data:`_STATEMENTS` entry ``query`` matches and its
+    match, or ``(None, None)`` for a query."""
+    stmt = query.strip().rstrip(";").strip()
+    text = query if _INSERT.match(stmt) else stmt
+    for entry in _STATEMENTS:
+        m = entry[0].match(text)
+        if m:
+            return entry, m
+    return None, None

@@ -1,4 +1,5 @@
-"""Source lint: new dialect spellings go through the rewrite primitive.
+"""Source lint: new dialect spellings go through the rewrite primitive,
+and new ClickHouse statements go through the engine's statement table.
 
 ``chsql._rewrite_calls`` owns the call-site loop every function
 spelling used to hand-roll (regex hit, string-literal check, matching
@@ -7,6 +8,12 @@ in one of its ordered tables, not another ``while True:`` loop with its
 own ``_call_end`` — so the counts of both in ``chsql.py`` may only go
 down. Lower the caps when a change removes sites; raising them needs a
 reason a rule table cannot serve.
+
+``Engine.ch_sql`` dispatches every non-query statement through
+``engine._STATEMENTS`` — ordered (pattern, handler) entries — so a new
+statement is one entry plus one handler, not another hand-rolled
+``re.match`` branch, and every handler answers with the one status row
+``Engine._status`` builds.
 """
 
 from __future__ import annotations
@@ -14,6 +21,7 @@ from __future__ import annotations
 from pathlib import Path
 
 CHSQL = Path(__file__).resolve().parent.parent / "ed_clickhouse_spark" / "chsql.py"
+ENGINE = CHSQL.with_name("engine.py")
 
 # the definition, the primitive, its two trailing-group helpers, and
 # the clause-level scanners that are not call-shaped
@@ -36,4 +44,26 @@ def test_while_true_loops_do_not_grow():
     assert n <= MAX_WHILE_TRUE_LOOPS, (
         f"chsql.py has {n} `while True:` loops (cap {MAX_WHILE_TRUE_LOOPS}):"
         " add the spelling as a _rewrite_calls rule instead"
+    )
+
+
+# the one left is _ToTableMV's WITH-list scan; statements match through
+# the compiled patterns of the statement table
+MAX_ENGINE_RE_MATCH_SITES = 1
+STATUS_SCHEMA = '"table string, op string, affected long"'
+
+
+def test_engine_re_match_sites_do_not_grow():
+    n = ENGINE.read_text().count("re.match(")
+    assert n <= MAX_ENGINE_RE_MATCH_SITES, (
+        f"engine.py has {n} `re.match(` sites (cap {MAX_ENGINE_RE_MATCH_SITES}):"
+        " add the statement as an engine._STATEMENTS entry instead"
+    )
+
+
+def test_engine_status_schema_written_once():
+    n = ENGINE.read_text().count(STATUS_SCHEMA)
+    assert n == 1, (
+        f"engine.py spells the status schema {n} times:"
+        " build status rows with Engine._status"
     )

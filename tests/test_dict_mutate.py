@@ -566,3 +566,45 @@ def test_probe_batch85_mutation_tails(spark, tmp_path):
                    " ORDER BY (k)")
         eng.ch_sql("INSERT INTO np85 VALUES (1)")
         eng.ch_sql("ALTER TABLE np85 DELETE IN PARTITION 'x' WHERE 1")
+
+
+def test_escaped_quotes_in_values_and_update(spark, tmp_path):
+    """A backslash-escaped quote inside a string literal neither ends
+    the literal nor lets the comma after it split the VALUES tuple or
+    the UPDATE assignment list."""
+    from ed_clickhouse_spark.engine import Engine
+
+    eng = Engine(str(tmp_path / "wh"), spark)
+    eng.ch_sql("CREATE TABLE v (s String, n Int64) ENGINE = MergeTree() ORDER BY n")
+    eng.ch_sql("INSERT INTO v VALUES ('it\\'s, ok', 1), ('b', 2)")
+    eng.ch_sql("INSERT INTO v VALUES ('c', 3)")
+    eng.ch_sql("ALTER TABLE v UPDATE s = 'a\\'b, c', n = 9 WHERE n = 3")
+    got = sorted((r["s"], r["n"]) for r in spark.table("v").collect())
+    assert got == [("a'b, c", 9), ("b", 2), ("it's, ok", 1)]
+
+
+def test_metadata_and_system_statement_status_rows(spark, tmp_path):
+    """Statements accepted for script compatibility answer with their
+    (table, op, affected) status row."""
+    from ed_clickhouse_spark.engine import Engine
+
+    eng = Engine(str(tmp_path / "wh"), spark)
+    eng.ch_sql("CREATE TABLE c (k Int64, v String) ENGINE = MergeTree() ORDER BY k")
+
+    def status(stmt):
+        r = eng.ch_sql(stmt).collect()
+        assert len(r) == 1
+        return tuple(r[0])
+
+    assert status("ALTER TABLE c MODIFY COMMENT 'key/value pairs'") == (
+        "c", "modify_comment", 1
+    )
+    assert status("ALTER TABLE c MATERIALIZE COLUMN v") == (
+        "c", "materialize_column:v", 0
+    )
+    from ed_clickhouse_spark.operators import dictionary as _dic
+
+    assert status("SYSTEM RELOAD DICTIONARIES") == (
+        "", "reload_dictionaries", len(_dic._DICTS)
+    )
+    assert status("SYSTEM DROP MARK CACHE") == ("", "drop_cache", 1)

@@ -397,3 +397,31 @@ def test_mv_to_scalar_subquery_not_rebound(spark, tmp_path):
            for r in eng.ch_sql("SELECT * FROM out2").collect()}
     # second batch: one row (the batch), mx = 100 from the stored table
     assert got == {"a": (100, 100), "b": (1, 100)}
+
+
+def test_migration_to_table_mv_matches_ch_sql(spark, tmp_path):
+    """A ``CREATE MATERIALIZED VIEW mv TO tgt`` in a migration file
+    builds the same insert trigger ch_sql builds: inserts into the
+    source land in the TO table, not in a self-storing view."""
+    from ed_clickhouse_spark.engine import Engine, _ToTableMV
+
+    mdir = tmp_path / "migrations"
+    mdir.mkdir()
+    (mdir / "001_mv.up.sql").write_text(
+        "CREATE TABLE src (ts DateTime, k String)"
+        " ENGINE = MergeTree() ORDER BY ts;\n"
+        "CREATE TABLE tgt (d Date, n AggregateFunction(count))"
+        " ENGINE = AggregatingMergeTree() ORDER BY d;\n"
+        "CREATE MATERIALIZED VIEW mv TO tgt AS SELECT toDate(ts) AS d,"
+        " countState() AS n FROM src GROUP BY d;\n"
+    )
+    eng = Engine(str(tmp_path / "wh"), spark)
+    eng.migrate(str(mdir))
+    assert isinstance(eng.matviews["mv"], _ToTableMV)
+    eng.ch_sql(
+        'INSERT INTO src FORMAT JSONEachRow\n'
+        '{"ts":"2024-01-01 10:00:00","k":"a"}\n'
+        '{"ts":"2024-01-01 11:00:00","k":"b"}'
+    )
+    got = eng.ch_sql("SELECT d, countMerge(n) AS n FROM tgt GROUP BY d").collect()
+    assert [(str(r["d"]), r["n"]) for r in got] == [("2024-01-01", 2)]

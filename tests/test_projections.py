@@ -481,3 +481,57 @@ FROM reqs GROUP BY path;
     ).collect()
     for r in got2:
         assert abs(r["p95"] - exact[r["path"]][1]) / exact[r["path"]][1] < 0.021
+
+
+S_DDL = (
+    "CREATE TABLE {t} (day Date, region String, amount Float64,"
+    " PROJECTION by_day (SELECT day, sum(amount) GROUP BY day))"
+    " ENGINE = MergeTree() ORDER BY day"
+)
+BY_DAY = "SELECT day, sum(amount) AS s FROM {t} GROUP BY day"
+
+
+def _by_day_table(eng, t, amounts):
+    eng.ch_sql(S_DDL.format(t=t))
+    eng.ch_sql(
+        f"INSERT INTO {t} FORMAT JSONEachRow\n"
+        + "\n".join(
+            f'{{"day":"2024-01-0{d}","region":"r","amount":{a}}}'
+            for d, a in amounts
+        )
+    )
+
+
+def _routed_by_day(eng, t):
+    q = BY_DAY.format(t=t)
+    assert f"{t}__proj_by_day_parts" in eng._route_projection(q)
+    return {str(r["day"]): r["s"] for r in eng.ch_sql(q).collect()}
+
+
+def test_rename_table_moves_projection_data(spark, tmp_path):
+    """RENAME TABLE carries the projection partials with the table: the
+    routed GROUP BY on the new name reads them, and no orphaned
+    ``<old>__proj_<p>`` directory stays in the warehouse."""
+    import os
+
+    eng = Engine(str(tmp_path / "wh"), spark)
+    _by_day_table(eng, "s", [(1, 5.0), (1, 2.0), (2, 7.0)])
+    eng.ch_sql("RENAME TABLE s TO s2")
+    assert _routed_by_day(eng, "s2") == {"2024-01-01": 7.0, "2024-01-02": 7.0}
+    assert sorted(os.listdir(eng.warehouse)) == ["s2", "s2__proj_by_day"]
+    assert not spark.catalog.tableExists("s__proj_by_day_parts")
+
+
+def test_exchange_tables_swaps_projection_data(spark, tmp_path):
+    """EXCHANGE TABLES swaps projection partials along with the table
+    files, so each name's routed answer matches its new contents."""
+    eng = Engine(str(tmp_path / "wh"), spark)
+    _by_day_table(eng, "a", [(1, 1.0), (2, 2.0)])
+    _by_day_table(eng, "b", [(1, 10.0), (3, 30.0)])
+    r = eng.ch_sql("EXCHANGE TABLES a AND b").collect()[0]
+    assert (r["table"], r["op"], r["affected"]) == ("a", "exchange_tables:b", 2)
+    assert _routed_by_day(eng, "a") == {"2024-01-01": 10.0, "2024-01-03": 30.0}
+    assert _routed_by_day(eng, "b") == {"2024-01-01": 1.0, "2024-01-02": 2.0}
+    for t in ("a", "b"):
+        direct = {str(r["day"]): r["s"] for r in eng.sql(BY_DAY.format(t=t)).collect()}
+        assert _routed_by_day(eng, t) == direct
