@@ -18,8 +18,9 @@ the engine's Spark-native equivalents:
 
   * column types   -> Spark ``StructType`` (see ``ch_type_to_spark``);
   * ORDER BY       -> ``sortWithinPartitions`` write policy (tight parquet
-                      row-group min/max stats ≙ the sparse primary index —
-                      same policy as ``sources/writer.py``);
+                      row-group min/max stats ≙ the sparse primary index;
+                      ``append_rows`` is the one write path, for declared
+                      tables and streamed event families alike);
   * PARTITION BY   -> a derived partition directory column
                       (``toYYYYMM(ts)`` ≙ month dirs, ``toDate(ts)`` ≙ day
                       dirs) -> partition pruning ≙ partition elimination;
@@ -616,14 +617,30 @@ def provision_table(spark: SparkSession, spec: TableSpec, warehouse: str) -> str
     return path
 
 
+def write_order(
+    df: DataFrame, order: list[str], partition_cols: list[str] = ()
+) -> DataFrame:
+    """Sort each task's rows for a write: the partition columns first,
+    then ``order``. The prefix matters: the dynamic-partition writer
+    demands partition-column ordering and inserts its own NON-STABLE
+    sort when it is missing, which scrambles ``order`` inside every
+    file (measured: 64/64 files out of order). Within a file all rows
+    share the partition values, so the prefix leaves the per-file order
+    exactly ``order`` — tight row-group min/max stats, the sparse
+    primary index of a MergeTree ORDER BY."""
+    lead = list(partition_cols)
+    return df.sortWithinPartitions(*lead, *[c for c in order if c not in lead])
+
+
 def append_rows(df: DataFrame, spec: TableSpec, warehouse: str) -> DataFrame:
     """Append a batch under the spec's MergeTree-equivalent write policy:
     derived partition directories + ORDER BY sort within partitions
-    (same policy as sources/writer.py:append_events, generalized).
-    Returns the transformed batch (DEFAULT/MATERIALIZED applied) so
-    callers can fire MV triggers on exactly what was written — note the
-    returned frame is lazy, so re-evaluating it costs one more job over
-    the INPUT (never the table)."""
+    (:func:`write_order`). Every table write goes through here — ch_sql
+    INSERTs, materialized-view targets and the streaming ingest of the
+    event families. Returns the transformed batch (DEFAULT/MATERIALIZED
+    applied) so callers can fire MV triggers on exactly what was
+    written — note the returned frame is lazy, so re-evaluating it costs
+    one more job over the INPUT (never the table)."""
     pc = spec.partition_column()
     out = df
     # DEFAULT fills omitted/NULL values, MATERIALIZED always computes —
@@ -647,16 +664,7 @@ def append_rows(df: DataFrame, spec: TableSpec, warehouse: str) -> DataFrame:
     if pc:
         out = out.withColumn(pc[0], F.expr(pc[1]))
     if writer_cols:
-        # prefix the partition column: the dynamic-partition writer
-        # demands partition-column ordering and inserts a NON-STABLE
-        # sort when it is missing, scrambling the ORDER BY layout
-        # inside every file (see sources/writer.py append_events).
-        # Within a file all rows share the partition value, so the
-        # prefix changes nothing about the intended per-file order.
-        sort_cols = [c for c in writer_cols if not pc or c != pc[0]]
-        out = out.sortWithinPartitions(
-            *([pc[0]] if pc else []), *sort_cols
-        )
+        out = write_order(out, writer_cols, [pc[0]] if pc else [])
     w = out.write.mode("append")
     for c in spec.bloom_cols:
         # ClickHouse INDEX ... TYPE bloom_filter -> parquet bloom filter
@@ -698,7 +706,7 @@ def projection_batch(df: DataFrame, proj: ProjectionSpec) -> DataFrame:
         return df.groupBy(*proj.dims).agg(*aggs)
     out = df.select(*proj.dims)
     if proj.order_by:
-        out = out.sortWithinPartitions(*proj.order_by)
+        out = write_order(out, proj.order_by)
     return out
 
 
@@ -929,16 +937,21 @@ def final_read(df: DataFrame, spec: TableSpec) -> DataFrame:
 
 
 def mutation_read_args(spec: TableSpec):
-    """(read_schema, conform) for path-level rewrites on this table.
+    """(read_schema, conform) for reading this table's files — the
+    served view (register_view) and path-level rewrites alike.
 
+    ``read_schema`` is the DECLARED schema, not a file-inferred one:
+    files written before an ALTER ADD COLUMN lack the column (reads back
+    NULL), files written before a DROP carry dead bytes (ignored), and
+    there is no mergeSchema footer sweep — the 100 TB-friendly choice.
     RENAME COLUMN is metadata-only, so after a rename plus post-rename
-    inserts the directory holds files with BOTH spellings.  A rewrite
-    that reads with a footer-inferred schema sees only one of them and
-    silently drops the other vintage's values.  ``read_schema`` is the
-    declared schema plus every legacy stored name (exactly what
-    register_view reads); ``conform`` coalesces each declared column
-    with its stored twin and drops the twin, so the rewrite emits
-    canonical files carrying all vintages' values."""
+    inserts the directory holds files with BOTH spellings; a footer-
+    inferred read sees only one of them and silently drops the other
+    vintage's values. ``read_schema`` therefore adds every legacy stored
+    name (same type) and the derived partition column; ``conform``
+    coalesces each declared column with its stored twin and drops the
+    twin, so a rewrite emits canonical files carrying all vintages'
+    values."""
     read_schema = T.StructType(list(spec.schema.fields))
     legacy: list[tuple[str, list[str]]] = []
     declared_names = [f.name for f in spec.schema.fields]
@@ -949,9 +962,10 @@ def mutation_read_args(spec: TableSpec):
             if s != new_name and s not in declared_names
         ]
         for stored in keep:
-            read_schema = read_schema.add(
-                T.StructField(stored, types.get(new_name, T.StringType()), True)
-            )
+            if stored not in read_schema.fieldNames():
+                read_schema = read_schema.add(
+                    T.StructField(stored, types.get(new_name, T.StringType()), True)
+                )
         if keep:
             legacy.append((new_name, keep))
     pc0 = spec.partition_column()
@@ -988,67 +1002,16 @@ def register_view(spark: SparkSession, spec: TableSpec, warehouse: str) -> None:
     path = os.path.join(warehouse, spec.name)
     if not os.path.exists(path):
         return
-    # Read with the DECLARED schema, not file-inferred: files written
-    # before an ALTER ADD COLUMN lack the new column (reads back NULL),
-    # files written before a DROP carry the dead bytes (ignored). This is
-    # also the 100 TB-friendly choice — no mergeSchema footer sweep.
-    read_schema = T.StructType(list(spec.schema.fields))
-    # RENAMEd columns: files written before EACH rename carry one of the
-    # legacy stored spellings — read them all (same type) so the serve
-    # step can coalesce every vintage
-    for new_name, stored_names in spec.renames.items():
-        for stored in stored_names:
-            if stored != new_name and stored not in [
-                f.name for f in read_schema.fields
-            ]:
-                dt = dict(
-                    (f.name, f.dataType) for f in spec.schema.fields
-                ).get(new_name, T.StringType())
-                read_schema = read_schema.add(T.StructField(stored, dt, True))
-    pc0 = spec.partition_column()
-    if pc0 and pc0[0] not in [f.name for f in read_schema.fields]:
-        ptype = {
-            "p_month": T.IntegerType(),
-            "p_date": T.DateType(),
-            "p_year": T.IntegerType(),
-        }.get(pc0[0])
-        if ptype is not None:
-            read_schema = read_schema.add(T.StructField(pc0[0], ptype, True))
-    try:
-        raw = spark.read.schema(read_schema).parquet(path)
-    except Exception:
-        # empty partitioned table: no data files yet to infer from — serve
-        # the declared schema (plus the derived partition column)
-        empty = spark.createDataFrame([], spec.schema)
-        pc = spec.partition_column()
-        if pc and pc[0] not in empty.columns:
-            empty = empty.withColumn(pc[0], F.expr(pc[1]))
-        raw = empty
-    # conform to the (possibly ALTERed) declared schema: columns added
-    # after old files were written read back NULL; dropped columns are
-    # hidden from the served view (bytes stay until the next OPTIMIZE)
-    pc = spec.partition_column()
+    read_schema, conform = mutation_read_args(spec)
+    raw = spark.read.schema(read_schema).parquet(path)
+    if conform is not None:
+        raw = conform(raw)
+    # serve the (possibly ALTERed) declared columns plus the derived
+    # partition column; dropped columns stay hidden (bytes stay until
+    # the next OPTIMIZE)
     declared = [f.name for f in spec.schema.fields]
-
-    def _serve(f):
-        stored_names = [
-            s for s in spec.renames.get(f.name, [])
-            if s != f.name and s in raw.columns
-        ]
-        if stored_names:
-            # rows written before each RENAME carry one of the legacy
-            # spellings; newest spelling wins on the impossible overlap
-            return F.coalesce(
-                F.col(f.name), *[F.col(s) for s in reversed(stored_names)]
-            ).alias(f.name)
-        if f.name in raw.columns:
-            return F.col(f.name)
-        return F.lit(None).cast(f.dataType).alias(f.name)
-
-    cols = [_serve(f) for f in spec.schema.fields]
-    if pc and pc[0] in raw.columns and pc[0] not in declared:
-        cols.append(F.col(pc[0]))
-    raw = raw.select(*cols)
+    pc = spec.partition_column()
+    raw = raw.select(*declared, *([pc[0]] if pc and pc[0] not in declared else []))
     raw.createOrReplaceTempView(f"{spec.name}_raw")
     served = final_read(raw, spec)
     # ALIAS columns: computed at read, never stored (ClickHouse contract)
@@ -1464,9 +1427,10 @@ class MatView:
         from ed_clickhouse_spark.streaming.matview import StreamingMatView
 
         self.spec = spec
+        self.path = os.path.join(warehouse, "_views", spec.name)  # the states
         self._inner = StreamingMatView(
             spark,
-            os.path.join(warehouse, "_views", spec.name),
+            self.path,
             dims=[a for _e, a in spec.dims],
             sums={e: a for e, a in spec.sums.items()},
             mins={e: a for e, a in spec.mins.items()},
@@ -1483,7 +1447,9 @@ class MatView:
                 out = out.withColumn(alias, F.expr(expr))
         return out
 
-    def on_batch(self, batch: DataFrame) -> None:
+    def on_batch(self, batch: DataFrame, epoch_id: int | None = None) -> None:
+        # the epoch is ignored: ch_sql INSERTs append to the same state
+        # directory without one, and the two layouts don't mix
         self._inner.on_batch(self._project(batch))
 
     def read(self, keys: list[str] | None = None) -> DataFrame:
@@ -1581,7 +1547,7 @@ def compact_projection(
             *[getattr(F, func)(col).alias(col) for col, func in proj.partial_cols()]
         )
     else:
-        merged = raw.sortWithinPartitions(*(proj.order_by or proj.dims))
+        merged = write_order(raw, proj.order_by or proj.dims)
     tmp = path.rstrip("/") + "__compacting"
     merged.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)

@@ -30,7 +30,13 @@ from ed_clickhouse_spark.functions import register_sql_aliases
 from ed_clickhouse_spark.operators import dictionary as _dic
 from ed_clickhouse_spark.operators import mutate as _mut
 from ed_clickhouse_spark.session import get_spark
-from ed_clickhouse_spark.sources.registry import DLQ_TABLE, FAMILIES, BY_TABLE
+from ed_clickhouse_spark.sources.registry import (
+    BY_TABLE,
+    DLQ_SPEC,
+    DLQ_TABLE,
+    FAMILIES,
+    table_spec,
+)
 from ed_clickhouse_spark.streaming.pipeline import start_ingest
 
 
@@ -238,15 +244,15 @@ class Engine:
 
     # -- EP3: provisioning ------------------------------------------------
     def init(self) -> None:
-        """Idempotently create all event tables (empty parquet layout) and
-        register them as views — ≙ `CREATE TABLE IF NOT EXISTS` migrations
-        (reference migrations/002..011)."""
+        """Idempotently create all event tables (empty, under each
+        family's declared-or-default spec) and register them as views —
+        ≙ `CREATE TABLE IF NOT EXISTS` migrations (reference
+        migrations/002..011)."""
         os.makedirs(self.warehouse, exist_ok=True)
         for fam in FAMILIES:
-            path = os.path.join(self.warehouse, fam.table)
-            if not os.path.exists(path):
-                empty = self.spark.createDataFrame([], fam.table_schema)
-                empty.write.mode("overwrite").parquet(path)
+            ddl.provision_table(
+                self.spark, table_spec(fam.table, self.table_specs), self.warehouse
+            )
         self.refresh_views()
 
     def _register_mv(self, mv) -> None:
@@ -254,19 +260,36 @@ class Engine:
         name reads MERGED (final values — the default a Spark user
         wants), and ``<name>_state`` exposes the raw mergeable partials
         so saved ClickHouse ``-Merge`` queries (countMerge/sumMerge/
-        uniqMerge) run verbatim through ch_sql."""
+        uniqMerge) run verbatim through ch_sql. A self-storing view has
+        no surfaces until its first insert writes states."""
+        if isinstance(mv, ddl.MatView) and not os.path.isdir(mv.path):
+            return
         mv.read().createOrReplaceTempView(mv.spec.name)
         mv.states().createOrReplaceTempView(f"{mv.spec.name}_state")
 
     def refresh_views(self) -> None:
-        """(Re)register every existing table as a temp view."""
-        for fam in FAMILIES:
-            path = os.path.join(self.warehouse, fam.table)
-            if os.path.exists(path):
-                self.spark.read.parquet(path).createOrReplaceTempView(fam.table)
-        dlq = os.path.join(self.warehouse, DLQ_TABLE)
-        if os.path.exists(dlq):
-            self.spark.read.parquet(dlq).createOrReplaceTempView("dlq")
+        """(Re)register every table on disk under its spec, the DLQ, and
+        then the materialized views' read surfaces."""
+        for name in dict.fromkeys([*BY_TABLE, *self.table_specs]):
+            self._refresh(name)
+        if os.path.exists(os.path.join(self.warehouse, DLQ_TABLE)):
+            self._dlq().createOrReplaceTempView("dlq")
+        for mv in self.matviews.values():
+            self._register_mv(mv)
+
+    def _dlq(self) -> DataFrame:
+        return self.spark.read.schema(DLQ_SPEC.schema).parquet(
+            os.path.join(self.warehouse, DLQ_TABLE)
+        )
+
+    def _stream_kw(self, kw: dict) -> dict:
+        """The ingest arguments every stream mode shares: the table
+        catalog, and ``views`` extended with this Engine's materialized
+        views as insert triggers of their source tables."""
+        views = {t: list(vs) for t, vs in (kw.get("views") or {}).items()}
+        for mv in self.matviews.values():
+            views.setdefault(mv.spec.source, []).append(mv)
+        return {**kw, "views": views, "tables": self.table_specs}
 
     def migrate(self, migrations_dir: str):
         """Apply a directory of ClickHouse ``*.up.sql`` migrations —
@@ -300,12 +323,9 @@ class Engine:
         for key in ("bytes_per_trigger", "trigger_interval_ms"):
             if key in self.ingest_defaults:
                 kw.setdefault(key, self.ingest_defaults[key])
-        if self.matviews:
-            views = dict(kw.get("views") or {})
-            for mv in self.matviews.values():
-                views.setdefault(mv.spec.source, []).append(mv)
-            kw["views"] = views
-        return start_ingest(self.spark, source_dir, self.warehouse, ckpt, **kw)
+        return start_ingest(
+            self.spark, source_dir, self.warehouse, ckpt, **self._stream_kw(kw)
+        )
 
     def ingest_kafka(
         self,
@@ -332,7 +352,7 @@ class Engine:
         if "trigger_interval_ms" in self.ingest_defaults:
             kw.setdefault("trigger_interval_ms", self.ingest_defaults["trigger_interval_ms"])
         return start_ingest_kafka(
-            self.spark, servers, tops, self.warehouse, ckpt, **kw
+            self.spark, servers, tops, self.warehouse, ckpt, **self._stream_kw(kw)
         )
 
     def ingest_nats(
@@ -378,7 +398,9 @@ class Engine:
         bridge = NatsBridge(
             client, spool, max_msgs=self.ingest_defaults.get("max_rows", 100_000)
         )
-        query = start_ingest_nats(self.spark, bridge, self.warehouse, ckpt, **kw)
+        query = start_ingest_nats(
+            self.spark, bridge, self.warehouse, ckpt, **self._stream_kw(kw)
+        )
         return query, bridge
 
     def _kafka_ddl_source(self) -> tuple[str | None, list[str] | None]:
@@ -459,14 +481,14 @@ class Engine:
             [(table, op, int(n))], "table string, op string, affected long"
         )
 
-    def _refresh(self, table: str) -> None:
-        """Re-register a table's views after its files or spec changed;
-        a table without a spec (an event family) re-registers them all."""
-        spec = self.table_specs.get(table)
+    def _refresh(self, name: str) -> None:
+        """Re-register a table's or materialized view's views after its
+        files or spec changed."""
+        spec = table_spec(name, self.table_specs)
         if spec is not None:
             ddl.register_view(self.spark, spec, self.warehouse)
-        else:
-            self.refresh_views()
+        elif name in self.matviews:
+            self._register_mv(self.matviews[name])
 
     def _table(self, name: str):
         spec = self.table_specs.get(name)
@@ -698,6 +720,11 @@ class Engine:
                 ids = set(re.findall(r"[A-Za-z_]\w*", new))
                 if (ids & base_cols) - set(proj.dims):
                     ok = False
+            if new == sql or "*" in new:
+                # the partial-state rows answer only the projection's
+                # aggregates: a query with none of them, or a `*`, reads
+                # rows (or state columns) that are not the table's
+                ok = False
             if ok:
                 return re.sub(
                     rf"\bFROM\s+{table}\b",
@@ -1103,7 +1130,6 @@ class Engine:
         # it once and register the Spark SQL as a temp view
         body = chsql.translate(body, self.table_specs).sql
         self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {body}")
-        self._refresh(name)
         return self._status(name, "create_view", 1)
 
     def _drop_view(self, name: str) -> DataFrame:
@@ -1406,10 +1432,13 @@ class Engine:
         return self._status(name, "drop_dictionary", 1 if existed else 0)
 
     def table(self, name: str) -> DataFrame:
-        if name != "dlq" and name not in BY_TABLE:
+        """``dlq``, or a family or declared table as SQL serves it."""
+        if name == "dlq":
+            return self._dlq()
+        if table_spec(name, self.table_specs) is None:
             raise KeyError(f"unknown table {name!r}; known: {sorted(BY_TABLE)} + ['dlq']")
-        path = os.path.join(self.warehouse, DLQ_TABLE if name == "dlq" else name)
-        return self.spark.read.parquet(path)
+        self._refresh(name)
+        return self.spark.table(name)
 
     def rollup(self, table: str, dest: str, dims: list[str], aggs: dict[str, str]):
         """Materialized daily rollup over one event table (≙ a ClickHouse
@@ -1466,7 +1495,7 @@ class Engine:
         dlq_path = os.path.join(self.warehouse, DLQ_TABLE)
         if not os.path.exists(dlq_path):
             return 0
-        dlq = self.spark.read.parquet(dlq_path)
+        dlq = self._dlq()
         to_replay = dlq if reasons is None else dlq.filter(F.col("reason").isin(reasons))
         n = to_replay.count()
         if n == 0:
@@ -1485,8 +1514,8 @@ class Engine:
         staged = keep.localCheckpoint(eager=True) if keep is not None else None
         shutil.rmtree(dlq_path)
         if staged is not None:
-            staged.write.mode("append").parquet(dlq_path)
-        process_batch(batch, self.warehouse)
+            ddl.append_rows(staged, DLQ_SPEC, self.warehouse)
+        process_batch(batch, self.warehouse, **self._stream_kw({}))
         self.refresh_views()
         return n
 

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ed_clickhouse_spark.ddl import write_order
 from ed_clickhouse_spark.operators.rollup import _conf
 
 
@@ -191,7 +192,7 @@ def compact_partitions(
         n_out = max(1, round(total / (target_mb << 20)))
         out = _dedup(df, None).coalesce(n_out)
         if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
+            out = write_order(out, sort_cols)
         tmp = path.rstrip("/") + "__compacting"
         out.write.mode("overwrite").parquet(tmp)
         import shutil
@@ -215,12 +216,7 @@ def compact_partitions(
     # unrelated partitions through the same tasks.)
     out = sub.repartition(max(len(targets), 1), F.col(pcol))
     if sort_cols:
-        # prefix pcol: without it the dynamic-partition writer inserts
-        # its own non-stable sort and scrambles sort_cols inside every
-        # file (see sources/writer.py append_events)
-        out = out.sortWithinPartitions(
-            pcol, *[c for c in sort_cols if c != pcol]
-        )
+        out = write_order(out, sort_cols, [pcol])
     with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         out.write.mode("overwrite").partitionBy(pcol).parquet(path)
     return len(targets)

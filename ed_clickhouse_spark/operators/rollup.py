@@ -8,7 +8,7 @@ refresh either. This operator maintains a rollup table **incrementally
 by partition**:
 
   * the source is a date-partitioned event table (the engine's write
-    layout, ``sources/writer.py``);
+    layout, ``registry.EventFamily.spec`` written by ``ddl.append_rows``);
   * a refresh lists source partitions and compares a per-partition
     fingerprint (file count + names) against the rollup's saved state —
     only new or changed days are re-aggregated;

@@ -1,2 +1,2 @@
-"""Ingestion sources: event-family registry, subject routing, decode,
-and the append writer (Layer A of SURVEY.md §2)."""
+"""Ingestion sources: event-family registry (each table's default spec),
+subject routing and decode (Layer A of SURVEY.md §2)."""

@@ -28,8 +28,18 @@ def decode_json(df: DataFrame, family: EventFamily, payload_col: str = "payload"
     unix-seconds timestamp becomes TimestampType here — the same coercion
     ClickHouse applies during protobuf INSERT."""
     parsed = F.from_json(F.col(payload_col), family.wire_schema)
+    return _typed(df, parsed, family, payload_col)
+
+
+def _typed(
+    df: DataFrame, parsed: Column, family: EventFamily, payload_col: str
+) -> DataFrame:
+    """The decoders' shared output contract: ``parsed`` (the decoded
+    wire struct) projected to the family's typed columns — the int64
+    unix-seconds timestamp becomes TimestampType — plus ``_corrupt``
+    (null struct or no event_id) and ``_raw`` (the payload)."""
     out = df.withColumn("__p", parsed).withColumn(
-        "_corrupt", F.col("__p").isNull() | F.col(f"__p.event_id").isNull()
+        "_corrupt", F.col("__p").isNull() | F.col("__p.event_id").isNull()
     )
     cols = []
     for f in family.wire_schema.fields:
@@ -68,16 +78,7 @@ def decode_protobuf(
             descFilePath=desc_file,
             options={"mode": "PERMISSIVE"},
         )
-        out = df.withColumn("__p", parsed).withColumn(
-            "_corrupt", F.col("__p").isNull() | F.col("__p.event_id").isNull()
-        )
-        cols = []
-        for f in family.wire_schema.fields:
-            c: Column = F.col(f"__p.{f.name}")
-            if f.name == "timestamp":
-                c = F.timestamp_seconds(c)
-            cols.append(c.alias(f.name))
-        result = out.select(*cols, "_corrupt", F.col(payload_col).alias("_raw"))
+        result = _typed(df, parsed, family, payload_col)
         result.schema  # force analysis: raises if the jar is missing
         return result
     except Exception as e:

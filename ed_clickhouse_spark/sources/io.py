@@ -2,7 +2,7 @@
 
 The reference reads protobuf from NATS and writes to ClickHouse over
 HTTP; its query users read MergeTree. This engine's at-rest format is
-parquet (the write policy lives in ``writer.py``); these helpers round
+parquet (the table write policy is ``ddl.append_rows``); these helpers round
 out the batch source/sink surface: parquet, ORC, JSON-lines, CSV — all
 schema-explicit (never infer in production: a schema scan over 100 TB is
 a full extra read).
@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ed_clickhouse_spark.ddl import write_order
 
 _LAKE_FORMATS = {"delta", "iceberg", "hudi"}
 FORMATS = {"parquet", "orc", "json", "csv"}
@@ -121,12 +123,7 @@ def write_table(
             f"+ ClickHouse spellings {sorted(CH_FORMATS)}"
         )
     if sort_within:
-        # prefix any partition columns: the dynamic-partition writer
-        # inserts a non-stable sort otherwise, scrambling sort_within
-        # inside every written file (see sources/writer.py)
-        lead = list(partition_by or [])
-        rest = [c for c in sort_within if c not in lead]
-        df = df.sortWithinPartitions(*lead, *rest)
+        df = write_order(df, sort_within, partition_by or [])
     if fmt == "csv":
         options.setdefault("header", "true")
     writer = df.write.mode(mode).options(**options)

@@ -4,7 +4,9 @@ The reference hard-codes a subject -> (table, protobuf schema) map in a
 match statement (reference ``src/handler.rs:15-55``) and declares each
 family twice more: proto message (``build/format_schemas/dto.proto``) and
 ClickHouse DDL (``migrations/*.sql``). Here one registry is the single
-source of truth: subject, canonical table name, Spark schema.
+source of truth: subject, canonical table name, Spark schema, and the
+default :class:`~ed_clickhouse_spark.ddl.TableSpec` each table is
+written and served under until DDL declares it (:func:`table_spec`).
 
 Table names use the migration spelling (``shahre_farang_*``): the
 reference's router says ``shahrefarang_*`` (``src/handler.rs:42,46``)
@@ -18,6 +20,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
+
+from ed_clickhouse_spark.ddl import TableSpec
 
 # Shared 16-field envelope — identical in all nine proto messages
 # (reference dto.proto:7-22; DDL e.g. migrations/002_...:2-17).
@@ -63,17 +67,27 @@ class EventFamily:
         )
 
     @property
-    def table_schema(self) -> T.StructType:
-        """At-rest schema: envelope timestamp becomes TimestampType
-        (ClickHouse coerces int64 -> DateTime at insert; we do the same
-        at decode — SURVEY.md §1.3)."""
-        fields = []
-        for n, dt in ENVELOPE_FIELDS:
-            fields.append(
-                T.StructField(n, T.TimestampType() if n == "timestamp" else dt, True)
-            )
-        fields += [T.StructField(n, dt, True) for n, dt in self.extra_fields]
-        return T.StructType(fields)
+    def spec(self) -> TableSpec:
+        """The table's default spec: the reference migrations' MergeTree
+        ``ORDER BY (timestamp, event_name)`` plus one ``event_date=``
+        directory per day (a MATERIALIZED column), so ``ddl.append_rows``
+        sorts each file by (event_date, timestamp, event_name). At rest
+        the envelope timestamp is a TimestampType (ClickHouse coerces
+        int64 -> DateTime at insert; decode does the same — SURVEY.md
+        §1.3)."""
+        fields = [
+            T.StructField(f.name, T.TimestampType(), True)
+            if f.name == "timestamp" else f
+            for f in self.wire_schema.fields
+        ]
+        return TableSpec(
+            name=self.table,
+            schema=T.StructType(fields + [T.StructField("event_date", T.DateType(), True)]),
+            engine="MergeTree",
+            order_by=["timestamp", "event_name"],
+            partition_by="event_date",
+            col_exprs={"event_date": ("MATERIALIZED", "to_date(timestamp)")},
+        )
 
 
 # Nine families — subjects from reference src/handler.rs:17-52, extension
@@ -136,6 +150,30 @@ BY_SUBJECT: dict[str, EventFamily] = {f.subject: f for f in FAMILIES}
 BY_TABLE: dict[str, EventFamily] = {f.table: f for f in FAMILIES}
 
 DLQ_TABLE = "_dlq"
+# dead letters: the raw payload, its subject and why it was parked
+DLQ_SPEC = TableSpec(
+    name=DLQ_TABLE,
+    schema=T.StructType(
+        [
+            T.StructField("subject", _S, True),
+            T.StructField("raw_payload", _S, True),
+            T.StructField("reason", _S, True),
+            T.StructField("dlq_at", T.TimestampType(), True),
+        ]
+    ),
+    engine="MergeTree",
+)
+
+
+def table_spec(table: str, declared: dict | None = None) -> TableSpec | None:
+    """The one lookup for the spec a table is written and served under:
+    a DDL-declared spec (``declared``, e.g. ``Engine.table_specs``)
+    always wins, an undeclared family gets its default :attr:`EventFamily.spec`,
+    and any other name has none."""
+    spec = (declared or {}).get(table)
+    if spec is None and table in BY_TABLE:
+        return BY_TABLE[table].spec
+    return spec
 
 
 def route_for_subject(subject: str) -> EventFamily | None:

@@ -14,8 +14,8 @@ Spark retelling of the reference dataflow (SURVEY.md §3 EP1):
     rows/bytes/1s triggers            (processingTime='1 second';
     (src/handler.rs:57-204)           rows-cap via maxFilesPerTrigger —
                                       no bytes knob, documented deviation)
-  ClickHouse INSERT FORMAT          foreachBatch: decode_json + date-
-    Protobuf (src/click_house.rs)     partitioned sorted parquet append
+  ClickHouse INSERT FORMAT          foreachBatch: decode_json + append
+    Protobuf (src/click_house.rs)     under the table's spec (ddl.py)
   ack/Nak/Term at-least-once        checkpointed offsets + append sink
     (src/handler.rs:119-135)          = at-least-once (stronger:
                                       effectively-once per batch)
@@ -26,15 +26,13 @@ The wire format of the test harness is JSON lines with columns
 
 from __future__ import annotations
 
-import inspect
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ed_clickhouse_spark import ddl
 from ed_clickhouse_spark.sources.decode import decode_json
-from ed_clickhouse_spark.sources.registry import FAMILIES
-from ed_clickhouse_spark.sources.writer import append_dlq, append_events
+from ed_clickhouse_spark.sources.registry import DLQ_SPEC, FAMILIES, EventFamily, table_spec
 
 WIRE_SCHEMA = T.StructType(
     [
@@ -44,19 +42,48 @@ WIRE_SCHEMA = T.StructType(
 )
 
 
+def append_events(
+    df: DataFrame, warehouse: str, table: str, tables: dict | None = None
+) -> DataFrame:
+    """Append a decoded event batch to ``table`` under the spec
+    :func:`~ed_clickhouse_spark.sources.registry.table_spec` picks from
+    ``tables`` (an event table outside the registry gets the envelope's
+    default layout). Returns the written batch."""
+    spec = table_spec(table, tables) or EventFamily("", table).spec
+    return ddl.append_rows(df, spec, warehouse)
+
+
+def append_dlq(df: DataFrame, warehouse: str, reason: str) -> None:
+    """Dead-letter append: raw payload + subject + reason. The reference
+    silently Terms these (``src/main.rs:70``, ``src/handler.rs:130``);
+    keeping them queryable is a strict upgrade."""
+    ddl.append_rows(
+        df.select(
+            F.col("subject"),
+            F.col("payload").alias("raw_payload"),
+            F.lit(reason).alias("reason"),
+            F.current_timestamp().alias("dlq_at"),
+        ),
+        DLQ_SPEC,
+        warehouse,
+    )
+
+
 def process_batch(
     batch: DataFrame,
     warehouse: str,
     views: dict | None = None,
     epoch_id: int | None = None,
+    tables: dict | None = None,
 ) -> None:
     """Route one micro-batch: per family, decode + append; everything
     unroutable or undecodable lands in the DLQ.
 
-    ``views``: table name -> list of StreamingMatView — ClickHouse-MV
-    insert triggers (streaming/matview.py). Each view's partial-state
-    append runs over the SAME cached decoded batch, right after the raw
-    append — the MV-fires-on-insert contract.
+    ``tables``: the table catalog (``Engine.table_specs``); each family
+    is written under the spec ``table_spec`` picks from it, the one
+    ``Engine`` serves it with. ``views``: table name -> insert triggers
+    (``on_batch(batch, epoch_id=None)``), each fired on the written
+    batch right after the append — the MV-fires-on-insert contract.
 
     The routing split is a set of subject filters over one cached batch —
     each family's filter prunes on the subject value; with a partitioned
@@ -114,7 +141,7 @@ def process_batch(
                 .drop("_corrupt", "_raw")
             )
             try:
-                append_events(good, warehouse, fam.table)
+                written = append_events(good, warehouse, fam.table, tables)
                 if obs.get["bad"] > 0:
                     bad = decode_json(sub, fam).filter(F.col("_corrupt"))
                     append_dlq(
@@ -126,13 +153,7 @@ def process_batch(
                         reason="decode_error",
                     )
                 for view in fam_views:
-                    # insert hooks that accept the foreachBatch epoch get
-                    # it — their state writes become replay-idempotent
-                    # (StreamingMatView/StreamingTopK exactly-once mode)
-                    if "epoch_id" in inspect.signature(view.on_batch).parameters:
-                        view.on_batch(good, epoch_id=epoch_id)
-                    else:
-                        view.on_batch(good)
+                    view.on_batch(written, epoch_id=epoch_id)
             finally:
                 if fam_views:
                     decoded.unpersist()
@@ -176,6 +197,7 @@ def start_ingest(
     bytes_per_trigger: int | None = None,
     trigger_interval_ms: int = 1000,
     views: dict | None = None,
+    tables: dict | None = None,
 ):
     """Start the streaming ingestion query.
 
@@ -201,7 +223,7 @@ def start_ingest(
     return (
         stream.writeStream.foreachBatch(
             lambda batch, epoch: process_batch(
-                batch, warehouse, views=views, epoch_id=epoch
+                batch, warehouse, views=views, epoch_id=epoch, tables=tables
             )
         )
         .option("checkpointLocation", checkpoint)
@@ -234,6 +256,7 @@ def start_ingest_kafka(
     starting_offsets: str = "earliest",
     trigger_interval_ms: int = 1000,
     views: dict | None = None,
+    tables: dict | None = None,
 ):
     """Kafka ingestion mode — the production stand-in for the reference's
     NATS JetStream durable pull consumer (src/nats.rs:63-83). Knob map:
@@ -266,7 +289,7 @@ def start_ingest_kafka(
         kafka_to_wire(stream)
         .writeStream.foreachBatch(
             lambda batch, epoch: process_batch(
-                batch, warehouse, views=views, epoch_id=epoch
+                batch, warehouse, views=views, epoch_id=epoch, tables=tables
             )
         )
         .option("checkpointLocation", checkpoint)

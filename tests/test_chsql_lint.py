@@ -14,13 +14,19 @@ reason a rule table cannot serve.
 statement is one entry plus one handler, not another hand-rolled
 ``re.match`` branch, and every handler answers with the one status row
 ``Engine._status`` builds.
+
+Tables have one storage model: ``ddl.append_rows`` writes every table
+(the write-order rule is ``ddl.write_order``) and ``ddl.register_view``
+serves it from its spec, so neither a hand-rolled sort before a write
+nor a schema-inferring table read in the engine may grow back.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 
-CHSQL = Path(__file__).resolve().parent.parent / "ed_clickhouse_spark" / "chsql.py"
+PKG = Path(__file__).resolve().parent.parent / "ed_clickhouse_spark"
+CHSQL = PKG / "chsql.py"
 ENGINE = CHSQL.with_name("engine.py")
 
 # the definition, the primitive, its two trailing-group helpers, and
@@ -66,4 +72,35 @@ def test_engine_status_schema_written_once():
     assert n == 1, (
         f"engine.py spells the status schema {n} times:"
         " build status rows with Engine._status"
+    )
+
+
+# ddl.write_order and the Z-order clustering write (sources/zorder.py)
+MAX_SORT_WITHIN_PARTITIONS_SITES = 2
+# the projection rebuild/backfill base reads, TRUNCATE's schema read
+# and CHECK TABLE's readability pass
+MAX_ENGINE_PARQUET_READS = 4
+
+
+def test_sort_within_partitions_sites_do_not_grow():
+    sites = [
+        f"{p.relative_to(PKG)}:{i}"
+        for p in sorted(PKG.rglob("*.py"))
+        if "suite" not in p.relative_to(PKG).parts
+        for i, line in enumerate(p.read_text().splitlines(), start=1)
+        if "sortWithinPartitions(" in line
+    ]
+    assert len(sites) <= MAX_SORT_WITHIN_PARTITIONS_SITES, (
+        f"{len(sites)} `sortWithinPartitions(` sites (cap"
+        f" {MAX_SORT_WITHIN_PARTITIONS_SITES}): {sites} — order a write"
+        " with ddl.write_order"
+    )
+
+
+def test_engine_parquet_reads_do_not_grow():
+    n = ENGINE.read_text().count("spark.read.parquet(")
+    assert n <= MAX_ENGINE_PARQUET_READS, (
+        f"engine.py has {n} `spark.read.parquet(` sites (cap"
+        f" {MAX_ENGINE_PARQUET_READS}): serve tables through"
+        " ddl.register_view under their spec"
     )

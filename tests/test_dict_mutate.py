@@ -160,7 +160,7 @@ def test_replay_dlq(spark, tmp_path):
     import json as _json
 
     from ed_clickhouse_spark.engine import Engine
-    from ed_clickhouse_spark.sources.writer import append_dlq
+    from ed_clickhouse_spark.streaming.pipeline import append_dlq
 
     wh = str(tmp_path / "wh")
     eng = Engine(wh, spark)

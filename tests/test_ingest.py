@@ -122,7 +122,7 @@ def test_written_files_sorted_by_order_by(spark, tmp_path):
     import glob
     import json as _json
 
-    from ed_clickhouse_spark.sources.writer import append_events
+    from ed_clickhouse_spark.streaming.pipeline import append_events
 
     rows = [
         ("ev-%d" % i, "login" if i % 2 else "logout", 1_700_000_000 + (i * 7919) % 86_400)
@@ -494,3 +494,76 @@ def test_inline_csv_insert_randomized_roundtrip(spark, tmp_path, seed):
             eng.ch_sql(f"DROP TABLE {tbl}")
 
     run()
+
+
+ONE_MODEL_DDL = """
+CREATE TABLE login_events (
+    event_id String,
+    event_name String,
+    user_id String,
+    timestamp DateTime,
+    platform String,
+    platform_tag String ALIAS upper(platform),
+    PROJECTION by_platform (SELECT platform, count() AS n GROUP BY platform)
+) ENGINE = MergeTree()
+ORDER BY (timestamp, event_name)
+"""
+
+
+def test_streamed_rows_join_the_declared_table_model(spark, tmp_path):
+    """A family table declared through ch_sql is written and served by
+    the stream under the SAME spec as ch_sql INSERTs: streamed rows land
+    beside inserted ones (not in event_date= directories that hide the
+    inserted files), feed its projection and its materialized view, and
+    refresh_views keeps the declared read surface (ALIAS columns)."""
+    from ed_clickhouse_spark import chsql
+    from ed_clickhouse_spark.engine import Engine
+
+    eng = Engine(str(tmp_path / "wh"), spark)
+    eng.ch_sql(ONE_MODEL_DDL)
+    web = "\n".join(
+        json.dumps(
+            {"event_id": f"w{i}", "event_name": "login", "user_id": f"u{i}",
+             "timestamp": "2023-11-14T22:13:20", "platform": "web"}
+        )
+        for i in range(3)
+    )
+    eng.ch_sql(f"INSERT INTO login_events FORMAT JSONEachRow\n{web}")
+    eng.ch_sql(
+        "CREATE MATERIALIZED VIEW mv ENGINE = AggregatingMergeTree()"
+        " ORDER BY platform AS SELECT platform, count() AS n"
+        " FROM login_events GROUP BY platform"
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    for name, ids in (("b1.json", range(2)), ("b2.json", range(2, 5))):
+        rows = []
+        for i in ids:
+            ev = _envelope(500 + i, "login", 1_700_000_000 + i)
+            ev["platform"] = "ios"
+            rows.append(json.dumps({"subject": "events.login", "payload": json.dumps(ev)}))
+        (src / name).write_text("\n".join(rows))
+    q = eng.ingest(str(src), max_files_per_trigger=1)  # two micro-batches
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    eng.refresh_views()
+
+    by_platform = "SELECT platform, count() AS n FROM login_events GROUP BY platform"
+    assert "login_events__proj_by_platform_parts" in eng._route_projection(
+        chsql.translate(by_platform, eng.table_specs).sql
+    )
+    # (a) the routed projection holds the streamed partials too
+    assert {r["platform"]: r["n"] for r in eng.ch_sql(by_platform).collect()} == {
+        "web": 3,
+        "ios": 5,
+    }
+    # (b) the served view sees inserted and streamed rows alike
+    assert eng.sql("SELECT count(*) AS n FROM login_events").first()["n"] == 8
+    assert eng.table("login_events").count() == 8
+    # (c) the declared ALIAS column survives refresh_views
+    tags = {r["platform_tag"] for r in eng.sql("SELECT platform_tag FROM login_events").collect()}
+    assert tags == {"WEB", "IOS"}
+    # (d) the self-storing view fired on both streamed batches and is served
+    assert {r["platform"]: r["n"] for r in spark.table("mv").collect()} == {"ios": 5}

@@ -535,3 +535,25 @@ def test_exchange_tables_swaps_projection_data(spark, tmp_path):
     for t in ("a", "b"):
         direct = {str(r["day"]): r["s"] for r in eng.sql(BY_DAY.format(t=t)).collect()}
         assert _routed_by_day(eng, t) == direct
+
+
+def test_projection_routing_needs_an_aggregate(spark, tmp_path):
+    """Only queries that aggregate route to the partial-state rows: a
+    plain row read (or `*`) must see the table's rows and columns."""
+    eng = Engine(str(tmp_path / "wh"), spark)
+    eng.ch_sql(PROJ_DDL)
+    eng.ch_sql(
+        "INSERT INTO sales FORMAT JSONEachRow\n"
+        '{"day":"2024-01-01","user_id":1,"region":"r1","amount":2.0}\n'
+        '{"day":"2024-01-01","user_id":1,"region":"r1","amount":3.0}'
+    )
+    for q in ("SELECT * FROM sales", "SELECT day, user_id FROM sales"):
+        assert eng._route_projection(q) == q
+    star = eng.ch_sql("SELECT * FROM sales")
+    assert star.columns == ["day", "user_id", "region", "amount"]
+    assert star.count() == 2
+    assert eng.ch_sql("SELECT day, user_id FROM sales").count() == 2
+    # an aggregate the projection carries still routes
+    q = "SELECT day, sum(amount) AS s FROM sales GROUP BY day"
+    assert "sales__proj_by_user_parts" in eng._route_projection(q)
+    assert eng.ch_sql(q).first()["s"] == 5.0

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ed_clickhouse_spark.operators.rollup import IncrementalRollup
-from ed_clickhouse_spark.sources.writer import append_events
+from ed_clickhouse_spark.streaming.pipeline import append_events
 
 
 def _events(spark, day: int, n: int, name="login"):

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ed_clickhouse_spark.operators.joins import salted_join
-from ed_clickhouse_spark.sources.writer import append_events
+from ed_clickhouse_spark.streaming.pipeline import append_events
 from ed_clickhouse_spark.suite import QUERIES
 
 
