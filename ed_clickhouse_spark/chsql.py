@@ -5595,7 +5595,7 @@ _OPERATOR_ONLY_AGGS = {
     "transactionOldestSnapshot": "nothing — no interactive"
                                  " transactions",
     "partitionID": "the engine's date partition column directly"
-                   " (sources/writer.py partitions by day)",
+                   " (ddl.append_rows writes event_date= directories)",
     "partitionId": "the engine's date partition column directly",
     "structureToCapnProtoSchema": "nothing — schema-codegen helpers"
                                   " for CH wire formats",

@@ -118,8 +118,11 @@ class _ToTableMV:
         self.spec = SimpleNamespace(name=name, source=source)
 
     def on_batch(self, batch: DataFrame, epoch_id=None) -> None:
-        view = f"__mv_batch_{self.spec.name}"
-        batch.createOrReplaceTempView(view)
+        # global: a streamed batch belongs to the stream's own session,
+        # while the body runs in the Engine's (its tables and functions)
+        name = f"__mv_batch_{self.spec.name}"
+        batch.createOrReplaceGlobalTempView(name)
+        view = f"{self.engine.spark.conf.get('spark.sql.globalTempDatabase')}.{name}"
         # the trigger sees ONLY the inserted batch (CH semantics), so
         # the body's FROM <source> rebinds to the batch view — the
         # outer query's MAIN FROM only (depth-0, not a scalar subquery

@@ -16,6 +16,9 @@ Spark retelling of the reference dataflow (SURVEY.md §3 EP1):
                                       no bytes knob, documented deviation)
   ClickHouse INSERT FORMAT          foreachBatch: decode_json + append
     Protobuf (src/click_house.rs)     under the table's spec (ddl.py)
+  subjects flushed as independent   present families land on worker
+    inserts, cpus*4 messages in       threads at once; one DLQ append
+    flight (src/main.rs:41-48)        per batch
   ack/Nak/Term at-least-once        checkpointed offsets + append sink
     (src/handler.rs:119-135)          = at-least-once (stronger:
                                       effectively-once per batch)
@@ -26,9 +29,13 @@ The wire format of the test harness is JSON lines with columns
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import functools
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ed_clickhouse_spark import ddl
 from ed_clickhouse_spark.sources.decode import decode_json
@@ -53,10 +60,12 @@ def append_events(
     return ddl.append_rows(df, spec, warehouse)
 
 
-def append_dlq(df: DataFrame, warehouse: str, reason: str) -> None:
+def append_dlq(df: DataFrame, warehouse: str, reason: str | Column) -> None:
     """Dead-letter append: raw payload + subject + reason. The reference
     silently Terms these (``src/main.rs:70``, ``src/handler.rs:130``);
-    keeping them queryable is a strict upgrade."""
+    keeping them queryable is a strict upgrade. ``reason`` is one string
+    for the whole frame, or a column (``F.col("reason")``) when the frame
+    carries a reason per row."""
     ddl.append_rows(
         df.select(
             F.col("subject"),
@@ -76,20 +85,28 @@ def process_batch(
     epoch_id: int | None = None,
     tables: dict | None = None,
 ) -> None:
-    """Route one micro-batch: per family, decode + append; everything
-    unroutable or undecodable lands in the DLQ.
+    """Route one micro-batch: the present families decode + append
+    concurrently, then everything unroutable or undecodable lands in the
+    DLQ in one append.
 
     ``tables``: the table catalog (``Engine.table_specs``); each family
     is written under the spec ``table_spec`` picks from it, the one
     ``Engine`` serves it with. ``views``: table name -> insert triggers
-    (``on_batch(batch, epoch_id=None)``), each fired on the written
-    batch right after the append — the MV-fires-on-insert contract.
+    (``on_batch(batch, epoch_id=None)``), each fired on its family's
+    written batch once every append has finished — the
+    MV-fires-on-insert contract.
 
     The routing split is a set of subject filters over one cached batch —
     each family's filter prunes on the subject value; with a partitioned
     source (e.g. Kafka keyed by subject) each filter reads only its
     partitions. The reference's equivalent is the per-subject buffer map
-    (src/handler.rs:93-104)."""
+    (src/handler.rs:93-104), each subject flushed as its own insert
+    (src/handler.rs:106-156): here each present family lands on its own
+    thread. A family whose append raises does not stop the others; the
+    first error (in ``FAMILIES`` order) propagates once they are done and
+    the DLQ append is skipped, so ``foreachBatch`` fails before its
+    offsets commit and the whole batch is delivered again (≙ the
+    reference's Nak)."""
     # Pin the batch for the routing probe + per-family filters, but only
     # if the CALLER hasn't already (foreachBatch hands us an uncached
     # frame; tests/benches may pre-cache the same plan). Tracking
@@ -100,6 +117,39 @@ def process_batch(
     owned = batch.storageLevel == StorageLevel.NONE
     if owned:
         batch = batch.cache()
+    pinned: list[DataFrame] = []  # decoded frames cached for their views
+
+    def land(fam: EventFamily) -> tuple[DataFrame, DataFrame | None]:
+        """Decode + append one family; returns the written batch and the
+        family's decode-error rows (None when it has none)."""
+        sub = batch.filter(F.col("subject") == fam.subject)
+        decoded = decode_json(sub, fam)
+        if (views or {}).get(fam.table):
+            # the decoded frame is re-read per view — worth pinning
+            decoded = decoded.cache()
+            pinned.append(decoded)
+        # Count corrupt rows DURING the append job (Observation metric at
+        # the decode node) instead of a separate probe scan: the
+        # clean-batch fast path — by far the common case — decodes and
+        # writes in ONE pass with no cache materialization (measured
+        # ~1.7x ingest throughput). Only a family that actually carries
+        # corrupt rows pays a second decode pass, inside the DLQ append.
+        obs = Observation(f"ingest_{fam.table}")
+        good = (
+            decoded.observe(obs, F.count(F.when(F.col("_corrupt"), 1)).alias("bad"))
+            .filter(~F.col("_corrupt"))
+            .drop("_corrupt", "_raw")
+        )
+        written = append_events(good, warehouse, fam.table, tables)
+        if obs.get["bad"] == 0:
+            return written, None
+        bad = decode_json(sub, fam).filter(F.col("_corrupt"))
+        return written, bad.select(
+            F.lit(fam.subject).alias("subject"),
+            F.col("_raw").alias("payload"),
+            F.lit("decode_error").alias("reason"),
+        )
+
     try:
         known = {f.subject for f in FAMILIES}
         # ONE action discovers which subjects this batch actually carries —
@@ -111,53 +161,45 @@ def process_batch(
             r["subject"]
             for r in batch.select("subject").distinct().collect()
         }
+        dead = []
         if present - known or None in present:
-            unroutable = batch.filter(
-                ~F.col("subject").isin(list(known)) | F.col("subject").isNull()
+            dead.append(
+                batch.filter(
+                    ~F.col("subject").isin(list(known)) | F.col("subject").isNull()
+                ).select("subject", "payload", F.lit("unroutable_subject").alias("reason"))
             )
-            append_dlq(unroutable, warehouse, reason="unroutable_subject")
-        for fam in FAMILIES:
-            if fam.subject not in present:
+        landing = [f for f in FAMILIES if f.subject in present]
+        # Each family's append is a small Spark job made mostly of fixed
+        # driver-side overhead; they write to different table and
+        # projection paths, so they overlap safely, and Spark's scheduler
+        # caps the real parallelism at the core count. The wrapper hands
+        # each worker the caller's job group, description and pool.
+        with ThreadPoolExecutor(max_workers=max(len(landing), 1)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(batch.sparkSession)(land), fam)
+                for fam in landing
+            ]
+        # Insert triggers run here, on the calling thread and in FAMILIES
+        # order: two views may append to the same TO target, whose path
+        # must never see two writers at once. A family that did land
+        # fires its triggers even when another failed, so a retried
+        # batch duplicates its rows in the table and its views alike.
+        errors = [f.exception() for f in futures if f.exception()]
+        for fam, future in zip(landing, futures):
+            if future.exception():
                 continue
-            sub = batch.filter(F.col("subject") == fam.subject)
-            fam_views = (views or {}).get(fam.table, [])
-            decoded = decode_json(sub, fam)
-            if fam_views:
-                # the decoded frame is re-read per view — worth pinning
-                decoded = decoded.cache()
-            # Count corrupt rows DURING the append job (Observation
-            # metric at the decode node) instead of a separate probe
-            # scan: the clean-batch fast path — by far the common case —
-            # decodes and writes in ONE pass with no cache
-            # materialization (measured ~1.7x ingest throughput). Only a
-            # batch that actually carries corrupt rows pays a second
-            # decode pass to extract them for the DLQ.
-            obs = Observation(f"ingest_{fam.table}")
-            good = (
-                decoded.observe(
-                    obs, F.count(F.when(F.col("_corrupt"), 1)).alias("bad")
-                )
-                .filter(~F.col("_corrupt"))
-                .drop("_corrupt", "_raw")
-            )
-            try:
-                written = append_events(good, warehouse, fam.table, tables)
-                if obs.get["bad"] > 0:
-                    bad = decode_json(sub, fam).filter(F.col("_corrupt"))
-                    append_dlq(
-                        bad.select(
-                            F.lit(fam.subject).alias("subject"),
-                            F.col("_raw").alias("payload"),
-                        ),
-                        warehouse,
-                        reason="decode_error",
-                    )
-                for view in fam_views:
-                    view.on_batch(written, epoch_id=epoch_id)
-            finally:
-                if fam_views:
-                    decoded.unpersist()
+            written, bad = future.result()
+            for view in (views or {}).get(fam.table, []):
+                view.on_batch(written, epoch_id=epoch_id)
+            if bad is not None:
+                dead.append(bad)
+        if errors:
+            raise errors[0]
+        if dead:
+            append_dlq(functools.reduce(DataFrame.union, dead), warehouse, F.col("reason"))
     finally:
+        for decoded in pinned:
+            decoded.unpersist()
         if owned:
             batch.unpersist()
 

@@ -19,15 +19,22 @@ Tables have one storage model: ``ddl.append_rows`` writes every table
 (the write-order rule is ``ddl.write_order``) and ``ddl.register_view``
 serves it from its spec, so neither a hand-rolled sort before a write
 nor a schema-inferring table read in the engine may grow back.
+
+Worker threads run Spark jobs under the caller's job group, description
+and scheduler pool only when their target goes through
+``pyspark.util.inheritable_thread_target``; and a micro-batch
+dead-letters its rows in one DLQ append.
 """
 
 from __future__ import annotations
 
+import ast
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "ed_clickhouse_spark"
 CHSQL = PKG / "chsql.py"
 ENGINE = CHSQL.with_name("engine.py")
+PIPELINE = PKG / "streaming" / "pipeline.py"
 
 # the definition, the primitive, its two trailing-group helpers, and
 # the clause-level scanners that are not call-shaped
@@ -103,4 +110,37 @@ def test_engine_parquet_reads_do_not_grow():
         f"engine.py has {n} `spark.read.parquet(` sites (cap"
         f" {MAX_ENGINE_PARQUET_READS}): serve tables through"
         " ddl.register_view under their spec"
+    )
+
+
+# lines a thread or pool statement may span before its target is named
+THREAD_TARGET_WINDOW = 5
+
+
+def test_threads_inherit_the_callers_spark_properties():
+    sites = []
+    for p in sorted(PKG.rglob("*.py")):
+        lines = p.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if "ThreadPoolExecutor(" in line or "Thread(" in line:
+                window = "\n".join(lines[i : i + THREAD_TARGET_WINDOW])
+                if "inheritable_thread_target(" not in window:
+                    sites.append(f"{p.relative_to(PKG)}:{i + 1}")
+    assert not sites, (
+        f"thread sites without inheritable_thread_target: {sites} — wrap"
+        " the target so its jobs keep the caller's job group and pool"
+    )
+
+
+def test_process_batch_dead_letters_once():
+    src = PIPELINE.read_text()
+    fn = next(
+        node
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.FunctionDef) and node.name == "process_batch"
+    )
+    n = ast.get_source_segment(src, fn).count("append_dlq(")
+    assert n == 1, (
+        f"process_batch has {n} `append_dlq(` call sites: collect the"
+        " batch's dead letters and append them once"
     )

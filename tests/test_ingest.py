@@ -567,3 +567,151 @@ def test_streamed_rows_join_the_declared_table_model(spark, tmp_path):
     assert tags == {"WEB", "IOS"}
     # (d) the self-storing view fired on both streamed batches and is served
     assert {r["platform"]: r["n"] for r in spark.table("mv").collect()} == {"ios": 5}
+
+
+def _wire_batch(spark, rows):
+    from ed_clickhouse_spark.streaming.pipeline import WIRE_SCHEMA
+
+    return spark.createDataFrame(rows, WIRE_SCHEMA)
+
+
+def _mixed_rows(subjects, per_family=2, corrupt=()):
+    """``per_family`` good rows for each subject, one truncated payload
+    for each subject in ``corrupt``, plus an unknown and a NULL subject."""
+    base_ts = 1_700_000_000
+    rows = [
+        (s, json.dumps(_envelope(10 * k + i, s.rsplit(".", 1)[-1], base_ts + i)))
+        for k, s in enumerate(subjects)
+        for i in range(per_family)
+    ]
+    rows += [(s, '{"event_id": "cut') for s in corrupt]
+    rows += [("events.unknown", json.dumps(_envelope(99, "x", base_ts))), (None, "{}")]
+    return rows
+
+
+class _Recorder:
+    """An insert trigger that counts the rows each batch hands it."""
+
+    def __init__(self):
+        self.rows = 0
+
+    def on_batch(self, batch, epoch_id=None):
+        self.rows += batch.count()
+
+
+def test_process_batch_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """Every family lands on a worker thread; the workers run their jobs
+    under the caller's job group, so per-batch job accounting sees each
+    family's append and the DLQ append."""
+    from ed_clickhouse_spark.streaming.pipeline import process_batch
+
+    subjects = [f.subject for f in FAMILIES[:6]]
+    batch = _wire_batch(spark, _mixed_rows(subjects, corrupt=subjects[:2]))
+    sc = spark.sparkContext
+    group = f"ingest-group-{tmp_path.name}"
+    sc.setJobGroup(group, "process_batch job accounting")
+    try:
+        process_batch(batch, str(tmp_path / "wh"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) >= len(subjects) + 1, jobs
+
+
+def test_failed_family_append_lets_the_others_land_and_unpins(spark, tmp_path):
+    """One family's append raises (its declared MATERIALIZED expression
+    cannot resolve): the other families still land and fire their
+    triggers, every cache process_batch made is released, and the error
+    reaches the caller — foreachBatch's at-least-once retry. All nine
+    families land at once under a short thread switch interval, so a
+    lost cache registration would show as a leaked cache."""
+    import dataclasses
+    import sys
+
+    from pyspark.errors import AnalysisException
+
+    from ed_clickhouse_spark.streaming.pipeline import process_batch
+
+    broken = dataclasses.replace(
+        BY_TABLE["session_events"].spec,
+        col_exprs={"event_date": ("MATERIALIZED", "to_date(no_such_column)")},
+    )
+    views = {f.table: [_Recorder()] for f in FAMILIES}
+    wh = str(tmp_path / "wh")
+    subjects = [f.subject for f in FAMILIES]
+    batch = _wire_batch(spark, _mixed_rows(subjects, per_family=3, corrupt=subjects))
+    pinned_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with pytest.raises(AnalysisException, match="no_such_column"):
+            process_batch(batch, wh, views=views, tables={"session_events": broken})
+    finally:
+        sys.setswitchinterval(interval)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == pinned_before
+    for fam in FAMILIES:
+        if fam.table != "session_events":
+            assert spark.read.parquet(f"{wh}/{fam.table}").count() == 3, fam.table
+            assert views[fam.table][0].rows == 3, fam.table
+    assert views["session_events"][0].rows == 0
+    # the batch is delivered again, so its dead letters wait for the retry
+    assert not (tmp_path / "wh" / "_dlq").exists()
+
+
+def test_one_dead_letter_append_per_batch(spark, tmp_path):
+    """Unroutable rows and every family's decode errors land in ONE DLQ
+    append (one ``dlq_at``), row for row as separate appends wrote them."""
+    from ed_clickhouse_spark.streaming.pipeline import process_batch
+
+    subjects = ["events.login", "events.session", "events.angulak.watch"]
+    rows = _mixed_rows(subjects, corrupt=subjects[:2] * 2)
+    wh = str(tmp_path / "wh")
+    process_batch(_wire_batch(spark, rows), wh)
+    dlq = spark.read.parquet(f"{wh}/_dlq")
+    got = sorted(
+        (r["subject"] or "", r["raw_payload"], r["reason"])
+        for r in dlq.select("subject", "raw_payload", "reason").collect()
+    )
+    want = sorted(
+        [(s, '{"event_id": "cut', "decode_error") for s in subjects[:2] * 2]
+        + [("events.unknown", json.dumps(_envelope(99, "x", 1_700_000_000)), "unroutable_subject"),
+           ("", "{}", "unroutable_subject")]
+    )
+    assert got == want
+    assert dlq.select(F.countDistinct("dlq_at")).first()[0] == 1
+
+
+def test_two_views_to_one_target_take_both_families(spark, tmp_path):
+    """Two materialized views on two family tables append to ONE target;
+    fed by one streamed batch, the target holds both families' rows (the
+    triggers never write the shared path at the same time)."""
+    from ed_clickhouse_spark.engine import Engine
+
+    eng = Engine(str(tmp_path / "wh"), spark)
+    eng.ch_sql(
+        "CREATE TABLE seen (event_name String, user_id String)"
+        " ENGINE = MergeTree() ORDER BY event_name"
+    )
+    for name, table in (("seen_login", "login_events"), ("seen_session", "session_events")):
+        eng.ch_sql(
+            f"CREATE MATERIALIZED VIEW {name} TO seen AS"
+            f" SELECT event_name, user_id FROM {table}"
+        )
+    src = tmp_path / "src"
+    src.mkdir()
+    rows = _mixed_rows(["events.login", "events.session"], per_family=3, corrupt=["events.login"])
+    (src / "b1.json").write_text(
+        "\n".join(json.dumps({"subject": s, "payload": p}) for s, p in rows)
+    )
+    q = eng.ingest(str(src))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    eng.refresh_views()
+    got = {
+        r["event_name"]: r["n"]
+        for r in eng.sql("SELECT event_name, count(*) AS n FROM seen GROUP BY event_name").collect()
+    }
+    assert got == {"login": 3, "session": 3}
