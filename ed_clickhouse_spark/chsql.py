@@ -23,7 +23,10 @@ top-level token scanning (never inside strings/parens):
   SAMPLE f               deterministic md5 hash-range predicate over
                          the table's SAMPLE BY key (ddl.sample_read's
                          predicate, inlined as SQL)
-  [LEFT] ARRAY JOIN      LATERAL VIEW [OUTER] explode(...)
+  [LEFT] ARRAY JOIN      LATERAL VIEW [OUTER] explode(...); a bare
+                         item (ARRAY JOIN xs) over one relation reads
+                         the renamed source column, so xs means the
+                         element
   LIMIT n BY c1, c2      row_number() window wrapper (QUALIFY-style)
   GROUP BY c WITH TOTALS GROUP BY GROUPING SETS ((c), ())
   FORMAT X               stripped; the name is returned to the caller
@@ -120,8 +123,12 @@ top-level token scanning (never inside strings/parens):
   arrayReduce / maps     cumSum, lambda-first sorts, literal-name
                          reduce, mapKeys/Values/Contains, min/maxMap,
                          -OrNull, groupBit*, groupArrayMovingSum/Avg)
-  multi-item ARRAY JOIN  parallel arrays ZIP (shared index explode),
-                         never a cross product
+  multi-item ARRAY JOIN  parallel arrays ZIP in one generator,
+                         LATERAL VIEW [OUTER] inline(arrays_zip(
+                         coalesce(e, array()), ...)): each array is
+                         evaluated once per input row, never a cross
+                         product; a NULL array counts as empty, and
+                         shorter arrays pad with NULL
   probe batch (late r4)  rotate/shift/resize/fold/partialSort with
   map HOFs / char() /    element-type zeros; lambda-first mapFilter/
   format() / variadic    mapApply + mapAdd/Subtract; variadic char()
@@ -242,9 +249,11 @@ def _scan_index(s: str):
     after that paren, open-paren position -> matching close). ``'``,
     ``"`` and backtick all quote: a '(' carries the incremented depth,
     a ')' the decremented one, and both quote chars of a literal count
-    as in-string. This is the one quoting rule every scanner here
-    shares (_call_end, _split_top_commas, _find_top, the rewrite
-    primitive)."""
+    as in-string. Inside a literal a backslash escapes the next
+    character, so ``'a\\\\'`` closes at its last quote. This is the one
+    quoting rule every scanner here shares (_call_end,
+    _split_top_commas, _find_top, the rewrite primitive) and
+    ddl._split_top."""
     starts: list[int] = []
     ends: list[int] = []
     dpos: list[int] = [-1]
@@ -253,10 +262,15 @@ def _scan_index(s: str):
     opens: list[int] = []
     depth = 0
     quote = None
+    esc = False
     sstart = 0
     for i, ch in enumerate(s):
         if quote:
-            if ch == quote and (i == 0 or s[i - 1] != "\\"):
+            if esc:
+                esc = False
+            elif ch == "\\":
+                esc = True
+            elif ch == quote:
                 quote = None
                 starts.append(sstart)
                 ends.append(i + 1)
@@ -716,6 +730,33 @@ def _rewrite_array_join_fn(sql: str) -> str:
         i += 1
 
 
+def _unshadow_bare_items(head: str, names: list[str]) -> str:
+    """Rename the source columns a bare ``ARRAY JOIN xs`` item shadows.
+
+    In ClickHouse ``xs`` then means the element, but Spark sees both the
+    source column and the generator output as ``xs`` (AMBIGUOUS_REFERENCE).
+    When FROM is one relation, ``head`` (the query up to the ARRAY JOIN)
+    reads it through ``(SELECT * EXCEPT (xs), xs AS __ajs0 FROM rel)``
+    under the relation's own name; the items then read ``__ajs<k>``."""
+    fm = _find_top(head, r"\bFROM\b")
+    rel = head[fm.end():].strip() if fm else ""
+    rm = re.fullmatch(
+        r"(\w+(?:\.(\w+))?|\(.*\))(?:\s+(?:AS\s+)?(\w+))?", rel, re.I | re.S
+    )
+    if not rm or _find_top(rel, r",|\bJOIN\b|\bLATERAL\b"):
+        raise ValueError(
+            f"ARRAY JOIN item {names[0]!r} has no alias and FROM is not a"
+            f" single relation: spell it `{names[0]} AS <alias>`"
+        )
+    alias = rm.group(3) or rm.group(2) or (rm.group(1) if rel[0] != "(" else "")
+    cols = ", ".join(f"{n} AS __ajs{k}" for k, n in enumerate(names))
+    return (
+        head[: fm.end()]
+        + f" (SELECT * EXCEPT ({', '.join(names)}), {cols} FROM {rel})"
+        + (f" AS {alias} " if alias else " ")
+    )
+
+
 def _rewrite_array_join(sql: str) -> str:
     while True:
         m = _find_top(sql, r"\b(LEFT\s+)?ARRAY\s+JOIN\b")
@@ -723,45 +764,46 @@ def _rewrite_array_join(sql: str) -> str:
             return sql
         outer = "OUTER " if m.group(1) else ""
         tail = sql[m.end():]
-        stop = _find_top(tail, rf"\b(?:{_CLAUSE_STOP})\b")
+        # an item alias may spell a clause keyword (`arr AS format`)
+        stop = _find_top(tail, rf"(?<!\bAS\s)\b(?:{_CLAUSE_STOP})\b")
         items_s = tail[: stop.start()] if stop else tail
         rest = tail[stop.start():] if stop else ""
-        parsed = []
+        parsed, bare = [], []
         for item in _split_top_commas(items_s):
             am = re.match(r"^(.*?)\s+AS\s+(\w+)\s*$", item, re.I | re.S)
-            expr, alias = (am.group(1), am.group(2)) if am else (item, None)
-            if alias is None:
-                bare = re.match(r"^(\w+)$", expr.strip())
-                if not bare:
-                    raise ValueError(
-                        f"ARRAY JOIN item {item!r} needs an AS alias"
-                    )
-                alias = bare.group(1)
-            parsed.append((_inline_ch_macros(expr.strip()), alias))
+            expr, alias = (am.group(1).strip(), am.group(2)) if am else (item, item)
+            if expr == alias and re.fullmatch(r"\w+", expr):
+                # a bare item (or `xs AS xs`) names the element after the
+                # source column it shadows
+                bare.append(expr)
+            elif not am:
+                raise ValueError(f"ARRAY JOIN item {item!r} needs an AS alias")
+            parsed.append((_inline_ch_macros(expr), alias))
+        head = sql[: m.start()]
+        if bare:
+            head = _unshadow_bare_items(head, bare)
+            for k, name in enumerate(bare):
+                rx = _rxc(rf"(?<![.\w]){name}\b")
+                parsed = [
+                    (_sub_outside_strings(e, rx, f"__ajs{k}"), a)
+                    for e, a in parsed
+                ]
         if len(parsed) == 1:
             expr, alias = parsed[0]
-            views = [f"LATERAL VIEW {outer}explode({expr}) __aj0 AS {alias}"]
+            view = f"LATERAL VIEW {outer}explode({expr}) __aj0 AS {alias}"
         else:
-            # Multiple items ZIP positionally in ClickHouse (they are
-            # parallel arrays) — chained explodes would cross-product.
-            # Explode one shared index, then bind each alias through a
-            # one-element-array explode (no multiplication, but it
-            # introduces the alias as a FROM-clause column). Unequal
-            # sizes yield NULLs past the shorter array (CH errors there
-            # — lenient superset).
-            mx = "greatest(" + ", ".join(f"size({e})" for e, _ in parsed) + ")"
-            idx = (
-                f"(CASE WHEN {mx} > 0 THEN sequence(0, {mx} - 1)"
-                f" ELSE CAST(array() AS ARRAY<INT>) END)"
+            # Multiple items walk PARALLEL arrays in ClickHouse, so they
+            # zip: one generator that evaluates each array once per input
+            # row (chained explodes would cross-product). A NULL array
+            # counts as empty, so the others still produce rows; shorter
+            # arrays pad with NULL (CH errors on unequal sizes — lenient
+            # superset).
+            zipped = ", ".join(f"coalesce({e}, array())" for e, _ in parsed)
+            view = (
+                f"LATERAL VIEW {outer}inline(arrays_zip({zipped})) __aj AS "
+                + ", ".join(a for _, a in parsed)
             )
-            views = [f"LATERAL VIEW {outer}explode({idx}) __aj AS __aj_i"]
-            for k, (expr, alias) in enumerate(parsed):
-                views.append(
-                    f"LATERAL VIEW explode(array("
-                    f"try_element_at({expr}, __aj_i + 1))) __ajv{k} AS {alias}"
-                )
-        sql = sql[: m.start()] + " ".join(views) + " " + rest
-    return sql
+        sql = head + view + " " + rest
 
 
 def _rewrite_star_modifiers(sql: str, specs: dict | None = None) -> str:
@@ -3880,8 +3922,9 @@ def _extract_regex(sql, m, close, args):
 
 def _range(sql, m, close, args):
     # table position (FROM range(...), JOIN range(...)) is Spark's
-    # range TVF — numbers() expands to it; leave it alone
-    if re.search(r"(?i)\b(FROM|JOIN)$", sql[: m.start()].rstrip()):
+    # range TVF — numbers() expands to it; leave it alone. An ARRAY
+    # JOIN item is an array expression, not a table.
+    if re.search(r"(?i)(?<!\bARRAY\s)\b(FROM|JOIN)$", sql[: m.start()].rstrip()):
         return None
     # [start, end) with the end EXCLUSIVE; the filter keeps the
     # empty range empty (sequence(0, -1) would count DOWN)
@@ -6844,7 +6887,9 @@ _AGG_RULES_TAIL = _rules(
         2: "approx_percentile(if({1}, {0}, NULL), 0.5)",
         None: "medianIf expects (expr, cond)",
     }, re.I),
-    *((f"({name})If", _agg_if) for name in _AGG_IF_ALL),
+    # every other base in one alternation (longest names first)
+    ("(" + "|".join(sorted(_AGG_IF_ALL, key=len, reverse=True)) + ")If",
+     _agg_if),
     (r"([A-Za-z_]\w*)If", _leftover_parametric_if),
     # uniqMerge(state): merge HLL partials, then estimate — the read
     # side of the matview/projection uniqState storage (hll_sketch_agg).

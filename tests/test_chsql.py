@@ -5879,3 +5879,93 @@ def test_backtick_identifiers_share_the_paren_quoting_rule(views):
     assert r[0] == 7
     r = views.sql(translate("SELECT bitSlice(`s)`, 1) FROM bt_t").sql).first()
     assert r[0] == b"ab"
+
+
+def test_split_top_commas_reads_an_escaped_backslash():
+    """Inside a literal a backslash escapes the next character, so
+    ``'a\\\\'`` (an escaped backslash) closes at its last quote."""
+    from ed_clickhouse_spark.chsql import _split_top_commas
+
+    assert _split_top_commas("'a\\\\', b") == ["'a\\\\'", "b"]
+    assert _split_top_commas("'it\\'s, ok', b") == ["'it\\'s, ok'", "b"]
+
+
+@pytest.fixture(scope="module")
+def aj_views(views):
+    views.sql(
+        "CREATE OR REPLACE TEMP VIEW aj_t AS SELECT * FROM VALUES"
+        " (1, array(1, 2, 3), array('a', 'b')),"
+        " (2, CAST(NULL AS ARRAY<INT>), array('c')),"
+        " (3, array(), array()),"
+        " (4, CAST(NULL AS ARRAY<INT>), CAST(NULL AS ARRAY<STRING>)),"
+        " (5, array(7), CAST(NULL AS ARRAY<STRING>)) AS aj_t(k, xs, ys)"
+    )
+    views.sql(
+        "CREATE OR REPLACE TEMP VIEW aj_s AS SELECT 1 AS k,"
+        " array(named_struct('p', 1, 'q', 'x'), named_struct('p', 2, 'q', 'y'))"
+        " AS ss, array(map('a', 1), map('b', 2), map('c', 3)) AS ms"
+    )
+    return views
+
+
+def _sorted_rows(spark, sql):
+    return sorted((tuple(r) for r in spark.sql(sql).collect()), key=repr)
+
+
+def test_array_join_zip_edge_matrix(aj_views):
+    """A multi-item ARRAY JOIN is one zip generator: shorter arrays pad
+    with NULL, a NULL array counts as empty (the others still produce
+    rows), and LEFT keeps rows whose arrays are all empty or NULL."""
+    inner = [(1, 1, "a"), (1, 2, "b"), (1, 3, None), (2, None, "c"), (5, 7, None)]
+    cases = [
+        ("SELECT k, x, y FROM aj_t ARRAY JOIN xs AS x, ys AS y", inner),
+        ("SELECT k, x, y FROM aj_t LEFT ARRAY JOIN xs AS x, ys AS y",
+         sorted(inner + [(3, None, None), (4, None, None)], key=repr)),
+        ("SELECT k, a, b FROM aj_t ARRAY JOIN xs AS a, xs AS b",
+         [(1, 1, 1), (1, 2, 2), (1, 3, 3), (5, 7, 7)]),
+        ("SELECT k, x, y, i FROM aj_t"
+         " ARRAY JOIN xs AS x, ys AS y, arrayEnumerate(xs) AS i",
+         [(1, 1, "a", 1), (1, 2, "b", 2), (1, 3, None, 3),
+          (2, None, "c", None), (5, 7, None, 1)]),
+        ("SELECT k, s.p, s.q, m FROM aj_s ARRAY JOIN ss AS s, ms AS m",
+         [(1, 1, "x", {"a": 1}), (1, 2, "y", {"b": 2}),
+          (1, None, None, {"c": 3})]),
+        ("SELECT k, x, y FROM aj_t ARRAY JOIN xs AS x, ys AS y"
+         " WHERE y = 'b' OR x = 7", [(1, 2, "b"), (5, 7, None)]),
+        ("SELECT k, x, y FROM aj_t LEFT ARRAY JOIN xs AS x, ys AS y"
+         " WHERE k >= 3", [(3, None, None), (4, None, None), (5, 7, None)]),
+        # range() right after ARRAY JOIN is an array, not the range
+        # TVF; an item alias may spell a clause keyword
+        ("SELECT k, r, format FROM aj_t ARRAY JOIN range(2) AS r, xs AS format",
+         [(1, 0, 1), (1, 1, 2), (1, None, 3), (5, 0, 7), (5, 1, None)]
+         + [(k, r, None) for k in (2, 3, 4) for r in (0, 1)]),
+    ]
+    for ch, want in cases:
+        sql = translate(ch).sql
+        assert sql.count("LATERAL VIEW") == 1 and "arrays_zip(" in sql, sql
+        assert _sorted_rows(aj_views, sql) == sorted(want, key=repr), ch
+
+
+def test_bare_array_join_items_name_the_element(aj_views):
+    """A bare ``ARRAY JOIN xs`` (ClickHouse's alias-less spelling) names
+    the element ``xs``: over one relation the source column is renamed
+    out of the way; anything else refuses with the AS spelling."""
+    cases = [
+        ("SELECT k, xs FROM aj_t ARRAY JOIN xs",
+         [(1, 1), (1, 2), (1, 3), (5, 7)]),
+        ("SELECT xs, count() AS n FROM aj_t ARRAY JOIN xs GROUP BY xs",
+         [(1, 1), (2, 1), (3, 1), (7, 1)]),
+        ("SELECT a.k, xs FROM aj_t AS a LEFT ARRAY JOIN xs",
+         [(1, 1), (1, 2), (1, 3), (2, None), (3, None), (4, None), (5, 7)]),
+        ("SELECT k, xs, ys FROM aj_t ARRAY JOIN xs, ys",
+         [(1, 1, "a"), (1, 2, "b"), (1, 3, None), (2, None, "c"), (5, 7, None)]),
+        ("SELECT k, xs, i FROM (SELECT k, xs FROM aj_t WHERE k < 3) s"
+         " ARRAY JOIN xs, arrayEnumerate(xs) AS i",
+         [(1, 1, 1), (1, 2, 2), (1, 3, 3)]),
+    ]
+    for ch, want in cases:
+        assert _sorted_rows(aj_views, translate(ch).sql) == sorted(want, key=repr), ch
+    for ch in ("SELECT k, xs FROM aj_t JOIN aj_s USING (k) ARRAY JOIN xs",
+               "SELECT k, xs FROM aj_t, aj_s ARRAY JOIN xs, ys"):
+        with pytest.raises(ValueError, match="spell it `xs AS <alias>`"):
+            translate(ch)

@@ -20,6 +20,10 @@ Tables have one storage model: ``ddl.append_rows`` writes every table
 serves it from its spec, so neither a hand-rolled sort before a write
 nor a schema-inferring table read in the engine may grow back.
 
+A multi-item ARRAY JOIN lowers to one zip generator, never to the
+index-arithmetic emulation (``__aj_i``) that re-evaluated each array
+per exploded row: checked over the translate corpus.
+
 Worker threads run Spark jobs under the caller's job group, description
 and scheduler pool only when their target goes through
 ``pyspark.util.inheritable_thread_target``; and a micro-batch
@@ -29,11 +33,14 @@ dead-letters its rows in one DLQ append.
 from __future__ import annotations
 
 import ast
+import json
+import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "ed_clickhouse_spark"
 CHSQL = PKG / "chsql.py"
 ENGINE = CHSQL.with_name("engine.py")
+CORPUS = PKG.parent / "tests" / "data" / "translate_corpus.json"
 PIPELINE = PKG / "streaming" / "pipeline.py"
 
 # the definition, the primitive, its two trailing-group helpers, and
@@ -144,3 +151,24 @@ def test_process_batch_dead_letters_once():
         f"process_batch has {n} `append_dlq(` call sites: collect the"
         " batch's dead letters and append them once"
     )
+
+
+def test_multi_item_array_join_is_one_zip_generator():
+    from ed_clickhouse_spark.chsql import _CLAUSE_STOP, _find_top, _split_top_commas
+
+    cases = json.loads(CORPUS.read_text())
+    leaked = [c["src"] for c in cases if "__aj_i" in c.get("out", "")]
+    assert not leaked, f"index-arithmetic ARRAY JOIN in {leaked}"
+    multi = []
+    for c in cases:
+        m = _find_top(c["sql"], r"\bARRAY\s+JOIN\b")
+        if not m:
+            continue
+        tail = c["sql"][m.end():]
+        stop = _find_top(tail, rf"\b(?:{_CLAUSE_STOP})\b")
+        if len(_split_top_commas(tail[: stop.start()] if stop else tail)) > 1:
+            multi.append(c)
+    assert multi, "the corpus has no multi-item ARRAY JOIN"
+    bad = [c["src"] for c in multi
+           if len(re.findall(r"\bLATERAL VIEW\b", c.get("out", ""))) != 1]
+    assert not bad, f"multi-item ARRAY JOIN not one generator: {bad}"

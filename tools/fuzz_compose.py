@@ -22,6 +22,8 @@ properties:
 Usage:
     python tools/fuzz_compose.py --n 300 --seed 1 [--exec-only]
 Prints one line per failure and a summary; exit 1 on any failure.
+Outside --exec-only, n // 10 differential zipped ARRAY JOIN cases
+(build_array_join_query) follow the n trees.
 The pytest pin (tests/test_fuzz_compose.py) runs a small fixed-seed
 budget of both modes in the suite.
 """
@@ -543,6 +545,57 @@ def window_item(rng, g, alias):
     return ch, duck
 
 
+# --------------------------------------------------- zipped ARRAY JOIN
+#
+# A multi-item [LEFT] ARRAY JOIN walks its arrays in step. DuckDB zips
+# the unnest() calls of one SELECT list the same way: shorter arrays pad
+# with NULL, and a NULL array counts as empty. LEFT keeps a row whose
+# arrays are all empty or NULL, with NULL elements: the engine's OUTER
+# spelling (ClickHouse fills the element type's default instead). These
+# cases come from their own random stream, so a seed's build_query trees
+# do not change.
+
+def _aj_item(g: Gen) -> tuple[str, str]:
+    """One ARRAY JOIN item, (ch, duck): a bigint array, sometimes NULL on
+    some rows, enumerated, or a string split."""
+    r = g.rng.random()
+    if r < 0.2:
+        c = g.expr(BOOL, 1)
+        a = g.expr(ARR, 1)
+        return (f"if({c[0]}, {a[0]}, NULL)",
+                f"CASE WHEN {c[1]} THEN {a[1]} ELSE NULL END")
+    if r < 0.35:
+        a = g.expr(ARR, 1)
+        return f"arrayEnumerate({a[0]})", f"list_transform({a[1]}, (x, i) -> i)"
+    if r < 0.45:
+        e = g.expr(STR, 1)
+        return f"splitByChar(',', {e[0]})", f"string_split({e[1]}, ',')"
+    a = g.expr(ARR, g.rng.randint(0, 2))
+    return a[0], a[1]
+
+
+def build_array_join_query(rng: random.Random) -> tuple[str, str]:
+    """(ch_sql, duck_sql): SELECT i and 2-3 zipped items over t, LEFT or
+    not, sometimes filtered on the first zipped alias."""
+    g = Gen(rng, diff_only=True)
+    items = [_aj_item(g) for _ in range(rng.randint(2, 3))]
+    names = rng.sample(ALIASES, len(items))
+    left = rng.random() < 0.5
+    where = f" WHERE {names[0]} IS NOT NULL" if rng.random() < 0.3 else ""
+    cols = ", ".join(["i", *names])
+    aj = ", ".join(f"{ch} AS {a}" for (ch, _), a in zip(items, names))
+    ch = f"SELECT {cols} FROM t {'LEFT ' if left else ''}ARRAY JOIN {aj}{where}"
+    zipped = "SELECT i, " + ", ".join(
+        f"unnest({d}) AS {a}" for (_, d), a in zip(items, names)) + " FROM t"
+    if left:
+        # DuckDB's LATERAL cannot see t's columns inside a lambda, so
+        # the kept rows are a UNION ALL branch of their own
+        empty = " AND ".join(f"coalesce(len({d}), 0) = 0" for _, d in items)
+        nulls = ", ".join(f"NULL AS {a}" for a in names)
+        zipped += f" UNION ALL SELECT i, {nulls} FROM t WHERE {empty}"
+    return ch, f"SELECT {cols} FROM ({zipped}) AS z{where}"
+
+
 # ------------------------------------------------------------ harness
 
 def norm_rows(rows):
@@ -604,12 +657,19 @@ def main():
     con.execute("CREATE TABLE u (i BIGINT, s2 VARCHAR, f2 DOUBLE)")
     con.executemany("INSERT INTO u VALUES (?, ?, ?)", ROWS_U)
 
-    rng = random.Random(args.seed)
+    def cases():
+        rng = random.Random(args.seed)
+        for q in range(args.n):
+            diff_mode = (not args.exec_only) and rng.random() < 0.6
+            yield (q, *build_query(rng, diff=diff_mode))
+        if not args.exec_only:
+            aj = random.Random(f"array_join:{args.seed}")
+            for q in range(args.n, args.n + max(1, args.n // 10)):
+                yield (q, *build_array_join_query(aj))
+
     fails = []
     n_diff = n_exec = n_refused = n_known = 0
-    for q in range(args.n):
-        diff_mode = (not args.exec_only) and rng.random() < 0.6
-        ch, duck = build_query(rng, diff=diff_mode)
+    for q, ch, duck in cases():
         if args.verbose:
             print(f"-- [{q}] {ch}")
         try:
