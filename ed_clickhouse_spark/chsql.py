@@ -9,7 +9,10 @@ saved queries are ClickHouse SQL against those tables. The
 function spellings (toStartOfDay, JSONExtractString, ...) are already
 registered as Spark SQL functions (functions/clickhouse.py); what Spark
 cannot accept is the CLAUSE-level dialect. This module rewrites, by
-top-level token scanning (never inside strings/parens):
+top-level token scanning (never inside strings/parens); where each
+clause of a query level starts and ends is read off one splitter,
+_clauses, whose _CLAUSES table is the only spelling of the clause
+keywords:
 
   =====================  ==========================================
   ClickHouse             Spark rewrite
@@ -26,7 +29,8 @@ top-level token scanning (never inside strings/parens):
   [LEFT] ARRAY JOIN      LATERAL VIEW [OUTER] explode(...); a bare
                          item (ARRAY JOIN xs) over one relation reads
                          the renamed source column, so xs means the
-                         element
+                         element; chained clauses (ARRAY JOIN a AS x
+                         ARRAY JOIN b AS y) cross-product
   LIMIT n BY c1, c2      row_number() window wrapper (QUALIFY-style)
   GROUP BY c WITH TOTALS GROUP BY GROUPING SETS ((c), ())
   FORMAT X               stripped; the name is returned to the caller
@@ -50,9 +54,12 @@ top-level token scanning (never inside strings/parens):
                          deterministic by ordering on the table's full
                          column list when the spec is known (so the
                          DuckDB oracle reproduces it), else on the key.
-  arrayJoin(x) in SELECT lifted to clause form → LATERAL VIEW explode
+  arrayJoin(x) in SELECT lifted to clause form at the end of the FROM
+                         section → LATERAL VIEW explode
                          (_rewrite_array_join_fn; Spark rejects
-                         generators next to aggregates)
+                         generators next to aggregates), before WHERE
+                         reads SELECT aliases, so WHERE x filters the
+                         generated rows; several calls chain
   toStartOfInterval      epoch-floor bucket expression (INTERVAL
                          literals can't be SQL-UDF parameters)
   {name:Type} params     clickhouse-client query parameters, filled
@@ -192,12 +199,12 @@ top-level token scanning (never inside strings/parens):
                          needed); UTF8-suffixed string renames
   =====================  ==========================================
 
-Clause-level rewrites apply AT EVERY NESTING LEVEL: translate recurses
-into each parenthesized subquery / CTE body (innermost-out) and into
-each top-level UNION branch, so PREWHERE / LIMIT BY / ARRAY JOIN /
-WITH TOTALS / SAMPLE inside a derived table translate exactly like the
-outer query. Expression-level rewrites scan at every depth by
-construction. Rewritten inner text is spliced back and never
+Clause-level rewrites apply AT EVERY NESTING LEVEL: translate walks
+each parenthesized subquery / CTE body (innermost-out, _each_level) and
+each top-level UNION / EXCEPT / INTERSECT branch, so PREWHERE / LIMIT
+BY / ARRAY JOIN / WITH TOTALS / SAMPLE inside a derived table translate
+exactly like the outer query. Expression-level rewrites scan at every
+depth by construction. Rewritten inner text is spliced back and never
 re-scanned, so generated wrappers are not re-entered.
 
 Not translated (documented): ANY JOIN with an ON clause or a subquery
@@ -214,12 +221,6 @@ from bisect import bisect_right as _bisect_right
 from dataclasses import dataclass
 from functools import lru_cache as _lru_cache
 from functools import partial as _partial
-
-_CLAUSE_STOP = (
-    r"WHERE|PREWHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|FORMAT|UNION|"
-    r"INNER|LEFT|RIGHT|FULL|CROSS|JOIN|LATERAL|WINDOW|QUALIFY"
-)
-
 
 @dataclass
 class Translated:
@@ -328,6 +329,133 @@ def _find_top(s: str, pattern: str) -> re.Match | None:
     return None
 
 
+# -- the clause splitter ---------------------------------------------------
+#
+# The clause keywords of one query level, in the order a level spells
+# them: (name, rank, pattern). This table is the only place they are
+# spelled. A keyword opens a clause only at paren depth 0, outside
+# literals, not after a dot (``system.settings``) or right after ``AS``
+# (``arr AS format`` is an alias) — nor is the FROM of ``IS [NOT]
+# DISTINCT FROM`` a clause — and only at a rank no lower than the
+# clause before it: so the FROM of ``WITH FILL FROM 1 TO 5`` stays in
+# ORDER BY. Clauses of one rank may repeat and mix: the FROM section
+# (FROM, its joins, each ARRAY JOIN, LATERAL VIEW, SAMPLE) and the row
+# limits (LIMIT, LIMIT BY, OFFSET, FETCH). A set operation (rank -1)
+# ends a branch; the next branch starts over at SELECT. FORMAT <name>
+# and SETTINGS k = v count only at the end of the level (not a column
+# named format in ORDER BY ... DESC), WINDOW only as ``WINDOW
+# name AS``, and the words a column may be named (LIMIT, OFFSET, FETCH,
+# SAMPLE) only before the shape of their clause; SAMPLE's own OFFSET
+# belongs to SAMPLE.
+_CLAUSES = (
+    ("SELECT", 0, r"SELECT"),
+    ("FROM", 1, r"FROM"),
+    ("ARRAY JOIN", 1, r"(?:LEFT\s+)?ARRAY\s+JOIN"),
+    ("JOIN", 1, r"(?:(?:GLOBAL|NATURAL|LEFT|RIGHT|FULL|INNER|OUTER|CROSS"
+                r"|SEMI|ANTI|ANY|ALL|ASOF|PASTE)\s+)*JOIN"),
+    ("LATERAL VIEW", 1, r"LATERAL\s+VIEW"),
+    ("SAMPLE", 1, r"SAMPLE(?=\s+[\d.])(?:\s+[\d.]+(?:\s*/\s*[\d.]+)?\s+OFFSET)?"),
+    ("PREWHERE", 2, r"PREWHERE"),
+    ("WHERE", 3, r"WHERE"),
+    ("GROUP BY", 4, r"GROUP\s+BY"),
+    ("HAVING", 5, r"HAVING"),
+    ("WINDOW", 6, r"WINDOW(?=\s+\w+\s+AS\b)"),
+    ("QUALIFY", 7, r"QUALIFY"),
+    ("ORDER BY", 8, r"ORDER\s+BY"),
+    ("LIMIT", 9, r"LIMIT(?=\s*[\d(])"),
+    ("OFFSET", 9, r"OFFSET(?=\s*[\d(])"),
+    ("FETCH", 9, r"FETCH(?=\s+(?:FIRST|NEXT)\b)"),
+    ("SETTINGS", 10, r"SETTINGS(?=\s+\w+\s*=[\w\s=,.'\"]*;?\s*$)"),
+    ("FORMAT", 11, r"FORMAT(?=\s+(?!(?:ASC|DESC)\b)\w+\s*;?\s*$)"),
+    ("UNION", -1, r"UNION(?:\s+(?:ALL|DISTINCT))?"),
+    ("EXCEPT", -1, r"EXCEPT(?:\s+(?:ALL|DISTINCT))?(?=[\s(]*SELECT\b)"),
+    ("INTERSECT", -1, r"INTERSECT(?:\s+(?:ALL|DISTINCT))?"),
+)
+_CLAUSE_OF = {f"c{i}": (name, rank) for i, (name, rank, _) in enumerate(_CLAUSES)}
+_CLAUSE_RX = re.compile(
+    r"(?<![\w.])(?:"
+    + "|".join(f"(?P<c{i}>{pat})" for i, (_, _, pat) in enumerate(_CLAUSES))
+    + r")\b",
+    re.I,
+)
+
+
+@_lru_cache(maxsize=512)
+def _clauses(sql: str):
+    """The depth-0 clauses of one query level, found once per text:
+    ``(spans, first)``. A span is ``(name, rank, start, body, end)``:
+    the keyword starts at ``start``, its body runs from ``body`` (just
+    past the keyword) to ``end`` (the next clause's start, or the end of
+    the text). ``first`` maps a clause name to its first span, so a pass
+    asks for its clause with one dict lookup and an absent clause costs
+    no scan. Text before the first clause (a WITH list) is in no span.
+    The result is shared through the cache: read it, never change it."""
+    starts, ends, dpos, dval, _ = _scan_index(sql)
+    found: list[tuple[str, int, int, int]] = []
+    rank = 0
+    for m in _CLAUSE_RX.finditer(sql):
+        p = m.start()
+        if dval[_bisect_right(dpos, p) - 1]:
+            continue
+        j = _bisect_right(starts, p) - 1
+        if j >= 0 and p < ends[j]:
+            continue
+        name, r = _CLAUSE_OF[m.lastgroup]
+        if 0 <= r < rank:
+            continue
+        j = p
+        while j and sql[j - 1].isspace():
+            j -= 1
+        k = j
+        while k and (sql[k - 1].isalnum() or sql[k - 1] == "_"):
+            k -= 1
+        prev = sql[k:j].upper()
+        if prev == "AS" or (prev == "DISTINCT" and name == "FROM"):
+            continue
+        found.append((name, r, p, m.end()))
+        rank = max(r, 0)
+    spans = tuple(
+        (name, r, p, body, found[k + 1][2] if k + 1 < len(found) else len(sql))
+        for k, (name, r, p, body) in enumerate(found)
+    )
+    first: dict[str, tuple] = {}
+    for span in spans:
+        first.setdefault(span[0], span)
+    return spans, first
+
+
+# clauses that make a level read more than its one FROM relation
+_MANY_RELATIONS = frozenset(
+    ("JOIN", "ARRAY JOIN", "LATERAL VIEW", "UNION", "EXCEPT", "INTERSECT")
+)
+
+
+_SUBQUERY = re.compile(r"\(\s*(?:SELECT|WITH)\b", re.I)
+
+
+def _each_level(sql: str, fn, inner=None) -> str:
+    """``fn`` applied to every query level of ``sql``, innermost first:
+    each parenthesized subquery or CTE body (``( SELECT ...`` /
+    ``( WITH ...``, outside literals) is rewritten first, by ``inner``
+    when given (at every depth below this one), and spliced back; then
+    ``fn`` rewrites this level. Rewritten inner text is not re-scanned,
+    so a generated wrapper is never re-entered."""
+    idx = _scan_index(sql)
+    out, pos = [], 0
+    for m in _SUBQUERY.finditer(sql):
+        o = m.start()
+        if o < pos or _idx_in_string(idx, o):
+            continue
+        close = _call_end(sql, o)
+        out.append(sql[pos: o + 1])
+        out.append(_each_level(sql[o + 1: close], inner or fn))
+        pos = close
+    if out:
+        out.append(sql[pos:])
+        sql = "".join(out)
+    return fn(sql)
+
+
 def _split_top_commas(s: str) -> list[str]:
     # str.find + _scan_index bisect probes instead of a per-char
     # scan: this helper runs on every clause recursion
@@ -350,52 +478,46 @@ def _split_top_commas(s: str) -> list[str]:
 
 
 def _strip_trailing(sql: str) -> tuple[str, str | None]:
-    """Remove FORMAT <name> and SETTINGS ... suffixes (top level)."""
-    fmt = None
-    m = _find_top(sql, r"\bFORMAT\s+(\w+)\s*;?\s*$")
-    if m:
-        fmt = m.group(1)
-        sql = sql[: m.start()].rstrip()
-    # (?<!\.) keeps the clause stripper off the system.settings TABLE —
-    # a dotted name is never the SETTINGS clause keyword
-    m = _find_top(sql, r"(?<!\.)\bSETTINGS\s+[\w\s=,.'\"]+$")
-    if m:
-        sql = sql[: m.start()].rstrip()
+    """Remove the FORMAT <name> and SETTINGS ... clauses (top level);
+    returns the query and the format name."""
+    first = _clauses(sql)[1]
+    fm, sm = first.get("FORMAT"), first.get("SETTINGS")
+    fmt = sql[fm[3]: fm[4]].split()[0].rstrip(";") if fm else None
+    if fm or sm:
+        sql = sql[: (sm or fm)[2]].rstrip()
     return sql.rstrip(";").rstrip(), fmt
 
 
 def _rewrite_prewhere(sql: str) -> str:
-    m = _find_top(sql, r"\bPREWHERE\b")
-    if not m:
+    first = _clauses(sql)[1]
+    pw = first.get("PREWHERE")
+    if not pw:
         return sql
-    # extract the PREWHERE condition (up to the next top-level clause)
-    tail = sql[m.end():]
-    stop = _find_top(tail, rf"\b(?:{_CLAUSE_STOP})\b")
-    cond = tail[: stop.start()] if stop else tail
-    rest = tail[stop.start():] if stop else ""
-    head = sql[: m.start()]
-    cond = cond.strip()
+    cond = sql[pw[3]: pw[4]].strip()
     # Spark's parser rejects WHERE (ident) — a lone parenthesized
     # identifier parses as an assignment form (ASSIGNMENT_ARITY_
     # MISMATCH against the table width; verified on 4.1). A bare
     # single-token condition needs no wrapping (fuzz_compose, r11).
     wrapped = cond if re.fullmatch(r"`?\w+`?", cond) else f"({cond})"
-    wm = _find_top(rest, r"\bWHERE\b")
+    wm = first.get("WHERE")
     if wm:
-        rest = (rest[: wm.start()] + "WHERE " + wrapped + " AND "
-                + rest[wm.end():])
-        return head + rest
-    return head + "WHERE " + wrapped + " " + rest
+        return (sql[: pw[2]] + sql[pw[4]: wm[2]] + "WHERE " + wrapped
+                + " AND " + sql[wm[3]:])
+    return sql[: pw[2]] + "WHERE " + wrapped + " " + sql[pw[4]:]
+
+
+_FINAL = re.compile(
+    r"\b(FROM|JOIN)\s+(\w+)(\s+AS\s+\w+|\s+(?!FINAL\b)\w+)?\s+FINAL\b",
+    re.I,
+)
 
 
 def _rewrite_final(sql: str) -> str:
     # the registered <name> view already applies merge semantics
-    while True:
-        m = _find_top(sql, r"\bFROM\s+(\w+)(\s+AS\s+\w+|\s+(?!FINAL\b)\w+)?\s+FINAL\b")
-        if not m:
-            return sql
-        alias = m.group(2) or ""
-        sql = sql[: m.start()] + f"FROM {m.group(1)}{alias}" + sql[m.end():]
+    return _sub_outside_strings(
+        sql, _FINAL, lambda m: f"{m.group(1)} {m.group(2)}{m.group(3) or ''}",
+        top=True,
+    )
 
 
 def _sample_predicate(key: str, fraction: float, offset: float = 0.0) -> str:
@@ -476,56 +598,57 @@ def _inline_ch_macros(expr: str) -> str:
     # tuple (r12) — rebuilding them escaped every registered name on
     # every pass (~540 re.escape calls per translate()).
     alt, lower_map = _macro_alt(tuple(_SQL_SCALAR_ALIASES))
-    changed = True
-    while changed:
-        changed = False
-        pos = 0
-        while True:
-            m = _find_top_anywhere(expr, alt, pos)
-            if not m:
-                break
-            name = lower_map.get(m.group(1).lower())
-            sig, body = _SQL_SCALAR_ALIASES[name]
-            j = _call_end(expr, m.end() - 1)
-            args = _split_top_commas(expr[m.end(): j])
-            params = [
-                p.strip().split()[0]
-                for p in _split_top_commas(sig[sig.index("(") + 1: sig.index(") RETURNS")])
-            ]
-            if len(args) != len(params):
-                # arity mismatch: leave the call for the registered SQL
-                # UDF alias to resolve; keep scanning past it
-                pos = m.end()
-                continue
-            new = body
-            for p, a in sorted(zip(params, args), key=lambda t: -len(t[0])):
-                new = _rxc(rf"\b{p}\b").sub(a.replace("\\", "\\\\"), new)
-            expr = expr[: m.start()] + "(" + new + ")" + expr[j + 1:]
-            # rescan from the splice: the expanded body may itself
-            # contain macro calls
-            pos = m.start()
-            changed = True
+    rx = _rxc(alt, re.I)
+
+    def expand(m):
+        name = lower_map.get(m.group(1).lower())
+        sig, body = _SQL_SCALAR_ALIASES[name]
+        j = _call_end(m.string, m.end() - 1)
+        args = _split_top_commas(m.string[m.end(): j])
+        params = [
+            p.strip().split()[0]
+            for p in _split_top_commas(sig[sig.index("(") + 1: sig.index(") RETURNS")])
+        ]
+        if len(args) != len(params):
+            # arity mismatch: leave the call for the registered SQL
+            # UDF alias to resolve
+            return None
+        for p, a in sorted(zip(params, args), key=lambda t: -len(t[0])):
+            body = _rxc(rf"\b{p}\b").sub(a.replace("\\", "\\\\"), body)
+        return "(" + body + ")", j + 1
+
+    # an expanded body may itself call macros: expand until none is left
+    new = _sub_outside_strings(expr, rx, expand)
+    while new != expr:
+        expr, new = new, _sub_outside_strings(new, rx, expand)
     return expr
 
 
-def _sub_outside_strings(sql: str, rx: re.Pattern, repl) -> str:
-    """re.sub that never touches matches inside string literals.
-    ``repl`` is the replacement text (taken verbatim) or a function of
-    the match. The scan advances past each replacement, so a
-    replacement containing text the pattern would match cannot loop."""
+def _sub_outside_strings(sql: str, rx: re.Pattern, repl, top: bool = False) -> str:
+    """re.sub that never touches matches inside string literals (nor,
+    with ``top``, below paren depth 0). ``repl`` is the replacement text
+    (taken verbatim) or a function of the match returning the text, a
+    ``(text, end)`` pair that replaces through ``end`` (``m.string`` is
+    the current text), or None to leave the match alone. The scan
+    advances past each replacement, so a replacement containing text
+    the pattern would match cannot loop."""
     pos = 0
     while True:
         idx = _scan_index(sql)
-        hit = None
         for m in rx.finditer(sql, pos):
-            if not _idx_in_string(idx, m.start()):
-                hit = m
+            p = m.start()
+            if _idx_in_string(idx, p) or (top and _idx_depth(idx, p)):
+                continue
+            text = repl if repl.__class__ is str else repl(m)
+            if text is not None:
                 break
-        if not hit:
+        else:
             return sql
-        text = repl if isinstance(repl, str) else repl(hit)
-        sql = sql[: hit.start()] + text + sql[hit.end():]
-        pos = hit.start() + len(text)
+        end = m.end()
+        if text.__class__ is tuple:
+            text, end = text
+        sql = sql[:p] + text + sql[end:]
+        pos = p + len(text)
 
 
 def _collapse_ws_outside_strings(sql: str) -> str:
@@ -685,49 +808,49 @@ def _trailing_over(sql: str, close: int) -> tuple[int, int] | None:
     return om.end() - 1, _call_end(sql, om.end() - 1)
 
 
+_ARRAY_JOIN_FN = re.compile(r"\barrayJoin\s*\(", re.I)
+_AS_ALIAS = re.compile(r"\s+AS\s+(\w+)", re.I)
+
+
 def _rewrite_array_join_fn(sql: str) -> str:
     """ClickHouse's FUNCTION-form ``arrayJoin(expr)`` in the SELECT
-    list → the clause form (``ARRAY JOIN (expr) AS alias`` appended
-    after the FROM section), which _rewrite_array_join then turns into
-    LATERAL VIEW explode. An ``AS alias`` after the call is honored;
-    otherwise a ``__ajf<i>`` alias names the output column (CH would
-    name it ``arrayJoin(expr)`` — aliasing is the portable spelling).
-    Top-level select items only: arrayJoin nested inside an aggregate
-    has no Spark equivalent and surfaces Spark's generator error."""
-    i = 0
-    while True:
-        m = _find_top_anywhere(sql, r"\barrayJoin\s*\(")
-        if not m:
-            return sql
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        expr = sql[open1 + 1: close1]
-        after = sql[close1 + 1:]
-        am = re.match(r"\s+AS\s+(\w+)", after, re.I)
-        if am:
-            alias, end = am.group(1), close1 + 1 + am.end()
-        else:
-            alias, end = f"__ajf{i}", close1 + 1
-        fm = _find_top(sql, r"\bFROM\b")
+    list → the clause form (``ARRAY JOIN (expr) AS alias`` appended at
+    the end of the FROM section), which _rewrite_array_join then turns
+    into LATERAL VIEW explode. An ``AS alias`` after the call is
+    honored; otherwise a ``__ajf<i>`` alias names the output column (CH
+    would name it ``arrayJoin(expr)`` — aliasing is the portable
+    spelling). Runs before WHERE reads SELECT aliases, so a WHERE on the
+    alias filters the generated rows. Several calls chain (a cross
+    product, as in ClickHouse). Top-level select items only: arrayJoin
+    nested inside an aggregate has no Spark equivalent and surfaces
+    Spark's generator error."""
+    if "arrayjoin" not in sql.lower():
+        return sql
+    fm = _clauses(sql)[1].get("FROM")
+    lifted: list[str] = []
+
+    def lift(m):
+        s = m.string
+        close = _call_end(s, m.end() - 1)
+        am = _AS_ALIAS.match(s, close + 1)
+        alias = am.group(1) if am else f"__ajf{len(lifted)}"
+        end = am.end() if am else close + 1
+        expr = s[m.end(): close]
         if not fm:
             # FROM-less scalar SELECT: Spark allows a bare generator
-            sql = sql[: m.start()] + f"explode({expr}) AS {alias}" + sql[end:]
-            continue
-        sql = sql[: m.start()] + alias + sql[end:]
-        fm = _find_top(sql, r"\bFROM\b")
-        tail = sql[fm.end():]
-        stop = _find_top(
-            tail,
-            r"\b(?:WHERE|PREWHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|"
-            r"FORMAT|UNION)\b",
-        )
-        pos = fm.end() + (stop.start() if stop else len(tail))
-        sql = (
-            sql[:pos].rstrip()
-            + f" ARRAY JOIN ({expr}) AS {alias} "
-            + sql[pos:].lstrip()
-        )
-        i += 1
+            return f"explode({expr}) AS {alias}", end
+        lifted.append(f" ARRAY JOIN ({expr}) AS {alias}")
+        return alias, end
+
+    sql = _sub_outside_strings(sql, _ARRAY_JOIN_FN, lift)
+    if not lifted:
+        return sql
+    # the FROM section (rank 1: FROM, its joins, ARRAY JOINs and LATERAL
+    # VIEWs) ends at the first later clause of another rank
+    spans, first = _clauses(sql)
+    pos = next((span[2] for span in spans
+                if span[2] > first["FROM"][2] and span[1] != 1), len(sql))
+    return sql[:pos].rstrip() + "".join(lifted) + " " + sql[pos:].lstrip()
 
 
 def _unshadow_bare_items(head: str, names: list[str]) -> str:
@@ -738,12 +861,13 @@ def _unshadow_bare_items(head: str, names: list[str]) -> str:
     When FROM is one relation, ``head`` (the query up to the ARRAY JOIN)
     reads it through ``(SELECT * EXCEPT (xs), xs AS __ajs0 FROM rel)``
     under the relation's own name; the items then read ``__ajs<k>``."""
-    fm = _find_top(head, r"\bFROM\b")
-    rel = head[fm.end():].strip() if fm else ""
+    spans, first = _clauses(head)
+    fm = first.get("FROM")
+    rel = head[fm[3]:].strip() if fm else ""
     rm = re.fullmatch(
         r"(\w+(?:\.(\w+))?|\(.*\))(?:\s+(?:AS\s+)?(\w+))?", rel, re.I | re.S
     )
-    if not rm or _find_top(rel, r",|\bJOIN\b|\bLATERAL\b"):
+    if not rm or fm is not spans[-1] or _find_top(rel, ","):
         raise ValueError(
             f"ARRAY JOIN item {names[0]!r} has no alias and FROM is not a"
             f" single relation: spell it `{names[0]} AS <alias>`"
@@ -751,25 +875,21 @@ def _unshadow_bare_items(head: str, names: list[str]) -> str:
     alias = rm.group(3) or rm.group(2) or (rm.group(1) if rel[0] != "(" else "")
     cols = ", ".join(f"{n} AS __ajs{k}" for k, n in enumerate(names))
     return (
-        head[: fm.end()]
+        head[: fm[3]]
         + f" (SELECT * EXCEPT ({', '.join(names)}), {cols} FROM {rel})"
         + (f" AS {alias} " if alias else " ")
     )
 
 
 def _rewrite_array_join(sql: str) -> str:
-    while True:
-        m = _find_top(sql, r"\b(LEFT\s+)?ARRAY\s+JOIN\b")
-        if not m:
-            return sql
-        outer = "OUTER " if m.group(1) else ""
-        tail = sql[m.end():]
-        # an item alias may spell a clause keyword (`arr AS format`)
-        stop = _find_top(tail, rf"(?<!\bAS\s)\b(?:{_CLAUSE_STOP})\b")
-        items_s = tail[: stop.start()] if stop else tail
-        rest = tail[stop.start():] if stop else ""
+    spans = _clauses(sql)[0]
+    # last clause first: each splice leaves the earlier spans in place
+    for name, _, start, body, end in reversed(spans):
+        if name != "ARRAY JOIN":
+            continue
+        outer = "OUTER " if sql[start] in "lL" else ""  # LEFT ARRAY JOIN
         parsed, bare = [], []
-        for item in _split_top_commas(items_s):
+        for item in _split_top_commas(sql[body:end]):
             am = re.match(r"^(.*?)\s+AS\s+(\w+)\s*$", item, re.I | re.S)
             expr, alias = (am.group(1).strip(), am.group(2)) if am else (item, item)
             if expr == alias and re.fullmatch(r"\w+", expr):
@@ -779,7 +899,7 @@ def _rewrite_array_join(sql: str) -> str:
             elif not am:
                 raise ValueError(f"ARRAY JOIN item {item!r} needs an AS alias")
             parsed.append((_inline_ch_macros(expr), alias))
-        head = sql[: m.start()]
+        head = sql[:start]
         if bare:
             head = _unshadow_bare_items(head, bare)
             for k, name in enumerate(bare):
@@ -803,7 +923,30 @@ def _rewrite_array_join(sql: str) -> str:
                 f"LATERAL VIEW {outer}inline(arrays_zip({zipped})) __aj AS "
                 + ", ".join(a for _, a in parsed)
             )
-        sql = head + view + " " + rest
+        sql = head + view + " " + sql[end:]
+    return sql
+
+
+_STAR_EXCEPT_BARE = re.compile(
+    r"(\*\s*EXCEPT)\s+(?!\()(?!(?:ALL|DISTINCT|SELECT)\b)(`[^`]+`|\w+)", re.I
+)
+_STAR_REPLACE = re.compile(r"\*\s*(EXCEPT\s*\(([^)]*)\)\s*)?REPLACE\s*\(", re.I)
+
+
+def _star_replace(m):
+    """``* [EXCEPT (a)] REPLACE (expr AS col, ...)`` → ``* EXCEPT (a,
+    col, ...), expr AS col, ...``."""
+    close1 = _call_end(m.string, m.end() - 1)
+    items = _split_top_commas(m.string[m.end(): close1])
+    names = []
+    for it in items:
+        am = re.search(r"\bAS\s+`?(\w+)`?\s*$", it, re.I)
+        if not am:
+            raise ValueError("* REPLACE items must be 'expr AS column'")
+        names.append(am.group(1))
+    existing = (m.group(2) or "").strip()
+    exc = ", ".join(([existing] if existing else []) + names)
+    return f"* EXCEPT ({exc}), {', '.join(items)}", close1 + 1
 
 
 def _rewrite_star_modifiers(sql: str, specs: dict | None = None) -> str:
@@ -826,39 +969,10 @@ def _rewrite_star_modifiers(sql: str, specs: dict | None = None) -> str:
     # CH's bare single-column form `* EXCEPT col` (batch-81) — Spark
     # only parses the parenthesized list; the set-operation EXCEPT is
     # excluded by the star anchor and the identifier guard
-    while True:
-        m = _find_top_anywhere(
-            sql,
-            r"(\*\s*EXCEPT)\s+(?!\()(?!(?:ALL|DISTINCT|SELECT)\b)"
-            r"(`[^`]+`|\w+)",
-        )
-        if not m:
-            break
-        sql = (
-            sql[: m.start()] + f"{m.group(1)} ({m.group(2)})"
-            + sql[m.end():]
-        )
-    while True:
-        m = _find_top_anywhere(
-            sql, r"\*\s*(EXCEPT\s*\(([^)]*)\)\s*)?REPLACE\s*\("
-        )
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        items = _split_top_commas(sql[open1 + 1: close1])
-        names = []
-        for it in items:
-            am = re.search(r"\bAS\s+`?(\w+)`?\s*$", it, re.I)
-            if not am:
-                raise ValueError(
-                    "* REPLACE items must be 'expr AS column'"
-                )
-            names.append(am.group(1))
-        existing = (m.group(2) or "").strip()
-        exc = ", ".join(([existing] if existing else []) + names)
-        repl = f"* EXCEPT ({exc}), {', '.join(items)}"
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
+    sql = _sub_outside_strings(
+        sql, _STAR_EXCEPT_BARE, lambda m: f"{m.group(1)} ({m.group(2)})"
+    )
+    sql = _sub_outside_strings(sql, _STAR_REPLACE, _star_replace)
     sql = _expand_apply_columns(sql, specs)
     for bad, hint in (
         (r"\bAPPLY\s*\(", "* APPLY (f) expands only against a SELECT"
@@ -882,30 +996,18 @@ def _level_star_columns(sql: str, specs: dict | None) -> list[str] | None:
     (the ad-hoc path)."""
     if not specs:
         return None
-    fm = _find_top(sql, r"(?i)\bFROM\s+")
-    if not fm:
+    spans, first = _clauses(sql)
+    fm = first.get("FROM")
+    # one table: a join, an ARRAY JOIN, a set operation or a comma
+    # join (`FROM a, b` / `FROM events e, users u`) means more than one
+    # relation contributes to the star set — not resolvable from one
+    # spec, so bail out to the loud refusal
+    if not fm or any(span[0] in _MANY_RELATIONS for span in spans):
         return None
-    tail = sql[fm.end():]
-    tm = re.match(r"`?(\w+)`?", tail)
-    if not tm:
+    body = sql[fm[3]: fm[4]].lstrip()
+    tm = re.match(r"`?(\w+)`?", body)
+    if not tm or _find_top(body[tm.end():], ","):
         return None
-    if _find_top(sql, r"(?i)\b(JOIN|UNION)\b"):
-        return None
-    # comma join (`FROM a, b` / `FROM a x, b y`): any top-level comma in
-    # the FROM tail before the next clause keyword means more than one
-    # table contributes to the star set — not resolvable from one spec,
-    # so bail out to the loud refusal.  The former `^\s*,` check missed
-    # aliased comma joins (`FROM events e, users u`).
-    rest = tail[tm.end():]
-    cm = _find_top(rest, ",")
-    if cm:
-        bm = _find_top(
-            rest,
-            r"(?i)\b(WHERE|PREWHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER"
-            r"|LIMIT|OFFSET|SETTINGS|FORMAT)\b",
-        )
-        if bm is None or cm.start() < bm.start():
-            return None
     spec = specs.get(tm.group(1))
     if spec is None:
         return None
@@ -953,23 +1055,11 @@ def _expand_apply_columns(sql: str, specs: dict | None) -> str:
     spelling and are translated by the later agg-spelling pass.
     Unresolvable sites are left in place for the loud refusal in
     _rewrite_star_modifiers."""
-    # subqueries first (each level resolves its own FROM)
-    pos = 0
-    while True:
-        sidx = _scan_index(sql)
-        idx = None
-        for i in range(pos, len(sql)):
-            if sql[i] == "(" and not _idx_in_string(sidx, i):
-                after = sql[i + 1:].lstrip()
-                if re.match(r"(?i)(SELECT|WITH)\b", after):
-                    idx = i
-                    break
-        if idx is None:
-            break
-        close = _call_end(sql, idx)
-        inner = _expand_apply_columns(sql[idx + 1: close], specs)
-        sql = sql[: idx + 1] + inner + sql[close:]
-        pos = idx + 1 + len(inner) + 1
+    # each level resolves its own FROM
+    return _each_level(sql, _partial(_expand_level_columns, specs=specs))
+
+
+def _expand_level_columns(sql: str, specs: dict | None) -> str:
     if not (
         _find_top(sql, r"\bAPPLY\s*\(") or _find_top(sql, r"\bCOLUMNS\s*\(")
     ):
@@ -977,31 +1067,32 @@ def _expand_apply_columns(sql: str, specs: dict | None) -> str:
     cols = _level_star_columns(sql, specs)
     if cols is None:
         return sql
-    while True:
-        m = _find_top(sql, r"\bCOLUMNS\s*\(")
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        rx = sql[open1 + 1: close1].strip().strip("'\"")
-        excepts, fns, end = _apply_chain(sql, close1 + 1)
+
+    def columns(m):
+        close1 = _call_end(m.string, m.end() - 1)
+        rx = m.string[m.end(): close1].strip().strip("'\"")
+        excepts, fns, end = _apply_chain(m.string, close1 + 1)
         base = [c for c in cols if re.search(rx, c) and c not in excepts]
         if not base:
             raise ValueError(
                 f"COLUMNS({rx!r}) matches no column of the FROM table"
             )
-        sql = sql[: m.start()] + _render_applied(base, fns) + sql[end:]
-    while True:
-        m = _find_top(sql, r"\*\s*(?:EXCEPT\s*\(([^)]*)\)\s*)?(?=APPLY\s*\()")
-        if not m:
-            break
+        return _render_applied(base, fns), end
+
+    def star_apply(m):
         excepts = [
             c.strip().strip("`") for c in (m.group(1) or "").split(",") if c.strip()
         ]
-        more_exc, fns, end = _apply_chain(sql, m.end())
+        more_exc, fns, end = _apply_chain(m.string, m.end())
         base = [c for c in cols if c not in excepts and c not in more_exc]
-        sql = sql[: m.start()] + _render_applied(base, fns) + sql[end:]
-    return sql
+        return _render_applied(base, fns), end
+
+    sql = _sub_outside_strings(sql, _COLUMNS_CALL, columns, top=True)
+    return _sub_outside_strings(sql, _STAR_APPLY, star_apply, top=True)
+
+
+_COLUMNS_CALL = re.compile(r"\bCOLUMNS\s*\(", re.I)
+_STAR_APPLY = re.compile(r"\*\s*(?:EXCEPT\s*\(([^)]*)\)\s*)?(?=APPLY\s*\()", re.I)
 
 
 def _render_applied(base: list[str], fns: list[str]) -> str:
@@ -1106,26 +1197,29 @@ def _rewrite_distinct_on(sql: str) -> str:
     return head + body
 
 
+_LIMIT_BY = re.compile(
+    r"LIMIT\s+(\d+)(?:\s*,\s*(\d+)|\s+OFFSET\s+(\d+))?\s+BY\s+", re.I
+)
+
+
 def _rewrite_limit_by(sql: str) -> str:
-    # LIMIT n [OFFSET m] BY cols: skip m rows per group, keep n. The
-    # comma form LIMIT m, n BY (offset FIRST, like MySQL) normalizes
-    # here — the general comma-limit pass runs later in the pipeline.
-    cm = _find_top(sql, r"\bLIMIT\s+(\d+)\s*,\s*(\d+)\s+BY\b")
-    if cm:
-        sql = (
-            sql[: cm.start()]
-            + f"LIMIT {cm.group(2)} OFFSET {cm.group(1)} BY"
-            + sql[cm.end():]
-        )
-    m = _find_top(sql, r"\bLIMIT\s+(\d+)(?:\s+OFFSET\s+(\d+))?\s+BY\s+")
+    # LIMIT n [OFFSET m] BY cols: skip m rows per group, keep n; the
+    # comma form LIMIT m, n BY puts the offset FIRST, like MySQL. The
+    # BY list runs to the next clause (the query's own row limit).
+    m = stop = None
+    for span in _clauses(sql)[0]:
+        if m is None and span[0] == "LIMIT":
+            m = _LIMIT_BY.match(sql, span[2])
+        elif m and span[2] >= m.end():
+            stop = span[2]
+            break
     if not m:
         return sql
-    n = int(m.group(1))
-    off = int(m.group(2)) if m.group(2) else 0
-    tail = sql[m.end():]
-    stop = _find_top(tail, r"\bLIMIT\b|\bFORMAT\b")
-    cols = (tail[: stop.start()] if stop else tail).strip()
-    outer_limit = tail[stop.start():].strip() if stop else ""
+    n, off = int(m.group(1)), int(m.group(3) or 0)
+    if m.group(2):
+        n, off = int(m.group(2)), n
+    cols = sql[m.end(): stop].strip()
+    outer_limit = sql[stop:].strip() if stop else ""
     inner = (sql[: m.start()]).strip()
     # the window needs an order: reuse the query's ORDER BY if present
     # (ClickHouse applies LIMIT BY after ORDER BY), else storage order
@@ -1436,6 +1530,68 @@ def _parse_ch_schema_literal(lit: str, ctx: str) -> list[tuple[str, str]]:
     return cols
 
 
+_SCHEMA_TVF = re.compile(r"\b(?:FROM|JOIN)\s+(values|null)\s*\(", re.I)
+_FORMAT_TVF = re.compile(r"\b(FROM|JOIN)\s+format\s*\(", re.I)
+
+
+def _schema_literal_relation(m):
+    """CH ``values('x UInt8, ...', rows...)`` / ``null('schema')`` →
+    a typed VALUES / zero-row subquery; Spark's own VALUES is passed
+    over whole."""
+    sql = m.string
+    fname = m.group(1).lower()
+    close1 = _call_end(sql, m.end() - 1)
+    args = _split_top_commas(sql[m.end(): close1])
+    sm = re.fullmatch(r"\s*'([^']+)'\s*", args[0]) if args else None
+    cols = None
+    if sm and (fname == "null" or " " in sm.group(1)):
+        try:
+            cols = _parse_ch_schema_literal(sm.group(1), f"{fname}()")
+        except ValueError:
+            if fname == "null":
+                raise
+            cols = None  # a string row value, not a CH schema
+    if cols is None:
+        if fname == "values":
+            # Spark's own VALUES clause / TVF — left as it is
+            return sql[m.start(): close1 + 1], close1 + 1
+        raise ValueError("null() expects a 'name Type, ...' schema string")
+    head = sql[m.start(): m.start(1)]
+    rows = [a.strip() for a in args[1:]]
+    if fname == "null" or not rows:
+        sel = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols)
+        return head + f"(SELECT {sel} WHERE false) AS __ch_{fname}", close1 + 1
+    if len(cols) > 1:
+        if any(not r.startswith("(") for r in rows):
+            raise ValueError("values(): multi-column rows must be tuples")
+        vals = ", ".join(rows)
+    else:
+        vals = ", ".join(f"({r})" for r in rows)
+    names = ", ".join(n for n, _ in cols)
+    sel = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
+    return head + (
+        f"(SELECT {sel} FROM VALUES {vals}"
+        f" AS __ch_vrows({names})) AS __ch_values"
+    ), close1 + 1
+
+
+_VIEW_TVF = re.compile(r"\b(?:FROM|JOIN)\s+(view)\s*\(\s*(?=SELECT|WITH\b)", re.I)
+
+
+def _view_subquery(m):
+    """``view(SELECT ...)`` → the plain subquery ``(SELECT ...)``."""
+    open1 = m.string.index("(", m.end(1))
+    close1 = _call_end(m.string, open1)
+    return (m.string[m.start(): m.start(1)] + m.string[open1: close1 + 1],
+            close1 + 1)
+
+
+# words after a relation that are neither its alias nor a clause keyword
+_RELATION_TAIL_WORDS = frozenset(
+    ("ON", "USING", "AS", "FINAL", "WITH", "INTO", "PIVOT", "UNPIVOT")
+)
+
+
 def _rewrite_inline_table_functions(sql: str) -> str:
     """ClickHouse's literal-schema table functions:
 
@@ -1449,84 +1605,8 @@ def _rewrite_inline_table_functions(sql: str) -> str:
     - ``null('schema')`` → a typed ZERO-row relation (CH's null engine
       discards; reading it is empty).
     - ``view(SELECT ...)`` → a plain subquery."""
-    scan_from = 0
-    while True:
-        m = _find_top_anywhere(
-            sql[scan_from:], r"(?i)\b(?:FROM|JOIN)\s+(values|null)\s*\("
-        )
-        if not m:
-            break
-        # offsets are slice-relative: scan_from always sits just past
-        # a complete top-level TVF call (never inside a literal), so
-        # _scan_index on the suffix stays correct
-        mstart = scan_from + m.start()
-        mstart1 = scan_from + m.start(1)
-        fname = m.group(1).lower()
-        open1 = sql.index("(", scan_from + m.end() - 1)
-        close1 = _call_end(sql, open1)
-        args = _split_top_commas(sql[open1 + 1: close1])
-        sm = re.fullmatch(r"\s*'([^']+)'\s*", args[0]) if args else None
-        cols = None
-        if sm and (fname == "null" or " " in sm.group(1)):
-            try:
-                cols = _parse_ch_schema_literal(sm.group(1), f"{fname}()")
-            except ValueError:
-                if fname == "null":
-                    raise
-                cols = None  # a string row value, not a CH schema
-        if cols is None:
-            if fname == "values":
-                # Spark's own VALUES clause / TVF — leave it untouched
-                # but KEEP SCANNING: a later CH-form values()/null()
-                # in the same statement must still translate (a break
-                # here left them unresolved / silently mis-parsed)
-                scan_from = close1 + 1
-                continue
-            raise ValueError(
-                "null() expects a 'name Type, ...' schema string"
-            )
-        head = sql[mstart:mstart1]
-        rows = [a.strip() for a in args[1:]]
-        if fname == "null" or not rows:
-            sel = ", ".join(
-                f"CAST(NULL AS {t}) AS {n}" for n, t in cols
-            )
-            repl = f"(SELECT {sel} WHERE false) AS __ch_{fname}"
-        else:
-            if len(cols) > 1:
-                bad = [r for r in rows if not r.startswith("(")]
-                if bad:
-                    raise ValueError(
-                        "values(): multi-column rows must be tuples"
-                    )
-                vals = ", ".join(rows)
-            else:
-                vals = ", ".join(f"({r})" for r in rows)
-            names = ", ".join(n for n, _ in cols)
-            sel = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
-            repl = (
-                f"(SELECT {sel} FROM VALUES {vals}"
-                f" AS __ch_vrows({names})) AS __ch_values"
-            )
-        sql = sql[:mstart] + head + repl + sql[close1 + 1:]
-        # the rewrite only touched text at/after scan_from, so the
-        # kept offset stays valid; the emitted FROM VALUES form is
-        # re-matched and skipped as a Spark form next iteration
-    while True:
-        m = _find_top_anywhere(
-            sql, r"(?i)\b(?:FROM|JOIN)\s+view\s*\(\s*(?=SELECT|WITH\b)"
-        )
-        if not m:
-            break
-        open1 = sql.index("(", m.end() - 1)
-        close1 = _call_end(sql, open1)
-        head = sql[m.start(): open1]
-        head = head[: head.lower().rindex("view")]
-        sql = (
-            sql[: m.start()] + head
-            + "(" + sql[open1 + 1: close1] + ")"
-            + sql[close1 + 1:]
-        )
+    sql = _sub_outside_strings(sql, _SCHEMA_TVF, _schema_literal_relation)
+    sql = _sub_outside_strings(sql, _VIEW_TVF, _view_subquery)
     # format(Format, 'payload') (batch-74): the inline-literal table
     # function. JSONEachRow / JSONCompactEachRow payloads parse at
     # TRANSLATE time into a typed VALUES subquery (types inferred per
@@ -1534,13 +1614,11 @@ def _rewrite_inline_table_functions(sql: str) -> str:
     # the engine's INSERT ... FORMAT path, which owns the full format
     # zoo.
     fmt_n = 0
-    while True:
-        m = _find_top_anywhere(
-            sql, r"(?i)\b(FROM|JOIN)\s+format\s*\("
-        )
-        if not m:
-            break
+
+    def inline_format(m):
+        nonlocal fmt_n
         fmt_n += 1
+        sql = m.string
         open1 = sql.index("(", m.end() - 1)
         close1 = _call_end(sql, open1)
         args = _split_top_commas(sql[open1 + 1: close1])
@@ -1632,42 +1710,39 @@ def _rewrite_inline_table_functions(sql: str) -> str:
         user_alias = bool(re.match(r"(?is)AS\s+[`\"]?[A-Za-z_]", tail))
         if not user_alias:
             bare = re.match(r"[`\"]?([A-Za-z_]\w*)", tail)
-            user_alias = bool(bare) and bare.group(1).upper() not in (
-                "WHERE", "PREWHERE", "GROUP", "ORDER", "LIMIT",
-                "OFFSET", "FETCH", "HAVING", "QUALIFY", "WINDOW",
-                "UNION", "INTERSECT", "EXCEPT", "JOIN", "LEFT",
-                "RIGHT", "FULL", "INNER", "CROSS", "OUTER", "NATURAL",
-                "SEMI", "ANTI", "ASOF", "GLOBAL", "ARRAY", "LATERAL",
-                "PIVOT", "UNPIVOT", "ON", "USING", "SETTINGS", "WITH",
-                "FINAL", "SAMPLE", "INTO", "FORMAT", "AS",
+            user_alias = bool(bare) and not _CLAUSE_RX.match(tail) and (
+                bare.group(1).upper() not in _RELATION_TAIL_WORDS
             )
         alias = "" if user_alias else f" AS __ch_format_{fmt_n}"
         repl = (
             f"{m.group(1)} (SELECT {sel} FROM VALUES {vals}"
             f" AS __ch_frows_{fmt_n}({quoted})){alias}"
         )
-        sql = sql[: m.start()] + repl + sql[close1 + 1:]
+        return repl, close1 + 1
+
+    sql = _sub_outside_strings(sql, _FORMAT_TVF, inline_format)
     # ANSI OFFSET ... FETCH (CH supports both spellings): LIMIT/OFFSET
     # is the Spark form. FETCH ... WITH TIES refuses to the supported
     # LIMIT n WITH TIES spelling (that rewrite has already run by now).
-    while True:
-        m = _find_top_anywhere(
-            sql,
-            r"(?i)\b(?:OFFSET\s+(\d+)\s+ROWS?\s+)?FETCH\s+(?:FIRST|NEXT)"
-            r"\s+(\d+)\s+ROWS?\s+(ONLY|WITH\s+TIES)",
+    return _sub_outside_strings(sql, _FETCH, _fetch_limit)
+
+
+_FETCH = re.compile(
+    r"\b(?:OFFSET\s+(\d+)\s+ROWS?\s+)?FETCH\s+(?:FIRST|NEXT)"
+    r"\s+(\d+)\s+ROWS?\s+(ONLY|WITH\s+TIES)",
+    re.I,
+)
+
+
+def _fetch_limit(m) -> str:
+    if m.group(3).upper() != "ONLY":
+        raise ValueError(
+            "FETCH ... WITH TIES: use LIMIT n WITH TIES (the"
+            " translated spelling)"
         )
-        if not m:
-            break
-        if m.group(3).upper() != "ONLY":
-            raise ValueError(
-                "FETCH ... WITH TIES: use LIMIT n WITH TIES (the"
-                " translated spelling)"
-            )
-        repl = f"LIMIT {m.group(2)}"
-        if m.group(1) is not None:
-            repl += f" OFFSET {m.group(1)}"
-        sql = sql[: m.start()] + repl + sql[m.end():]
-    return sql
+    if m.group(1) is None:
+        return f"LIMIT {m.group(2)}"
+    return f"LIMIT {m.group(2)} OFFSET {m.group(1)}"
 
 
 def _rewrite_numbers(sql: str) -> str:
@@ -1677,57 +1752,41 @@ def _rewrite_numbers(sql: str) -> str:
     and the unbounded ``system.numbers`` stream translate too —
     the latter to a max-range TVF, lazily generated, so the LIMIT a
     sane query carries stops the scan after its first rows."""
-    while True:
-        # numbers_mt is the multithreaded spelling (order not
-        # guaranteed) — range() parallelizes anyway, same rewrite
-        m = _find_top(
-            sql, r"\bnumbers(?:_mt)?\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)"
-        )
-        if not m:
-            break
-        if m.group(2) is not None:
-            off, n = int(m.group(1)), int(m.group(2))
-            rng = f"range({off}, {off + n})"
-        else:
-            rng = f"range({m.group(1)})"
-        sub = f"(SELECT id AS number FROM {rng})"
-        sql = sql[: m.start()] + sub + sql[m.end():]
-    while True:
-        # zeros(N) / zeros_mt(N): the constant-0 generator table
-        m = _find_top(sql, r"\bzeros(?:_mt)?\s*\(\s*(\d+)\s*\)")
-        if not m:
-            break
-        sub = (
-            f"(SELECT CAST(0 AS TINYINT) AS zero"
-            f" FROM range({m.group(1)}))"
-        )
-        sql = sql[: m.start()] + sub + sql[m.end():]
-    while True:
-        m = _find_top(
-            sql,
-            r"\bgenerate(?:_s|S)eries\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*"
-            r"(?:,\s*(-?\d+)\s*)?\)",
-        )
-        if not m:
-            break
-        a, b = int(m.group(1)), int(m.group(2))
-        step = int(m.group(3)) if m.group(3) else 1
-        # range() is end-exclusive; generate_series is inclusive
-        sub = (
-            f"(SELECT id AS generate_series"
-            f" FROM range({a}, {b + (1 if step > 0 else -1)}, {step}))"
-        )
-        sql = sql[: m.start()] + sub + sql[m.end():]
-    while True:
-        m = _find_top(sql, r"\bsystem\.numbers\b")
-        if not m:
-            break
-        sql = (
-            sql[: m.start()]
-            + "(SELECT id AS number FROM range(9223372036854775807))"
-            + sql[m.end():]
-        )
+    for rx, repl in _NUMBERS_TVFS:
+        sql = _sub_outside_strings(sql, rx, repl, top=True)
     return sql
+
+
+def _numbers_range(m) -> str:
+    if m.group(2) is None:
+        return f"(SELECT id AS number FROM range({m.group(1)}))"
+    off, n = int(m.group(1)), int(m.group(2))
+    return f"(SELECT id AS number FROM range({off}, {off + n}))"
+
+
+def _generate_series(m) -> str:
+    a, b = int(m.group(1)), int(m.group(2))
+    step = int(m.group(3)) if m.group(3) else 1
+    # range() is end-exclusive; generate_series is inclusive
+    return (
+        f"(SELECT id AS generate_series"
+        f" FROM range({a}, {b + (1 if step > 0 else -1)}, {step}))"
+    )
+
+
+_NUMBERS_TVFS = (
+    # numbers_mt is the multithreaded spelling (order not guaranteed)
+    # — range() parallelizes anyway, same rewrite
+    (re.compile(r"\bnumbers(?:_mt)?\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)", re.I),
+     _numbers_range),
+    # zeros(N) / zeros_mt(N): the constant-0 generator table
+    (re.compile(r"\bzeros(?:_mt)?\s*\(\s*(\d+)\s*\)", re.I),
+     lambda m: f"(SELECT CAST(0 AS TINYINT) AS zero FROM range({m.group(1)}))"),
+    (re.compile(r"\bgenerate(?:_s|S)eries\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*"
+                r"(?:,\s*(-?\d+)\s*)?\)", re.I), _generate_series),
+    (re.compile(r"\bsystem\.numbers\b", re.I),
+     "(SELECT id AS number FROM range(9223372036854775807))"),
+)
 
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][\w.]*$")
@@ -4281,6 +4340,10 @@ _SCALAR_RULES_TAIL = _rules(
 )
 
 
+_NAN_INF = {"nan": "CAST('NaN' AS DOUBLE)", "inf": "CAST('Infinity' AS DOUBLE)"}
+_AS_BEFORE = re.compile(r"(?i)\bAS\s+$")
+
+
 def _rewrite_scalar_misc(sql: str, specs: dict | None = None) -> str:
     """Polymorphic scalar spellings that need a translate-time rewrite
     rather than a typed SQL-UDF alias: renames (arrayZip → arrays_zip,
@@ -4300,24 +4363,16 @@ def _rewrite_scalar_misc(sql: str, specs: dict | None = None) -> str:
     # meaningless anyway) — skip the name entirely (fuzz_compose: GROUP
     # BY inf became GROUP BY CAST('Infinity' AS DOUBLE), a
     # MISSING_AGGREGATION error).
-    for _lit, _repl in (
-        ("nan", "CAST('NaN' AS DOUBLE)"),
-        ("inf", "CAST('Infinity' AS DOUBLE)"),
-    ):
-        if _find_top_anywhere(sql, rf"(?i)\bAS\s+`?{_lit}`?\b"):
-            continue
-        _pos = 0
-        while True:
-            m = _find_top_anywhere(sql, rf"\b{_lit}\b", _pos, flags=0)
-            if not m:
-                break
-            if re.search(r"(?i)\bAS\s+$", sql[: m.start()]) or (
-                m.start() > 0 and sql[m.start() - 1] in ".`"
-            ):
-                _pos = m.end()
-                continue
-            sql = sql[: m.start()] + _repl + sql[m.end():]
-            _pos = m.start() + len(_repl)
+    lits = [
+        lit for lit in _NAN_INF
+        if not _find_top_anywhere(sql, rf"(?i)\bAS\s+`?{lit}`?\b")
+    ]
+    if lits:
+        sql = _sub_outside_strings(
+            sql, _rxc(rf"(?<![.`])\b(?:{'|'.join(lits)})\b"),
+            lambda m: None if _AS_BEFORE.search(m.string, 0, m.start())
+            else _NAN_INF[m.group(0)],
+        )
     sql = _rewrite_calls(sql, _SCALAR_RULES_HEAD)
     sql = _rewrite_calls(sql, _array_size_rules(_array_cols(specs)))
     return _rewrite_calls(sql, _SCALAR_RULES_TAIL)
@@ -4352,35 +4407,33 @@ def _count_capture_groups(pat: str) -> int | None:
     return ncap
 
 
+_BRACKET = re.compile(r"[\[\]]")
+
+
 def _bracket_end(s: str, open_idx: int) -> int:
-    """Index of the ``]`` matching the ``[`` at ``open_idx`` (quote-aware)."""
-    depth, quote = 0, None
-    for j in range(open_idx, len(s)):
-        ch = s[j]
-        if quote:
-            if ch == quote and s[j - 1] != "\\":
-                quote = None
+    """Index of the ``]`` matching the ``[`` at ``open_idx``; brackets
+    inside literals (_scan_index) do not count."""
+    idx = _scan_index(s)
+    depth = 0
+    for m in _BRACKET.finditer(s, open_idx):
+        if _idx_in_string(idx, m.start()):
             continue
-        if ch in "'\"":
-            quote = ch
-        elif ch == "[":
-            depth += 1
-        elif ch == "]":
-            depth -= 1
-            if depth == 0:
-                return j
+        depth += 1 if m.group() == "[" else -1
+        if depth == 0:
+            return m.start()
     raise ValueError(f"unbalanced brackets after position {open_idx}")
 
 
 def _open_match(s: str, close_idx: int) -> int:
-    """Index of the opener matching the ``)``/``]`` at ``close_idx``."""
-    pair = {")": "(", "]": "["}[s[close_idx]]
+    """Index of the opener matching the ``)``/``]`` at ``close_idx``;
+    brackets inside literals (_scan_index) do not count."""
+    closer = s[close_idx]
+    pair = {")": "(", "]": "["}[closer]
+    idx = _scan_index(s)
     depth = 0
     for j in range(close_idx, -1, -1):
-        if s[j] == s[close_idx]:
-            depth += 1
-        elif s[j] == pair:
-            depth -= 1
+        if (s[j] == closer or s[j] == pair) and not _idx_in_string(idx, j):
+            depth += 1 if s[j] == closer else -1
             if depth == 0:
                 return j
     raise ValueError(f"unbalanced brackets before position {close_idx}")
@@ -4427,7 +4480,10 @@ def _rewrite_brackets(sql: str) -> str:
         if j >= 0 and (sql[j].isalnum() or sql[j] in "_)]`"):
             k = j
             while k >= 0:
-                if sql[k] in ")]":
+                if sql[k] == "`":
+                    # a backquoted name, whatever it holds
+                    k = sidx[0][_bisect_right(sidx[0], k) - 1] - 1
+                elif sql[k] in ")]":
                     k = _open_match(sql, k) - 1
                 elif sql[k].isalnum() or sql[k] in "_.`":
                     k -= 1
@@ -7251,20 +7307,8 @@ def _rewrite_any_join(sql: str, specs: dict | None) -> str:
             " undefined under a distributed scan — join on an explicit"
             " row_number() window instead"
         )
-    while True:
-        m = _find_top_anywhere(
-            sql,
-            r"\b(?:(LEFT|INNER)\s+)?ANY\s+(?:(LEFT|INNER)\s+)?JOIN\s+"
-            r"([A-Za-z_][\w.]*)\s*(?:AS\s+(\w+)\s*)?USING\s*\(([^)]*)\)",
-        )
-        if not m:
-            if _find_top_anywhere(sql, r"\bANY\s+(LEFT\s+|INNER\s+)?JOIN\b"):
-                raise ValueError(
-                    "ANY JOIN is only translated for `[LEFT|INNER] ANY JOIN "
-                    "<table> USING (...)`; for ON-clause or subquery forms "
-                    "use operators/joins.py:any_join"
-                )
-            return sql
+
+    def one_row_per_key(m) -> str:
         how = (m.group(1) or m.group(2) or "INNER").upper()
         table, alias = m.group(3), m.group(4) or m.group(3).split(".")[-1]
         keys = [k.strip() for k in m.group(5).split(",") if k.strip()]
@@ -7281,11 +7325,23 @@ def _rewrite_any_join(sql: str, specs: dict | None) -> str:
             f"{', '.join(order_cols)}) AS __any_rn FROM {table}) "
             f"WHERE __any_rn = 1)"
         )
-        sql = (
-            sql[: m.start()]
-            + f"{how} JOIN {one} AS {alias} USING ({', '.join(keys)})"
-            + sql[m.end():]
+        return f"{how} JOIN {one} AS {alias} USING ({', '.join(keys)})"
+
+    sql = _sub_outside_strings(sql, _ANY_JOIN_USING, one_row_per_key)
+    if _find_top_anywhere(sql, r"\bANY\s+(LEFT\s+|INNER\s+)?JOIN\b"):
+        raise ValueError(
+            "ANY JOIN is only translated for `[LEFT|INNER] ANY JOIN "
+            "<table> USING (...)`; for ON-clause or subquery forms "
+            "use operators/joins.py:any_join"
         )
+    return sql
+
+
+_ANY_JOIN_USING = re.compile(
+    r"\b(?:(LEFT|INNER)\s+)?ANY\s+(?:(LEFT|INNER)\s+)?JOIN\s+"
+    r"([A-Za-z_][\w.]*)\s*(?:AS\s+(\w+)\s*)?USING\s*\(([^)]*)\)",
+    re.I,
+)
 
 
 def _rewrite_system(sql: str) -> str:
@@ -7294,27 +7350,22 @@ def _rewrite_system(sql: str) -> str:
     database qualifier). Token-level, never inside strings.
     ``system.one`` — the implicit FROM-less table (one row, ``dummy``
     UInt8 = 0) — inlines as a literal subquery (batch-83)."""
-    while True:
-        m = _find_top(sql, r"\bsystem\.one\b")
-        if not m:
-            break
-        # no synthetic alias: Spark accepts a bare FROM subquery, and
-        # a user alias (FROM system.one AS t) then applies cleanly
-        sql = (
-            sql[: m.start()]
-            + "(SELECT CAST(0 AS SMALLINT) AS dummy)"
-            + sql[m.end():]
-        )
-    while True:
-        m = _find_top(
-            sql,
-            r"\bsystem\.(tables|columns|parts|query_log|functions"
-            r"|databases|mutations|processes|merges|replicas"
-            r"|dictionaries|disks|settings)\b",
-        )
-        if not m:
-            return sql
-        sql = sql[: m.start()] + f"system_{m.group(1)}" + sql[m.end():]
+    # no synthetic alias for system.one: Spark accepts a bare FROM
+    # subquery, and a user alias (FROM system.one AS t) then applies
+    sql = _sub_outside_strings(
+        sql, _SYSTEM_ONE, "(SELECT CAST(0 AS SMALLINT) AS dummy)", top=True
+    )
+    return _sub_outside_strings(
+        sql, _SYSTEM_TABLES, lambda m: f"system_{m.group(1)}", top=True
+    )
+
+
+_SYSTEM_ONE = re.compile(r"\bsystem\.one\b", re.I)
+_SYSTEM_TABLES = re.compile(
+    r"\bsystem\.(tables|columns|parts|query_log|functions|databases"
+    r"|mutations|processes|merges|replicas|dictionaries|disks|settings)\b",
+    re.I,
+)
 
 
 # ClickHouse type names → Spark SQL type names, for CAST(x AS Float64),
@@ -7460,28 +7511,20 @@ def _rewrite_ch_casts(sql: str) -> str:
     through unchanged."""
     sql = _rewrite_calls(sql, _CAST_RULES)
     # expr::Type — rewrite just the type token (Spark 4 owns the ::)
-    pos = 0
-    colon_rx = re.compile(r"::\s*([A-Za-z][A-Za-z0-9]*)(\s*\()?")
-    while True:
-        m = colon_rx.search(sql, pos)
-        if not m:
-            break
-        if _idx_in_string(_scan_index(sql), m.start()):
-            pos = m.end()
-            continue
-        if m.group(2):
-            close = _call_end(sql, sql.index("(", m.end(1)))
-            tok_start, tok_end = m.start(1), close + 1
-        else:
-            tok_start, tok_end = m.start(1), m.end(1)
-        tok = sql[tok_start:tok_end]
-        spark_t = _spark_type_name(tok)
-        if spark_t and spark_t.upper() != tok.upper():
-            sql = sql[:tok_start] + spark_t + sql[tok_end:]
-            pos = tok_start + len(spark_t)
-        else:
-            pos = tok_end
-    return sql
+    return _sub_outside_strings(sql, _COLON_CAST, _colon_cast_type)
+
+
+_COLON_CAST = re.compile(r"::\s*([A-Za-z][A-Za-z0-9]*)(\s*\()?")
+
+
+def _colon_cast_type(m):
+    sql = m.string
+    end = _call_end(sql, m.end() - 1) + 1 if m.group(2) else m.end(1)
+    tok = sql[m.start(1): end]
+    spark_t = _spark_type_name(tok)
+    if spark_t and spark_t.upper() != tok.upper():
+        tok = spark_t
+    return sql[m.start(): m.start(1)] + tok, end
 
 
 _TUPLE_VECTOR_OPS = {
@@ -7775,9 +7818,11 @@ def _apply_clause_rewrites(sql: str, specs: dict | None) -> str:
     gm = _find_top(sql, r"(?i)\bGROUP\s+BY\s*\(\s*\)")
     if gm:
         sql = sql[: gm.start()] + " " + sql[gm.end():]
-    sql = _inline_select_aliases_in_where(sql)
     sql = _rewrite_array_join_fn(sql)
+    sql = _inline_select_aliases_in_where(sql)
     sql = _rewrite_array_join(sql)
+    # before the passes below move WHERE / HAVING into a wrapper's FROM
+    sql = _rewrite_condition_heads(sql)
     sql = _rewrite_totals(sql)
     sql = _rewrite_limit_with_ties(sql)
     sql = _rewrite_distinct_on(sql)
@@ -7785,49 +7830,39 @@ def _apply_clause_rewrites(sql: str, specs: dict | None) -> str:
     sql = _rewrite_limit_offset(sql)
     sql = _rewrite_with_fill(sql)
     sql = _rewrite_qualify(sql)
-    sql = _rewrite_unordered_ranking_windows(sql)
-    # CH integer truthiness at a condition-clause head (batch-85):
-    # WHERE 1 / HAVING 0 / WHERE 1 AND ... — Spark's ANSI filter wants
-    # BOOLEAN. Scoped to literal ints directly after the clause
-    # keyword (general expression truthiness is type-unknowable at
-    # rewrite time, and an AND-position rewrite would corrupt
-    # BETWEEN ... AND <n>).
-    while True:
-        m = _find_top_anywhere(
-            sql,
-            r"(?i)\b(WHERE|PREWHERE|HAVING)\s+(\d+)\s*"
-            r"(?=$|\)|;|\b(?:AND|OR|GROUP|ORDER|LIMIT|OFFSET|HAVING"
-            r"|SETTINGS|UNION|EXCEPT|INTERSECT|WINDOW|QUALIFY|FORMAT"
-            r"|INTO)\b)",
-        )
-        if not m:
-            break
-        sql = (
-            sql[: m.start()]
-            + f"{m.group(1)} ({m.group(2)} <> 0)"
-            + sql[m.end():]
-        )
-    # Spark's parser rejects WHERE/HAVING (ident) — a lone
-    # parenthesized identifier parses as an assignment form and dies
-    # with ASSIGNMENT_ARITY_MISMATCH (verified on 4.1); ClickHouse
-    # accepts the spelling. Unwrap the parens (fuzz_compose, r11).
-    while True:
-        m = _find_top_anywhere(
-            sql,
-            r"(?i)\b(WHERE|HAVING)\s*\(\s*(`?\w+`?)\s*\)\s*"
-            r"(?=$|\)|;|\b(?:AND|OR|GROUP|ORDER|LIMIT|OFFSET"
-            r"|UNION|EXCEPT|INTERSECT|WINDOW|QUALIFY)\b)",
-        )
-        if not m:
-            break
-        body = m.group(2)
-        if body.isdigit():  # (1) is CH truthiness, same as the bare int
-            body = f"({body} <> 0)"
-        sql = (
-            sql[: m.start()]
-            + f"{m.group(1)} {body} "
-            + sql[m.end():]
-        )
+    return _rewrite_calls(sql, _RANKING_WINDOWS)
+
+
+# CH integer truthiness at a condition-clause head (batch-85): WHERE 1 /
+# HAVING 0 / WHERE 1 AND ... — Spark's ANSI filter wants BOOLEAN.
+# Scoped to a literal int that is the whole condition or its first
+# AND/OR operand (general expression truthiness is type-unknowable at
+# rewrite time, and an AND-position rewrite would corrupt BETWEEN ...
+# AND <n>).
+_INT_HEAD = re.compile(r"\s+(\d+)\s*(?=$|\b(?:AND|OR)\b)", re.I)
+# Spark's parser rejects WHERE/HAVING (ident) — a lone parenthesized
+# identifier parses as an assignment form and dies with
+# ASSIGNMENT_ARITY_MISMATCH (verified on 4.1); ClickHouse accepts the
+# spelling. The parens unwrap (fuzz_compose, r11).
+_PAREN_HEAD = re.compile(r"\s*\(\s*(`?\w+`?)\s*\)\s*(?=$|\b(?:AND|OR)\b)", re.I)
+
+
+def _rewrite_condition_heads(sql: str) -> str:
+    """The two condition-head spellings above, on each WHERE and HAVING
+    clause of the level."""
+    for name, _, start, body, end in reversed(_clauses(sql)[0]):
+        if name != "WHERE" and name != "HAVING":
+            continue
+        m = _INT_HEAD.match(sql, body, end)
+        if m:
+            sql = sql[:start] + f"{sql[start:body]} ({m.group(1)} <> 0)" + sql[m.end():]
+            continue
+        m = _PAREN_HEAD.match(sql, body, end)
+        if m:
+            cond = m.group(1)
+            if cond.isdigit():  # (1) is CH truthiness, same as the bare int
+                cond = f"({cond} <> 0)"
+            sql = sql[:start] + f"{sql[start:body]} {cond} " + sql[m.end():]
     return sql
 
 
@@ -7890,32 +7925,20 @@ def _rewrite_inline_paren_aliases(sql: str) -> str:
         # substitute bare references everywhere (CH aliases are
         # query-global): not a call, not qualified, not an alias
         # definition site, not inside strings
-        out, pos = [], 0
-        rx = _rxc(rf"\b{_esc(name)}\b")
-        while True:
-            mm = rx.search(sql, pos)
-            if not mm:
-                out.append(sql[pos:])
-                break
-            before = sql[: mm.start()].rstrip()
-            after = sql[mm.end():].lstrip()
-            if (
-                _idx_in_string(_scan_index(sql), mm.start())
-                or after.startswith("(")
-                or before.endswith(".")
-                or before.endswith("`")
-                or re.search(r"(?i)\bAS$", before)
-            ):
-                out.append(sql[pos: mm.end()])
-                pos = mm.end()
-                continue
-            out.append(sql[pos: mm.start()])
-            out.append(f"({expr})")
-            pos = mm.end()
-        sql = "".join(out)
+        sql = _sub_outside_strings(
+            sql, _rxc(rf"\b{_esc(name)}\b"),
+            lambda m, ref=f"({expr})": None if (
+                _CALL_AFTER.match(m.string, m.end())
+                or _REF_BEFORE.search(m.string, 0, m.start())
+            ) else ref,
+        )
 
 
-def _rewrite_unordered_ranking_windows(sql: str) -> str:
+_CALL_AFTER = re.compile(r"\s*\(")
+_REF_BEFORE = re.compile(r"(?:[.`]|(?i:\bAS))\s*$")
+
+
+def _unordered_ranking_window(sql, m, close, args):
     """ClickHouse allows ranking window functions over an UNORDERED
     window (``row_number() OVER ()``, ``rank() OVER (PARTITION BY g)``)
     — the numbering order is whatever the engine produces. Spark
@@ -7926,29 +7949,25 @@ def _rewrite_unordered_ranking_windows(sql: str) -> str:
     cume_dist all-peers also matches CH, which ties every row absent
     an ORDER BY). Named windows (``OVER w``) and windows that already
     carry a top-level ORDER BY are left alone."""
-    pos = 0
-    while True:
-        m = _find_top_anywhere(
-            sql,
-            r"\b(?:row_number|rank|dense_rank|percent_rank|cume_dist"
-            r"|ntile)\s*\([^()]*\)\s*OVER\s*\(",
-            pos,
-        )
-        if not m:
-            break
-        open1 = sql.rindex("(", m.start(), m.end())
-        close1 = _call_end(sql, open1)
-        body = sql[open1 + 1: close1]
-        if _find_top(body, r"(?i)\bORDER\s+BY\b"):
-            pos = close1
-            continue
-        sep = " " if body.strip() else ""
-        sql = (
-            sql[: open1 + 1] + body + sep + "ORDER BY 1"
-            + sql[close1:]
-        )
-        pos = close1 + len(sep) + len("ORDER BY 1")
-    return sql
+    over = _trailing_over(sql, close)
+    if over is None:
+        return None
+    open1, close1 = over
+    body = sql[open1 + 1: close1]
+    if "ORDER BY" in _clauses(body)[1]:
+        return None
+    # the order goes before a frame (ROWS/RANGE BETWEEN ...), if any
+    fm = _find_top(body, r"\b(?:ROWS|RANGE|GROUPS)\b")
+    at = open1 + 1 + fm.start() if fm else close1
+    sep = " " if sql[open1 + 1: at].strip() else ""
+    return (sql[m.start(): at] + sep + "ORDER BY 1" + (" " if fm else "")
+            + sql[at: close1 + 1], close1 + 1)
+
+
+_RANKING_WINDOWS = _rules(
+    (r"(?:row_number|rank|dense_rank|percent_rank|cume_dist|ntile)",
+     _unordered_ranking_window, re.I),
+)
 
 
 def _inline_select_aliases_in_where(sql: str) -> str:
@@ -7966,44 +7985,27 @@ def _inline_select_aliases_in_where(sql: str) -> str:
     alias-referencing-alias chains stay column-resolved (documented
     corner), and a self-shadowing alias (``x + 1 AS x``) inlines one
     level with the inner ``x`` meaning the column."""
-    fm = _find_top(sql, r"(?i)\bFROM\b")
-    wm = _find_top(sql, r"(?i)\bWHERE\b")
-    sm = re.match(r"(?is)^\s*SELECT\s+", sql)
-    if not (sm and fm and wm) or wm.start() < fm.end():
+    first = _clauses(sql)[1]
+    sm, fm, wm = first.get("SELECT"), first.get("FROM"), first.get("WHERE")
+    if not (sm and fm and wm) or sql[: sm[2]].strip():
         return sql
     aliases: dict[str, str] = {}
-    for item in _split_top_commas(sql[sm.end(): fm.start()]):
+    for item in _split_top_commas(sql[sm[3]: fm[2]]):
         am = re.match(r"(?s)^\s*(.*\S)\s+AS\s+`?(\w+)`?\s*$", item, re.I)
         if am:
             aliases[am.group(2)] = am.group(1).strip()
     if not aliases:
         return sql
-    wstart = wm.end()
-    # FORMAT/SETTINGS are NOT terminators here: _strip_trailing removed
-    # the real clauses long before this pass, so a bare occurrence is
-    # an identifier — an alias NAMED format used to truncate the
-    # scanned segment and stay un-inlined (fuzz_compose finding, r11)
-    tail_m = _find_top(
-        sql[wstart:],
-        r"(?i)\b(GROUP\s+BY|HAVING|WINDOW|QUALIFY|ORDER\s+BY|LIMIT|"
-        r"OFFSET|UNION|INTERSECT|EXCEPT)\b",
-    )
-    wend = wstart + tail_m.start() if tail_m else len(sql)
+    wstart, wend = wm[3], wm[4]
     wseg = sql[wstart:wend]
-    # positions to leave alone: string literals + sub-SELECT bodies
-    blocked = [False] * len(wseg)
+    # what the scans below read: wseg with the bodies of its literals
+    # and sub-SELECTs blanked (same offsets), so neither is touched
+    parts, prev = [], 0
     for a, b in zip(*_scan_index(wseg)[:2]):
-        blocked[a:b] = [True] * (b - a)
-    i = 0
-    while i < len(wseg):
-        if wseg[i] == "(" and not blocked[i]:
-            after = wseg[i + 1:].lstrip()
-            if re.match(r"(?i)(SELECT|WITH)\b", after):
-                j = _call_end(wseg, i)
-                for k in range(i, j + 1):
-                    blocked[k] = True
-                i = j
-        i += 1
+        parts += (wseg[prev: a + 1], " " * (b - a - 2))
+        prev = b - 1
+    parts.append(wseg[prev:])
+    masked = _each_level("".join(parts), str, inner=lambda q: " " * len(q))
     # lambda parameters shadow SELECT aliases (SELECT 1.5 AS x ...
     # WHERE arrayExists(x -> x = i, arr) must NOT inline the bound x —
     # fuzz_compose finding, r11). Scope is per-lambda: the parameter
@@ -8012,15 +8014,11 @@ def _inline_select_aliases_in_where(sql: str) -> str:
     # ELSEWHERE in the WHERE still inlines (CH resolves both).
     lam_spans: dict[str, list[tuple[int, int]]] = {}
     for lm in re.finditer(
-            r"(\b\w+\s*|\(\s*\w+(?:\s*,\s*\w+)*\s*\)\s*)->", wseg):
-        if blocked[lm.start()]:
-            continue
+            r"(\b\w+\s*|\(\s*\w+(?:\s*,\s*\w+)*\s*\)\s*)->", masked):
         body_end = len(wseg)
         d = 0
         for j in range(lm.end(), len(wseg)):
-            if blocked[j]:
-                continue
-            cj = wseg[j]
+            cj = masked[j]
             if cj == "(":
                 d += 1
             elif cj == ")":
@@ -8038,9 +8036,7 @@ def _inline_select_aliases_in_where(sql: str) -> str:
         rx = _rxc(
             rf"(?<![\w.`$]){_esc(name)}(?![\w`])(?!\s*\()"
         )
-        for m in rx.finditer(wseg):
-            if blocked[m.start()]:
-                continue
+        for m in rx.finditer(masked):
             if any(s <= m.start() < e
                    for s, e in lam_spans.get(name, ())):
                 continue
@@ -8059,9 +8055,6 @@ def _inline_select_aliases_in_where(sql: str) -> str:
     return sql[:wstart] + "".join(out) + sql[wend:]
 
 
-_ORDER_KEYLIST_TERMINATORS = re.compile(
-    r"(?i)\b(LIMIT|OFFSET|UNION|EXCEPT|INTERSECT)\b"
-)
 # frame keywords can only follow ORDER BY inside an OVER(...) spec —
 # matching them at depth 0 would eat a sort key ALIASED `rows`/`range`
 # (FORMAT/SETTINGS are stripped long before this pass, so they are
@@ -8085,10 +8078,6 @@ def _rewrite_order_by_null_direction(sql: str) -> str:
     pos = 0
     rx = re.compile(r"(?i)\bORDER\s+BY\s+")
     while True:
-        # _scan_index probes (r12) instead of per-char instr/depth dicts
-        # rebuilt on every ORDER BY found: depth only changes at parens,
-        # so the first position where it drops below the ORDER BY's is
-        # the first indexed ')' carrying a smaller depth.
         idx = _scan_index(sql)
         dpos, dval = idx[2], idx[3]
         m = None
@@ -8100,21 +8089,27 @@ def _rewrite_order_by_null_direction(sql: str) -> str:
             return sql
         start = m.end()
         base_depth = _idx_depth(idx, m.start())
-        end = len(sql)
-        # the key list ends at the enclosing close-paren (depth drops
-        # below the ORDER BY's) or the first same-depth clause keyword
-        for k in range(_bisect_left(dpos, start), len(dpos)):
-            if dval[k] < base_depth:
-                end = dpos[k]
-                break
-        terms = [_ORDER_KEYLIST_TERMINATORS]
+        # the key list ends at the enclosing close-paren, or at the next
+        # clause of the enclosing level (a query level or an OVER body)
+        lo, end = 0, len(sql)
         if base_depth > 0:
-            terms.append(_ORDER_FRAME_TERMINATORS)
-        for t_rx in terms:
-            for tm in t_rx.finditer(sql, start, end):
+            k = _bisect_right(dpos, m.start()) - 1
+            while dval[k] != base_depth or sql[dpos[k]] != "(":
+                k -= 1
+            lo = dpos[k] + 1
+            end = idx[4].get(dpos[k], end)
+        # no keyword after the keys (most OVER specs): no level to split
+        if _CLAUSE_RX.search(sql, start, end):
+            level = sql[lo:end]
+            for name, _, p, _, e in _clauses(level)[0]:
+                if p == m.start() - lo and name == "ORDER BY":
+                    end = lo + e
+                    break
+        if base_depth > 0:
+            for tm in _ORDER_FRAME_TERMINATORS.finditer(sql, start, end):
                 if (not _idx_in_string(idx, tm.start())
                         and _idx_depth(idx, tm.start()) == base_depth):
-                    end = min(end, tm.start())
+                    end = tm.start()
                     break
         seg = sql[start:end]
         keys = _split_top_commas(seg)
@@ -8146,33 +8141,24 @@ def _rewrite_qualify(sql: str) -> str:
     column, filtered in the outer query, and dropped with
     ``* EXCEPT``. Runs LAST in the clause chain so the head it wraps is
     already fully rewritten at this nesting level."""
-    m = _find_top(sql, r"(?i)\bQUALIFY\b")
-    if not m:
+    first = _clauses(sql)[1]
+    q = first.get("QUALIFY")
+    if not q:
         return sql
-    tail_m = _find_top(
-        sql[m.end():],
-        r"(?i)\b(ORDER\s+BY|LIMIT|OFFSET|UNION|EXCEPT|INTERSECT|FORMAT|"
-        r"SETTINGS)\b",
-    )
-    if tail_m:
-        cond = sql[m.end(): m.end() + tail_m.start()].strip()
-        tail = " " + sql[m.end() + tail_m.start():]
-    else:
-        cond = sql[m.end():].strip()
-        tail = ""
-    head = sql[: m.start()].rstrip()
+    cond = sql[q[3]: q[4]].strip()
+    tail = " " + sql[q[4]:] if q[4] < len(sql) else ""
+    head = sql[: q[2]].rstrip()
     if re.match(r"(?is)^\s*SELECT\s+DISTINCT\b", head):
         raise ValueError(
             "QUALIFY with SELECT DISTINCT is not translatable — apply"
             " the window filter in a subquery first"
         )
-    fm = _find_top(head, r"(?i)\bFROM\b")
+    fm = first.get("FROM")
     if not fm:
         raise ValueError("QUALIFY requires a FROM clause")
+    fm = fm[2]
     head2 = (
-        head[: fm.start()].rstrip()
-        + f", ({cond}) AS __ch_qualify "
-        + head[fm.start():]
+        head[:fm].rstrip() + f", ({cond}) AS __ch_qualify " + head[fm:]
     )
     return (
         f"SELECT * EXCEPT (__ch_qualify) FROM ({head2})"
@@ -8181,44 +8167,22 @@ def _rewrite_qualify(sql: str) -> str:
 
 
 def _rewrite_clauses_recursive(sql: str, specs: dict | None) -> str:
-    """Recurse into every parenthesized subquery (``( SELECT ...`` /
-    ``( WITH ...``) before applying the clause rewrites at this level.
-    Rewritten inner text is spliced back and not re-scanned, so
-    generated subqueries (row_number wrappers, spines) are never
-    re-entered."""
-    pos = 0
-    while True:
-        sidx = _scan_index(sql)
-        idx = None
-        for i in range(pos, len(sql)):
-            if sql[i] == "(" and not _idx_in_string(sidx, i):
-                after = sql[i + 1:].lstrip()
-                if re.match(r"(?i)(SELECT|WITH)\b", after):
-                    idx = i
-                    break
-        if idx is None:
-            break
-        close = _call_end(sql, idx)
-        inner = _rewrite_clauses_recursive(sql[idx + 1: close], specs)
-        sql = sql[: idx + 1] + inner + sql[close:]
-        pos = idx + 1 + len(inner) + 1
-    # UNION branches are separate SELECTs: apply the clause chain per
-    # top-level branch (the last branch keeps the union's trailing
-    # ORDER BY / LIMIT, which is where they bind anyway)
-    branches, seps = [], []
-    start = 0
-    while True:
-        m = _find_top(sql[start:], r"\bUNION(?:\s+(?:ALL|DISTINCT))?\b")
-        if not m:
-            branches.append(sql[start:])
-            break
-        branches.append(sql[start: start + m.start()])
-        seps.append(m.group(0))
-        start = start + m.end()
-    if len(branches) == 1:
+    """The clause rewrites at every nesting level (_each_level). A
+    level's UNION / EXCEPT / INTERSECT branches are separate SELECTs:
+    the clause chain runs per branch (the last branch keeps the
+    operation's trailing ORDER BY / LIMIT, which is where they bind
+    anyway)."""
+    return _each_level(sql, _partial(_rewrite_level_clauses, specs=specs))
+
+
+def _rewrite_level_clauses(sql: str, specs: dict | None) -> str:
+    out, pos = [], 0
+    for _, rank, start, body, _ in _clauses(sql)[0]:
+        if rank < 0:
+            out.append(_apply_clause_rewrites(sql[pos:start], specs))
+            out.append(sql[start:body])
+            pos = body
+    if not out:
         return _apply_clause_rewrites(sql, specs)
-    out = [_apply_clause_rewrites(b, specs) for b in branches]
-    joined = out[0]
-    for sep, b in zip(seps, out[1:]):
-        joined += f" {sep} {b}"
-    return joined
+    out.append(_apply_clause_rewrites(sql[pos:], specs))
+    return " ".join(out)

@@ -5969,3 +5969,160 @@ def test_bare_array_join_items_name_the_element(aj_views):
                "SELECT k, xs FROM aj_t, aj_s ARRAY JOIN xs, ys"):
         with pytest.raises(ValueError, match="spell it `xs AS <alias>`"):
             translate(ch)
+
+
+# -- the clause splitter -----------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def cs_views(views):
+    views.sql(
+        "CREATE OR REPLACE TEMP VIEW cs_t AS SELECT * FROM VALUES"
+        " (1, array(1, 2, 3), array(10, 20), 5),"
+        " (2, array(4), CAST(NULL AS ARRAY<INT>), 0) AS cs_t(k, xs, ys, a)"
+    )
+    return views
+
+
+def test_clause_splitter_spans():
+    """One table of clause keywords: an alias that spells a keyword, the
+    FROM of WITH FILL or IS DISTINCT FROM, SAMPLE's OFFSET and the star
+    EXCEPT open no clause; joins, ARRAY JOINs and row limits may
+    repeat."""
+    from ed_clickhouse_spark.chsql import _clauses
+
+    sql = ("SELECT a AS format, x FROM t SAMPLE 1/10 OFFSET 1/2"
+           " ARRAY JOIN xs AS x LEFT JOIN u ON t.k = u.k WHERE x > 1"
+           " GROUP BY a WITH TOTALS ORDER BY a WITH FILL FROM 1 TO 5"
+           " LIMIT 2 BY a LIMIT 10 SETTINGS max_threads = 1 FORMAT CSV")
+    spans = _clauses(sql)[0]
+    assert [s[0] for s in spans] == [
+        "SELECT", "FROM", "SAMPLE", "ARRAY JOIN", "JOIN", "WHERE",
+        "GROUP BY", "ORDER BY", "LIMIT", "LIMIT", "SETTINGS", "FORMAT"]
+    body = {s[0]: sql[s[3]: s[4]].strip() for s in spans}
+    assert body["SELECT"] == "a AS format, x"
+    assert body["ORDER BY"] == "a WITH FILL FROM 1 TO 5"
+    assert body["GROUP BY"] == "a WITH TOTALS"
+    sql = ("SELECT * EXCEPT (b) FROM t WINDOW w AS (ORDER BY a)"
+           " UNION ALL SELECT 1 AS limit, 'WHERE x' AS s"
+           " EXCEPT SELECT (SELECT 2 FROM u) OFFSET 1 ROWS FETCH FIRST 1 ROW ONLY")
+    assert [s[0] for s in _clauses(sql)[0]] == [
+        "SELECT", "FROM", "WINDOW", "UNION", "SELECT", "EXCEPT", "SELECT",
+        "OFFSET", "FETCH"]
+    # the FROM of IS DISTINCT FROM is not the FROM clause
+    sql = "SELECT a IS DISTINCT FROM b AS d FROM t WHERE d"
+    assert [s[0] for s in _clauses(sql)[0]] == ["SELECT", "FROM", "WHERE"]
+    assert translate(sql).sql == (
+        "SELECT a IS DISTINCT FROM b AS d FROM t WHERE (a IS DISTINCT FROM b)")
+
+
+def test_clauses_end_at_the_next_clause_of_any_kind(cs_views):
+    """arrayJoin() lifts to the end of the FROM section, before WINDOW,
+    QUALIFY and OFFSET; PREWHERE and ARRAY JOIN end at a bare OFFSET.
+    Each shape failed to parse or refused while the passes kept their
+    own stop lists."""
+    cases = [
+        ("SELECT arrayJoin(xs) AS x, sum(x) OVER w AS s FROM cs_t"
+         " WINDOW w AS (ORDER BY x)", [(1, 1), (2, 3), (3, 6), (4, 10)]),
+        ("SELECT k, arrayJoin(xs) AS x, row_number() OVER (PARTITION BY k"
+         " ORDER BY x DESC) AS rn FROM cs_t QUALIFY rn = 1",
+         [(1, 3, 1), (2, 4, 1)]),
+        ("SELECT arrayJoin(xs) AS x FROM cs_t ORDER BY x OFFSET 1",
+         [(2,), (3,), (4,)]),
+        ("SELECT x FROM cs_t ARRAY JOIN xs AS x ORDER BY x DESC OFFSET 1",
+         [(1,), (2,), (3,)]),
+    ]
+    for ch, want in cases:
+        assert _sorted_rows(cs_views, translate(ch).sql) == want, ch
+    # an OFFSET without ORDER BY drops some row: only the count is fixed
+    for ch, n in (("SELECT arrayJoin(xs) AS x FROM cs_t OFFSET 1", 3),
+                  ("SELECT k FROM cs_t PREWHERE a >= 0 OFFSET 1", 1),
+                  ("SELECT x FROM cs_t ARRAY JOIN xs AS x OFFSET 1", 3)):
+        assert len(cs_views.sql(translate(ch).sql).collect()) == n, ch
+
+
+def test_chained_array_join_and_where_on_its_alias(cs_views):
+    """``ARRAY JOIN a AS x ARRAY JOIN b AS y`` (and two arrayJoin()
+    calls) is the cross product of the two arrays; a WHERE on an
+    arrayJoin() alias filters the generated rows."""
+    cross = [(1, x, y) for x in (1, 2, 3) for y in (10, 20)]
+    cases = [
+        ("SELECT k, x, y FROM cs_t ARRAY JOIN xs AS x ARRAY JOIN ys AS y",
+         cross),
+        ("SELECT k, x, y FROM cs_t ARRAY JOIN xs AS x LEFT ARRAY JOIN ys AS y",
+         cross + [(2, 4, None)]),
+        ("SELECT k, arrayJoin(xs) AS x, arrayJoin(ys) AS y FROM cs_t", cross),
+        ("SELECT arrayJoin(xs) AS x FROM cs_t WHERE x > 1 AND k = 1",
+         [(2,), (3,)]),
+    ]
+    for ch, want in cases:
+        assert _sorted_rows(cs_views, translate(ch).sql) == want, ch
+
+
+def test_brackets_read_literals_from_the_scan_index():
+    """A bracket inside a literal or a backquoted name is text, and an
+    escaped backslash closes its literal (_scan_index's one quoting
+    rule)."""
+    assert (translate("SELECT ['a\\\\', 'b'] AS xs").sql
+            == "SELECT array('a\\\\', 'b') AS xs")
+    assert (translate("SELECT m['k\\\\'] FROM t").sql
+            == "SELECT try_element_at(m, 'k\\\\') FROM t")
+    assert (translate("SELECT `x]`[1] FROM t").sql
+            == "SELECT try_element_at(`x]`, 1) FROM t")
+
+
+def test_columns_named_like_clause_keywords_stay_columns():
+    """FORMAT <name> and SETTINGS k = v count only as the level's last
+    clauses, and LIMIT / OFFSET only before a count: a column of that
+    name is not cut off (a sort key so named still sorts NULLS LAST),
+    and FINAL drops after a joined table too."""
+    cases = [
+        ("SELECT x, format FROM t ORDER BY format DESC",
+         "SELECT x, format FROM t ORDER BY format DESC NULLS LAST"),
+        ("SELECT settings FROM t", "SELECT settings FROM t"),
+        ("SELECT offset, limit FROM t WHERE offset > 1 LIMIT 3",
+         "SELECT offset, limit FROM t WHERE offset > 1 LIMIT 3"),
+        ("SELECT a FROM t FINAL JOIN u FINAL USING (a)",
+         "SELECT a FROM t JOIN u USING (a)"),
+        ("SELECT offset, x FROM t ORDER BY offset, x",
+         "SELECT offset, x FROM t ORDER BY offset NULLS LAST, x NULLS LAST"),
+        ("SELECT sum(x) OVER (ORDER BY limit ROWS UNBOUNDED PRECEDING) FROM t",
+         "SELECT sum(x) OVER (ORDER BY limit NULLS LAST ROWS UNBOUNDED"
+         " PRECEDING) FROM t"),
+    ]
+    for ch, want in cases:
+        assert translate(ch).sql == want, ch
+    tr = translate("SELECT x FROM t SETTINGS a = 1, b = 'x' FORMAT JSONEachRow;")
+    assert (tr.sql, tr.format) == ("SELECT x FROM t", "JSONEachRow")
+
+
+def test_unordered_ranking_window_with_a_frame(cs_views):
+    """The injected ``ORDER BY 1`` goes before the window frame."""
+    ch = ("SELECT k, percent_rank() OVER (PARTITION BY k ROWS BETWEEN"
+          " UNBOUNDED PRECEDING AND CURRENT ROW) AS p FROM cs_t")
+    assert _sorted_rows(cs_views, translate(ch).sql) == [(1, 0.0), (2, 0.0)]
+
+
+def test_condition_heads_under_wrapping_clauses(cs_views):
+    """An integer or one-name WHERE / HAVING head is rewritten while the
+    clause is still the level's own, before QUALIFY, LIMIT BY, DISTINCT
+    ON, WITH TIES and WITH FILL move it into a wrapper's FROM."""
+    cases = [
+        ("SELECT k, a, row_number() OVER (PARTITION BY k ORDER BY a) AS rn"
+         " FROM cs_t WHERE 1 QUALIFY rn = 1", [(1, 5, 1), (2, 0, 1)]),
+        ("SELECT k, a FROM cs_t WHERE 1 ORDER BY a LIMIT 1 BY k",
+         [(1, 5), (2, 0)]),
+        ("SELECT k, count() AS c FROM cs_t GROUP BY k HAVING 1 QUALIFY c = 1",
+         [(1, 1), (2, 1)]),
+        ("SELECT k, count() AS c FROM cs_t GROUP BY k HAVING 0 QUALIFY c = 1",
+         []),
+        ("SELECT DISTINCT ON (k) k, a FROM cs_t WHERE 1 ORDER BY k, a",
+         [(1, 5), (2, 0)]),
+        ("SELECT k, a FROM cs_t WHERE (1) ORDER BY a LIMIT 1 WITH TIES",
+         [(2, 0)]),
+        ("SELECT k, count() AS c FROM cs_t WHERE 1 GROUP BY k ORDER BY k"
+         " WITH FILL FROM 1 TO 4", [(1, 1), (2, 1), (3, 0)]),
+    ]
+    for ch, want in cases:
+        assert _sorted_rows(cs_views, translate(ch).sql) == want, ch
+

@@ -20,6 +20,10 @@ Tables have one storage model: ``ddl.append_rows`` writes every table
 serves it from its spec, so neither a hand-rolled sort before a write
 nor a schema-inferring table read in the engine may grow back.
 
+Where a clause ends is answered once, by ``chsql._clauses`` over the
+``chsql._CLAUSES`` keyword table; a pass does not carry its own list of
+terminator keywords. The subquery walk is ``chsql._each_level``.
+
 A multi-item ARRAY JOIN lowers to one zip generator, never to the
 index-arithmetic emulation (``__aj_i``) that re-evaluated each array
 per exploded row: checked over the translate corpus.
@@ -43,12 +47,13 @@ ENGINE = CHSQL.with_name("engine.py")
 CORPUS = PKG.parent / "tests" / "data" / "translate_corpus.json"
 PIPELINE = PKG / "streaming" / "pipeline.py"
 
-# the definition, the primitive, its two trailing-group helpers, and
-# the clause-level scanners that are not call-shaped
-MAX_CALL_END_SITES = 23
-# clause-level rewrites (FROM/ARRAY JOIN/LIMIT BY/...) and the few
-# non-call literal scans
-MAX_WHILE_TRUE_LOOPS = 34
+# the definition, the primitive, its two trailing-group helpers, the
+# level walker, and the splices that read a call's extent
+MAX_CALL_END_SITES = 20
+# the two primitives (_rewrite_calls, _sub_outside_strings), the
+# APPLY/EXCEPT modifier chain, the bracket scan, the inline-alias groups
+# and the ORDER BY null-direction pass
+MAX_WHILE_TRUE_LOOPS = 6
 
 
 def test_call_end_sites_do_not_grow():
@@ -154,21 +159,104 @@ def test_process_batch_dead_letters_once():
 
 
 def test_multi_item_array_join_is_one_zip_generator():
-    from ed_clickhouse_spark.chsql import _CLAUSE_STOP, _find_top, _split_top_commas
+    from ed_clickhouse_spark.chsql import _clauses, _split_top_commas
 
     cases = json.loads(CORPUS.read_text())
     leaked = [c["src"] for c in cases if "__aj_i" in c.get("out", "")]
     assert not leaked, f"index-arithmetic ARRAY JOIN in {leaked}"
     multi = []
     for c in cases:
-        m = _find_top(c["sql"], r"\bARRAY\s+JOIN\b")
-        if not m:
-            continue
-        tail = c["sql"][m.end():]
-        stop = _find_top(tail, rf"\b(?:{_CLAUSE_STOP})\b")
-        if len(_split_top_commas(tail[: stop.start()] if stop else tail)) > 1:
+        items = [
+            _split_top_commas(c["sql"][body:end])
+            for name, _, _, body, end in _clauses(c["sql"])[0]
+            if name == "ARRAY JOIN"
+        ]
+        if len(items) == 1 and len(items[0]) > 1:
             multi.append(c)
     assert multi, "the corpus has no multi-item ARRAY JOIN"
     bad = [c["src"] for c in multi
            if len(re.findall(r"\bLATERAL VIEW\b", c.get("out", ""))) != 1]
     assert not bad, f"multi-item ARRAY JOIN not one generator: {bad}"
+
+
+def _string_constants(src: str):
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            yield node
+
+
+# string constants that alternate two or more clause keywords of
+# chsql._CLAUSES: the splitter's table spells each keyword in an entry
+# of its own. The one left is _PRE_LITERAL_KEYWORDS, the words after
+# which ``[`` opens an array literal: a word set, not a clause's end.
+MAX_CLAUSE_KEYWORD_LISTS = 1
+# the relation probe ``FROM|JOIN`` names where a table follows, not
+# where a clause ends: the pair counts as no clause keyword
+RELATION_PROBE = {"FROM", "JOIN"}
+
+
+def _alternated_clause_keywords(text: str, clauses) -> set[str]:
+    """The clause names whose keyword is a regex alternation member of
+    ``text`` (``|KW`` or ``KW|``, through groups and ``\\b``)."""
+    text = re.sub(r"\\s[+*]", " ", text.replace("\\b", ""))
+    found = set()
+    for name, _, _ in clauses:
+        kw = r"\s+".join(name.split())
+        for m in re.finditer(rf"(?<![A-Za-z]){kw}(?![A-Za-z])", text):
+            before = re.sub(r"(?:\(\?:|\(\?i\)|[(\s])+$", "", text[: m.start()])
+            after = re.sub(r"^[)\s]+", "", text[m.end():])
+            if before.endswith("|") or after.startswith("|"):
+                found.add(name)
+    if RELATION_PROBE <= found:
+        found -= RELATION_PROBE
+    return found
+
+
+def test_clause_keywords_are_spelled_once():
+    """A string constant that alternates two or more clause keywords is
+    a hand-written list of clause terminators; where a clause ends is
+    chsql._clauses' answer. QUALIFY, the keyword such lists forgot, is
+    alternated nowhere."""
+    from ed_clickhouse_spark.chsql import _CLAUSES
+
+    src = CHSQL.read_text()
+    tree = ast.parse(src)
+    table = next(
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "_CLAUSES" for t in node.targets)
+    )
+    own = {id(node) for node in ast.walk(table)}
+    lists, qualify = [], []
+    for node in _string_constants(src):
+        if id(node) in own:
+            continue
+        found = _alternated_clause_keywords(node.value, _CLAUSES)
+        if len(found) >= 2:
+            lists.append(node.lineno)
+        if "QUALIFY" in found:
+            qualify.append(node.lineno)
+    assert len(lists) <= MAX_CLAUSE_KEYWORD_LISTS and not qualify, (
+        f"chsql.py alternates clause keywords at lines {lists} (QUALIFY at"
+        f" {qualify}): read the clause's end off chsql._clauses instead"
+    )
+
+
+def test_one_subquery_walker():
+    """The ``(SELECT|WITH)`` subquery probe appears once, in the level
+    walker's pattern, and _each_level is its only reader."""
+    src = CHSQL.read_text()
+    probes = [
+        node.lineno for node in _string_constants(src)
+        if re.search(r"\(SELECT\|WITH\)|\(\?:SELECT\|WITH\)", node.value)
+    ]
+    assert len(probes) == 1, (
+        f"chsql.py probes for subqueries at lines {probes}: walk the"
+        " levels with chsql._each_level"
+    )
+    readers = [
+        node.name for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.FunctionDef)
+        and "_SUBQUERY" in ast.get_source_segment(src, node)
+    ]
+    assert readers == ["_each_level"], readers

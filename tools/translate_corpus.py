@@ -249,6 +249,21 @@ CLAUSE_SHAPES = (
     "SELECT ['a\\\\', 'b'] AS xs",
     "SELECT m['k\\\\'] FROM t",
     "SELECT `x]`[1] FROM t",
+    # condition heads under the clauses that wrap the level
+    "SELECT g, x, row_number() OVER (PARTITION BY g ORDER BY x) AS rn"
+    " FROM t WHERE 1 QUALIFY rn = 1",
+    "SELECT g, x FROM t WHERE 1 ORDER BY x LIMIT 1 BY g",
+    "SELECT g, x FROM t WHERE (x) ORDER BY x LIMIT 1 BY g",
+    "SELECT g, count() AS c FROM t GROUP BY g HAVING 0 QUALIFY c = 1",
+    "SELECT DISTINCT ON (g) g, x FROM t WHERE 1 ORDER BY g, x",
+    "SELECT x FROM t WHERE (1) ORDER BY x LIMIT 2 WITH TIES",
+    "SELECT x, count() AS c FROM t WHERE 1 GROUP BY x ORDER BY x WITH FILL"
+    " FROM 1 TO 5",
+    # sort keys named like a row limit
+    "SELECT offset, x FROM t ORDER BY offset, x",
+    "SELECT limit, x FROM t ORDER BY limit, x LIMIT 3",
+    "SELECT x, row_number() OVER (ORDER BY offset ROWS BETWEEN UNBOUNDED"
+    " PRECEDING AND CURRENT ROW) AS r FROM t",
 )
 
 
